@@ -175,12 +175,14 @@ object Bench {
         }
       } catch { case _: Throwable => () }
     }
-    // warm-up: JVM/codegen/file-footer caches. Guarded like the timed
-    // loop — one broken query must not take down the bench output.
-    qs.foreach { n =>
-      try { SparkEntry.queries(n)(spark, sfDir).collect() }
-      catch { case _: Throwable => () }
-    }
+    // A failing query fails the bench, naming the query: a swallowed
+    // throw would be timed as a fast sample and pass every gate.
+    def collectQuery(n: String): Unit =
+      try { SparkEntry.queries(n)(spark, sfDir).collect(); () }
+      catch { case e: Throwable =>
+        throw new IllegalStateException(s"bench query $n failed", e) }
+    // warm-up: JVM/codegen/file-footer caches.
+    qs.foreach(collectQuery)
     // collect(), not count(): count() lets the optimizer prune the
     // aggregate value columns (a sum the caller never reads is
     // removed), so it would under-measure. collect() materializes
@@ -195,10 +197,8 @@ object Bench {
     // verdict instead.
     def timedOnce(name: String): Double = {
       val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir).collect()
-        if (injectSlow) SparkEntry.queries(name)(spark, sfDir).collect()
-      } catch { case _: Throwable => () }
+      collectQuery(name)
+      if (injectSlow) collectQuery(name)
       (System.nanoTime() - t0) / 1e9
     }
     // Attempt loop: one attempt = calibrate → pass A over the whole

@@ -379,17 +379,15 @@ object Bpe {
   def wordHistFromStore(spark: SparkSession, histDir: String): DataFrame =
     spark.read.parquet(s"$histDir/hist").select(col("word"), col("n"))
 
-  /** DRIVER-GATED scaffold: ONE training per corpus dir, shared by
-    * both gate entries (the shared-scratch discipline, round-14
-    * verdict #6). The final segmentation and the merges artifact are
-    * scratch parquet so the memo survives as paths, not session-bound
-    * plans. */
+  /** DRIVER-GATED scaffold: ONE training per source fingerprint,
+    * shared by both gate entries (the shared-scratch discipline,
+    * round-14 verdict #6). The final segmentation and the merges
+    * artifact are scratch parquet so the memo survives as paths, not
+    * session-bound plans. */
   private final case class Trained(
       rules: Seq[MergeRule], mergesPath: String, segPath: String)
-  private val trainedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, Trained]()
   private def trained(spark: SparkSession, dir: String): Trained =
-    trainedDirs.computeIfAbsent(dir, _ => {
+    graft.ops.SessionStore.of("bpe", s"$dir/documents.parquet") {
       val (rules, finalSeq) = trainOn(wordHist(Tables.documents(spark, dir)))
       val root = graft.ops.Scratch.dir("graft_bpe")
       val segPath = root + "/seg"
@@ -397,7 +395,7 @@ object Bpe {
       finalSeq.write.parquet(segPath)
       writeMergesArtifact(spark, rules, WordPattern, mergesPath)
       Trained(rules, mergesPath, segPath)
-    })
+    }
 
   private def rulesToDf(spark: SparkSession, rules: Seq[MergeRule]): DataFrame = {
     import spark.implicits._

@@ -429,23 +429,17 @@ object ClusterOps {
     * four (the removal scaffold COPIES it, since removal mutates its
     * store). Content is [[knnEdgesOn]] verbatim (deterministic), so
     * every consumer's values are unchanged; staleness rides the same
-    * fingerprint guard as every session store (OptimizationR17Spec's
-    * rewrite tests cover the pattern). */
+    * fingerprint guard as every session store (StoreStalenessSpec
+    * covers every family). */
   private[graft] def knnEdgesStoreFor(spark: SparkSession,
       dir: String): String =
-    goldKnnEdgesStore.computeIfAbsent(
-      graft.ops.TrainMemo.sourceFingerprint(s"$dir/embeddings.parquet"),
-      _ => {
-        val out = graft.ops.Scratch.dir("graft_knn_edges") + "/edges"
+    graft.ops.SessionStore.dir("knnEdges", s"$dir/embeddings.parquet") {
+      out =>
         val cents = KMeans.train(spark, dir)
         writeKnnEdges(KMeans.vecs(spark, dir)
           .select(col("vec_id"),
             KMeans.assignOn(col("v"), cents).as("cell"), col("v")), out)
-        out
-      })
-
-  private val goldKnnEdgesStore =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** The shared store read back, typed exactly like [[knnEdgesOn]]'s
     * output (cell returns as a partition column). */
@@ -527,16 +521,15 @@ object ClusterOps {
     * FROZEN quantizer: (fully assigned corpus — vec_id, label, cell,
     * v — and batchFrom). label rides along for the card-merge gate;
     * the graph paths ignore it. */
-  private def frozenGoldAssigned(spark: SparkSession,
+  private[ext] def frozenGoldAssigned(spark: SparkSession,
       dir: String): (DataFrame, Long) = {
     val vs = KMeans.vecs(spark, dir)
-    // memoized per source fingerprint (graft.ops.TrainMemo): the
+    // memoized per source fingerprint (graft.ops.SessionStore): the
     // cutoff and the gold-trained frozen centroids are deterministic
     // functions of the embeddings file, and every *_merge_forms gate
     // in this family re-derives the identical frozen quantizer
-    val (cut, cents) = graft.ops.TrainMemo.of(
-      "frozenGold|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet")) {
+    val (cut, cents) = graft.ops.SessionStore.of("frozenGold",
+        s"$dir/embeddings.parquet") {
       val c = vs.agg(floor(max(col("vec_id")) * lit(0.8)).cast("long"))
         .head().getLong(0)
       (c, KMeans.trainFrame(
@@ -607,14 +600,9 @@ object ClusterOps {
     * keep the SQL static; ScaleUp's 100× row passes subKFor(N). */
   def knnGraphP2Sub(spark: SparkSession, dir: String): DataFrame = {
     val vecs = KMeans.vecs(spark, dir)
-    // same memo key as Dedup.semanticCellsFor at the default
-    // cap/sampleMod — this IS the same frozen training
-    val (coarse, subs) = graft.ops.TrainMemo.of(
-      "semQuant|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet") +
-        s"|${Dedup.SubK}|${Dedup.SampleCap}|1") {
-      Dedup.trainSemanticQuantizers(vecs, Dedup.SubK)
-    }
+    // the same frozen training as Dedup.semanticCellsFor at the
+    // default cap/sampleMod, served from the same store
+    val (coarse, subs) = Dedup.semanticQuantizersFor(spark, dir, Dedup.SubK)
     knnGraphP2On(
       Dedup.assignSemanticCells(vecs, coarse, subs, Dedup.SubK)
         .localCheckpoint()) // pin: feeds both the probe and member legs
@@ -872,14 +860,14 @@ object ClusterOps {
     * graph exactly. */
   private[graft] val KnnRemoveResidue = 4L
 
-  /** Build-once scaffold for the two removal gates: full-corpus
-    * quantizer (removal never retrains), cells + edges + labels
-    * stores, then [[removeKnnVectors]] of the residue class. Both
-    * gates read the CONVERGED stores. */
+  /** Build-once (per source fingerprint) scaffold for the two
+    * removal gates: full-corpus quantizer (removal never retrains),
+    * cells + edges + labels stores, then [[removeKnnVectors]] of the
+    * residue class. Both gates read the CONVERGED stores. */
   private def removedGraphStores(spark: SparkSession,
       dir: String): (String, String) = {
-    val (edges, labels) = removeStores.computeIfAbsent(dir, _ => {
-      val base = graft.ops.Scratch.dir("graft_knn_rm")
+    val base = graft.ops.SessionStore.dir("knnRemove",
+        s"$dir/embeddings.parquet") { base =>
       val (cells, e, l) = (s"$base/cells", s"$base/edges", s"$base/labels")
       val cents = KMeans.train(spark, dir)
       val assigned = KMeans.vecs(spark, dir)
@@ -907,9 +895,8 @@ object ClusterOps {
         assigned.filter(col("vec_id") % 9 === KnnRemoveResidue)
           .select(col("vec_id")),
         cells, e, Some(l))
-      (e, l)
-    })
-    (edges, labels)
+    }
+    (s"$base/edges", s"$base/labels")
   }
 
   /** DRIVER-GATED removal, edge leg: the post-removal edges store
@@ -933,9 +920,6 @@ object ClusterOps {
       .select(col("vec_id"), col("community_id"))
       .orderBy(col("vec_id"))
   }
-
-  private val removeStores =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   /** Shared scaffold of the DRIVER-GATED store-fed entries: the
     * [[knnGraphBatchMerge]] gold/batch split with the gold-trained
@@ -1043,19 +1027,12 @@ object ClusterOps {
     // (r17 — the Bpe.trained / round-14 shared-scratch discipline):
     // three gates (components, keep-best, community-hist) each re-ran
     // the identical graph build + CC fixpoint on the same corpus
-    spark.read.parquet(
-        communityLabels.computeIfAbsent(
-          graft.ops.TrainMemo
-            .sourceFingerprint(s"$dir/embeddings.parquet"), _ => {
-          val out = graft.ops.Scratch.dir("graft_knn_comm") + "/labels"
-          knnCommunitiesLive(spark, dir).write.parquet(out)
-          out
-        }))
+    spark.read.parquet(graft.ops.SessionStore.dir("knnCommunities",
+        s"$dir/embeddings.parquet") { out =>
+        knnCommunitiesLive(spark, dir).write.parquet(out)
+      })
       .select(col("vec_id"), col("community_id"))
       .orderBy(col("vec_id"))
-
-  private val communityLabels =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The live build [[knnCommunities]] memoizes. Unordered: the one
     * consumer is the label-store write, and every reader applies its

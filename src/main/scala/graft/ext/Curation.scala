@@ -1011,19 +1011,12 @@ SELECT doc_id, source, status FROM j WHERE status <> 'unchanged' ORDER BY doc_id
     * build-once per source fingerprint, the
     * [[Sampling.splitLabelsFor]] discipline: both card serve-gates
     * seed from the identical store, so the tokenize pass runs once. */
-  private def tokenCountsFor(spark: SparkSession, dir: String): String =
-    tokenCountDirs.computeIfAbsent(
-      graft.ops.TrainMemo.sourceFingerprint(s"$dir/documents.parquet"),
-      _ => {
-        val artDir = graft.ops.Scratch.dir("graft_token_counts")
+  private[ext] def tokenCountsFor(spark: SparkSession, dir: String): String =
+    graft.ops.SessionStore.dir("tokenCounts", s"$dir/documents.parquet") {
+      artDir =>
         Selection.tokenCountsOn(graft.Tables.documents(spark, dir))
-          .write.mode("overwrite")
-          .parquet(s"$artDir/${Selection.TokenCountsTable}.parquet")
-        artDir
-      })
-
-  private val tokenCountDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+          .write.parquet(s"$artDir/${Selection.TokenCountsTable}.parquet")
+    }
 
   private val pipelineOracle: Map[String, String] = Map(
     "curation_pipeline" -> pipelineSql,

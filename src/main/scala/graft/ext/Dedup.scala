@@ -263,11 +263,10 @@ object Dedup {
     val e = KMeans.vecs(spark, dir)
       .select(col("vec_id"), col("v"),
         KMeans.assignOn(col("v"), coarse).as("cluster"))
-    // memoized like the coarse trainer it composes (TrainMemo): K
+    // memoized like the coarse trainer it composes (SessionStore): K
     // full-corpus trainFrame re-scans, deterministic per source file
-    val subs = graft.ops.TrainMemo.of(
-      "subCentroidsScaled|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet")) {
+    val subs = graft.ops.SessionStore.of("subCentroidsScaled",
+        s"$dir/embeddings.parquet") {
       subCentroids(e)
     }
     // one CASE over the coarse cell picks the sub-quantizer; codegen
@@ -358,7 +357,7 @@ object Dedup {
 
   /** [[semanticCellsOn]] over a corpus DIR, with the training half
     * memoized per (source fingerprint, subK, cap, sampleMod) —
-    * [[graft.ops.TrainMemo]]: the sampled sub-quantizer training is a
+    * [[semanticQuantizersFor]]: the sampled sub-quantizer training is a
     * deterministic pure function of the embeddings file, and the
     * semantic family's gate entries (artifact, scaled, served,
     * streamed probes) each re-derived the identical frozen quantizer.
@@ -367,15 +366,21 @@ object Dedup {
     * collect + driver Lloyd's loops are shared. */
   private[ext] def semanticCellsFor(spark: SparkSession, dir: String,
       subK: Int, cap: Int = SampleCap, sampleMod: Long = 1L): DataFrame = {
-    val vecs = KMeans.vecs(spark, dir)
-    val (coarse, subs) = graft.ops.TrainMemo.of(
-      "semQuant|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet") +
-        s"|$subK|$cap|$sampleMod") {
-      trainSemanticQuantizers(vecs, subK, cap, sampleMod)
-    }
-    assignSemanticCells(vecs, coarse, subs, subK)
+    val (coarse, subs) = semanticQuantizersFor(spark, dir, subK, cap, sampleMod)
+    assignSemanticCells(KMeans.vecs(spark, dir), coarse, subs, subK)
   }
+
+  /** [[trainSemanticQuantizers]] over a corpus DIR, memoized per
+    * (source fingerprint, subK, cap, sampleMod) in the session
+    * ([[graft.ops.SessionStore]]) — shared by [[semanticCellsFor]] and
+    * ClusterOps.knnGraphP2Sub, which run the same frozen training. */
+  private[ext] def semanticQuantizersFor(spark: SparkSession, dir: String,
+      subK: Int, cap: Int = SampleCap, sampleMod: Long = 1L)
+      : (Seq[(Int, Seq[Double])], Seq[Seq[(Int, Seq[Double])]]) =
+    graft.ops.SessionStore.of(s"semQuant|$subK|$cap|$sampleMod",
+        s"$dir/embeddings.parquet") {
+      trainSemanticQuantizers(KMeans.vecs(spark, dir), subK, cap, sampleMod)
+    }
 
   /** The training half of [[semanticCellsOn]]: coarse centroids +
     * per-cell sampled sub-quantizers, returned as FROZEN inputs — the
@@ -723,11 +728,10 @@ object Dedup {
     val gold = vecs.filter(col("vec_id") < SemBatchCut)
     val batch = vecs.filter(col("vec_id") >= SemBatchCut)
     // gold-frozen quantizers, memoized per source fingerprint
-    // (TrainMemo — the cut is the constant SemBatchCut, so the key
+    // (SessionStore — the cut is the constant SemBatchCut, so the key
     // needs only the file identity)
-    val (coarse, subs) = graft.ops.TrainMemo.of(
-      s"semQuantGold|$SemBatchCut|$SubK|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet")) {
+    val (coarse, subs) = graft.ops.SessionStore.of(
+        s"semQuantGold|$SemBatchCut|$SubK", s"$dir/embeddings.parquet") {
       trainSemanticQuantizers(gold, SubK)
     }
     val goldCells = assignSemanticCells(gold, coarse, subs, SubK)
@@ -812,19 +816,12 @@ object Dedup {
     // doubles). The cluster-label build keeps its own pass via
     // [[ngramJaccardPairsOn]] (it runs once per corpus behind the
     // r17 label store).
-    spark.read.parquet(pairStores.computeIfAbsent(
-      "ngramPairs|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/documents.parquet"), _ => {
-        val out = graft.ops.Scratch.dir("graft_ngram_pairs") + "/pairs"
-        ngramJaccardPairsOn(Tables.documents(spark, dir))
-          .write.parquet(out)
-        out
-      }))
+    spark.read.parquet(graft.ops.SessionStore.dir("ngramPairs",
+        s"$dir/documents.parquet") { out =>
+        ngramJaccardPairsOn(Tables.documents(spark, dir)).write.parquet(out)
+      })
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
-
-  private val pairStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** [[ngramJaccardPairs]] over an explicit documents frame,
     * unordered — the edge feeder for per-subset cluster builds
@@ -1402,21 +1399,14 @@ object Dedup {
     // identical LSH pair build + CC fixpoint on the same corpus. The
     // `keep` flag re-derives on read (keep = doc_id == cluster_id,
     // the component-min election — a pure projection).
-    spark.read.parquet(
-        clusterLabelDirs.computeIfAbsent(
-          graft.ops.TrainMemo
-            .sourceFingerprint(s"$dir/documents.parquet"), _ => {
-          val out = graft.ops.Scratch.dir("graft_nd_clusters") + "/labels"
-          nearDupClustersOn(Tables.documents(spark, dir))
-            .select(col("doc_id"), col("cluster_id")).write.parquet(out)
-          out
-        }))
+    spark.read.parquet(graft.ops.SessionStore.dir("ndClusters",
+        s"$dir/documents.parquet") { out =>
+        nearDupClustersOn(Tables.documents(spark, dir))
+          .select(col("doc_id"), col("cluster_id")).write.parquet(out)
+      })
       .select(col("doc_id"), col("cluster_id"),
         (col("doc_id") === col("cluster_id")).as("keep"))
       .orderBy(col("doc_id"))
-
-  private val clusterLabelDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** [[nearDupClusters]] over an explicit documents frame, unordered —
     * what the incremental label-merge path uses to build the initial
@@ -2013,9 +2003,8 @@ object Dedup {
     // ran twice per sweep (its own gate + method_agreement's semantic
     // leg). The guard runs at store-build time (maxRows is part of
     // the key, so a stricter caller still re-checks).
-    spark.read.parquet(pairStores.computeIfAbsent(
-      s"cosPairs|$maxRows|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet"), _ => {
+    spark.read.parquet(graft.ops.SessionStore.dir(s"cosPairs|$maxRows",
+        s"$dir/embeddings.parquet") { out =>
         val e = Tables.embeddings(spark, dir)
           .select(col("vec_id"),
             col("embedding").cast("array<double>").as("v"))
@@ -2026,15 +2015,13 @@ object Dedup {
             s"Similarity.lshBucketedPairs at scale")
         val a = e.select(col("vec_id").as("vec_a"), col("v").as("va"))
         val b = e.select(col("vec_id").as("vec_b"), col("v").as("vb"))
-        val out = graft.ops.Scratch.dir("graft_cos_pairs") + "/pairs"
         a.join(b, col("vec_a") < col("vec_b"))
           .select(col("vec_a"), col("vec_b"),
             graft.functions.CosineSimilarity(col("va"), col("vb"))
               .as("cosine"))
           .filter(col("cosine") >= 0.45)
           .write.parquet(out)
-        out
-      }))
+      })
       .select(col("vec_a"), col("vec_b"), col("cosine"))
       .orderBy(col("vec_a"), col("vec_b"))
 

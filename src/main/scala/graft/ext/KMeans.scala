@@ -72,17 +72,15 @@ object KMeans {
     * quantized-integer mean update, fixed rounds.
     *
     * Memoized per (source fingerprint, slice, k) within the session
-    * ([[graft.ops.TrainMemo]]): the training is a deterministic pure
+    * ([[graft.ops.SessionStore]]): the training is a deterministic pure
     * function of the embeddings file, and a registry sweep re-runs
     * the same frozen quantizer for every query in the family —
     * "train once, serve everything" is the contract the scaladocs
     * already promise. */
   private[ext] def trainOn(spark: SparkSession, dir: String,
       lo: Int, len: Int, k: Int): Seq[(Int, Seq[Double])] =
-    graft.ops.TrainMemo.of(
-      "kmeans|" +
-        graft.ops.TrainMemo.sourceFingerprint(s"$dir/embeddings.parquet") +
-        s"|$lo|$len|$k") {
+    graft.ops.SessionStore.of(s"kmeans|$lo|$len|$k",
+        s"$dir/embeddings.parquet") {
       trainFrame(vecs(spark, dir)
         .select(col("vec_id"), slice(col("v"), lo, len).as("v")), k)
     }

@@ -51,10 +51,8 @@ object ProductQuant {
     * [[KMeans.trainOn]] calls this replaces), memoized per source
     * fingerprint like the trainer it wraps. */
   def codebooks(spark: SparkSession, dir: String): Seq[Seq[(Int, Seq[Double])]] =
-    graft.ops.TrainMemo.of(
-      "pqCodebooks|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet") +
-        s"|$M|$SubDim|$Ks") {
+    graft.ops.SessionStore.of(s"pqCodebooks|$M|$SubDim|$Ks",
+        s"$dir/embeddings.parquet") {
       trainSubspaces(
         KMeans.vecs(spark, dir).select(col("vec_id"), col("v")), Ks)
     }
@@ -178,40 +176,31 @@ object ProductQuant {
   // fingerprint guard as every session store.
   // ---------------------------------------------------------------
 
-  private val codesStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Residual codes store: [[encodeWithCellsResidual]] written
     * `partitionBy("cell")`, shared by the residual ADC/rerank/
     * multi-probe gates and the eval rungs riding them. */
   private[graft] def residualCodesStoreFor(spark: SparkSession,
       dir: String): String =
-    codesStores.computeIfAbsent(
-      "res|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet"), _ => {
-        val coarse = KMeans.train(spark, dir)
-        val rcbs = residualCodebooks(spark, dir, coarse)
-        val out = graft.ops.Scratch.dir("graft_res_codes") + "/codes"
-        encodeWithCellsResidual(spark, dir, coarse, rcbs)
-          .write.partitionBy("cell").parquet(out)
-        out
-      })
+    graft.ops.SessionStore.dir("resCodes",
+        s"$dir/embeddings.parquet") { out =>
+      val coarse = KMeans.train(spark, dir)
+      val rcbs = residualCodebooks(spark, dir, coarse)
+      encodeWithCellsResidual(spark, dir, coarse, rcbs)
+        .write.partitionBy("cell").parquet(out)
+    }
 
   /** Raw-slice codes store: [[encodeWithCells]] written
     * `partitionBy("cell")`, shared by the raw IVF-PQ gates and the
     * full-scan PQ forms (which read it ignoring `cell`). */
   private[graft] def rawCodesStoreFor(spark: SparkSession,
       dir: String): String =
-    codesStores.computeIfAbsent(
-      "raw|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet"), _ => {
-        val coarse = KMeans.train(spark, dir)
-        val cbs = codebooks(spark, dir)
-        val out = graft.ops.Scratch.dir("graft_pq_codes") + "/codes"
-        encodeWithCells(spark, dir, coarse, cbs)
-          .write.partitionBy("cell").parquet(out)
-        out
-      })
+    graft.ops.SessionStore.dir("rawCodes",
+        s"$dir/embeddings.parquet") { out =>
+      val coarse = KMeans.train(spark, dir)
+      val cbs = codebooks(spark, dir)
+      encodeWithCells(spark, dir, coarse, cbs)
+        .write.partitionBy("cell").parquet(out)
+    }
 
   /** A codes store read back, typed exactly like the encode output
     * (`cell` returns as a partition column). */
@@ -299,7 +288,7 @@ object ProductQuant {
     * DuckDB. */
   def residualCodebooks(spark: SparkSession, dir: String,
       coarse: Seq[(Int, Seq[Double])]): Seq[Seq[(Int, Seq[Double])]] = {
-    // memoized per source fingerprint (graft.ops.TrainMemo, r17):
+    // memoized per source fingerprint (graft.ops.SessionStore, r17):
     // `coarse` is itself a deterministic function of the embeddings
     // file (every caller passes KMeans.train(spark, dir) or the
     // memoized equivalent — enforced below, so a future subset-trained
@@ -316,9 +305,7 @@ object ProductQuant {
       "residualCodebooks is memoized per dir and assumes coarse = " +
         "KMeans.train(dir); train custom-coarse residual codebooks " +
         "through KMeans.trainFrame directly")
-    graft.ops.TrainMemo.of(
-      "residualCbs|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet")) {
+    graft.ops.SessionStore.of("residualCbs", s"$dir/embeddings.parquet") {
       val res = KMeans.vecs(spark, dir)
         .select(col("vec_id"), residualCol(coarse).as("v"))
       trainSubspaces(res, Ks)
@@ -841,20 +828,17 @@ object ProductQuant {
     * serving chain uses. */
   def learnedRotationFor(spark: SparkSession,
       dir: String): Seq[Seq[Double]] = {
-    // memoized per corpus dir: the iterative Procrustes/SVD training
-    // is deterministic, and a gate sweep evaluates BOTH
+    // memoized per source fingerprint: the iterative Procrustes/SVD
+    // training is deterministic, and a gate sweep evaluates BOTH
     // sim_opq_learned_topk and sim_opq_rotation_check — without the
     // memo each paid the family's most expensive driver computation
-    learnedRotations.computeIfAbsent(dir, _ => {
+    graft.ops.SessionStore.of("opqRotation", s"$dir/embeddings.parquet") {
       val sample = KMeans.vecs(spark, dir).orderBy(col("vec_id"))
         .limit(OpqSampleN).select(col("v")).collect()
         .map(_.getSeq[Double](0))
       learnedRotation(sample.toSeq)
-    })
+    }
   }
-
-  private val learnedRotations =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Seq[Double]]]()
 
   /** DRIVER-GATED data-check of the LEARNED OPQ rotation (round-15
     * verdict #6) — the checkable HALF of `sim_opq_learned_topk`'s
@@ -1023,21 +1007,16 @@ object ProductQuant {
       .limit(TopK)
   }
 
-  /** Memoized per-corpus OPQ store (seeded rotation) — the gate sweep
-    * serves `sim_opq_served_topk`, `sim_opq_rerank`, AND two
-    * `rag_eval_quant_forms` rows from it; without the memo each would
-    * re-pay the 5-quantizer training build. Scratch-rooted: gate
+  /** OPQ store (seeded rotation), memoized per source fingerprint —
+    * the gate sweep serves `sim_opq_served_topk`, `sim_opq_rerank`, AND
+    * two `rag_eval_quant_forms` rows from it; without the memo each
+    * would re-pay the 5-quantizer training build. Scratch-rooted: gate
     * infrastructure, not a production path (production stores are
     * caller-owned named dirs via [[writeOpqStore]]). */
   def opqStoreFor(spark: SparkSession, dir: String): String =
-    opqStores.computeIfAbsent(dir, _ => {
-      val store = graft.ops.Scratch.dir("graft_opq_store") + "/ix"
-      writeOpqStore(spark, dir, store, ScalarQuant.rotationMatrix())
-      store
-    })
-
-  private val opqStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    graft.ops.SessionStore.dir("opqStore", s"$dir/embeddings.parquet") {
+      writeOpqStore(spark, dir, _, ScalarQuant.rotationMatrix())
+    }
 
   /** Exact squared-L2 of the row vector `v` to a LITERAL query vector,
     * as one left-to-right 64-term codegen chain — the same IEEE order

@@ -78,16 +78,10 @@ object Retrieval {
     * round-trips string arrays exactly. The diff-upsert gate's
     * snapshot views tokenize their own derived text and stay live. */
   private def toksD(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(toksStores.computeIfAbsent(
-      "toks|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/documents.parquet"), _ => {
-        val out = graft.ops.Scratch.dir("graft_bm25_toks") + "/toks"
-        toksOf(Tables.documents(spark, dir)).write.parquet(out)
-        out
-      }))
-
-  private val toksStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    spark.read.parquet(graft.ops.SessionStore.dir("bm25Toks",
+        s"$dir/documents.parquet") { out =>
+      toksOf(Tables.documents(spark, dir)).write.parquet(out)
+    })
 
   /** Query-term table (query_id, term) for the nq lowest doc_ids:
     * first-position rank with token tie-break, top [[QueryTerms]] per

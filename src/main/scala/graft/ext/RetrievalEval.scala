@@ -78,13 +78,12 @@ object RetrievalEval {
     * gate — `rag_eval_forms` and `rag_eval_quant_forms` each built
     * the identical [[exactBatchTopK]] over the same query block. The
     * result is BOUNDED (nq·[[EvalK]] rows), so it memoizes as
-    * collected rows per source fingerprint ([[graft.ops.TrainMemo]])
+    * collected rows per source fingerprint ([[graft.ops.SessionStore]])
     * and recreates as a literal frame per consumer — same discipline
     * as the trained quantizers, same staleness guard. */
-  private def truthFor(spark: SparkSession, dir: String): DataFrame = {
-    val rows = graft.ops.TrainMemo.of(
-      "evalTruth|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet") + s"|$EvalK") {
+  private[ext] def truthFor(spark: SparkSession, dir: String): DataFrame = {
+    val rows = graft.ops.SessionStore.of(s"evalTruth|$EvalK",
+        s"$dir/embeddings.parquet") {
       exactBatchTopK(KMeans.vecs(spark, dir),
           KMeans.batchQueryRows(spark, dir), EvalK)
         .collect()

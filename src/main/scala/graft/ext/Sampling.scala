@@ -536,16 +536,9 @@ object Sampling {
     * derived state in a process-scoped scratch dir — a fresh process
     * always rebuilds from the parquet inputs. */
   def splitLabelsFor(spark: SparkSession, dir: String): String =
-    splitLabelDirs.computeIfAbsent(
-      graft.ops.TrainMemo.sourceFingerprint(s"$dir/documents.parquet"),
-      _ => {
-        val out = graft.ops.Scratch.dir("graft_split_labels")
-        writeSplitLabels(spark, dir, out)
-        out
-      })
-
-  private val splitLabelDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    graft.ops.SessionStore.dir("splitLabels", s"$dir/documents.parquet") {
+      writeSplitLabels(spark, dir, _)
+    }
 
   /** Persist an explicit (doc_id, cluster_id, split) label frame as
     * the artifact — shared by [[writeSplitLabels]] (full build) and

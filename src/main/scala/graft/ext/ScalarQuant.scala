@@ -57,12 +57,10 @@ object ScalarQuant {
     * single 128-column row per task. Min/max are order-independent, so
     * the result is hash-exact regardless of partitioning. */
   def dimStats(spark: SparkSession, dir: String): Seq[(Double, Double)] =
-    // memoized per source fingerprint (graft.ops.TrainMemo): min/max
+    // memoized per source fingerprint (graft.ops.SessionStore): min/max
     // per dim is a deterministic reduction of the embeddings file,
     // re-derived by every SQ8 form in the ladder
-    graft.ops.TrainMemo.of(
-      "dimStats|" + graft.ops.TrainMemo
-        .sourceFingerprint(s"$dir/embeddings.parquet")) {
+    graft.ops.SessionStore.of("dimStats", s"$dir/embeddings.parquet") {
       dimStatsOn(KMeans.vecs(spark, dir))
     }
 

@@ -538,22 +538,17 @@ object TextOps {
         col("vocab_size"), col("beta_micro"), col("logc_micro"))
       .orderBy(col("form"))
 
-  /** DRIVER-GATED scaffold: ONE scratch BM25 store per corpus dir,
-    * shared by the served text-stats forms within a session (the
-    * store is read-only once built — the shared-scratch discipline
-    * of the knn merge family, round-14 verdict #6). Memoized per
-    * dir: three gate entries read it, one build pays for all. */
-  private val scratchStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** DRIVER-GATED scaffold: ONE scratch BM25 store per source
+    * fingerprint, shared by the served text-stats forms within a
+    * session (the store is read-only once built — the shared-scratch
+    * discipline of the knn merge family, round-14 verdict #6): three
+    * gate entries read it, one build pays for all. */
   private def scratchPostings(spark: SparkSession, dir: String): String =
-    scratchStores.computeIfAbsent(dir, _ => {
-      val store = graft.ops.Scratch.dir("graft_textstats_srv") + "/ix"
+    graft.ops.SessionStore.dir("textStats", s"$dir/documents.parquet") {
       Retrieval.writeBm25Index(
         Tables.documents(spark, dir)
-          .select(col("doc_id"), tokens(col("text")).as("t")),
-        store)
-      store
-    })
+          .select(col("doc_id"), tokens(col("text")).as("t")), _)
+    }
 
   /** Heaps'-law fit — [[zipfFit]]'s companion corpus statistic: the
     * vocabulary grows as V(n) ≈ C·n^β with β ≈ 0.4–0.6 for natural

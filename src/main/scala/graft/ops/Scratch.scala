@@ -22,7 +22,7 @@ object Scratch {
   private val hooked = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   private def rmTree(f: File): Unit = {
-    if (f.isDirectory)
+    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
       Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
     f.delete(); ()
   }

@@ -31,10 +31,12 @@ import graft.Tables
   * a caller-controlled location, not the session warehouse, so the
   * engine never writes state into the repo working directory.
   * Staleness and concurrency: the catalog name and path embed a
-  * FINGERPRINT of the source files (name/size/mtime), so rewritten
-  * source data yields a new table name and the stale layout is never
-  * served — `tableExists` only short-circuits while the source is
-  * byte-identical. The default root is process-scoped (pid), so two
+  * FINGERPRINT of the source files ([[graft.ops.SessionStore.fingerprint]]:
+  * name/size/mtime and parquet footer), so rewritten source data
+  * yields a new table name and the stale layout is never served —
+  * `tableExists` only short-circuits while the source is unchanged.
+  * The default root is one scratch dir per JVM, deleted at exit (the
+  * catalog is in-memory, so the tables die with the JVM anyway): two
   * JVMs (e.g. sbt test and ScaleUp) never overwrite each other's
   * layouts; `synchronized` covers the in-process build race. The
   * layout is an optimization, not a semantic: `q8Bucketed` must
@@ -54,34 +56,23 @@ object GoldLayout {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
 
-  /** Catalog-safe 8-hex fingerprint of a table's source files:
-    * changes whenever the source parquet is rewritten (per-file
-    * name/length/mtime), so layouts for different scale factors AND
-    * different source versions coexist without serving stale data. */
-  private def fingerprint(dir: String, table: String): String = {
-    val src = new java.io.File(s"$dir/$table.parquet")
-    val files =
-      if (src.isDirectory)
-        Option(src.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-      else Array(src)
-    md5hex(dir + "|" + files.map(f =>
-      s"${f.getName}:${f.length}:${f.lastModified}").mkString("|"))
-  }
-
-  /** Catalog name for a (source dir, table, bucket key) layout. */
+  /** Catalog name for a (source dir, table, bucket key) layout: an
+    * 8-hex digest of the source fingerprint, so layouts for different
+    * scale factors AND different source versions coexist without
+    * serving stale data. */
   def bucketedName(dir: String, table: String, key: String): String =
-    s"gold_${table}_${key}_bkt_${fingerprint(dir, table)}"
+    s"gold_${table}_${key}_bkt_" +
+      md5hex(graft.ops.SessionStore.fingerprint(s"$dir/$table.parquet"))
 
   def lineitemTable(dir: String): String =
     bucketedName(dir, "lineitem", "l_orderkey")
   def ordersTable(dir: String): String =
     bucketedName(dir, "orders", "o_orderkey")
 
-  /** Process-scoped default root: concurrent JVMs build disjoint
-    * layout dirs instead of racing on one path (leftover dirs are
-    * ordinary /tmp garbage, reclaimed by the OS). */
-  private def defaultRoot: String =
-    s"${sys.props("java.io.tmpdir")}/graft_gold_p${ProcessHandle.current().pid()}"
+  /** Default root: one scratch dir per JVM, deleted at exit —
+    * concurrent JVMs build disjoint layout dirs instead of racing on
+    * one path, and no JVM leaves its layouts behind. */
+  private lazy val defaultRoot: String = graft.ops.Scratch.dir("graft_gold")
 
   /** Materialize one table bucketed + sorted on `key` as an external
     * catalog table; build-once per (source-version, table, key) in

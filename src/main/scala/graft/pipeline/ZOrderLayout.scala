@@ -461,23 +461,16 @@ object ZOrderLayout {
     * through the full TIERED lifecycle: three delta appends, a minor
     * compaction folding the first two into an L1 run (so reads span
     * base-absent run + delta), then the major whole-store compaction.
-    * One scratch store per corpus dir, memoized (the shared-scratch
-    * discipline). */
+    * One scratch store per source fingerprint, memoized (the
+    * shared-scratch discipline). */
   def zorderStoreForms(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-    val store = storeDirs.computeIfAbsent(dir, _ => {
-      val s = graft.ops.Scratch.dir("graft_zstore_gate") + "/store"
-      val maxKey = li.agg(max(col("l_orderkey"))).head().getLong(0)
-      val (c1, c2) = (maxKey / 3, 2 * maxKey / 3)
-      appendDelta(li.filter(col("l_orderkey") <= c1), s, "l_orderkey")
-      appendDelta(li.filter(col("l_orderkey") > c1 &&
-        col("l_orderkey") <= c2), s, "l_orderkey")
-      minorCompact(spark, s, "l_partkey", "l_suppkey")
-      appendDelta(li.filter(col("l_orderkey") > c2), s, "l_orderkey")
+    val store = graft.ops.SessionStore.dir("zstore",
+        s"$dir/lineitem.parquet") { s =>
+      landTiers(spark, li, s)
       compactStore(spark, s, "l_partkey", "l_suppkey", "l_orderkey")
-      s
-    })
+    }
     OracleForms.union(
         "source" -> zorderGroupStats(li, "l_partkey", "l_suppkey"),
         "store" -> zorderGroupStats(readStore(spark, store),
@@ -486,8 +479,20 @@ object ZOrderLayout {
         col("x_min"), col("x_max"), col("y_min"), col("y_max"))
       .orderBy(col("form"), col("grp"))
   }
-  private val storeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** The gate stores' landing: lineitem in three l_orderkey-range
+    * delta appends, with a minor compaction folding the first two
+    * into an L1 run before the third lands. */
+  private def landTiers(spark: SparkSession, li: DataFrame,
+      s: String): Unit = {
+    val maxKey = li.agg(max(col("l_orderkey"))).head().getLong(0)
+    val (c1, c2) = (maxKey / 3, 2 * maxKey / 3)
+    appendDelta(li.filter(col("l_orderkey") <= c1), s, "l_orderkey")
+    appendDelta(li.filter(col("l_orderkey") > c1 &&
+      col("l_orderkey") <= c2), s, "l_orderkey")
+    minorCompact(spark, s, "l_partkey", "l_suppkey")
+    appendDelta(li.filter(col("l_orderkey") > c2), s, "l_orderkey")
+  }
 
   /** Residue class the delete gate removes (l_orderkey % 5 ==
     * [[DeleteResidue]]) — fixed so DuckDB replays the retained set. */
@@ -499,7 +504,7 @@ object ZOrderLayout {
     * replaying one retained-rows chain in DuckDB:
     *
     *  - `masked`    — read with the delete-delta PENDING (stats
-    *                  pinned before any major ran): the anti-join
+    *                  written before any major ran): the anti-join
     *                  mask hides the rows;
     *  - `compacted` — read after the MAJOR compaction applied the
     *                  deletes physically (the del tier is gone).
@@ -510,34 +515,26 @@ object ZOrderLayout {
   def zstoreDeleteForms(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-    val (masked, store) = delForms.computeIfAbsent(dir, _ => {
-      val s = graft.ops.Scratch.dir("graft_zstore_del") + "/store"
-      val maxKey = li.agg(max(col("l_orderkey"))).head().getLong(0)
-      val (c1, c2) = (maxKey / 3, 2 * maxKey / 3)
-      appendDelta(li.filter(col("l_orderkey") <= c1), s, "l_orderkey")
-      appendDelta(li.filter(col("l_orderkey") > c1 &&
-        col("l_orderkey") <= c2), s, "l_orderkey")
-      minorCompact(spark, s, "l_partkey", "l_suppkey")
-      appendDelta(li.filter(col("l_orderkey") > c2), s, "l_orderkey")
+    val base = graft.ops.SessionStore.dir("zstoreDel",
+        s"$dir/lineitem.parquet") { base =>
+      val s = s"$base/store"
+      landTiers(spark, li, s)
       appendDeleteDelta(
         li.filter(col("l_orderkey") % 5 === DeleteResidue),
         s, "l_orderkey")
-      // pin the masked read BEFORE the major applies the deletes
-      val m = zorderGroupStats(readStore(spark, s),
-        "l_partkey", "l_suppkey").localCheckpoint()
+      // write the masked read BEFORE the major applies the deletes
+      zorderGroupStats(readStore(spark, s), "l_partkey", "l_suppkey")
+        .write.parquet(s"$base/masked")
       compactStore(spark, s, "l_partkey", "l_suppkey", "l_orderkey")
-      (m, s)
-    })
+    }
     OracleForms.union(
-        "compacted" -> zorderGroupStats(readStore(spark, store),
+        "compacted" -> zorderGroupStats(readStore(spark, s"$base/store"),
           "l_partkey", "l_suppkey"),
-        "masked" -> masked)
+        "masked" -> spark.read.parquet(s"$base/masked"))
       .select(col("form"), col("grp"), col("n"),
         col("x_min"), col("x_max"), col("y_min"), col("y_max"))
       .orderBy(col("form"), col("grp"))
   }
-  private val delForms =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, String)]()
 
   private def interleaveSql(xb: String, yb: String): String =
     (0 until Bits).map { i =>

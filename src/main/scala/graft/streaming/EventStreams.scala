@@ -54,27 +54,21 @@ object EventStreams {
     * TIMESTAMP_NTZ. The file source requires a *directory* (it
     * watches for new files), so the single test parquet is staged via
     * symlink into a temp dir — production would point at the landing
-    * directory of a real feed. */
-  /** Staged stream dirs, one per source path: repeated calls (each
-    * test, each restart) reuse the same staging symlink instead of
-    * accumulating temp directories. */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * directory of a real feed. One staging dir per source path: the
+    * session store's family is the path itself (the symlink follows a
+    * rewritten file, so there is no source version to key on), and
+    * repeated calls (each test, each restart) reuse the same link
+    * instead of accumulating temp directories. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val src = java.nio.file.Paths.get(dir, "events.parquet")
     val streamDir =
       if (java.nio.file.Files.isDirectory(src)) src.toString
-      else stagedDirs.computeIfAbsent(src.toString, { _ =>
-        val tmp = java.nio.file.Files.createTempDirectory("graft_events_stream")
-        // deleteOnExit is LIFO and only removes empty dirs: register
-        // the dir first, then the symlink, so the link goes first
-        tmp.toFile.deleteOnExit()
-        val link = java.nio.file.Files.createSymbolicLink(
-          tmp.resolve("events.parquet"), src)
-        link.toFile.deleteOnExit()
-        tmp.toString
-      })
+      else graft.ops.SessionStore.dir(s"eventsStream|$src") { tmp =>
+        val staged = java.nio.file.Files.createDirectory(
+          java.nio.file.Paths.get(tmp))
+        java.nio.file.Files.createSymbolicLink(
+          staged.resolve("events.parquet"), src)
+      }
     val onDiskTs = spark.read.parquet(streamDir).schema("ts").dataType
     normalizeStreamTs(spark.readStream
       .schema(rawSchemaFor(onDiskTs))

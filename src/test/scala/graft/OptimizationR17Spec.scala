@@ -4,10 +4,11 @@ import org.apache.spark.sql.functions._
 
 /** Focused coverage for the round-17 optimization internals: the
   * one-pass MinHash expression must be value-identical to the legacy
-  * per-hash formulation on every edge shape, and the session memos /
-  * shared scratch stores must be invalidated by a SOURCE REWRITE
-  * (the fingerprint guard) — stale centroids or stale cluster labels
-  * would be a silent correctness hole, not a performance bug. */
+  * per-hash formulation on every edge shape, and the source
+  * fingerprint the session stores are keyed on must see a SOURCE
+  * REWRITE — stale centroids or stale cluster labels would be a silent
+  * correctness hole, not a performance bug (StoreStalenessSpec covers
+  * every store family). */
 class OptimizationR17Spec extends SparkSpec {
 
   private val NumHashes = 8
@@ -50,88 +51,27 @@ class OptimizationR17Spec extends SparkSpec {
         s"${bad.map(_.getLong(0)).toSeq}")
   }
 
-  test("TrainMemo caches per key and sourceFingerprint changes when " +
-      "the source file is rewritten") {
-    var computes = 0
-    val key = "r17spec|" + System.nanoTime()
-    def get() = graft.ops.TrainMemo.of(key) { computes += 1; Seq(1, 2, 3) }
-    assert(get() == Seq(1, 2, 3) && get() == Seq(1, 2, 3))
-    assert(computes == 1, "second of() must serve the memo")
-    val dir = java.nio.file.Files.createTempDirectory("r17fp").toFile
+  test("SessionStore.fingerprint changes on a same-length source " +
+      "rewrite that keeps the old mtime") {
+    val dir = graft.ops.Scratch.dir("r17fp")
     val f = new java.io.File(dir, "t.parquet")
-    java.nio.file.Files.writeString(f.toPath, "v1")
-    val fp1 = graft.ops.TrainMemo.sourceFingerprint(f.getPath)
-    f.setLastModified(f.lastModified() + 1234)
-    java.nio.file.Files.writeString(f.toPath, "v2-longer")
-    val fp2 = graft.ops.TrainMemo.sourceFingerprint(f.getPath)
-    assert(fp1 != fp2, "rewritten source must change the fingerprint")
-  }
-
-  test("nearDupClusters' shared label store is invalidated by a " +
-      "source rewrite (no stale clusters served)") {
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("r17nd").toString
     def write(ids: Seq[Long]): Unit = {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_chars",
-          org.apache.spark.sql.types.LongType)))
-      val rows = ids.map(i => org.apache.spark.sql.Row(
-        i, s"the quick brown fox jumps over dog $i", "en", "s0",
-        40L)).asJava
-      spark.createDataFrame(rows, schema)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val s = spark; import s.implicits._
+      ids.toDF("id").coalesce(1).write.mode("overwrite")
+        .option("compression", "none").parquet(s"$dir/w")
+      val part = new java.io.File(s"$dir/w").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, f.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     write(Seq(1L, 2L, 3L))
-    val got1 = graft.ext.Dedup.nearDupClusters(spark, dir)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(got1 == Seq(1L, 2L, 3L))
-    // rewrite with DIFFERENT rows; an mtime bump guards coarse
-    // filesystem timestamp granularity
-    Thread.sleep(5)
-    write(Seq(10L, 11L))
-    val got2 = graft.ext.Dedup.nearDupClusters(spark, dir)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(got2 == Seq(10L, 11L),
-      s"rewritten corpus must rebuild the label store, got $got2")
-  }
-
-  test("KMeans.train is invalidated by an embeddings rewrite") {
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("r17km").toString
-    def write(seed: Int, n: Int): Unit = {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("label",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))
-      val rows = (0 until n).map { i =>
-        org.apache.spark.sql.Row(i.toLong, s"l${i % 3}",
-          Seq.tabulate(64)(d => ((i * 31 + d * 7 + seed) % 13) / 13.0))
-      }.asJava
-      spark.createDataFrame(rows, schema)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/embeddings.parquet")
-    }
-    write(seed = 1, n = 40)
-    val c1 = graft.ext.KMeans.train(spark, dir)
-    assert(c1 == graft.ext.KMeans.train(spark, dir),
-      "same source must serve the memoized centroids")
-    Thread.sleep(5)
-    write(seed = 2, n = 40)
-    val c2 = graft.ext.KMeans.train(spark, dir)
-    assert(c1 != c2,
-      "rewritten embeddings must retrain, not serve stale centroids")
+    val (len, mtime) = (f.length, f.lastModified)
+    val fp1 = graft.ops.SessionStore.fingerprint(f.getPath)
+    write(Seq(4L, 5L, 6L))
+    assert(f.setLastModified(mtime) && f.lastModified == mtime)
+    assert(f.length == len, "the rewrite must keep the file length")
+    val fp2 = graft.ops.SessionStore.fingerprint(f.getPath)
+    assert(fp1 != fp2, "rewritten source must change the fingerprint")
   }
 
   test("trainFramesGrouped equals per-group trainFrame, including a " +

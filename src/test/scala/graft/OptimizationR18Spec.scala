@@ -44,66 +44,4 @@ class OptimizationR18Spec extends SparkSpec {
     assert(e.getMessage.contains("residualCodebooks"),
       s"unexpected message: ${e.getMessage}")
   }
-
-  test("the shared knn edges and PQ codes stores are invalidated by " +
-      "an embeddings rewrite (no stale session store served)") {
-    val dir = java.nio.file.Files.createTempDirectory("r18st").toString
-    writeEmbeddings(dir, seed = 1, n = 40)
-    val g1 = graft.ext.ClusterOps.knnGraph(spark, dir)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val c1 = graft.ext.ProductQuant.pqCodes(spark, dir)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(g1.nonEmpty && c1 == (0L until 40L).toSet)
-    Thread.sleep(5)
-    writeEmbeddings(dir, seed = 2, n = 25)
-    val g2 = graft.ext.ClusterOps.knnGraph(spark, dir)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val c2 = graft.ext.ProductQuant.pqCodes(spark, dir)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(c2 == (0L until 25L).toSet,
-      s"rewritten embeddings must rebuild the codes store, got $c2")
-    assert(g2.nonEmpty && g2.forall(_ < 25L),
-      s"rewritten embeddings must rebuild the edges store, got $g2")
-  }
-
-  test("the BM25 tokens store and the verified-pair stores are " +
-      "invalidated by a documents rewrite") {
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("r18tk").toString
-    def write(ids: Seq[Long]): Unit = {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_chars",
-          org.apache.spark.sql.types.LongType)))
-      val rows = ids.map(i => org.apache.spark.sql.Row(
-        i, s"the quick brown fox jumps over dog $i", "en", "s0",
-        40L)).asJava
-      spark.createDataFrame(rows, schema)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/documents.parquet")
-    }
-    write(Seq(1L, 2L, 3L))
-    val t1 = graft.ext.Retrieval.bm25TopK(spark, dir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val p1 = graft.ext.Dedup.ngramJaccardPairs(spark, dir)
-      .select("doc_a").collect().map(_.getLong(0)).toSet
-    assert((t1 ++ p1).forall(Seq(1L, 2L, 3L).contains))
-    Thread.sleep(5)
-    write(Seq(10L, 11L))
-    val t2 = graft.ext.Retrieval.bm25TopK(spark, dir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val p2 = graft.ext.Dedup.ngramJaccardPairs(spark, dir)
-      .select("doc_a").collect().map(_.getLong(0)).toSet
-    assert(t2.forall(Seq(10L, 11L).contains),
-      s"rewritten corpus must rebuild the tokens store, got $t2")
-    assert(p2.forall(Seq(10L, 11L).contains),
-      s"rewritten corpus must rebuild the pair store, got $p2")
-  }
 }
