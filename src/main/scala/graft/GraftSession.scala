@@ -38,6 +38,14 @@ object GraftSession {
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.ui.enabled", "false")
 
+  /** [[builder]] on `local[n]` with n shuffle partitions, n from
+    * `SPARK_GRAFT_CPUS` (else `defaultCpus`): the mains size their
+    * session to the box they run on. */
+  def local(defaultCpus: Int): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    builder(s"local[$cpus]", cpus)
+  }
+
   /** Assert the session was built with the nanos flag (see above)
     * instead of flipping it behind the caller's back. */
   def requireNanosFlag(spark: SparkSession): Unit =

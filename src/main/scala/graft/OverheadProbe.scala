@@ -89,7 +89,7 @@ object OverheadProbe {
       else Seq("q5_avg_margin_per_channel", "q7_top_orders_by_price")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def run(tag: String, extra: Map[String, String]): Unit = {
-      val b = GraftSession.builder("local[32]", "32")
+      val b = GraftSession.local(32)
         .appName(s"overhead-$tag")
       extra.foreach { case (k, v) => b.config(k, v) }
       val spark = b.getOrCreate()
@@ -109,7 +109,7 @@ object OverheadProbe {
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m"))
     // dashboard serving path: QueryMemo plan-reuse vs fresh-per-request
-    val spark = GraftSession.builder("local[32]", "32")
+    val spark = GraftSession.local(32)
       .appName("overhead-reuse").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println("[probe] --- dashboard memo reuse (QueryMemo) ---")

@@ -10,6 +10,7 @@ import graft.ops.StageLog
   * passes — the reference re-counts eagerly per stage).
   *
   * Usage: runMain graft.RunPipeline [sfDir] [warehouseDir]
+  * (without `warehouseDir` the warehouse is scratch, deleted at exit)
   *
   * `sfDir` may also be a zip URL (`file://…/feed.zip` or http(s)) —
   * the reference's staged-feed entry point: the archive's per-table
@@ -30,9 +31,8 @@ object RunPipeline {
     val source = args.headOption.getOrElse("/root/testdata/sf0.001")
     val warehouse =
       if (args.length > 1) args(1)
-      else java.nio.file.Files.createTempDirectory("graft_warehouse").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+      else graft.ops.Scratch.dir("graft_warehouse")
+    val spark = GraftSession.local(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
 
@@ -41,8 +41,7 @@ object RunPipeline {
       else {
         val schemaDir = sys.env.getOrElse("SPARK_GRAFT_SCHEMA_DIR",
           "/root/testdata/sf0.001")
-        val staging =
-          java.nio.file.Files.createTempDirectory("graft_staging").toString
+        val staging = graft.ops.Scratch.dir("graft_staging")
         val dir = graft.sources.BronzeIngest.ingestZip(spark, source, staging,
           FeedTables.map(t => t -> Tables.load(spark, schemaDir, t).schema).toMap)
         println(s"[pipeline] staged $source -> $dir")

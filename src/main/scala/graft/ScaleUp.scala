@@ -36,7 +36,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val copies = args.headOption.map(_.toInt).getOrElse(100)
-    val spark = GraftSession.builder("local[32]", "32").getOrCreate()
+    val spark = GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val src = "/root/testdata/sf0.1"
     val dst = s"/tmp/scale$copies"

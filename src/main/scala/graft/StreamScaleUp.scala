@@ -48,7 +48,7 @@ object StreamScaleUp {
 
   def main(args: Array[String]): Unit = {
     val copies = args.headOption.map(_.toInt).getOrElse(100)
-    val spark = GraftSession.builder("local[32]", "32")
+    val spark = GraftSession.local(32)
       .appName("graft-stream-scale")
       .config(EventStreams.RocksDbStateStoreConf._1,
         EventStreams.RocksDbStateStoreConf._2)

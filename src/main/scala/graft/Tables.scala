@@ -6,8 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every query in the engine takes `(spark, sfDir)` and resolves its
   * inputs here, so the same code runs at any scale factor — and, on a
-  * real cluster, against any warehouse path. Reads are plain
-  * `spark.read.parquet`, which gives Catalyst full pushdown/pruning
+  * real cluster, against any warehouse path. Reads go through
+  * [[graft.ops.SessionStore.parquet]]: a parquet scan with its schema
+  * supplied from a per-source-version cache, so building a query starts
+  * no schema-inference job, while Catalyst keeps full pushdown/pruning
   * freedom (filters and column selections reach the scan).
   */
 object Tables {
@@ -16,7 +18,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.ops.SessionStore.parquet(spark, s"$sfDir/$name.parquet")
 
   /** Name-dispatched loader that applies per-table normalization
     * (events needs the nanos-timestamp conversion). */

@@ -8,8 +8,7 @@ import org.apache.spark.sql.SparkSession
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val b = GraftSession.builder(s"local[$cpus]", cpus)
+    val b = GraftSession.local(16)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2); b.config(k, v)

@@ -444,7 +444,7 @@ object ClusterOps {
   /** The shared store read back, typed exactly like [[knnEdgesOn]]'s
     * output (cell returns as a partition column). */
   private def knnEdgesStored(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(knnEdgesStoreFor(spark, dir))
+    graft.ops.SessionStore.parquet(spark, knnEdgesStoreFor(spark, dir))
       .select(col("cell").cast("int").as("cell"), col("vec_id"),
         col("rk").cast("int").as("rk"), col("nbr_id"), col("cosine"))
 
@@ -1027,7 +1027,8 @@ object ClusterOps {
     // (r17 — the Bpe.trained / round-14 shared-scratch discipline):
     // three gates (components, keep-best, community-hist) each re-ran
     // the identical graph build + CC fixpoint on the same corpus
-    spark.read.parquet(graft.ops.SessionStore.dir("knnCommunities",
+    graft.ops.SessionStore.parquet(spark,
+      graft.ops.SessionStore.dir("knnCommunities",
         s"$dir/embeddings.parquet") { out =>
         knnCommunitiesLive(spark, dir).write.parquet(out)
       })

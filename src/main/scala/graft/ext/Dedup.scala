@@ -816,9 +816,10 @@ object Dedup {
     // doubles). The cluster-label build keeps its own pass via
     // [[ngramJaccardPairsOn]] (it runs once per corpus behind the
     // r17 label store).
-    spark.read.parquet(graft.ops.SessionStore.dir("ngramPairs",
-        s"$dir/documents.parquet") { out =>
-        ngramJaccardPairsOn(Tables.documents(spark, dir)).write.parquet(out)
+    graft.ops.SessionStore.parquet(spark,
+      graft.ops.SessionStore.dir("ngramPairs", s"$dir/documents.parquet") {
+        out => ngramJaccardPairsOn(Tables.documents(spark, dir))
+          .write.parquet(out)
       })
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -1399,9 +1400,9 @@ object Dedup {
     // identical LSH pair build + CC fixpoint on the same corpus. The
     // `keep` flag re-derives on read (keep = doc_id == cluster_id,
     // the component-min election — a pure projection).
-    spark.read.parquet(graft.ops.SessionStore.dir("ndClusters",
-        s"$dir/documents.parquet") { out =>
-        nearDupClustersOn(Tables.documents(spark, dir))
+    graft.ops.SessionStore.parquet(spark,
+      graft.ops.SessionStore.dir("ndClusters", s"$dir/documents.parquet") {
+        out => nearDupClustersOn(Tables.documents(spark, dir))
           .select(col("doc_id"), col("cluster_id")).write.parquet(out)
       })
       .select(col("doc_id"), col("cluster_id"),
@@ -2003,7 +2004,8 @@ object Dedup {
     // ran twice per sweep (its own gate + method_agreement's semantic
     // leg). The guard runs at store-build time (maxRows is part of
     // the key, so a stricter caller still re-checks).
-    spark.read.parquet(graft.ops.SessionStore.dir(s"cosPairs|$maxRows",
+    graft.ops.SessionStore.parquet(spark,
+      graft.ops.SessionStore.dir(s"cosPairs|$maxRows",
         s"$dir/embeddings.parquet") { out =>
         val e = Tables.embeddings(spark, dir)
           .select(col("vec_id"),

@@ -205,7 +205,7 @@ object ProductQuant {
   /** A codes store read back, typed exactly like the encode output
     * (`cell` returns as a partition column). */
   private def codesStored(spark: SparkSession, store: String): DataFrame =
-    spark.read.parquet(store)
+    graft.ops.SessionStore.parquet(spark, store)
       .select(col("vec_id") +: col("label") +:
         col("cell").cast("int").as("cell") +:
         (0 until M).map(m => col(s"code$m").cast("int").as(s"code$m")): _*)

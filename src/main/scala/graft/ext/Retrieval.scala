@@ -78,10 +78,10 @@ object Retrieval {
     * round-trips string arrays exactly. The diff-upsert gate's
     * snapshot views tokenize their own derived text and stay live. */
   private def toksD(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(graft.ops.SessionStore.dir("bm25Toks",
-        s"$dir/documents.parquet") { out =>
-      toksOf(Tables.documents(spark, dir)).write.parquet(out)
-    })
+    graft.ops.SessionStore.parquet(spark,
+      graft.ops.SessionStore.dir("bm25Toks", s"$dir/documents.parquet") {
+        out => toksOf(Tables.documents(spark, dir)).write.parquet(out)
+      })
 
   /** Query-term table (query_id, term) for the nq lowest doc_ids:
     * first-position rank with token tie-break, top [[QueryTerms]] per

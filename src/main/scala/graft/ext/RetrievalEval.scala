@@ -84,10 +84,12 @@ object RetrievalEval {
   private[ext] def truthFor(spark: SparkSession, dir: String): DataFrame = {
     val rows = graft.ops.SessionStore.of(s"evalTruth|$EvalK",
         s"$dir/embeddings.parquet") {
-      exactBatchTopK(KMeans.vecs(spark, dir),
-          KMeans.batchQueryRows(spark, dir), EvalK)
+      val queries = KMeans.batchQueryRows(spark, dir)
+      val got = exactBatchTopK(KMeans.vecs(spark, dir), queries, EvalK)
         .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+      require(got.length <= queries.size * EvalK, s"evalTruth collected " +
+        s"${got.length} rows > nq*EvalK = ${queries.size}*$EvalK")
+      got.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     }
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types._

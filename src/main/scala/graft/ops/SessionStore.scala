@@ -2,13 +2,16 @@ package graft.ops
 
 import java.io.{File, RandomAccessFile}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** The one in-session memo for every build-once store: trained
   * quantizers and rotations (bounded metadata), collected truth rows,
-  * and corpus-sized scratch parquet stores (knn edges, PQ codes, BM25
-  * tokens, verified pair sets, label artifacts, z-order stores). A
-  * registry sweep or a long-lived serving session asks for the same
-  * store many times; every build is a deterministic pure function of
-  * its source files, so it runs once per source version.
+  * inferred parquet schemas (see [[parquet]]), and corpus-sized scratch
+  * parquet stores (knn edges, PQ codes, BM25 tokens, verified pair
+  * sets, label artifacts, z-order stores). A registry sweep or a
+  * long-lived serving session asks for the same store many times;
+  * every build is a deterministic pure function of its source files,
+  * so it runs once per source version.
   *
   * Keys are `family` (the build's name plus its parameters, e.g.
   * `s"kmeans|$lo|$len|$k"`) plus the [[fingerprint]] of every source
@@ -16,10 +19,11 @@ import java.io.{File, RandomAccessFile}
   * store that declares its sources cannot serve stale data;
   * StoreStalenessSpec checks that every family declares them.
   *
-  * Values are plain values or paths, never session-bound plans (a
-  * checkpointed DataFrame dies with its SparkContext). Nothing is
-  * persisted: a fresh process always rebuilds from the parquet inputs,
-  * and `dir` stores live under [[Scratch]], deleted at JVM exit. */
+  * Values are plain values, schemas or paths, never session-bound
+  * plans (a checkpointed DataFrame dies with its SparkContext). Nothing
+  * is persisted: a fresh process always rebuilds from the parquet
+  * inputs, and `dir` stores live under [[Scratch]], deleted at JVM
+  * exit. */
 object SessionStore {
 
   private val memo =
@@ -51,6 +55,35 @@ object SessionStore {
         "/store"
       write(out)
       out
+    }
+
+  /** The session settings that change what parquet schema inference
+    * returns for the same files (nanos as Long vs. timestamp, binary as
+    * string, INT96 as timestamp, NTZ inference, footer merging). */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Reads a parquet path with its schema supplied, so building the
+    * DataFrame starts no Spark job: a bare `spark.read.parquet` runs a
+    * footer-reading inference job on every call. The schema is inferred
+    * once per source fingerprint and per session inference settings
+    * (a schema is a plain value, not bound to a session), so a
+    * rewritten source or a differently configured session gets its own.
+    * A path with no local file behind it (a missing table, a remote
+    * filesystem) has no fingerprint and reads as before: a missing path
+    * still throws here, at construction. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    if (!new File(path).exists) spark.read.parquet(path)
+    else {
+      val confs = inferenceConfs.map(k => spark.conf.getOption(k).orNull)
+      val schema = of(("schema" +: confs).mkString("|"), path) {
+        spark.read.parquet(path).schema
+      }
+      spark.read.schema(schema).parquet(path)
     }
 
   /** Fingerprint of a source path (a parquet file or a directory of

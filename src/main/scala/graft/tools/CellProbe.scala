@@ -8,7 +8,7 @@ import graft.GraftSession
   * SemDeDup's per-cell trainer). */
 object CellProbe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", "32").getOrCreate()
+    val spark = GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (sf <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       val counts = graft.ext.KMeans.kmeansAssign(spark, sf)

@@ -26,9 +26,7 @@ object ProbeGate {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(16).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val l = new L
     spark.sparkContext.addSparkListener(l)

@@ -85,6 +85,17 @@ class ProductQuantSpec extends SparkSpec {
     assert(fed.toSeq == live.toSeq)
   }
 
+  test("the shared codes stores still prune cells when read with a " +
+      "supplied schema") {
+    val cellFilter = """PartitionFilters: \[[^\]]*\(cell#\d+ = \d+\)""".r
+    Seq(ProductQuant.ivfPqTopK(spark, sf),
+        ProductQuant.ivfPqResidualTopK(spark, sf)).foreach { df =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(cellFilter.findFirstIn(plan).nonEmpty,
+        s"expected a cell partition filter in:\n$plan")
+    }
+  }
+
   test("cell-partitioned codes: ADC equals the live IVF-PQ and prunes partitions") {
     val coarse = KMeans.train(spark, sf)
     val cbs = ProductQuant.codebooks(spark, sf)

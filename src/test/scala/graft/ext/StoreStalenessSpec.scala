@@ -28,7 +28,7 @@ class StoreStalenessSpec extends graft.SparkSpec {
   private case class Obs(rows: Seq[String], ids: Set[Long])
 
   private val IdCols = Seq("vec_id", "vec_a", "doc_id", "doc_a",
-    "event_id", "query_id")
+    "event_id", "query_id", "o_orderkey")
 
   private def frame(df: DataFrame): Obs = {
     val got = df.collect()
@@ -99,6 +99,12 @@ class StoreStalenessSpec extends graft.SparkSpec {
     Family("bpe", "documents", d => frame(Bpe.bpeMerges(spark, d))),
     Family("textStats", "documents",
       d => frame(TextOps.heapsFitForms(spark, d))),
+    // the inferred schema of a table read, over a column-set rewrite
+    Family("tableSchema", "orders", { d =>
+      val df = graft.Tables.orders(spark, d)
+      val o = frame(df)
+      o.copy(rows = df.columns.mkString(",") +: o.rows)
+    }),
     // stores over lineitem and events
     Family("zstore", "lineitem",
       d => frame(ZOrderLayout.zorderStoreForms(spark, d))),
@@ -123,6 +129,8 @@ class StoreStalenessSpec extends graft.SparkSpec {
     case ("lineitem", 0) => Seq(1L, 3L, 5L, 7L)
     case ("lineitem", _) => Seq(2L, 4L, 6L)
     case ("events", 0) => 0L until 30L
+    case ("orders", 0) => 1L to 4L
+    case ("orders", _) => 5L to 9L
     case (_, _) => 100L until 130L
   }
 
@@ -157,6 +165,13 @@ class StoreStalenessSpec extends graft.SparkSpec {
       case "lineitem" =>
         spark.read.parquet(s"$sf/lineitem.parquet")
           .filter(col("l_orderkey").isin(keep: _*))
+          .coalesce(1).write.mode("overwrite").parquet(path)
+      case "orders" =>
+        // version B drops a column and adds another
+        val cols = if (v == 0) Seq("o_orderkey", "o_custkey")
+          else Seq("o_orderkey", "o_totalprice", "o_orderstatus")
+        spark.read.parquet(s"$sf/orders.parquet")
+          .filter(col("o_orderkey").isin(keep: _*)).select(cols.map(col): _*)
           .coalesce(1).write.mode("overwrite").parquet(path)
       case "events" =>
         // a single parquet file, like the shipped corpus: the stream
