@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.QueryProfile
 
 /** Dev experiment for the tiny-query overhead question (round-3
   * verdict #7): q5/q7 cost ~5× the reference MySQL in ABSOLUTE terms
@@ -10,8 +10,9 @@ import org.apache.spark.sql.SparkSession
   *
   *  1. plan: analysis + optimization + physical planning
   *     (forcing `queryExecution.executedPlan`),
-  *  2. execute: steady-state collect (min of 3) with job/stage/task
-  *     counts from a listener,
+  *  2. execute: one collect as a [[QueryProfile]] record (jobs,
+  *     stages, tasks, shuffle bytes), then the steady-state collect
+  *     (min of 3),
   *
   * and re-times execution under candidate overhead mitigations
   * (AQE coalesce to fewer tasks via parallelismFirst=false).
@@ -19,42 +20,23 @@ import org.apache.spark.sql.SparkSession
   */
 object OverheadProbe {
 
-  private final class CountListener extends SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    override def onJobStart(j: SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      stages.incrementAndGet()
-      tasks.addAndGet(s.stageInfo.numTasks)
-    }
-  }
+  private def secs(spark: SparkSession, name: String, dir: String)(
+      body: => Any): Double = QueryProfile.run(spark, name, dir)(body)._2.wallS
 
-  private def probe(spark: SparkSession, name: String, sfDir: String,
-      listener: CountListener): Unit = {
-    def planSec(): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
-      (System.nanoTime() - t0) / 1e9
-    }
+  private def probe(spark: SparkSession, name: String,
+      sfDir: String): Unit = {
+    def build() = SparkEntry.queries(name)(spark, sfDir)
     def execSec(): Double = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val t0 = System.nanoTime()
-      df.collect()
-      (System.nanoTime() - t0) / 1e9
+      val df = build(); secs(spark, name, sfDir)(df.collect())
     }
     execSec() // warm
-    val plan = Seq(planSec(), planSec(), planSec()).min
-    val j0 = listener.jobs.get; val s0 = listener.stages.get
-    val t0 = listener.tasks.get
-    val exec = execSec()
-    Thread.sleep(300)
-    val (dj, ds, dt) = (listener.jobs.get - j0, listener.stages.get - s0,
-      listener.tasks.get - t0)
-    val steady = Seq(execSec(), execSec(), execSec()).min
-    println(f"[probe] $name%-28s plan $plan%6.3f s  exec $exec%6.3f s  " +
-      f"steady-min $steady%6.3f s  jobs $dj stages $ds tasks $dt")
+    val plan = Seq.fill(3)(
+      secs(spark, name, sfDir)(build().queryExecution.executedPlan)).min
+    val df = build()
+    QueryProfile.measure(spark, name, sfDir)(df.collect())
+    val steady = Seq.fill(3)(execSec()).min
+    println(f"[probe] $name%-28s plan $plan%6.3f s  " +
+      f"steady-min $steady%6.3f s")
   }
 
   /** Steady-state serving-latency comparison for the dashboard memo
@@ -67,9 +49,7 @@ object OverheadProbe {
       sfDir: String): Unit = {
     import graft.queries.QueryMemo
     def minOf3(f: () => Double): Double = Seq(f(), f(), f()).min
-    def timed(df: => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime(); df.collect(); (System.nanoTime() - t0) / 1e9
-    }
+    def timed(df: => DataFrame): Double = secs(spark, name, sfDir)(df.collect())
     SparkEntry.queries(name)(spark, sfDir).collect() // warm codegen/IO
     val fresh = minOf3(() => timed(SparkEntry.queries(name)(spark, sfDir)))
     val memoDf = QueryMemo.of(spark, name, sfDir)
@@ -94,10 +74,8 @@ object OverheadProbe {
       extra.foreach { case (k, v) => b.config(k, v) }
       val spark = b.getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
-      val listener = new CountListener
-      spark.sparkContext.addSparkListener(listener)
       println(s"[probe] --- $tag ---")
-      qs.foreach(q => probe(spark, q, sfDir, listener))
+      qs.foreach(q => probe(spark, q, sfDir))
       spark.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

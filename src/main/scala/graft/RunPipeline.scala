@@ -1,13 +1,19 @@
 package graft
 
-import graft.ops.StageLog
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
+import graft.ops.{QueryProfile, StageLog}
+import graft.pipeline.StarSchema
 
 /** End-to-end executable pipeline — the reference's
   * `python etl_pipeline/load.py` user story on this engine
   * (SURVEY.md §3.1): transform (C1) → star-schema warehouse build
-  * (C2) → the analytic corpus, with per-stage metrics riding on the
-  * materializing jobs via `Dataset.observe` (no extra counting
-  * passes — the reference re-counts eagerly per stage).
+  * (C2) → a check of the written warehouse against the registry, with
+  * the transform's metrics riding on its write via `Dataset.observe`
+  * (no extra counting pass — the reference re-counts eagerly per
+  * stage). A warehouse that differs from the registry forms fails the
+  * run.
   *
   * Usage: runMain graft.RunPipeline [sfDir] [warehouseDir]
   * (without `warehouseDir` the warehouse is scratch, deleted at exit)
@@ -21,8 +27,8 @@ import graft.ops.StageLog
   */
 object RunPipeline {
 
-  /** Tables a zip feed must carry: everything the C1→C2 pipeline and
-    * its q1–q8 verification stage read. */
+  /** Tables a zip feed must carry: everything the C1→C2 pipeline
+    * reads. */
   private val FeedTables =
     Seq("orders", "customer", "nation", "region", "part",
       "supplier", "lineitem")
@@ -56,24 +62,42 @@ object RunPipeline {
     val transformMetrics = StageLog.metrics(obs)
 
     // stage 2: star schema warehouse (dims + FK-resolved fact)
-    graft.pipeline.StarSchema.materialize(spark, sfDir, warehouse)
+    StarSchema.materialize(spark, sfDir, warehouse)
 
-    // stage 3: the reference's verification workload (q1–q8)
-    val queries = Seq("q1_total_revenue", "q2_revenue_per_year",
-      "q3_top_nations_by_revenue", "q4_units_per_item_type",
-      "q5_avg_margin_per_channel", "q6_revenue_per_region_year",
-      "q7_top_orders_by_price", "q8_avg_shipping_days")
-    val queryMetrics = queries.map { q =>
-      val t = System.nanoTime()
-      val n = SparkEntry.queries(q)(spark, sfDir).collect().length
-      q -> Map[String, Any]("rows" -> n.toLong,
-        "seconds" -> (System.nanoTime() - t) / 1e9)
-    }
-
-    StageLog.metricsTable(spark,
-        ("transform" -> transformMetrics) +: queryMetrics)
+    // stage 3: the warehouse stage 2 wrote, checked against the
+    // oracle-checked registry forms
+    val checks = QueryProfile.measure(spark, "verify_warehouse", warehouse)(
+      verifyWarehouse(spark, sfDir, warehouse))
+    StageLog.metricsTable(spark, ("transform" -> transformMetrics) +: checks)
       .show(20, truncate = false)
     println(f"[pipeline] warehouse=$warehouse total=${(System.nanoTime() - t0) / 1e9}%.2f s")
     spark.stop()
+    val bad = checks.collect { case (t, m) if m("mismatched_rows") != 0L => t }
+    if (bad.nonEmpty) throw new IllegalStateException(
+      s"warehouse $warehouse differs from the registry forms in: " +
+        bad.mkString(", "))
+  }
+
+  /** Reads every table of a materialized warehouse back and compares
+    * it, as a multiset of rows rendered as strings, with its registry
+    * form (`star_dim_*`, `star_fact_sales`) over `sfDir`, then runs
+    * `star_revenue_by_year` over the written tables. One entry per
+    * check: the rows read back and the rows in either side only. */
+  def verifyWarehouse(spark: SparkSession, sfDir: String,
+      warehouse: String): Seq[(String, Map[String, Any])] = {
+    def asText(df: DataFrame) =
+      df.select(df.columns.map(c => col(c).cast("string")): _*)
+    def check(name: String, written: DataFrame, expected: DataFrame) = {
+      val w = asText(written.select(expected.columns.map(col): _*))
+      val e = asText(expected)
+      name -> Map[String, Any]("rows" -> w.count(),
+        "mismatched_rows" -> (w.exceptAll(e).count() + e.exceptAll(w).count()))
+    }
+    def table(t: String) = spark.read.parquet(s"$warehouse/$t")
+    StarSchema.WarehouseTables.map(t =>
+      check(t, table(t), StarSchema.queries(s"star_$t")(spark, sfDir))) :+
+      check("revenue_by_year",
+        StarSchema.revenueByYearOn(table("fact_sales"), table("dim_date")),
+        StarSchema.queries("star_revenue_by_year")(spark, sfDir))
   }
 }

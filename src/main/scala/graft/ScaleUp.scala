@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
+import graft.ops.QueryProfile
 
 /** Dev experiment: build key-shifted 10×/100× copies of the star
   * tables AND the documents corpus under /tmp, then time headline +
@@ -10,6 +10,11 @@ import org.apache.spark.sql.functions._
   * these at 100 TB").
   *
   * Usage: `runMain graft.ScaleUp [copies]` (default 100).
+  *
+  * Every timed row, query or one-time build, is one [[QueryProfile]]
+  * record: wall, rows, jobs, stages, tasks, executor time and shuffle
+  * bytes. `[scaleup]` lines carry what a record cannot: recall,
+  * candidate volumes, store sizes.
   *
   * Scaling design:
   *  - orders/lineitem: key-shifted copies (`key + i·maxKey`) keep
@@ -23,25 +28,16 @@ import org.apache.spark.sql.functions._
   */
 object ScaleUp {
 
-  /** Cumulative shuffle bytes across all completed stages. */
-  private final class ShuffleListener extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val copies = args.headOption.map(_.toInt).getOrElse(100)
     val spark = GraftSession.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val src = "/root/testdata/sf0.1"
     val dst = s"/tmp/scale$copies"
-    val listener = new ShuffleListener
-    spark.sparkContext.addSparkListener(listener)
+    def measure[T](n: String, dir: String)(body: => T): T =
+      QueryProfile.measure(spark, n, dir)(body)
+    def note(n: String, dir: String, s: String): Unit =
+      println(f"[scaleup] $n%-32s $dir%-24s $s")
 
     if (!new java.io.File(s"$dst/lineitem.parquet").exists()) {
       val li = Tables.lineitem(spark, src)
@@ -80,26 +76,14 @@ object ScaleUp {
     // artifact/sketch curation tiers) and the first one to run would
     // otherwise absorb the one-time corpus rewrite into its timing
     for (d <- Seq(src, dst)) {
-      val tb = System.nanoTime()
-      graft.pipeline.GoldLayout.ensureBucketedTable(
-        spark, d, "documents", "doc_id")
-      println(f"[scaleup] gold_docs_bucket_build       $d%-18s " +
-        f"${(System.nanoTime - tb) / 1e9}%8.2f s")
+      measure("gold_docs_bucket_build", d)(
+        graft.pipeline.GoldLayout.ensureBucketedTable(
+          spark, d, "documents", "doc_id"))
     }
 
     def timed(n: String, dir: String, reps: Int)(
         body: => org.apache.spark.sql.DataFrame): Unit =
-      (1 to reps).foreach { _ =>
-        val t0 = System.nanoTime()
-        val r0 = listener.read.get; val w0 = listener.write.get
-        val rows = body.collect().length
-        val sec = (System.nanoTime - t0) / 1e9
-        Thread.sleep(500) // let stage-completion events drain
-        println(f"[scaleup] $n%-28s $dir%-18s $sec%8.2f s  " +
-          f"shufR ${(listener.read.get - r0) / 1048576.0}%9.1f MB  " +
-          f"shufW ${(listener.write.get - w0) / 1048576.0}%9.1f MB  " +
-          f"rows $rows%d")
-      }
+      (1 to reps).foreach(_ => measure(n, dir)(body.collect()))
 
     def time(n: String, dir: String, reps: Int): Unit =
       timed(n, dir, reps)(SparkEntry.queries(n)(spark, dir))
@@ -122,10 +106,8 @@ object ScaleUp {
       // cost a lakehouse pays once, amortized over every downstream
       // fact-fact join.
       for (d <- Seq(src, dst)) {
-        val t0 = System.nanoTime()
-        graft.pipeline.GoldLayout.ensureBucketed(spark, d)
-        println(f"[scaleup] gold_bucketed_build          $d%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s")
+        measure("gold_bucketed_build", d)(
+          graft.pipeline.GoldLayout.ensureBucketed(spark, d))
         time("q8_shipping_days_bucketed", d, 2)
       }
       for (q <- Seq("dedup_minhash_lsh", "dedup_incremental")) {
@@ -177,10 +159,8 @@ object ScaleUp {
       // tier hasn't yet (a fresh all-sections run reaches bloom first),
       // so the sketch row is never silently skipped.
       if (!new java.io.File(s"$dst/curated").exists()) {
-        val tl = System.nanoTime()
-        graft.ext.Sampling.writeSplitLabels(spark, dst, s"$dst/curated")
-        println(f"[scaleup] split_labels_build            $dst%-18s " +
-          f"${(System.nanoTime - tl) / 1e9}%8.2f s  (for bloom sketch)")
+        measure("split_labels_build", dst)(
+          graft.ext.Sampling.writeSplitLabels(spark, dst, s"$dst/curated"))
       }
       timed("curation_pipeline_sketch", dst, 2)(
         graft.ext.Curation.curationPipelineSketch(spark, dst,
@@ -194,10 +174,8 @@ object ScaleUp {
       timed("curation_pipeline_live", dst, 1)(
         graft.ext.Curation.curationPipeline(spark, dst))
       val labelsDir = s"$dst/curated"
-      val t0 = System.nanoTime()
-      graft.ext.Sampling.writeSplitLabels(spark, dst, labelsDir)
-      println(f"[scaleup] split_labels_build            $dst%-18s " +
-        f"${(System.nanoTime - t0) / 1e9}%8.2f s")
+      measure("split_labels_build", dst)(
+        graft.ext.Sampling.writeSplitLabels(spark, dst, labelsDir))
       timed("curation_pipeline_artifact", dst, 2)(
         graft.ext.Curation.curationPipelineFrom(spark, dst, labelsDir))
     }
@@ -285,23 +263,21 @@ object ScaleUp {
       val goldDir = s"$vbase/gold"; val ixDir = s"$vbase/ix"
       val d = Tables.documents(spark, dst)
       if (!new java.io.File(goldDir).exists()) {
-        val t0 = System.nanoTime()
-        d.write.mode("overwrite").parquet(goldDir)
-        graft.ext.Dedup.writeGoldIndex(d, ixDir)
-        println(f"[scaleup] vacuum_store_build          $dst%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s  " +
+        measure("vacuum_store_build", dst) {
+          d.write.mode("overwrite").parquet(goldDir)
+          graft.ext.Dedup.writeGoldIndex(d, ixDir)
+        }
+        note("vacuum_store_build", dst,
           f"gold ${graft.ops.StoreFiles.dirBytes(goldDir) / 1048576.0}%9.1f MB  " +
           f"ix ${graft.ops.StoreFiles.dirBytes(ixDir) / 1048576.0}%9.1f MB")
       }
       graft.ext.Dedup.tombstoneGoldIndex(
         d.filter(col("doc_id") % 7 === 3), ixDir)
-      val t1 = System.nanoTime()
-      val (removed, reclaimed) =
-        graft.ext.Dedup.vacuumGold(spark, goldDir, ixDir)
-      println(f"[scaleup] vacuum_gold                  $dst%-18s " +
-        f"${(System.nanoTime - t1) / 1e9}%8.2f s  " +
-        f"removed $removed%d rows  reclaimed ${reclaimed / 1048576.0}%9.1f MB  " +
-        f"gold_after ${graft.ops.StoreFiles.dirBytes(goldDir) / 1048576.0}%9.1f MB")
+      val (removed, reclaimed) = measure("vacuum_gold", dst)(
+        graft.ext.Dedup.vacuumGold(spark, goldDir, ixDir))
+      note("vacuum_gold", dst, f"removed $removed%d rows  " +
+        f"reclaimed ${reclaimed / 1048576.0}%9.1f MB  gold_after " +
+        f"${graft.ops.StoreFiles.dirBytes(goldDir) / 1048576.0}%9.1f MB")
     }
     if (on("r11")) {
       // round-11 re-measure: the boilerplate singleton-gram prefilter
@@ -443,11 +419,9 @@ object ScaleUp {
         // serve from the int codes store — compare this scan against
         // the re-encoding row above
         val sqStats = graft.ext.ScalarQuant.dimStats(spark, dst)
-        val t0 = System.nanoTime()
-        graft.ext.ScalarQuant.encodeFrame(spark, dst, sqStats)
-          .write.mode("overwrite").parquet(s"$dst/sq8_codes.parquet")
-        println(f"[scaleup] sq8_encode_build             $dst%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s")
+        measure("sq8_encode_build", dst)(
+          graft.ext.ScalarQuant.encodeFrame(spark, dst, sqStats)
+            .write.mode("overwrite").parquet(s"$dst/sq8_codes.parquet"))
         val (sqQid, sqQcodes) =
           graft.ext.ScalarQuant.encodeQuery(spark, dst, sqStats)
         timed("sim_sq8_codes_store_20m", dst, 2)(
@@ -455,11 +429,9 @@ object ScaleUp {
             spark.read.parquet(s"$dst/sq8_codes.parquet"), sqQcodes, sqQid))
         // packed-byte layout (the FAISS uint8 store): binary decodes
         // as one copy vs list<int>'s per-element materialization
-        val t1 = System.nanoTime()
-        graft.ext.ScalarQuant.encodeFrameBytes(spark, dst, sqStats)
-          .write.mode("overwrite").parquet(s"$dst/sq8_bytes.parquet")
-        println(f"[scaleup] sq8_bytes_encode_build       $dst%-18s " +
-          f"${(System.nanoTime - t1) / 1e9}%8.2f s")
+        measure("sq8_bytes_encode_build", dst)(
+          graft.ext.ScalarQuant.encodeFrameBytes(spark, dst, sqStats)
+            .write.mode("overwrite").parquet(s"$dst/sq8_bytes.parquet"))
         timed("sim_sq8_bytes_store_20m", dst, 2)(
           graft.ext.ScalarQuant.sq8OverBytes(
             spark.read.parquet(s"$dst/sq8_bytes.parquet"), sqQcodes, sqQid))
@@ -474,23 +446,19 @@ object ScaleUp {
               graft.functions.MatVec(
                 col("embedding").cast("array<double>"), rot).as("v"))
           val rStats = graft.ext.ScalarQuant.dimStatsOn(rotated)
-          val t2 = System.nanoTime()
-          rotated.select(col("vec_id"), col("label"),
-              graft.functions.Sq8.encodeBytes(col("v"), rStats).as("codes"))
-            .write.mode("overwrite").parquet(s"$dst/sq8_rr_bytes.parquet")
-          println(f"[scaleup] sq8_rr_bytes_encode_build    $dst%-18s " +
-            f"${(System.nanoTime - t2) / 1e9}%8.2f s")
-          val q0 = Tables.embeddings(spark, dst)
-            .select(col("vec_id"), col("embedding").cast("array<double>"))
-            .orderBy(col("vec_id")).limit(1).head()
+          measure("sq8_rr_bytes_encode_build", dst)(
+            rotated.select(col("vec_id"), col("label"),
+                graft.functions.Sq8.encodeBytes(col("v"), rStats).as("codes"))
+              .write.mode("overwrite").parquet(s"$dst/sq8_rr_bytes.parquet"))
+          val (q0, _, q0v) = graft.ext.KMeans.queryRow(spark, dst)
           val rq = graft.ext.ScalarQuant
-            .rotateLocal(q0.getSeq[Double](1), rot).zip(rStats)
+            .rotateLocal(q0v, rot).zip(rStats)
             .map { case (x, (mn, mx)) =>
               graft.ext.ScalarQuant.quantize(x, mn, mx) }
           timed("sim_sq8_rr_bytes_store_20m", dst, 2)(
             graft.ext.ScalarQuant.sq8OverBytes(
               spark.read.parquet(s"$dst/sq8_rr_bytes.parquet"),
-              rq, q0.getLong(0)))
+              rq, q0))
         }
       }
     }
@@ -524,16 +492,12 @@ object ScaleUp {
       // build rows are the one-time costs the merge paths amortize
       locally {
         val artDir = s"$dst/card_artifacts"
-        val t0 = System.nanoTime()
-        graft.ext.Sampling.writeSplitLabels(spark, dst, artDir)
-        println(f"[scaleup] card_labels_artifact_build  $dst%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s")
-        val t1 = System.nanoTime()
-        graft.ext.Selection.tokenCountsOn(Tables.documents(spark, dst))
-          .write.mode("overwrite").parquet(
-            s"$artDir/${graft.ext.Selection.TokenCountsTable}.parquet")
-        println(f"[scaleup] card_counts_artifact_build  $dst%-18s " +
-          f"${(System.nanoTime - t1) / 1e9}%8.2f s")
+        measure("card_labels_artifact_build", dst)(
+          graft.ext.Sampling.writeSplitLabels(spark, dst, artDir))
+        measure("card_counts_artifact_build", dst)(
+          graft.ext.Selection.tokenCountsOn(Tables.documents(spark, dst))
+            .write.mode("overwrite").parquet(
+              s"$artDir/${graft.ext.Selection.TokenCountsTable}.parquet"))
         timed("curation_data_card_artifact", dst, 1)(
           graft.ext.Curation.dataCardFrom(spark, dst, artDir, artDir))
         // per-source card (round-13): same legs grouped by source —
@@ -607,11 +571,9 @@ object ScaleUp {
         println(s"[scaleup] sem artifact: n=$n subK=$subK cap=$cap mod=$mod " +
           s"(${graft.ext.KMeans.K * subK} effective cells)")
         val cellsDir = s"$semDir/sem_cells.parquet"
-        val t0 = System.nanoTime()
-        graft.ext.Dedup.writeSemanticCells(spark, semDir, cellsDir,
-          subK, cap, mod)
-        println(f"[scaleup] sem_cells_artifact_build    $semDir%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s")
+        measure("sem_cells_artifact_build", semDir)(
+          graft.ext.Dedup.writeSemanticCells(spark, semDir, cellsDir,
+            subK, cap, mod))
         timed("dedup_semantic_artifact_100x", semDir, 1)(
           graft.ext.Dedup.semanticDedupFromCells(spark, cellsDir))
         // steady APPEND: the last copy arrives as a batch — quantizers
@@ -660,10 +622,8 @@ object ScaleUp {
         // cells; this row reads probed-cell bytes only
         val cellStore = s"$dst/ivf_cells.parquet"
         if (!new java.io.File(cellStore).exists()) {
-          val tb = System.nanoTime()
-          graft.ext.KMeans.writeCellVectors(spark, dst, cellStore, coarseB)
-          println(f"[scaleup] ivf_cells_store_build        $dst%-18s " +
-            f"${(System.nanoTime - tb) / 1e9}%8.2f s")
+          measure("ivf_cells_store_build", dst)(
+            graft.ext.KMeans.writeCellVectors(spark, dst, cellStore, coarseB))
         }
         val qb = graft.ext.KMeans.batchQueryRows(spark, dst)
         timed("sim_ivf_batch_topk_steady_20m", dst, 2)(
@@ -684,12 +644,11 @@ object ScaleUp {
       val batchCut = (copies - 1).toLong * maxDoc
       val gold = dDocs.filter(col("doc_id") < batchCut)
       val batch = dDocs.filter(col("doc_id") >= batchCut)
-      val tg = System.nanoTime()
-      val goldLabels = graft.ext.Sampling.splitFromClusters(
-        graft.ext.Dedup.nearDupClustersOn(gold)).localCheckpoint()
-      println(f"[scaleup] merge_gold_labels_build      $dst%-18s " +
-        f"${(System.nanoTime - tg) / 1e9}%8.2f s  " +
-        f"(one-time build over ${copies - 1} copies)")
+      val goldLabels = measure("merge_gold_labels_build", dst)(
+        graft.ext.Sampling.splitFromClusters(
+          graft.ext.Dedup.nearDupClustersOn(gold)).localCheckpoint())
+      note("merge_gold_labels_build", dst,
+        s"(one-time build over ${copies - 1} copies)")
       timed("split_merge_batch_100x", dst, 1)(
         graft.ext.Sampling.mergeBatchLabels(goldLabels, gold, batch))
       timed("split_rebuild_full_100x", dst, 1)(
@@ -714,11 +673,9 @@ object ScaleUp {
       // steady-state ADC reads ONLY the codes table — 3 small ints per
       // row instead of 64 floats, M lookups instead of a 64-dim fold
       val cbs = graft.ext.ProductQuant.codebooks(spark, src)
-      val t0 = System.nanoTime()
-      graft.ext.ProductQuant.encodeWith(spark, dst, cbs)
-        .write.mode("overwrite").parquet(s"$dst/pq_codes.parquet")
-      println(f"[scaleup] pq_encode_build              $dst%-18s " +
-        f"${(System.nanoTime - t0) / 1e9}%8.2f s")
+      measure("pq_encode_build", dst)(
+        graft.ext.ProductQuant.encodeWith(spark, dst, cbs)
+          .write.mode("overwrite").parquet(s"$dst/pq_codes.parquet"))
       val (qid, dt) = graft.ext.ProductQuant.queryTable(spark, src, cbs)
       timed("sim_pq_adc_codes", dst, 2)(
         graft.ext.ProductQuant.adcOverCodes(
@@ -727,12 +684,10 @@ object ScaleUp {
       // by coarse cell, so the ADC scan partition-prunes to ~1/K of
       // the already-57x-compressed table before reading anything
       val coarse = graft.ext.KMeans.train(spark, src)
-      val t1 = System.nanoTime()
-      graft.ext.ProductQuant.encodeWithCells(spark, dst, coarse, cbs)
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dst/pq_codes_cells.parquet")
-      println(f"[scaleup] pq_encode_cells_build        $dst%-18s " +
-        f"${(System.nanoTime - t1) / 1e9}%8.2f s")
+      measure("pq_encode_cells_build", dst)(
+        graft.ext.ProductQuant.encodeWithCells(spark, dst, coarse, cbs)
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$dst/pq_codes_cells.parquet"))
       val (qid2, qCell, dt2) =
         graft.ext.ProductQuant.queryPrep(spark, src, coarse, cbs)
       timed("sim_ivfpq_adc_partitioned", dst, 2)(
@@ -743,12 +698,10 @@ object ScaleUp {
       // the table layout and ADC scan are byte-identical — this row
       // exists to show the recall upgrade costs nothing at query time
       val rcbs = graft.ext.ProductQuant.residualCodebooks(spark, src, coarse)
-      val t2 = System.nanoTime()
-      graft.ext.ProductQuant.encodeWithCellsResidual(spark, dst, coarse, rcbs)
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dst/pq_codes_resid.parquet")
-      println(f"[scaleup] pq_encode_resid_build        $dst%-18s " +
-        f"${(System.nanoTime - t2) / 1e9}%8.2f s")
+      measure("pq_encode_resid_build", dst)(
+        graft.ext.ProductQuant.encodeWithCellsResidual(spark, dst, coarse, rcbs)
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$dst/pq_codes_resid.parquet"))
       val (qid3, qCell3, dt3) =
         graft.ext.ProductQuant.queryPrepResidual(spark, src, coarse, rcbs)
       timed("sim_ivfpq_resid_partitioned", dst, 2)(
@@ -760,9 +713,7 @@ object ScaleUp {
       // row-group prunable) against the raw vectors — the row that
       // shows the exactness upgrade costs the ADC scan plus a
       // constant-size fetch at any corpus size
-      val qv = Tables.embeddings(spark, src)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .orderBy(col("vec_id")).limit(1).head().getSeq[Double](1)
+      val qv = graft.ext.KMeans.queryRow(spark, src)._3
       timed("sim_ivfpq_rerank_steady", dst, 2) {
         val cand = graft.ext.ProductQuant.adcOverCodes(
           spark.read.parquet(s"$dst/pq_codes_resid.parquet")
@@ -836,14 +787,13 @@ object ScaleUp {
       time("rag_bm25_batch", src, 1); time("rag_bm25_batch", dst, 1)
       val ixStore = s"$dst/bm25_ix"
       if (!new java.io.File(ixStore).exists()) {
-        val t0 = System.nanoTime()
-        graft.ext.Retrieval.writeBm25Index(
-          Tables.documents(spark, dst)
-            .select(col("doc_id"),
-              graft.ext.TextOps.tokens(col("text")).as("t"))
-            .filter(size(col("t")) > 0), ixStore)
-        println(f"[scaleup] bm25_index_build             $dst%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s")
+        measure("bm25_index_build", dst) {
+          graft.ext.Retrieval.writeBm25Index(
+            Tables.documents(spark, dst)
+              .select(col("doc_id"),
+                graft.ext.TextOps.tokens(col("text")).as("t"))
+              .filter(size(col("t")) > 0), ixStore)
+        }
       }
       timed("rag_bm25_batch_served", dst, 2)(
         graft.ext.Retrieval.bm25BatchFromIndex(spark, dst, ixStore))
@@ -940,11 +890,9 @@ object ScaleUp {
       // (assignment leg gone — partition column)
       val cellStore = s"$cluDir/cells"
       if (!new java.io.File(cellStore).exists()) {
-        val t0 = System.nanoTime()
-        graft.ext.KMeans.writeCellVectors(spark, cluDir, cellStore,
-          graft.ext.KMeans.train(spark, cluDir))
-        println(f"[scaleup] cluster_cells_build          $cluDir%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s")
+        measure("cluster_cells_build", cluDir)(
+          graft.ext.KMeans.writeCellVectors(spark, cluDir, cellStore,
+            graft.ext.KMeans.train(spark, cluDir)))
       }
       timed("cluster_card_served_100x", cluDir, 2)(
         graft.ext.ClusterOps.clusterCardFrom(spark, cellStore, cluDir))
@@ -977,18 +925,15 @@ object ScaleUp {
         // vanishes; 5 docs touch a strict subset
         val batchFrom = j.agg(max(col("doc_id"))).head().getLong(0) - 4
         val aggDir = graft.ops.Scratch.dir("graft_card_agg_100x") + "/agg"
-        val tb = System.nanoTime()
-        graft.ext.ClusterOps.writeClusterCardAgg(
-          j.filter(col("doc_id") < batchFrom), aggDir)
-        println(f"[scaleup] card_agg_build_100x          $cluDir%-18s " +
-          f"${(System.nanoTime - tb) / 1e9}%8.2f s")
+        measure("card_agg_build_100x", cluDir)(
+          graft.ext.ClusterOps.writeClusterCardAgg(
+            j.filter(col("doc_id") < batchFrom), aggDir))
         val touched = j.filter(col("doc_id") >= batchFrom)
           .select(col("cluster")).distinct().count()
-        val tm = System.nanoTime()
-        graft.ext.ClusterOps.mergeClusterCardAgg(spark, aggDir,
-          j.filter(col("doc_id") >= batchFrom))
-        println(f"[scaleup] card_agg_merge_100x          $cluDir%-18s " +
-          f"${(System.nanoTime - tm) / 1e9}%8.2f s  " +
+        measure("card_agg_merge_100x", cluDir)(
+          graft.ext.ClusterOps.mergeClusterCardAgg(spark, aggDir,
+            j.filter(col("doc_id") >= batchFrom)))
+        note("card_agg_merge_100x", cluDir,
           f"(touched $touched%d/${graft.ext.KMeans.K}%d clusters)")
         timed("card_from_agg_100x", cluDir, 2)(
           graft.ext.ClusterOps.clusterCardFromAgg(spark, aggDir))
@@ -1014,12 +959,11 @@ object ScaleUp {
         val staleSchema = new java.io.File(knnCells).exists() &&
           !spark.read.parquet(knnCells).columns.contains("cell2")
         if (!new java.io.File(knnCells).exists() || staleSchema) {
-          val t0 = System.nanoTime()
-          graft.ext.Dedup.writeSemanticCells(spark, cluDir, knnCells,
-            subK, cap, mod)
-          println(f"[scaleup] knn_cells_build              $cluDir%-18s " +
-            f"${(System.nanoTime - t0) / 1e9}%8.2f s  " +
-            f"(${graft.ext.KMeans.K * subK} effective cells" +
+          measure("knn_cells_build", cluDir)(
+            graft.ext.Dedup.writeSemanticCells(spark, cluDir, knnCells,
+              subK, cap, mod))
+          note("knn_cells_build", cluDir,
+            s"(${graft.ext.KMeans.K * subK} effective cells" +
             (if (staleSchema) ", schema refresh: +cell2)" else ")"))
         }
         timed("sim_knn_graph_100x", cluDir, 1)(
@@ -1030,21 +974,21 @@ object ScaleUp {
         // community structure over the artifact graph: the CC loop is
         // edge-set-only (600k skinny rows at 200k vectors), so the
         // histogram's cost is the graph build + a bounded contraction
-        val t1 = System.nanoTime()
-        val edges = graft.ext.ClusterOps.knnGraphOn(
-            spark.read.parquet(knnCells)
-              .select(col("vec_id"), col("cell").cast("int").as("cell"),
-                col("v")))
-          .select(col("vec_id").as("doc_a"), col("nbr_id").as("doc_b"))
-        val (labels, rounds) =
-          graft.ext.Dedup.connectedComponents(edges)
-        val hist = labels
-          .groupBy(col("cluster_id")).agg(count(lit(1)).as("members"))
-          .groupBy(col("members")).agg(count(lit(1)).as("n_communities"))
-          .orderBy(col("members")).collect()
-        println(f"[scaleup] knn_community_hist_100x      $cluDir%-18s " +
-          f"${(System.nanoTime - t1) / 1e9}%8.2f s  " +
-          f"(cc_rounds=$rounds, sizes=${hist.length})")
+        val (hist, rounds) = measure("knn_community_hist_100x", cluDir) {
+          val edges = graft.ext.ClusterOps.knnGraphOn(
+              spark.read.parquet(knnCells)
+                .select(col("vec_id"), col("cell").cast("int").as("cell"),
+                  col("v")))
+            .select(col("vec_id").as("doc_a"), col("nbr_id").as("doc_b"))
+          val (labels, rounds) =
+            graft.ext.Dedup.connectedComponents(edges)
+          (labels
+            .groupBy(col("cluster_id")).agg(count(lit(1)).as("members"))
+            .groupBy(col("members")).agg(count(lit(1)).as("n_communities"))
+            .orderBy(col("members")).collect(), rounds)
+        }
+        note("knn_community_hist_100x", cluDir,
+          s"(cc_rounds=$rounds, sizes=${hist.length})")
         // steady-state graph APPEND: a 50-vector micro-batch against
         // the gold edges artifact — recompute only the batch's cells
         // (≤ 50 of the 400), read the rest from the store
@@ -1054,11 +998,9 @@ object ScaleUp {
         val batchFrom = store.agg(max(col("vec_id"))).head().getLong(0) - 49
         val goldEdgesDir = s"$cluDir/knn_gold_edges"
         if (!new java.io.File(goldEdgesDir).exists()) {
-          val t2 = System.nanoTime()
-          graft.ext.ClusterOps.writeKnnEdges(
-            store.filter(col("vec_id") < batchFrom), goldEdgesDir)
-          println(f"[scaleup] knn_gold_edges_build         $cluDir%-18s " +
-            f"${(System.nanoTime - t2) / 1e9}%8.2f s")
+          measure("knn_gold_edges_build", cluDir)(
+            graft.ext.ClusterOps.writeKnnEdges(
+              store.filter(col("vec_id") < batchFrom), goldEdgesDir))
         }
         timed("knn_graph_merge_100x", cluDir, 2)(
           graft.ext.ClusterOps.knnGraphMergeFromEdges(spark,
@@ -1072,12 +1014,11 @@ object ScaleUp {
           val touched = store.filter(col("vec_id") >= batchFrom)
             .select(col("cell")).distinct().count()
           val total = store.select(col("cell")).distinct().count()
-          val ta = System.nanoTime()
-          graft.ext.ClusterOps.appendKnnEdges(spark, goldEdgesDir,
-            store, batchFrom)
-          println(f"[scaleup] knn_edges_append_100x        $cluDir%-18s " +
-            f"${(System.nanoTime - ta) / 1e9}%8.2f s  " +
-            f"(touched $touched%d/$total%d cells)")
+          measure("knn_edges_append_100x", cluDir)(
+            graft.ext.ClusterOps.appendKnnEdges(spark, goldEdgesDir,
+              store, batchFrom))
+          note("knn_edges_append_100x", cluDir,
+            s"(touched $touched/$total cells)")
         }
         // round-14 stretch: incremental communities from the labels
         // artifact — carried cells are a pruned read, only touched
@@ -1085,18 +1026,14 @@ object ScaleUp {
         // community build above)
         val labelsStore = s"$cluDir/knn_comm_labels"
         if (!new java.io.File(labelsStore).exists()) {
-          val tl = System.nanoTime()
-          graft.ext.ClusterOps.writeKnnCommunityLabels(
-            store.filter(col("vec_id") < batchFrom), labelsStore)
-          println(f"[scaleup] knn_comm_labels_build        $cluDir%-18s " +
-            f"${(System.nanoTime - tl) / 1e9}%8.2f s")
+          measure("knn_comm_labels_build", cluDir)(
+            graft.ext.ClusterOps.writeKnnCommunityLabels(
+              store.filter(col("vec_id") < batchFrom), labelsStore))
         }
         (1 to 2).foreach { _ =>
-          val tc = System.nanoTime()
-          val n = graft.ext.ClusterOps.knnCommunitiesMergeFromLabels(
-            spark, labelsStore, store, batchFrom).count()
-          println(f"[scaleup] knn_communities_merge_100x   $cluDir%-18s " +
-            f"${(System.nanoTime - tc) / 1e9}%8.2f s  (labels $n%d)")
+          measure("knn_communities_merge_100x", cluDir)(
+            graft.ext.ClusterOps.knnCommunitiesMergeFromLabels(
+              spark, labelsStore, store, batchFrom).count())
         }
         // round-14 #2: multi-probe graph at the sub-quantized
         // artifact — probes (cell, cell2) read straight from the
@@ -1137,14 +1074,13 @@ object ScaleUp {
               .select(col("qid"), col("nbr")).collect()
               .groupBy(_.getLong(0))
               .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-          val tt = System.nanoTime()
-          val truth = topSets(storeP2
-            .withColumn("q", explode(qArr))
-            .filter(col("q.qid") =!= col("vec_id"))
-            .select(col("q.qid").as("qid"), col("vec_id").as("nbr"),
-              graft.functions.CosineSimilarity(col("v"), col("q.qv"))
-                .as("cosine")))
-          val truthSec = (System.nanoTime - tt) / 1e9
+          val truth = measure("knn_recall_truth_100x", cluDir)(
+            topSets(storeP2
+              .withColumn("q", explode(qArr))
+              .filter(col("q.qid") =!= col("vec_id"))
+              .select(col("q.qid").as("qid"), col("vec_id").as("nbr"),
+                graft.functions.CosineSimilarity(col("v"), col("q.qv"))
+                  .as("cosine"))))
           def graphSets(df: org.apache.spark.sql.DataFrame) = df
             .filter(col("vec_id").isin(sampleIds.map(Long.box): _*))
             .select(col("vec_id"), col("nbr_id")).collect()
@@ -1159,9 +1095,8 @@ object ScaleUp {
               .select(col("vec_id"), col("cell"), col("v")))))
           val r2 = recallOf(graphSets(
             graft.ext.ClusterOps.knnGraphP2On(storeP2)))
-          println(f"[scaleup] knn_recall_100x              $cluDir%-18s " +
-            f"truth $truthSec%6.2f s  p1 $r1%.3f  p2 $r2%.3f  " +
-            f"(100 queries, k=$k)")
+          note("knn_recall_100x", cluDir,
+            f"p1 $r1%.3f  p2 $r2%.3f  (100 queries, k=$k)")
         }
       }
       // round-14 #3: batch hybrid fusion in the SERVE class — both
@@ -1172,14 +1107,13 @@ object ScaleUp {
         val cents = graft.ext.KMeans.train(spark, cluDir)
         val ixStore = s"$cluDir/bm25_ix"
         if (!new java.io.File(ixStore).exists()) {
-          val t0 = System.nanoTime()
-          graft.ext.Retrieval.writeBm25Index(
-            Tables.documents(spark, cluDir)
-              .select(col("doc_id"),
-                graft.ext.TextOps.tokens(col("text")).as("t"))
-              .filter(size(col("t")) > 0), ixStore)
-          println(f"[scaleup] clu_bm25_index_build         $cluDir%-18s " +
-            f"${(System.nanoTime - t0) / 1e9}%8.2f s")
+          measure("clu_bm25_index_build", cluDir) {
+            graft.ext.Retrieval.writeBm25Index(
+              Tables.documents(spark, cluDir)
+                .select(col("doc_id"),
+                  graft.ext.TextOps.tokens(col("text")).as("t"))
+                .filter(size(col("t")) > 0), ixStore)
+          }
         }
         time("rag_hybrid_rrf_batch", src, 1)
         timed("rag_hybrid_batch_served", cluDir, 2)(
@@ -1206,12 +1140,11 @@ object ScaleUp {
         (1 to 3).foreach { _ =>
           val touched = store.filter(col("vec_id") >= batchFrom)
             .select(col("cell")).distinct().count()
-          val ta = System.nanoTime()
-          graft.ext.ClusterOps.appendKnnEdges(spark, goldEdgesDir,
-            store, batchFrom)
-          println(f"[scaleup] knn_edges_append_isolated    $cluDir%-18s " +
-            f"${(System.nanoTime - ta) / 1e9}%8.2f s  " +
-            f"(touched $touched%d cells, delta merge)")
+          measure("knn_edges_append_isolated", cluDir)(
+            graft.ext.ClusterOps.appendKnnEdges(spark, goldEdgesDir,
+              store, batchFrom))
+          note("knn_edges_append_isolated", cluDir,
+            s"(touched $touched cells, delta merge)")
         }
       } else println(s"[scaleup] knnappend: stores missing under $cluDir")
     }
@@ -1226,36 +1159,30 @@ object ScaleUp {
       if (new java.io.File(s"$cluDir/embeddings.parquet").exists())
         locally {
         import graft.ext.ProductQuant
-        val tl = System.nanoTime()
-        val sample = graft.ext.KMeans.vecs(spark, cluDir)
-          .orderBy(col("vec_id")).limit(ProductQuant.OpqSampleN)
-          .select(col("v")).collect().map(_.getSeq[Double](0))
-        val rot = ProductQuant.learnedRotation(sample.toSeq)
-        println(f"[scaleup] opq_learn_rotation           $cluDir%-18s " +
-          f"${(System.nanoTime - tl) / 1e9}%8.2f s  " +
+        val (sample, rot) = measure("opq_learn_rotation", cluDir) {
+          val sample = graft.ext.KMeans.vecs(spark, cluDir)
+            .orderBy(col("vec_id")).limit(ProductQuant.OpqSampleN)
+            .select(col("v")).collect().map(_.getSeq[Double](0))
+          (sample, ProductQuant.learnedRotation(sample.toSeq))
+        }
+        note("opq_learn_rotation", cluDir,
           f"(driver-local, ${sample.length}%d-vector sample, " +
           f"${rot.size}x${rot.head.size} R)")
         // one collect per rotation: the wall row AND the recall read
         // the same run (the chain re-trains per call — don't pay it
         // twice per rotation)
         def runChain(name: String,
-            df: org.apache.spark.sql.DataFrame): Set[Long] = {
-          val t0 = System.nanoTime()
-          val ids = df.select(col("vec_id")).collect()
+            df: org.apache.spark.sql.DataFrame): Set[Long] =
+          measure(name, cluDir)(df.select(col("vec_id")).collect())
             .map(_.getLong(0)).toSet
-          println(f"[scaleup] $name%-28s $cluDir%-18s " +
-            f"${(System.nanoTime - t0) / 1e9}%8.2f s  (${ids.size}%d rows)")
-          ids
-        }
         val seededIds = runChain("sim_opq_seeded_100x",
           ProductQuant.opqIvfPqTopK(spark, cluDir))
         val learnedIds = runChain("sim_opq_learned_100x",
           ProductQuant.opqLearnedTopK(spark, cluDir))
         val vs = graft.ext.KMeans.vecs(spark, cluDir)
-        val qrow = vs.orderBy(col("vec_id")).limit(1)
-          .select(col("vec_id"), col("v")).head()
-        val qLit = array(qrow.getSeq[Double](1).map(lit): _*)
-        val truth = vs.filter(col("vec_id") =!= qrow.getLong(0))
+        val (qid, _, qv) = graft.ext.KMeans.queryRow(spark, cluDir)
+        val qLit = array(qv.map(lit): _*)
+        val truth = vs.filter(col("vec_id") =!= qid)
           .select(col("vec_id"),
             aggregate(zip_with(col("v"), qLit, (x, y) => (x - y) * (x - y)),
               lit(0.0), (a, x) => a + x).as("d2"))
@@ -1284,33 +1211,21 @@ object ScaleUp {
         Tables.documents(spark, d).withColumn("text",
           regexp_replace(col("text"), "c\\d+_", ""))
       for ((tag, d) <- Seq(("src", src), ("dst", dst))) {
-        val t0 = System.nanoTime()
-        val hist = Bpe.wordHist(docsStripped(d)).localCheckpoint()
-        val v = hist.count()
-        println(f"[scaleup] bpe_hist_corpus_axis         $d%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s  (vocab $v%d)")
-        val t1 = System.nanoTime()
-        val (rules, seg) = Bpe.trainOn(hist)
-        println(f"[scaleup] bpe_train_corpus_axis        $d%-18s " +
-          f"${(System.nanoTime - t1) / 1e9}%8.2f s  " +
-          f"(${rules.length}%d merges)")
-        val t2 = System.nanoTime()
-        val n = Bpe.encodeOn(docsStripped(d), seg).count()
-        println(f"[scaleup] bpe_encode_corpus_axis       $d%-18s " +
-          f"${(System.nanoTime - t2) / 1e9}%8.2f s  (rows $n%d)")
+        lazy val hist = Bpe.wordHist(docsStripped(d)).localCheckpoint()
+        measure("bpe_hist_corpus_axis", d)(hist.count())
+        val (rules, seg) = measure("bpe_train_corpus_axis", d)(
+          Bpe.trainOn(hist))
+        note("bpe_train_corpus_axis", d, s"(${rules.length} merges)")
+        measure("bpe_encode_corpus_axis", d)(
+          Bpe.encodeOn(docsStripped(d), seg).count())
       }
       locally {
-        val t0 = System.nanoTime()
-        val hist = Bpe.wordHist(Tables.documents(spark, dst),
+        lazy val hist = Bpe.wordHist(Tables.documents(spark, dst),
           "^[a-z0-9_]+$").localCheckpoint()
-        val v = hist.count()
-        println(f"[scaleup] bpe_hist_vocab_axis          $dst%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s  (vocab $v%d)")
-        val t1 = System.nanoTime()
-        val (rules, _) = Bpe.trainOn(hist)
-        println(f"[scaleup] bpe_train_vocab_axis         $dst%-18s " +
-          f"${(System.nanoTime - t1) / 1e9}%8.2f s  " +
-          f"(${rules.length}%d merges)")
+        measure("bpe_hist_vocab_axis", dst)(hist.count())
+        val (rules, _) = measure("bpe_train_vocab_axis", dst)(
+          Bpe.trainOn(hist))
+        note("bpe_train_vocab_axis", dst, s"(${rules.length} merges)")
         // REALISTIC MERGE COUNT (round-15 verdict #3): a 1k-rule
         // vocabulary through the batched trainer — ~⌈1000/64⌉ rounds
         // of bounded driver pulls instead of 1k sequential argmax
@@ -1319,23 +1234,21 @@ object ScaleUp {
         // composition then re-runs on the BIG vocabulary, proving the
         // downstream tier consumes a realistic tokenizer, not the
         // 12-rule gate anchor.
-        val t2 = System.nanoTime()
-        val (bigRules, bigSeg) = Bpe.trainBatched(hist, 1024)
-        val bigSegC = bigSeg.localCheckpoint()
-        println(f"[scaleup] bpe_train_batched_1k         $dst%-18s " +
-          f"${(System.nanoTime - t2) / 1e9}%8.2f s  " +
-          f"(${bigRules.length}%d merges, " +
-          f"${(bigRules.length + 63) / 64}%d rounds)")
-        val t3 = System.nanoTime()
-        val rep = Bpe.bpeReportOn(Tables.documents(spark, dst),
-          bigSegC, "^[a-z0-9_]+$").collect()
-        val fert = Bpe.bpeFertilityOn(Tables.documents(spark, dst),
-          bigSegC, "^[a-z0-9_]+$").collect()
-        println(f"[scaleup] bpe_report_big_vocab         $dst%-18s " +
-          f"${(System.nanoTime - t3) / 1e9}%8.2f s  (cpt_micro " +
-          f"${rep.map(_.getAs[Long]("chars_per_token_micro")).mkString(",")}%s" +
-          f"; fert_micro " +
-          f"${fert.map(_.getAs[Long]("fertility_micro")).mkString(",")}%s)")
+        val (bigRules, bigSegC) = measure("bpe_train_batched_1k", dst) {
+          val (r, seg) = Bpe.trainBatched(hist, 1024)
+          (r, seg.localCheckpoint())
+        }
+        note("bpe_train_batched_1k", dst, s"(${bigRules.length} merges, " +
+          s"${(bigRules.length + 63) / 64} rounds)")
+        val (rep, fert) = measure("bpe_report_big_vocab", dst)((
+          Bpe.bpeReportOn(Tables.documents(spark, dst),
+            bigSegC, "^[a-z0-9_]+$").collect(),
+          Bpe.bpeFertilityOn(Tables.documents(spark, dst),
+            bigSegC, "^[a-z0-9_]+$").collect()))
+        note("bpe_report_big_vocab", dst, "(cpt_micro " +
+          rep.map(_.getAs[Long]("chars_per_token_micro")).mkString(",") +
+          "; fert_micro " +
+          fert.map(_.getAs[Long]("fertility_micro")).mkString(",") + ")")
       }
     }
     // REAL-vocabulary BPE (round-16 verdict #3): large merge counts
@@ -1361,34 +1274,31 @@ object ScaleUp {
             lit("_$1"))))
         .localCheckpoint()
       val hist = Bpe.wordHist(docsW, "^[a-z0-9_]+$").localCheckpoint()
-      println(f"[scaleup] ${tag}_vocab                  $dst%-18s " +
-        f"(vocab ${hist.count()}%d)")
-      val t0 = System.nanoTime()
+      note(s"${tag}_vocab", dst, s"(vocab ${hist.count()})")
       var rounds = 0
-      val (rules, seg) = Bpe.trainBatched(hist, merges, maxBatch,
-        onRound = (r, n, s) => {
-          rounds = r
-          if (r % 4 == 0 || s > 60) println(
-            f"[scaleup] ${tag}_round r$r%04d           $dst%-18s " +
+      val (rules, segC) = measure(s"${tag}_train", dst) {
+        val (rules, seg) = Bpe.trainBatched(hist, merges, maxBatch,
+          onRound = (r, n, s) => {
+            rounds = r
+            if (r % 4 == 0 || s > 60) note(f"${tag}_round r$r%04d", dst,
               f"$s%8.2f s  ($n%d rules)")
-        })
-      val segC = seg.localCheckpoint()
-      println(f"[scaleup] ${tag}_train                  $dst%-18s " +
-        f"${(System.nanoTime - t0) / 1e9}%8.2f s  " +
-        f"(${rules.length}%d merges, $rounds%d rounds)")
-      val t1 = System.nanoTime()
-      val rep = Bpe.bpeReportOn(docsW, segC, "^[a-z0-9_]+$").collect()
-      val fertDf = Bpe.bpeFertilityOn(docsW, segC, "^[a-z0-9_]+$")
-        .localCheckpoint()
-      val fert = fertDf.collect()
-      val mix = Sampling.fertilityWeightedMixOn(docsW, fertDf).collect()
-      println(f"[scaleup] ${tag}_downstream             $dst%-18s " +
-        f"${(System.nanoTime - t1) / 1e9}%8.2f s  (cpt_micro " +
-        f"${rep.map(_.getAs[Long]("chars_per_token_micro")).mkString(",")}%s" +
-        f"; fert_micro " +
-        f"${fert.map(_.getAs[Long]("fertility_micro")).mkString(",")}%s" +
-        f"; mix sampled " +
-        f"${mix.map(_.getAs[Long]("sampled_docs")).mkString(",")}%s)")
+          })
+        (rules, seg.localCheckpoint())
+      }
+      note(s"${tag}_train", dst, s"(${rules.length} merges, $rounds rounds)")
+      val (rep, fert, mix) = measure(s"${tag}_downstream", dst) {
+        val fertDf = Bpe.bpeFertilityOn(docsW, segC, "^[a-z0-9_]+$")
+          .localCheckpoint()
+        (Bpe.bpeReportOn(docsW, segC, "^[a-z0-9_]+$").collect(),
+          fertDf.collect(),
+          Sampling.fertilityWeightedMixOn(docsW, fertDf).collect())
+      }
+      note(s"${tag}_downstream", dst, "(cpt_micro " +
+        rep.map(_.getAs[Long]("chars_per_token_micro")).mkString(",") +
+        "; fert_micro " +
+        fert.map(_.getAs[Long]("fertility_micro")).mkString(",") +
+        "; mix sampled " +
+        mix.map(_.getAs[Long]("sampled_docs")).mkString(",") + ")")
     }
     if (on("bpe8k")) bpeVocabAxis("bpe8k", 8192, maxBatch = 256)
     // the PRODUCTION vocabulary size: 32k merges run for real, where
@@ -1407,23 +1317,24 @@ object ScaleUp {
       import graft.ext.{KMeans, RetrievalEval}
       val cents = KMeans.train(spark, src)
       val qrows = KMeans.batchQueryRows(spark, dst)
-      val t0 = System.nanoTime()
-      val truth = RetrievalEval.exactBatchTopK(
+      def evalRow(tag: String, dir: String,
+          truth: org.apache.spark.sql.DataFrame)(
+          sys: => org.apache.spark.sql.DataFrame): Unit = {
+        val m = measure(tag, dir)(RetrievalEval.metricsOn(sys, truth)
+          .orderBy(col("query_id")).collect())
+        note(tag, dir, s"(hits@${RetrievalEval.EvalK} " +
+          s"${m.map(_.getLong(2)).mkString(",")}, ndcg_micro " +
+          s"${m.map(_.getLong(6)).mkString(",")})")
+      }
+      val truth = measure("rag_eval_truth_20m", dst)(
+        RetrievalEval.exactBatchTopK(
           KMeans.vecs(spark, dst), qrows, RetrievalEval.EvalK)
-        .localCheckpoint()
-      println(f"[scaleup] rag_eval_truth_20m           $dst%-18s " +
-        f"${(System.nanoTime - t0) / 1e9}%8.2f s  " +
-        f"(exact top-${RetrievalEval.EvalK}%d, ${qrows.length}%d queries)")
-      val t1 = System.nanoTime()
-      val sys = KMeans.ivfBatchTopKWith(spark, dst, cents)
-        .select(col("query_id"), col("vec_id"), col("rk"))
-      val m = RetrievalEval.metricsOn(sys, truth).orderBy(col("query_id"))
-        .collect()
-      println(f"[scaleup] rag_eval_ivf_20m             $dst%-18s " +
-        f"${(System.nanoTime - t1) / 1e9}%8.2f s  " +
-        f"(hits@${RetrievalEval.EvalK}%d " +
-        f"${m.map(_.getLong(2)).mkString(",")}%s, ndcg_micro " +
-        f"${m.map(_.getLong(6)).mkString(",")}%s)")
+          .localCheckpoint())
+      note("rag_eval_truth_20m", dst,
+        s"(exact top-${RetrievalEval.EvalK}, ${qrows.length} queries)")
+      evalRow("rag_eval_ivf_20m", dst, truth)(
+        KMeans.ivfBatchTopKWith(spark, dst, cents)
+          .select(col("query_id"), col("vec_id"), col("rk")))
       // the copies corpus is recall-degenerate for the min-id block
       // (its true neighbors are its own perturbed copies, same cell)
       // — the clu2 cross-cell-chain fixture with MID-CHAIN queries is
@@ -1445,39 +1356,21 @@ object ScaleUp {
         .orderBy(col("margin"), col("vec_id")).limit(4)
         .select(col("vec_id"), col("v")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-      val t2 = System.nanoTime()
-      val truthC = RetrievalEval.exactBatchTopK(
+      val truthC = measure("rag_eval_truth_clu2", cluDir)(
+        RetrievalEval.exactBatchTopK(
           KMeans.vecs(spark, cluDir), qC, RetrievalEval.EvalK)
-        .localCheckpoint()
-      println(f"[scaleup] rag_eval_truth_clu2          $cluDir%-18s " +
-        f"${(System.nanoTime - t2) / 1e9}%8.2f s  " +
-        "(min-margin boundary queries)")
-      val t3 = System.nanoTime()
-      val mC = RetrievalEval.metricsOn(
-          KMeans.ivfBatchTopKOn(spark, cluDir, centsC, qC)
-            .select(col("query_id"), col("vec_id"), col("rk")),
-          truthC)
-        .orderBy(col("query_id")).collect()
-      println(f"[scaleup] rag_eval_ivf_clu2            $cluDir%-18s " +
-        f"${(System.nanoTime - t3) / 1e9}%8.2f s  " +
-        f"(hits@${RetrievalEval.EvalK}%d " +
-        f"${mC.map(_.getLong(2)).mkString(",")}%s, ndcg_micro " +
-        f"${mC.map(_.getLong(6)).mkString(",")}%s)")
+          .localCheckpoint())
+      note("rag_eval_truth_clu2", cluDir, "(min-margin boundary queries)")
+      evalRow("rag_eval_ivf_clu2", cluDir, truthC)(
+        KMeans.ivfBatchTopKOn(spark, cluDir, centsC, qC)
+          .select(col("query_id"), col("vec_id"), col("rk")))
       // the multi-probe recovery, quantified by the SAME harness:
       // probing the runner-up cell should win back the boundary
       // losses the margin-sampled queries exposed
-      val t4 = System.nanoTime()
-      val mC2 = RetrievalEval.metricsOn(
-          KMeans.ivfBatchTopKOn(spark, cluDir, centsC, qC,
-              RetrievalEval.EvalK, probes = 2)
-            .select(col("query_id"), col("vec_id"), col("rk")),
-          truthC)
-        .orderBy(col("query_id")).collect()
-      println(f"[scaleup] rag_eval_ivf_p2_clu2         $cluDir%-18s " +
-        f"${(System.nanoTime - t4) / 1e9}%8.2f s  " +
-        f"(hits@${RetrievalEval.EvalK}%d " +
-        f"${mC2.map(_.getLong(2)).mkString(",")}%s, ndcg_micro " +
-        f"${mC2.map(_.getLong(6)).mkString(",")}%s)")
+      evalRow("rag_eval_ivf_p2_clu2", cluDir, truthC)(
+        KMeans.ivfBatchTopKOn(spark, cluDir, centsC, qC,
+            RetrievalEval.EvalK, probes = 2)
+          .select(col("query_id"), col("vec_id"), col("rk")))
       // the QUANTIZED ladder on the SAME margin-sampled boundary
       // queries (round-15 verdict #4): recall where each compressed
       // index actually loses — min-id queries read vacuous maxima
@@ -1487,26 +1380,17 @@ object ScaleUp {
         .encodeWithCellsResidual(spark, cluDir, centsC, rcbsC)
         .localCheckpoint()
       val prepC = ProductQuant.prepResidualRows(qC, centsC, rcbsC)
-      def evalRow(tag: String)(sys: => org.apache.spark.sql.DataFrame): Unit = {
-        val t = System.nanoTime()
-        val m = RetrievalEval.metricsOn(sys, truthC)
-          .orderBy(col("query_id")).collect()
-        println(f"[scaleup] $tag%-28s $cluDir%-18s " +
-          f"${(System.nanoTime - t) / 1e9}%8.2f s  " +
-          f"(hits@${RetrievalEval.EvalK}%d " +
-          f"${m.map(_.getLong(2)).mkString(",")}%s, ndcg_micro " +
-          f"${m.map(_.getLong(6)).mkString(",")}%s)")
-      }
-      evalRow("rag_eval_adc_clu2")(ProductQuant
+      evalRow("rag_eval_adc_clu2", cluDir, truthC)(ProductQuant
         .adcBatchTopKOverCoded(codedC, prepC)
         .filter(col("rk") <= RetrievalEval.EvalK)
         .select(col("query_id"), col("vec_id"), col("rk")))
-      evalRow("rag_eval_rerank_clu2")(ProductQuant.rerankBatchOverCoded(
-        KMeans.vecs(spark, cluDir), codedC, prepC, qC.toMap,
-        RetrievalEval.EvalK))
-      evalRow("rag_eval_sq8_clu2")(ScalarQuant.sq8BatchFor(
+      evalRow("rag_eval_rerank_clu2", cluDir, truthC)(
+        ProductQuant.rerankBatchOverCoded(
+          KMeans.vecs(spark, cluDir), codedC, prepC, qC.toMap,
+          RetrievalEval.EvalK))
+      evalRow("rag_eval_sq8_clu2", cluDir, truthC)(ScalarQuant.sq8BatchFor(
         spark, cluDir, qC, RetrievalEval.EvalK))
-      evalRow("rag_eval_opq_clu2")(ProductQuant.opqBatchFor(
+      evalRow("rag_eval_opq_clu2", cluDir, truthC)(ProductQuant.opqBatchFor(
         spark, cluDir, ScalarQuant.rotationMatrix(), qC,
         RetrievalEval.EvalK))
     }
@@ -1521,11 +1405,10 @@ object ScaleUp {
       import graft.ext.{ProductQuant, ScalarQuant}
       val store = s"$cluDir/opq_store"
       if (!new java.io.File(store).exists()) {
-        val t0 = System.nanoTime()
-        ProductQuant.writeOpqStore(spark, cluDir, store,
-          ScalarQuant.rotationMatrix())
-        println(f"[scaleup] opq_store_build              $cluDir%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s  " +
+        measure("opq_store_build", cluDir)(
+          ProductQuant.writeOpqStore(spark, cluDir, store,
+            ScalarQuant.rotationMatrix()))
+        note("opq_store_build", cluDir,
           f"(${graft.ops.StoreFiles.dirBytes(store) / 1048576.0}%9.1f MB)")
       }
       timed("opq_served_topk", cluDir, 2)(
@@ -1545,44 +1428,34 @@ object ScaleUp {
       import graft.ext.Curation
       for (d <- Seq(src, dst)) {
         val (v1, v2) = Curation.snapshotViews(Tables.documents(spark, d))
-        val t0 = System.nanoTime()
-        val state = Curation.docFp(v1).localCheckpoint()
-        val keep1 = state.groupBy(col("fp"))
-          .agg(min(col("doc_id")).as("keeper")).localCheckpoint()
-        println(f"[scaleup] recurate_v1_state_build      $d%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s  " +
-          f"(${state.count()}%d docs)")
-        val t1 = System.nanoTime()
-        val diff = Curation.snapshotDiffDocsOn(v1, v2).localCheckpoint()
-        println(f"[scaleup] recurate_diff                $d%-18s " +
-          f"${(System.nanoTime - t1) / 1e9}%8.2f s  " +
-          f"(${diff.count()}%d diff docs)")
+        val (state, keep1) = measure("recurate_v1_state_build", d) {
+          val state = Curation.docFp(v1).localCheckpoint()
+          (state, state.groupBy(col("fp"))
+            .agg(min(col("doc_id")).as("keeper")).localCheckpoint())
+        }
+        note("recurate_v1_state_build", d, s"(${state.count()} docs)")
+        val diff = measure("recurate_diff", d)(
+          Curation.snapshotDiffDocsOn(v1, v2).localCheckpoint())
+        note("recurate_diff", d, s"(${diff.count()} diff docs)")
         // the re-crawl SHIPMENT: changed/added docs arrive WITH their
         // texts (a real delta feed) — staging it is ingest, not
         // maintenance cost. Passing it as the v2 side is exact: the
         // incremental leg joins v2 against the diff's ids anyway.
         val arrivals = v2.join(diff.select(col("doc_id")),
           Seq("doc_id")).localCheckpoint()
-        val t2 = System.nanoTime()
-        val nIncr = Curation
-          .diffRecurateKeepIncr(state, keep1, diff, arrivals).count()
-        println(f"[scaleup] recurate_incremental         $d%-18s " +
-          f"${(System.nanoTime - t2) / 1e9}%8.2f s  ($nIncr%d rows)")
+        measure("recurate_incremental", d)(Curation
+          .diffRecurateKeepIncr(state, keep1, diff, arrivals).count())
         // the store-maintenance write: touched-group verdicts only
         // (the full per-doc frame above is the gate's comparison
         // shape, not what a deployed store rewrites)
-        val t2b = System.nanoTime()
-        val nDelta = Curation
+        measure("recurate_incremental_delta", d)(Curation
           .diffRecurateKeepIncr(state, keep1, diff, arrivals,
-            deltaOnly = true).count()
-        println(f"[scaleup] recurate_incremental_delta   $d%-18s " +
-          f"${(System.nanoTime - t2b) / 1e9}%8.2f s  ($nDelta%d rows)")
-        val t3 = System.nanoTime()
-        val p2 = Curation.docFp(v2)
-        val nFull = p2.join(p2.groupBy(col("fp"))
-          .agg(min(col("doc_id")).as("keeper")), "fp").count()
-        println(f"[scaleup] recurate_full_rebuild        $d%-18s " +
-          f"${(System.nanoTime - t3) / 1e9}%8.2f s  ($nFull%d rows)")
+            deltaOnly = true).count())
+        measure("recurate_full_rebuild", d) {
+          val p2 = Curation.docFp(v2)
+          p2.join(p2.groupBy(col("fp"))
+            .agg(min(col("doc_id")).as("keeper")), "fp").count()
+        }
       }
     }
     if (on("zorder")) {
@@ -1594,10 +1467,8 @@ object ScaleUp {
       for (d <- Seq(src, dst)) {
         val li = Tables.lineitem(spark, d)
         val zDir = graft.ops.Scratch.dir("graft_zorder_scale") + "/z"
-        val t0 = System.nanoTime()
-        ZOrderLayout.zorderWrite(li, "l_partkey", "l_suppkey", zDir)
-        println(f"[scaleup] zorder_write                 $d%-18s " +
-          f"${(System.nanoTime - t0) / 1e9}%8.2f s")
+        measure("zorder_write", d)(
+          ZOrderLayout.zorderWrite(li, "l_partkey", "l_suppkey", zDir))
         val env = spark.read.parquet(zDir)
           .groupBy(input_file_name())
           .agg(min(col("l_suppkey")).as("lo"), max(col("l_suppkey")).as("hi"))
@@ -1606,8 +1477,8 @@ object ScaleUp {
         val (ylo, ySpan) = (yb.getLong(0), yb.getLong(1) - yb.getLong(0) + 1)
         val (bLo, bHi) = (ylo + 3 * ySpan / 10, ylo + 4 * ySpan / 10)
         val t = env.count { case (lo, hi) => hi >= bLo && lo <= bHi }
-        println(f"[scaleup] zorder_box_touched           $d%-18s " +
-          f"$t%d of ${env.length}%d files (y box [$bLo%d,$bHi%d])")
+        note("zorder_box_touched", d,
+          s"$t of ${env.length} files (y box [$bLo,$bHi])")
       }
     }
     spark.stop()

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import graft.ops.QueryProfile
 import graft.streaming.EventStreams
 
 /** Dev experiment: the STREAMING counterpart of [[ScaleUp]] — run the
@@ -31,6 +32,11 @@ import graft.streaming.EventStreams
   * file-source equivalent of a Kafka feed's arrival sequence.
   *
   * Usage: `runMain graft.StreamScaleUp [copies]` (default 100).
+  *
+  * Batch-side steps (compactions, rebuilds, serves) print one
+  * [[QueryProfile]] record each. A sink's micro-batches run on the
+  * stream's own thread and job group, so the progress listener reports
+  * them per batch and the sink's total is wall time only.
   */
 object StreamScaleUp {
 
@@ -63,6 +69,10 @@ object StreamScaleUp {
     val base = s"/tmp/streamscale$copies"
     val eventsDir = s"$base/events.parquet"
     val docsDir = s"$base/documents.parquet"
+    def measure[T](n: String)(body: => T): T =
+      QueryProfile.measure(spark, n, base)(body)
+    def note(n: String, s: String): Unit =
+      println(f"[streamscale] $n%-32s $s")
 
     // ---- stage the 100× landing files (build-once) ----
     if (!new java.io.File(eventsDir).exists()) {
@@ -183,13 +193,12 @@ object StreamScaleUp {
       // costs at this store size — the policy's threshold trades the
       // rebuild against ~threshold appends of fragmentation
       val frag = graft.ext.Dedup.indexFileCount(s"$base/dedup_index")
-      val t1 = System.nanoTime()
-      graft.ext.Dedup.rebuildIndex(spark, s"$base/gold_docs",
-        s"$base/dedup_index",
-        outFiles = graft.ext.Dedup.CompactFileThreshold / 2)
-      println(f"[streamscale] index compaction: $frag%d part files -> " +
-        f"${graft.ext.Dedup.indexFileCount(s"$base/dedup_index")}%d, " +
-        f"rebuild ${(System.nanoTime() - t1) / 1e9}%.1f s")
+      measure("dedup_index_compaction")(
+        graft.ext.Dedup.rebuildIndex(spark, s"$base/gold_docs",
+          s"$base/dedup_index",
+          outFiles = graft.ext.Dedup.CompactFileThreshold / 2))
+      note("dedup_index_compaction", s"$frag part files -> " +
+        s"${graft.ext.Dedup.indexFileCount(s"$base/dedup_index")}")
     }
 
     // ---- 4. streaming curation sink (full sketch pipeline per batch) ----
@@ -348,21 +357,17 @@ object StreamScaleUp {
       // fragmentation left by per-batch appends, and the compaction
       // rebuild's cost at this store size
       val frag = graft.ext.ProductQuant.codesFileCount(s"$base/vec_codes")
-      val t1 = System.nanoTime()
-      graft.ext.ProductQuant.maybeCompactCodes(spark, s"$base/vec_gold",
-        s"$base/vec_codes", coarse, rcbs, threshold = 1)
-      println(f"[streamscale] codes compaction: $frag%d part files -> " +
-        f"${graft.ext.ProductQuant.codesFileCount(s"$base/vec_codes")}%d, " +
-        f"rebuild ${(System.nanoTime() - t1) / 1e9}%.1f s")
+      measure("vec_codes_compaction")(
+        graft.ext.ProductQuant.maybeCompactCodes(spark, s"$base/vec_gold",
+          s"$base/vec_codes", coarse, rcbs, threshold = 1))
+      note("vec_codes_compaction", s"$frag part files -> " +
+        s"${graft.ext.ProductQuant.codesFileCount(s"$base/vec_codes")}")
       // steady-state ADC probe against the streamed store
       val (qid, qCell, dt) = graft.ext.ProductQuant.queryPrepResidual(
         spark, src, coarse, rcbs)
-      val t2 = System.nanoTime()
-      val topRows = graft.ext.ProductQuant.adcOverCodes(
+      measure("vec_adc_probe")(graft.ext.ProductQuant.adcOverCodes(
         spark.read.parquet(s"$base/vec_codes")
-          .filter(col("cell") === qCell), dt, qid).collect().length
-      println(f"[streamscale] adc probe over streamed codes " +
-        f"${(System.nanoTime() - t2) / 1e9}%.2f s ($topRows%d rows)")
+          .filter(col("cell") === qCell), dt, qid).collect())
     }
 
     // ---- 5b. streaming SemDeDup (cells + delta verdicts per batch) ----
@@ -428,12 +433,11 @@ object StreamScaleUp {
         (if (verdictPar) "EXACT" else "MISMATCH"))
       // compaction economics, same policy row as the codes store
       val frag = graft.ext.Dedup.cellsFileCount(s"$base/sem_cells")
-      val t1 = System.nanoTime()
-      graft.ext.Dedup.maybeCompactSemanticCells(spark,
-        s"$base/sem_cells", threshold = 1)
-      println(f"[streamscale] cells compaction: $frag%d part files -> " +
-        f"${graft.ext.Dedup.cellsFileCount(s"$base/sem_cells")}%d, " +
-        f"rewrite ${(System.nanoTime() - t1) / 1e9}%.1f s")
+      measure("sem_cells_compaction")(
+        graft.ext.Dedup.maybeCompactSemanticCells(spark,
+          s"$base/sem_cells", threshold = 1))
+      note("sem_cells_compaction", s"$frag part files -> " +
+        s"${graft.ext.Dedup.cellsFileCount(s"$base/sem_cells")}")
     }
 
     // ---- 6. streaming lexical-index sink (BM25 postings per batch) ----
@@ -457,16 +461,10 @@ object StreamScaleUp {
         .select(col("doc_id"),
           graft.ext.TextOps.tokens(col("text")).as("t"))
         .filter(size(col("t")) > 0)
-      val t1 = System.nanoTime()
-      graft.ext.Retrieval.writeBm25Index(
-        tdOf(spark.read.parquet(docsDir)), s"$base/bm25_rebuild")
-      println(f"[streamscale] bm25 one-shot rebuild " +
-        f"${(System.nanoTime() - t1) / 1e9}%.1f s")
-      val t2 = System.nanoTime()
-      val streamed = graft.ext.Retrieval
-        .bm25BatchFromIndex(spark, base, s"$base/bm25_ix").collect().toSeq
-      println(f"[streamscale] bm25 serve from streamed store " +
-        f"${(System.nanoTime() - t2) / 1e9}%.1f s (${streamed.length}%d rows)")
+      measure("bm25_one_shot_rebuild")(graft.ext.Retrieval.writeBm25Index(
+        tdOf(spark.read.parquet(docsDir)), s"$base/bm25_rebuild"))
+      val streamed = measure("bm25_serve_streamed")(graft.ext.Retrieval
+        .bm25BatchFromIndex(spark, base, s"$base/bm25_ix").collect()).toSeq
       val rebuilt = graft.ext.Retrieval
         .bm25BatchFromIndex(spark, base, s"$base/bm25_rebuild")
         .collect().toSeq
@@ -474,12 +472,11 @@ object StreamScaleUp {
         (if (streamed == rebuilt) "EXACT" else "MISMATCH"))
       // compaction economics, same policy row as the other stores
       val frag = graft.ext.Dedup.cellsFileCount(s"$base/bm25_ix/postings")
-      val t3 = System.nanoTime()
-      graft.ext.Retrieval.maybeCompactPostings(spark, s"$base/bm25_ix",
-        threshold = 1)
-      println(f"[streamscale] postings compaction: $frag%d part files -> " +
-        f"${graft.ext.Dedup.cellsFileCount(s"$base/bm25_ix/postings")}%d, " +
-        f"rewrite ${(System.nanoTime() - t3) / 1e9}%.1f s")
+      measure("bm25_postings_compaction")(
+        graft.ext.Retrieval.maybeCompactPostings(spark, s"$base/bm25_ix",
+          threshold = 1))
+      note("bm25_postings_compaction", s"$frag part files -> " +
+        s"${graft.ext.Dedup.cellsFileCount(s"$base/bm25_ix/postings")}")
     }
 
     if (on("lexman")) locally {
@@ -512,17 +509,12 @@ object StreamScaleUp {
         .filter(size(col("t")) > 0)
       val rebuildStore = s"$base/bm25_man_rebuild"
       StoreFiles.deleteDir(rebuildStore)
-      val t1 = System.nanoTime()
-      graft.ext.Retrieval.writeBm25Index(
-        tdOf(spark.read.parquet(docsDir)), rebuildStore)
-      println(f"[streamscale] lexman swap one-shot rebuild " +
-        f"${(System.nanoTime() - t1) / 1e9}%.1f s")
-      val t2 = System.nanoTime()
-      val served = graft.ext.Retrieval
+      measure("lexman_swap_one_shot_rebuild")(
+        graft.ext.Retrieval.writeBm25Index(
+          tdOf(spark.read.parquet(docsDir)), rebuildStore))
+      val served = measure("lexman_serve_manifest")(graft.ext.Retrieval
         .bm25BatchFromIndex(spark, base, store, ManifestCommit)
-        .collect().toSeq
-      println(f"[streamscale] lexman serve (manifest read) " +
-        f"${(System.nanoTime() - t2) / 1e9}%.1f s (${served.length}%d rows)")
+        .collect()).toSeq
       val rebuilt = graft.ext.Retrieval
         .bm25BatchFromIndex(spark, base, rebuildStore).collect().toSeq
       println(s"[streamscale] lexman parity vs swap rebuild: " +
@@ -544,36 +536,22 @@ object StreamScaleUp {
           graft.ext.TextOps.tokens(col("text")).as("t"))
         .filter(size(col("t")) > 0)
       val docs = spark.read.parquet(docsDir)
-      val t0 = System.nanoTime()
-      Retrieval.writeBm25Index(tdOf(docs), store)
-      println(f"[streamscale] takedown index build " +
-        f"${(System.nanoTime() - t0) / 1e9}%6.1f s")
-      val t1 = System.nanoTime()
-      val pre = Retrieval.bm25BatchFromIndex(spark, base, store)
-        .collect().toSeq
-      println(f"[streamscale] takedown serve pre    " +
-        f"${(System.nanoTime() - t1) / 1e9}%6.1f s (${pre.length}%d rows)")
-      val t2 = System.nanoTime()
-      Retrieval.tombstoneBm25Docs(spark,
+      def serve(n: String) =
+        measure(n)(Retrieval.bm25BatchFromIndex(spark, base, store)
+          .collect()).toSeq
+      measure("takedown_index_build")(
+        Retrieval.writeBm25Index(tdOf(docs), store))
+      val pre = serve("takedown_serve_pre")
+      measure("takedown_tombstone")(Retrieval.tombstoneBm25Docs(spark,
         docs.filter(col("doc_id") % 10 === 3).select(col("doc_id")),
-        store)
-      println(f"[streamscale] takedown tombstone    " +
-        f"${(System.nanoTime() - t2) / 1e9}%6.1f s (10%% of docs)")
-      val t3 = System.nanoTime()
-      val masked = Retrieval.bm25BatchFromIndex(spark, base, store)
-        .collect().toSeq
-      println(f"[streamscale] takedown serve masked " +
-        f"${(System.nanoTime() - t3) / 1e9}%6.1f s (${masked.length}%d rows)")
-      val t4 = System.nanoTime()
-      val (nRem, reclaimed) = Retrieval.vacuumBm25(spark, store)
-      println(f"[streamscale] takedown vacuum       " +
-        f"${(System.nanoTime() - t4) / 1e9}%6.1f s " +
-        f"($nRem%d docs, ${reclaimed / (1 << 20)}%d MB reclaimed)")
-      val t5 = System.nanoTime()
-      val vac = Retrieval.bm25BatchFromIndex(spark, base, store)
-        .collect().toSeq
-      println(f"[streamscale] takedown serve vac    " +
-        f"${(System.nanoTime() - t5) / 1e9}%6.1f s")
+        store))
+      note("takedown_tombstone", "(10% of docs)")
+      val masked = serve("takedown_serve_masked")
+      val (nRem, reclaimed) =
+        measure("takedown_vacuum")(Retrieval.vacuumBm25(spark, store))
+      note("takedown_vacuum",
+        s"($nRem docs, ${reclaimed / (1 << 20)} MB reclaimed)")
+      val vac = serve("takedown_serve_vac")
       println(s"[streamscale] takedown parity masked==vacuumed: " +
         (if (masked == vac) "EXACT" else "MISMATCH") +
         s"; pre!=masked: ${pre != masked}")
@@ -612,13 +590,10 @@ object StreamScaleUp {
       // every partition update is a whole-partition one-file rewrite
       // parity: stream-accumulated edges == one-shot build under the
       // SAME frozen quantizers
-      val t1 = System.nanoTime()
-      graft.ext.ClusterOps.writeKnnEdges(
+      measure("knn_one_shot_rebuild")(graft.ext.ClusterOps.writeKnnEdges(
         assign(spark.read.parquet(vecDir).select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))),
-        s"$base/knn_rebuild")
-      println(f"[streamscale] knn one-shot rebuild " +
-        f"${(System.nanoTime() - t1) / 1e9}%.1f s")
+        s"$base/knn_rebuild"))
       def sig(df: DataFrame): java.math.BigDecimal =
         df.agg(sum(xxhash64(col("vec_id"), col("rk"), col("nbr_id"),
           col("cosine").cast("string"), col("cell").cast("int"))
@@ -638,17 +613,11 @@ object StreamScaleUp {
           .readIdWatermark(s"$base/knn_edges")
         require(wm.nonEmpty, "sink must leave a watermark behind")
         (1 to 2).foreach { _ =>
-          val tw = System.nanoTime()
-          val nW = probe.filter(col("vec_id") > wm.get).count()
-          val wSec = (System.nanoTime - tw) / 1e9
-          val ta = System.nanoTime()
-          val nA = probe.join(
+          measure("knn_replay_guard_watermark")(
+            probe.filter(col("vec_id") > wm.get).count())
+          measure("knn_replay_guard_anti_join")(probe.join(
             spark.read.parquet(s"$base/knn_cells").select("vec_id"),
-            Seq("vec_id"), "left_anti").count()
-          val aSec = (System.nanoTime - ta) / 1e9
-          println(f"[streamscale] knn replay guard  watermark " +
-            f"$wSec%6.3f s ($nW%d rows)  vs anti-join $aSec%6.3f s " +
-            f"($nA%d rows)")
+            Seq("vec_id"), "left_anti").count())
         }
       }
       // crash-window repair probe: a consistent store is a no-op
@@ -676,20 +645,14 @@ object StreamScaleUp {
       val rem = spark.read.parquet(cells)
         .filter(col("vec_id") % 10 === 7).select(col("vec_id"))
         .localCheckpoint()
-      val t0 = System.nanoTime()
-      val n = graft.ext.ClusterOps.removeKnnVectors(spark, rem,
-        cells, edges, None)
-      println(f"[streamscale] knnrm removal " +
-        f"${(System.nanoTime() - t0) / 1e9}%6.1f s ($n%d vectors, " +
-        f"10%% of the graph)")
-      val t1 = System.nanoTime()
-      val again = graft.ext.ClusterOps.repairKnnEdges(spark, cells,
-        edges)
-      println(f"[streamscale] knnrm post-check     " +
-        f"${(System.nanoTime() - t1) / 1e9}%6.1f s " +
-        f"($again%d stale cells — expect 0: removal converged)")
-      val t2 = System.nanoTime()
-      graft.ext.ClusterOps.writeKnnEdges(
+      val n = measure("knnrm_removal")(graft.ext.ClusterOps
+        .removeKnnVectors(spark, rem, cells, edges, None))
+      note("knnrm_removal", s"($n vectors, 10% of the graph)")
+      val again = measure("knnrm_post_check")(
+        graft.ext.ClusterOps.repairKnnEdges(spark, cells, edges))
+      note("knnrm_post_check",
+        s"($again stale cells — expect 0: removal converged)")
+      measure("knnrm_retained_rebuild")(graft.ext.ClusterOps.writeKnnEdges(
         graft.ext.Dedup.assignSemanticCells(
             spark.read.parquet(vecDir)
               .filter(col("vec_id") % 10 =!= 7)
@@ -697,9 +660,7 @@ object StreamScaleUp {
                 col("embedding").cast("array<double>").as("v")),
             coarse, subs, subK)
           .select(col("vec_id"), col("cell"), col("v")),
-        s"$base/knn_retained_ref")
-      println(f"[streamscale] knnrm retained rebuild " +
-        f"${(System.nanoTime() - t2) / 1e9}%6.1f s")
+        s"$base/knn_retained_ref"))
       def sig(df: DataFrame): java.math.BigDecimal =
         df.agg(sum(xxhash64(col("vec_id"), col("rk"), col("nbr_id"),
           col("cosine").cast("string"), col("cell").cast("int"))
@@ -774,22 +735,17 @@ object StreamScaleUp {
         f"batch + a bounded store, never the corpus)")
       // parity: fold-accumulated store == one-shot rebuild over
       // everything that arrived, under the same frozen quantizer
-      val t1 = System.nanoTime()
-      graft.ext.ClusterOps.writeClusterCardAgg(
-        assign(spark.read.parquet(cardDir)), s"$base/card_rebuild")
-      println(f"[streamscale] card one-shot rebuild " +
-        f"${(System.nanoTime() - t1) / 1e9}%.1f s")
+      measure("card_one_shot_rebuild")(graft.ext.ClusterOps
+        .writeClusterCardAgg(assign(spark.read.parquet(cardDir)),
+          s"$base/card_rebuild"))
       def rows(aggDir: String) = graft.ext.ClusterOps
         .clusterCardFromAgg(spark, aggDir).collect().map(_.toSeq).toSeq
       val par = rows(s"$base/card_agg") == rows(s"$base/card_rebuild")
       println(s"[streamscale] card parity vs rebuild: " +
         (if (par) "EXACT" else "MISMATCH"))
       // the steady-state report read: bounded store, no corpus scan
-      val t2 = System.nanoTime()
-      val n = graft.ext.ClusterOps
-        .clusterCardFromAgg(spark, s"$base/card_agg").collect().length
-      println(f"[streamscale] card from store " +
-        f"${(System.nanoTime() - t2) / 1e9}%.2f s ($n%d clusters)")
+      measure("card_from_store")(graft.ext.ClusterOps
+        .clusterCardFromAgg(spark, s"$base/card_agg").collect())
     }
 
     if (on("wordhist")) locally {
@@ -813,13 +769,10 @@ object StreamScaleUp {
         s"$base/word_hist", s"$base/ckpt_wordhist", pat).stop()
       println(f"[streamscale] wordhist sink total " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      val t1 = System.nanoTime()
       val hist = graft.ext.Bpe.wordHistFromStore(spark, s"$base/word_hist")
-      val v = hist.count()
-      val (rules, _) = graft.ext.Bpe.trainOn(hist)
-      println(f"[streamscale] bpe train from maintained store " +
-        f"${(System.nanoTime() - t1) / 1e9}%.1f s " +
-        f"(vocab $v%d, ${rules.length}%d merges)")
+      val (v, rules) = measure("bpe_train_from_store")(
+        (hist.count(), graft.ext.Bpe.trainOn(hist)._1))
+      note("bpe_train_from_store", s"(vocab $v, ${rules.length} merges)")
       // parity: maintained hist == one-shot scan of everything staged
       def rows(df: DataFrame) = df.collect()
         .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
@@ -871,7 +824,7 @@ object StreamScaleUp {
         .contains("pointer")
       val commitMode: graft.ops.StoreCommit =
         if (ptr) graft.ops.PointerCommit else graft.ops.SwapCommit
-      val tag = if (ptr) " (pointer)" else ""
+      val tag = if (ptr) "_ptr" else ""
       val store = s"$base/zstore16" + (if (ptr) "_ptr" else "")
       val files = Option(new java.io.File(liDir).listFiles())
         .getOrElse(Array.empty).map(_.getPath).sorted
@@ -880,27 +833,21 @@ object StreamScaleUp {
         val rows = spark.read.parquet(f)
         commitMode.recover(store)
         val live = commitMode.writeDir(store)
-        val tA = System.nanoTime()
-        ZOrderLayout.appendDelta(rows, live, idc)
-        val aS = (System.nanoTime() - tA) / 1e9
-        var minS = 0.0; var majS = 0.0
-        if (ZOrderLayout.deltaCount(live) >= ZOrderLayout.CompactAfter) {
-          val tM = System.nanoTime()
-          ZOrderLayout.minorCompact(spark, live, x, y)
-          minS = (System.nanoTime() - tM) / 1e9
-          val tJ = System.nanoTime()
-          val (_, major) = ZOrderLayout.maybeCompactStore(
-            spark, store, x, y, idc, commitMode)
-          if (major) majS = (System.nanoTime() - tJ) / 1e9
-        }
+        val step = f"zstore$tag t${i + 1}%02d"
+        measure(s"$step append")(ZOrderLayout.appendDelta(rows, live, idc))
+        val major =
+          ZOrderLayout.deltaCount(live) >= ZOrderLayout.CompactAfter && {
+            measure(s"$step minor")(
+              ZOrderLayout.minorCompact(spark, live, x, y))
+            measure(s"$step maybe_major")(ZOrderLayout.maybeCompactStore(
+              spark, store, x, y, idc, commitMode))._2
+          }
         val liveNow = commitMode.readDir(store)
         val baseMb =
           graft.ops.StoreFiles.dirBytes(s"$liveNow/base") / (1 << 20)
         val l1Mb =
           graft.ops.StoreFiles.dirBytes(s"$liveNow/l1") / (1 << 20)
-        println(f"[streamscale] zstore$tag%s t${i + 1}%02d append $aS%5.1f s" +
-          f"  minor $minS%5.1f s  major $majS%5.1f s" +
-          f"  (base ${baseMb}%d MB, l1 ${l1Mb}%d MB)")
+        note(step, s"major $major  (base $baseMb MB, l1 $l1Mb MB)")
       }
       val got = ZOrderLayout
         .readStore(spark, commitMode.readDir(store)).count()
@@ -942,30 +889,23 @@ object StreamScaleUp {
       val (x, y, idc) = ("l_partkey", "l_suppkey", "l_orderkey")
       for ((f, i) <- files.zipWithIndex) {
         val rows = spark.read.parquet(f)
-        val tA = System.nanoTime()
-        ZOrderLayout.appendDelta(rows, store, idc)
-        val aS = (System.nanoTime() - tA) / 1e9
-        val tD = System.nanoTime()
-        ZOrderLayout.appendDeleteDelta(
-          rows.filter(col(idc) % 10 === 3), store, idc)
-        val dS = (System.nanoTime() - tD) / 1e9
-        var minS = 0.0; var majS = 0.0
-        if (ZOrderLayout.deltaCount(store) >= ZOrderLayout.CompactAfter) {
-          val tM = System.nanoTime()
-          ZOrderLayout.minorCompact(spark, store, x, y)
-          minS = (System.nanoTime() - tM) / 1e9
-          val tJ = System.nanoTime()
-          val (_, major) = ZOrderLayout.maybeCompactStore(
-            spark, store, x, y, idc)
-          if (major) majS = (System.nanoTime() - tJ) / 1e9
-        }
+        val step = f"zdel t${i + 1}%02d"
+        measure(s"$step append")(ZOrderLayout.appendDelta(rows, store, idc))
+        measure(s"$step del")(ZOrderLayout.appendDeleteDelta(
+          rows.filter(col(idc) % 10 === 3), store, idc))
+        val major =
+          ZOrderLayout.deltaCount(store) >= ZOrderLayout.CompactAfter && {
+            measure(s"$step minor")(
+              ZOrderLayout.minorCompact(spark, store, x, y))
+            measure(s"$step maybe_major")(ZOrderLayout.maybeCompactStore(
+              spark, store, x, y, idc))._2
+          }
         val baseMb =
           graft.ops.StoreFiles.dirBytes(s"$store/base") / (1 << 20)
         val delN = ZOrderLayout.pendingDeletes(spark, store)
           .map(_.count()).getOrElse(0L)
-        println(f"[streamscale] zdel t${i + 1}%02d append $aS%5.1f s" +
-          f"  del $dS%5.1f s  minor $minS%5.1f s  major $majS%5.1f s" +
-          f"  (base ${baseMb}%d MB, pending deletes $delN%d)")
+        note(step,
+          s"major $major  (base $baseMb MB, pending deletes $delN)")
       }
       val got = ZOrderLayout.readStore(spark, store).count()
       val landing = spark.read.parquet(liDir)

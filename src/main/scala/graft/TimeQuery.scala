@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.ops.QueryProfile
 
-/** Dev tool: time named queries at a given data dir.
+/** Dev tool: construct and collect named queries at a data dir, one
+  * [[QueryProfile]] record per query (wall, rows, jobs, stages, tasks,
+  * executor time, shuffle bytes). Construction is inside the record,
+  * so the eager store builds a query's first call pays are charged to
+  * it; run one query per JVM for first-payer numbers.
   * Usage: runMain graft.TimeQuery <sfDir> <query> [<query> ...]
   * Extra session conf via SPARK_GRAFT_CONF="k=v;k2=v2". */
 object TimeQuery {
@@ -15,11 +19,8 @@ object TimeQuery {
       })
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    args.tail.foreach { q =>
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(q)(spark, sfDir).count()
-      println(f"[time] $q%-30s ${(System.nanoTime() - t0) / 1e9}%8.2fs  rows=$n")
-    }
+    args.tail.foreach(q => QueryProfile.measure(spark, q, sfDir)(
+      SparkEntry.queries(q)(spark, sfDir).collect()))
     spark.stop()
   }
 }

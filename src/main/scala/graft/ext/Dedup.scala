@@ -234,7 +234,7 @@ object Dedup {
     * ([[KMeans.trainFrame]]) run on each coarse cell's members —
     * two-level clustering, the same shape as FAISS's coarse+fine
     * quantizer split. Trained once per corpus build; cells are
-    * well-balanced on this data (CellProbe: 43–55 members at
+    * well-balanced on this data (43–55 members per cell at
     * sf0.01), and trainFrame fails loudly if a cell ever has fewer
     * than [[SubK]] members rather than silently shrinking. */
   private def subCentroids(e: DataFrame): Seq[Seq[(Int, Seq[Double])]] =

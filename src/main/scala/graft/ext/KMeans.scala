@@ -43,6 +43,17 @@ object KMeans {
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
 
+  /** The min-vec_id row that every single-query top-k entry searches
+    * for: its id, label (of the table's label type) and vector
+    * (widened to double, exact). Pulled once per embeddings version,
+    * so building such a query starts no job once the row is known. */
+  private[graft] def queryRow(spark: SparkSession,
+      dir: String): (Long, Any, Seq[Double]) =
+    graft.ops.SessionStore.of("queryRow", s"$dir/embeddings.parquet") {
+      val r = vecs(spark, dir).orderBy(col("vec_id")).limit(1).head()
+      (r.getLong(0), r.get(1), r.getSeq[Double](2).toVector)
+    }
+
   /** argmin centroid id under the given centroids — map-only, one
     * codegen'd [[graft.functions.NearestCentroid]] loop per row (see
     * that scaladoc for why the composable forms fail at 20M rows:
@@ -271,10 +282,7 @@ object KMeans {
       k: Int): DataFrame = {
     val cents = train(spark, dir)
     val e = vecs(spark, dir)
-    val qrow = e.orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    val qid = qrow.getLong(0)
-    val qv = qrow.getSeq[Double](1)
+    val (qid, _, qv) = queryRow(spark, dir)
     val qCid = cents.map { case (cid, cv) =>
       (qv.zip(cv).foldLeft(0.0) { case (acc, (x, c)) =>
         acc + (x - c) * (x - c) }, cid)
@@ -300,10 +308,7 @@ object KMeans {
       probes: Int = 2): DataFrame = {
     val cents = train(spark, dir)
     val e = vecs(spark, dir)
-    val qrow = e.orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    val qid = qrow.getLong(0)
-    val qv = qrow.getSeq[Double](1)
+    val (qid, _, qv) = queryRow(spark, dir)
     val probeCids = cents.map { case (cid, cv) =>
       (qv.zip(cv).foldLeft(0.0) { case (acc, (x, c)) =>
         acc + (x - c) * (x - c) }, cid)

@@ -96,9 +96,8 @@ object ProductQuant {
   /** Query-side prep: the min-vec_id query's id and distance table. */
   def queryTable(spark: SparkSession, dir: String,
       cbs: Seq[Seq[(Int, Seq[Double])]]): (Long, Seq[Seq[Double]]) = {
-    val qrow = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    (qrow.getLong(0), distTable(qrow.getSeq[Double](1), cbs))
+    val (qid, _, qv) = KMeans.queryRow(spark, dir)
+    (qid, distTable(qv, cbs))
   }
 
   /** ADC top-k over a PERSISTED codes table ([[encodeWith]] output):
@@ -233,14 +232,12 @@ object ProductQuant {
   def queryPrep(spark: SparkSession, dir: String,
       coarse: Seq[(Int, Seq[Double])],
       cbs: Seq[Seq[(Int, Seq[Double])]]): (Long, Int, Seq[Seq[Double]]) = {
-    val qrow = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    val qv = qrow.getSeq[Double](1)
+    val (qid, _, qv) = KMeans.queryRow(spark, dir)
     val qCid = coarse.map { case (cid, cv) =>
       (qv.zip(cv).foldLeft(0.0) { case (acc, (x, c)) =>
         acc + (x - c) * (x - c) }, cid)
     }.min._2
-    (qrow.getLong(0), qCid, distTable(qv, cbs))
+    (qid, qCid, distTable(qv, cbs))
   }
 
   /** IVF-PQ top-k — the composed production layout (FAISS `IVF,PQ`):
@@ -464,15 +461,13 @@ object ProductQuant {
   def queryPrepResidual(spark: SparkSession, dir: String,
       coarse: Seq[(Int, Seq[Double])],
       rcbs: Seq[Seq[(Int, Seq[Double])]]): (Long, Int, Seq[Seq[Double]]) = {
-    val qrow = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    val qv = qrow.getSeq[Double](1)
+    val (qid, _, qv) = KMeans.queryRow(spark, dir)
     val qCid = coarse.map { case (cid, cv) =>
       (qv.zip(cv).foldLeft(0.0) { case (acc, (x, c)) =>
         acc + (x - c) * (x - c) }, cid)
     }.min._2
     val qres = qv.zip(coarse(qCid)._2).map { case (x, c) => x - c }
-    (qrow.getLong(0), qCid, distTable(qres, rcbs))
+    (qid, qCid, distTable(qres, rcbs))
   }
 
   /** Residual IVF-PQ top-k: prune to the query's coarse cell, ADC over
@@ -565,10 +560,8 @@ object ProductQuant {
   private def opqQueryPrep(spark: SparkSession, dir: String,
       rot: Seq[Seq[Double]], coarse: Seq[(Int, Seq[Double])],
       rcbs: Seq[Seq[(Int, Seq[Double])]]): (Long, Int, Seq[Seq[Double]]) = {
-    val qraw = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    val qid = qraw.getLong(0)
-    val qv = ScalarQuant.rotateLocal(qraw.getSeq[Double](1), rot)
+    val (qid, _, qraw) = KMeans.queryRow(spark, dir)
+    val qv = ScalarQuant.rotateLocal(qraw, rot)
     val qCid = coarse.map { case (cid, cv) =>
       (qv.zip(cv).foldLeft(0.0) { case (acc, (x, c)) =>
         acc + (x - c) * (x - c) }, cid)
@@ -985,9 +978,7 @@ object ProductQuant {
       commit: graft.ops.StoreCommit = graft.ops.SwapCommit): DataFrame = {
     val (rot, coarse, rcbs) = readOpqQuantizers(spark, store, commit)
     val (qid, qCid, dt) = opqQueryPrep(spark, dir, rot, coarse, rcbs)
-    val qv = ScalarQuant.rotateLocal(
-      KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-        .select(col("v")).head().getSeq[Double](0), rot)
+    val qv = ScalarQuant.rotateLocal(KMeans.queryRow(spark, dir)._3, rot)
     val adc = (0 until M).map { m =>
       element_at(array(dt(m).map(lit): _*), col(s"code$m") + lit(1))
     }.reduceLeft(_ + _)
@@ -1044,8 +1035,7 @@ object ProductQuant {
     val coarse = KMeans.train(spark, dir)
     val rcbs = residualCodebooks(spark, dir, coarse)
     val (qid, qCid, dt) = queryPrepResidual(spark, dir, coarse, rcbs)
-    val qv = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("v")).head().getSeq[Double](0)
+    val qv = KMeans.queryRow(spark, dir)._3
     // candidate ids COLLECT to the driver (k′ = 40 longs) and return
     // as a pushed-down In filter — a broadcast join would still scan
     // the whole raw-vector table to find 40 rows, while the literal
@@ -1225,10 +1215,7 @@ object ProductQuant {
       probes: Int = 2): DataFrame = {
     val coarse = KMeans.train(spark, dir)
     val rcbs = residualCodebooks(spark, dir, coarse)
-    val qrow = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    val qid = qrow.getLong(0)
-    val qv = qrow.getSeq[Double](1)
+    val (qid, _, qv) = KMeans.queryRow(spark, dir)
     val probeCids = coarse.map { case (cid, cv) =>
       (qv.zip(cv).foldLeft(0.0) { case (acc, (x, c)) =>
         acc + (x - c) * (x - c) }, cid)
@@ -1263,10 +1250,7 @@ object ProductQuant {
       probes: Int = 2): DataFrame = {
     val coarse = KMeans.train(spark, dir)
     val cbs = codebooks(spark, dir)
-    val qrow = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    val qid = qrow.getLong(0)
-    val qv = qrow.getSeq[Double](1)
+    val (qid, _, qv) = KMeans.queryRow(spark, dir)
     val probeCids = coarse.map { case (cid, cv) =>
       (qv.zip(cv).foldLeft(0.0) { case (acc, (x, c)) =>
         acc + (x - c) * (x - c) }, cid)

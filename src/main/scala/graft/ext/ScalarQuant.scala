@@ -125,12 +125,7 @@ object ScalarQuant {
     * Σ(codeᵈ − qcodeᵈ)² over the on-the-fly encode, TakeOrdered. */
   def sq8TopK(spark: SparkSession, dir: String): DataFrame = {
     val stats = dimStats(spark, dir)
-    val qrow = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    val qid = qrow.getLong(0)
-    val qcodes = qrow.getSeq[Double](1).zip(stats).map {
-      case (x, (mn, mx)) => quantize(x, mn, mx)
-    }
+    val (qid, qcodes) = encodeQuery(spark, dir, stats)
     val dist = graft.functions.Sq8.dist(col("v"), stats, qcodes)
     KMeans.vecs(spark, dir)
       .filter(col("vec_id") =!= qid)
@@ -210,11 +205,8 @@ object ScalarQuant {
     * [[sq8OverCodes]]. */
   def encodeQuery(spark: SparkSession, dir: String,
       stats: Seq[(Double, Double)]): (Long, Seq[Int]) = {
-    val qrow = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    (qrow.getLong(0), qrow.getSeq[Double](1).zip(stats).map {
-      case (x, (mn, mx)) => quantize(x, mn, mx)
-    })
+    val (qid, _, qv) = KMeans.queryRow(spark, dir)
+    (qid, qv.zip(stats).map { case (x, (mn, mx)) => quantize(x, mn, mx) })
   }
 
   /** IVF × SQ8 composition: probe only the query's coarse partition
@@ -225,13 +217,8 @@ object ScalarQuant {
     * cell-size × 64 bytes, never the corpus. */
   def ivfSq8TopK(spark: SparkSession, dir: String): DataFrame = {
     val stats = dimStats(spark, dir)
-    val qrow = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v"), col("label")).head()
-    val qid = qrow.getLong(0)
-    val qcodes = qrow.getSeq[Double](1).zip(stats).map {
-      case (x, (mn, mx)) => quantize(x, mn, mx)
-    }
-    val qLabel = qrow.getInt(2)
+    val (qid, qcodes) = encodeQuery(spark, dir, stats)
+    val qLabel = KMeans.queryRow(spark, dir)._2
     val dist = graft.functions.Sq8.dist(col("v"), stats, qcodes)
     KMeans.vecs(spark, dir)
       .filter(col("label") === qLabel && col("vec_id") =!= qid)
@@ -288,10 +275,8 @@ object ScalarQuant {
       .select(col("vec_id"), col("label"),
         graft.functions.MatVec(col("v"), rot).as("v"))
     val stats = dimStatsOn(rotated)
-    val qrow = KMeans.vecs(spark, dir).orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("v")).head()
-    val qid = qrow.getLong(0)
-    val qcodes = rotateLocal(qrow.getSeq[Double](1), rot).zip(stats).map {
+    val (qid, _, qv) = KMeans.queryRow(spark, dir)
+    val qcodes = rotateLocal(qv, rot).zip(stats).map {
       case (x, (mn, mx)) => quantize(x, mn, mx)
     }
     rotated.filter(col("vec_id") =!= qid)

@@ -39,12 +39,8 @@ object Similarity {
 
   /** Collect the query vector (row with min vec_id) as a literal. */
   private[ext] def queryVec(spark: SparkSession, dir: String): (Long, Column) = {
-    val e = Tables.embeddings(spark, dir)
-    val row = e.orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("embedding")).head()
-    val id = row.getLong(0)
-    val vec = row.getSeq[Float](1)
-    (id, array(vec.map(f => lit(f.toDouble)): _*))
+    val (id, _, vec) = KMeans.queryRow(spark, dir)
+    (id, array(vec.map(lit): _*))
   }
 
   /** Brute-force cosine top-10 against the min-vec_id query vector.
@@ -72,11 +68,8 @@ object Similarity {
   /** IVF-style top-5: search only the query's coarse partition. */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val row = e.orderBy(col("vec_id")).limit(1)
-      .select(col("vec_id"), col("embedding"), col("label")).head()
-    val qid = row.getLong(0)
-    val q = array(row.getSeq[Float](1).map(f => lit(f.toDouble)): _*)
-    val qLabel = row.getInt(2)
+    val (qid, qLabel, qv) = KMeans.queryRow(spark, dir)
+    val q = array(qv.map(lit): _*)
     e.filter(col("label") === qLabel && col("vec_id") =!= qid)
       .select(col("vec_id"), col("label"),
         cosine(col("embedding").cast("array<double>"), q).as("cosine"))

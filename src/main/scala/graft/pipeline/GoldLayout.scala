@@ -149,7 +149,7 @@ object GoldLayout {
   val oracle: Map[String, String] = Map(
     // layout must not change results: byte-for-byte the q8 oracle
     "q8_shipping_days_bucketed" ->
-      """SELECT n_name AS country, AVG(datediff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS avg_shipping_days FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey GROUP BY 1 ORDER BY avg_shipping_days, country"""
+      """SELECT n_name AS country, CAST(SUM(datediff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS DOUBLE) / COUNT(datediff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS avg_shipping_days FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey GROUP BY 1 ORDER BY avg_shipping_days, country"""
   )
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -82,6 +82,11 @@ object StarSchema {
         col("channel_id"), col("o_totalprice"))
   }
 
+  /** The tables [[materialize]] writes, each the registry entry
+    * `star_<table>` without its ordering. */
+  val WarehouseTables: Seq[String] =
+    Seq("dim_date", "dim_country", "dim_item", "dim_channel", "fact_sales")
+
   /** Persist the schema as a gold layer (reference full-refresh load,
     * etl_pipeline/load.py:143-157 — idempotent overwrite replaces
     * DELETE+append). Dims coalesce to 1 file; the fact keeps its
@@ -101,14 +106,16 @@ object StarSchema {
 
   /** Analytic query THROUGH the star schema (q2-shape): proves the
     * dim/fact round trip preserves the answer. */
-  def revenueByYear(spark: SparkSession, dir: String): DataFrame = {
-    val f = factSales(spark, dir)
-    val dd = dimDate(spark, dir)
+  def revenueByYear(spark: SparkSession, dir: String): DataFrame =
+    revenueByYearOn(factSales(spark, dir), dimDate(spark, dir))
+
+  /** [[revenueByYear]] over given fact and dim_date tables, such as a
+    * materialized warehouse read back. */
+  def revenueByYearOn(f: DataFrame, dd: DataFrame): DataFrame =
     f.join(broadcast(dd), Seq("date_id"))
       .groupBy(col("order_year"))
       .agg(graft.ops.ColumnOps.sumMoney(col("o_totalprice")).as("total_revenue"))
       .orderBy(col("order_year"))
-  }
 
   private val dimDateSql =
     """SELECT row_number() OVER (ORDER BY order_date) AS date_id, order_date, year(order_date) AS order_year, month(order_date) AS order_month FROM (SELECT DISTINCT CAST(o_orderdate AS DATE) AS order_date FROM orders)"""

@@ -214,7 +214,7 @@ object Analytics {
     "q7_top_orders_by_price" ->
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""",
     "q8_avg_shipping_days" ->
-      """SELECT n_name AS country, AVG(datediff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS avg_shipping_days FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey GROUP BY 1 ORDER BY avg_shipping_days, country""",
+      """SELECT n_name AS country, CAST(SUM(datediff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS DOUBLE) / COUNT(datediff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE))) AS avg_shipping_days FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey GROUP BY 1 ORDER BY avg_shipping_days, country""",
     "q9_revenue_per_supplier_nation" ->
       """SELECT n_name AS supplier_nation, CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS total_revenue, COUNT(DISTINCT s_suppkey) AS supplier_count FROM lineitem JOIN supplier ON l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey GROUP BY 1 ORDER BY 1""",
     "dash_channel_rollup" ->

@@ -228,7 +228,6 @@ class BpeSpec extends SparkSpec {
 
   test("merges artifact round-trips its training word pattern; a " +
       "pattern-less artifact falls back to the default") {
-    import java.nio.file.Files
     // the driver corpus is purely [a-z]+ words, so the mismatch this
     // closes needs a fixture with words only a WIDENED model admits:
     // underscore compounds, trained under `[a-z_]` — the exact shape
@@ -238,7 +237,7 @@ class BpeSpec extends SparkSpec {
         (2L, "foo_bar qux baz"), (3L, "qux qux foo_bar"))
       .toDF("doc_id", "text")
     val (rules, _) = Bpe.trainBatched(Bpe.wordHist(d, widened), 24)
-    val path = Files.createTempDirectory("graft_bpe_art").toString + "/m"
+    val path = graft.ops.Scratch.dir("graft_bpe_art") + "/m"
     Bpe.writeMergesArtifact(spark, rules, widened, path)
     val (rulesBack, patBack) = Bpe.readMergesArtifact(spark, path)
     assert(rulesBack == rules && patBack == widened)
@@ -253,7 +252,7 @@ class BpeSpec extends SparkSpec {
       "a default-pattern consumer must demonstrably lose the " +
         "underscore words — the mismatch the recorded pattern closes")
     // legacy artifact (no _meta): reads as the default pattern
-    val legacy = Files.createTempDirectory("graft_bpe_leg").toString + "/m"
+    val legacy = graft.ops.Scratch.dir("graft_bpe_leg") + "/m"
     spark.createDataFrame(rules).write.parquet(legacy)
     assert(Bpe.readMergesArtifact(spark, legacy)._2 == Bpe.WordPattern)
   }

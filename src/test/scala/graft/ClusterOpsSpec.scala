@@ -47,8 +47,7 @@ class ClusterOpsSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(livePlan.toLowerCase.contains("nearestcentroid"))
     val cents = KMeans.train(spark, sf)
-    val cellsDir = java.nio.file.Files
-      .createTempDirectory("graft_clu_spec").toString + "/cells"
+    val cellsDir = graft.ops.Scratch.dir("graft_clu_spec") + "/cells"
     KMeans.writeCellVectors(spark, sf, cellsDir, cents)
     val servedPlan = spark.read.parquet(cellsDir)
       .select(col("vec_id"), col("cluster").cast("int").as("cluster"))
@@ -257,8 +256,7 @@ class ClusterOpsSpec extends SparkSpec {
     def assigned(f: org.apache.spark.sql.DataFrame) =
       f.select(col("vec_id"),
         KMeans.assignOn(col("v"), cents).as("cell"), col("v"))
-    val edgesDir = java.nio.file.Files
-      .createTempDirectory("graft_knn_edges").toString + "/edges"
+    val edgesDir = graft.ops.Scratch.dir("graft_knn_edges") + "/edges"
     ClusterOps.writeKnnEdges(assigned(vs.filter(col("vec_id") <= cut)),
       edgesDir)
     val merged = ClusterOps.knnGraphMergeFromEdges(spark, edgesDir,
@@ -281,8 +279,7 @@ class ClusterOpsSpec extends SparkSpec {
     def assigned(f: org.apache.spark.sql.DataFrame) =
       f.select(col("vec_id"),
         KMeans.assignOn(col("v"), cents).as("cell"), col("v"))
-    val edgesDir = java.nio.file.Files
-      .createTempDirectory("graft_knn_append_spec").toString + "/edges"
+    val edgesDir = graft.ops.Scratch.dir("graft_knn_append_spec") + "/edges"
     ClusterOps.writeKnnEdges(assigned(vs.filter(col("vec_id") <= cut)),
       edgesDir)
     val touched = assigned(vs.filter(col("vec_id") > cut))
@@ -426,8 +423,7 @@ class ClusterOpsSpec extends SparkSpec {
     val j = assigned.join(docs, assigned("vec_id") === docs("doc_id"))
       .select(col("doc_id"), col("cluster"), col("label"),
         col("source"), col("n_tokens"))
-    val aggDir = java.nio.file.Files
-      .createTempDirectory("graft_card_agg_spec").toString + "/agg"
+    val aggDir = graft.ops.Scratch.dir("graft_card_agg_spec") + "/agg"
     ClusterOps.writeClusterCardAgg(j.filter(col("doc_id") <= cut), aggDir)
     val touched = j.filter(col("doc_id") > cut)
       .select(col("cluster")).distinct().collect().map(_.getInt(0)).toSet
@@ -471,8 +467,7 @@ class ClusterOpsSpec extends SparkSpec {
     // the ATOMIC fold (the streaming sink's form) lands the same
     // merged aggregates, with the replay watermark committed inside
     // the same swap — store and watermark can never disagree
-    val swapDir = java.nio.file.Files
-      .createTempDirectory("graft_card_swap_spec").toString + "/agg"
+    val swapDir = graft.ops.Scratch.dir("graft_card_swap_spec") + "/agg"
     ClusterOps.writeClusterCardAgg(j.filter(col("doc_id") <= cut), swapDir)
     val maxId = j.agg(max(col("doc_id"))).head().getLong(0)
     ClusterOps.foldClusterCardAgg(spark, swapDir,

@@ -49,4 +49,15 @@ class ConstructionJobsSpec extends SparkSpec {
     assert(stale.isEmpty,
       s"listed as eager but construct with zero jobs; remove them: $stale")
   }
+
+  test("single-query sim top-k entries construct with zero Spark jobs, " +
+      "warm") {
+    val names = Seq("sim_kmeans_topk", "sim_ivf_topk", "sim_sq8_topk",
+      "sim_pq_topk", "sim_ivfpq_topk")
+    names.foreach(n => SparkEntry.queries(n)(spark, sf)) // warm
+    val jobs = names.map(n =>
+      n -> JobCount.of(spark)(SparkEntry.queries(n)(spark, sf))).toMap
+    assert(jobs.values.forall(_ == 0),
+      s"queries that start jobs at warm construction: $jobs")
+  }
 }

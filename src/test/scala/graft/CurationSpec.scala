@@ -158,7 +158,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("writeCurated materializes splits that reconcile with the pipeline") {
-    val out = java.nio.file.Files.createTempDirectory("graft_curated").toString
+    val out = graft.ops.Scratch.dir("graft_curated")
     Curation.writeCurated(spark, sf, out)
     val dispCounts = Curation.curationPipeline(spark, sf)
       .groupBy("disposition").count().collect()
@@ -182,7 +182,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("artifact-fed pipeline equals the live pipeline") {
-    val out = java.nio.file.Files.createTempDirectory("graft_labels").toString
+    val out = graft.ops.Scratch.dir("graft_labels")
     ext.Sampling.writeSplitLabels(spark, sf, out)
     val live = Curation.curationPipeline(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq
@@ -199,7 +199,7 @@ class CurationSpec extends SparkSpec {
     // return leg from its content-fingerprint window (that reshuffle
     // is information-theoretically required: the dup rank is keyed by
     // content, not doc_id). Everything else must ride the bucketing.
-    val out = java.nio.file.Files.createTempDirectory("graft_labels").toString
+    val out = graft.ops.Scratch.dir("graft_labels")
     ext.Sampling.writeSplitLabels(spark, sf, out)
     val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.enabled").map(k => k -> spark.conf.get(k))
@@ -222,7 +222,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("sketch pipeline equals the exact pipeline when bloom has no FPs") {
-    val out = java.nio.file.Files.createTempDirectory("graft_labels").toString
+    val out = graft.ops.Scratch.dir("graft_labels")
     ext.Sampling.writeSplitLabels(spark, sf, out)
     // precondition: at this SF the bloom probe has zero false
     // positives (asserted by the dominance test), so dispositions
@@ -235,7 +235,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("persisted split labels round-trip the live split exactly") {
-    val out = java.nio.file.Files.createTempDirectory("graft_labels").toString
+    val out = graft.ops.Scratch.dir("graft_labels")
     ext.Sampling.writeSplitLabels(spark, sf, out)
     val live = ext.Sampling.trainTestSplit(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
@@ -381,8 +381,7 @@ class CurationSpec extends SparkSpec {
   test("artifact-fed data card equals the live card when the label " +
     "and count stores are current") {
     import graft.ext.{Sampling, Selection}
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_card").toString
+    val base = graft.ops.Scratch.dir("graft_card")
     val labelsDir = s"$base/labels"
     val countsDir = s"$base/counts"
     Sampling.writeSplitLabels(spark, sf, labelsDir)
@@ -410,8 +409,7 @@ class CurationSpec extends SparkSpec {
     // driving the card THROUGH both merge paths — gold build, batch
     // fold, card from the folded stores == the live full-corpus card
     import graft.ext.{Dedup, Sampling, Selection}
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_card_inc").toString
+    val base = graft.ops.Scratch.dir("graft_card_inc")
     val labelsDir = s"$base/labels"
     val countsDir = s"$base/counts"
     val d = Tables.documents(spark, sf)

@@ -63,7 +63,7 @@ class DedupSpec extends SparkSpec {
       "preserves the watermark, and the store serves like a fresh " +
       "build on the retained corpus") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_vac").toString
+    val base = graft.ops.Scratch.dir("graft_vac")
     val goldDir = s"$base/gold"; val ixDir = s"$base/ix"
     val d = Tables.documents(spark, sf)
     val ids = d.select(col("doc_id")).orderBy(col("doc_id"))
@@ -224,7 +224,7 @@ class DedupSpec extends SparkSpec {
     val d = graft.Tables.documents(spark, sf)
     val cutoff = d.agg(floor(max(col("doc_id")) * 0.8).cast("long"))
       .head().getLong(0)
-    val dir = java.nio.file.Files.createTempDirectory("gold_idx").toString
+    val dir = graft.ops.Scratch.dir("gold_idx")
     Dedup.writeGoldIndex(d.filter(col("doc_id") <= cutoff), dir)
     val viaIndex = Dedup.incrementalAgainstIndex(spark,
       d.filter(col("doc_id") > cutoff), dir).collect().toSeq
@@ -240,7 +240,7 @@ class DedupSpec extends SparkSpec {
     val batch1 = d.filter(col("doc_id") > maxId * 6 / 10
       && col("doc_id") <= maxId * 8 / 10)
     val batch2 = d.filter(col("doc_id") > maxId * 8 / 10)
-    val base = java.nio.file.Files.createTempDirectory("gold_crash").toString
+    val base = graft.ops.Scratch.dir("gold_crash")
     // healthy start: gold corpus + matching index
     gold0.write.parquet(s"$base/gold")
     Dedup.writeGoldIndex(gold0, s"$base/index")
@@ -258,8 +258,7 @@ class DedupSpec extends SparkSpec {
       spark, batch2, s"$base/index").collect().toSeq
     // … and it must judge batch2 exactly like an index built directly
     // from the same gold corpus by a crash-free run
-    val cleanIdx = java.nio.file.Files
-      .createTempDirectory("gold_clean").toString
+    val cleanIdx = graft.ops.Scratch.dir("gold_clean")
     Dedup.writeGoldIndex(spark.read.parquet(s"$base/gold"), cleanIdx)
     val clean = Dedup.incrementalAgainstIndex(
       spark, batch2, cleanIdx).collect().toSeq
@@ -280,7 +279,7 @@ class DedupSpec extends SparkSpec {
       .select("doc_id")
     val gold = slice.join(keepIds, Seq("doc_id")).localCheckpoint()
     val probe = d.filter(col("doc_id") > maxId * 8 / 10).localCheckpoint()
-    val base = java.nio.file.Files.createTempDirectory("gold_ts").toString
+    val base = graft.ops.Scratch.dir("gold_ts")
     gold.write.parquet(s"$base/gold")
     Dedup.writeGoldIndex(gold, s"$base/index")
     val orig = Dedup.incrementalAgainstIndex(spark, probe, s"$base/index")
@@ -295,8 +294,7 @@ class DedupSpec extends SparkSpec {
     val viaTombstones = Dedup.incrementalAgainstIndex(
       spark, probe, s"$base/index").collect().toSeq
     // truth: a fresh index built on gold minus the removed docs
-    val cleanIdx = java.nio.file.Files
-      .createTempDirectory("gold_ts_clean").toString
+    val cleanIdx = graft.ops.Scratch.dir("gold_ts_clean")
     Dedup.writeGoldIndex(
       gold.join(removed, Seq("doc_id"), "left_anti"), cleanIdx)
     val clean = Dedup.incrementalAgainstIndex(spark, probe, cleanIdx)
@@ -328,7 +326,7 @@ class DedupSpec extends SparkSpec {
       "verdicts unchanged") {
     val d = graft.Tables.documents(spark, sf)
     val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
-    val base = java.nio.file.Files.createTempDirectory("gold_compact").toString
+    val base = graft.ops.Scratch.dir("gold_compact")
     val gold0 = d.filter(col("doc_id") <= maxId / 2)
     gold0.write.parquet(s"$base/gold")
     Dedup.writeGoldIndex(gold0, s"$base/index")
@@ -501,8 +499,7 @@ class DedupSpec extends SparkSpec {
       "tight duplicate pairs should survive the sampled sub-split")
     // disk artifact round-trip: write the cell-partitioned store,
     // serve from it, identical rows — training/assignment never re-run
-    val cellsDir = java.nio.file.Files
-      .createTempDirectory("graft_semcells").toString + "/cells"
+    val cellsDir = graft.ops.Scratch.dir("graft_semcells") + "/cells"
     Dedup.writeSemanticCells(spark, sf, cellsDir)
     val fromDisk = Dedup.semanticDedupFromCells(spark, cellsDir).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2),
@@ -551,8 +548,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("artifact-fed keep-best equals the live CC-built form") {
-    val labelsDir = java.nio.file.Files
-      .createTempDirectory("graft_kb_labels").toString
+    val labelsDir = graft.ops.Scratch.dir("graft_kb_labels")
     graft.ext.Sampling.writeSplitLabels(spark, sf, labelsDir)
     val live = Dedup.keepBestQuality(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(3))).toSeq

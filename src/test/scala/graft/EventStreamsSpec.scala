@@ -92,7 +92,8 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("checkpointed parquet sink persists windowed results durably") {
-    val out = java.nio.file.Files.createTempDirectory("graft_stream_sink")
+    val out = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_stream_sink"))
     val stream = EventStreams.eventsStream(spark, sf)
     // append mode requires the watermark to close windows; with a
     // bounded replay the final windows stay open, so sink the
@@ -115,12 +116,13 @@ class EventStreamsSpec extends SparkSpec {
 
   test("checkpoint restart resumes exactly-once across new files") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_stream_restart")
+    val base = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_stream_restart"))
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val all = Tables.events(spark, sf)
 
     def stageFile(filter: org.apache.spark.sql.Column, name: String): Long = {
-      val tmp = Files.createTempDirectory("graft_batch")
+      val tmp = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_batch"))
       val part = all.filter(filter)
       part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -153,12 +155,13 @@ class EventStreamsSpec extends SparkSpec {
 
   test("foreachBatch gold sink is idempotent on replayed keys") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_gold_sink")
+    val base = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_gold_sink"))
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val all = Tables.events(spark, sf)
 
     def stageFile(filter: org.apache.spark.sql.Column, name: String): Long = {
-      val tmp = Files.createTempDirectory("graft_gold_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_gold_batch"))
       val part = all.filter(filter)
       part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -218,12 +221,14 @@ class EventStreamsSpec extends SparkSpec {
   test("RocksDB streaming dedup restarts exactly-once under AvailableNow") {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.streaming.Trigger
-    val base = Files.createTempDirectory("graft_rocks_restart")
+    val base = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_rocks_restart"))
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val all = Tables.events(spark, sf)
 
     def stageFile(filter: org.apache.spark.sql.Column, name: String): Long = {
-      val tmp = Files.createTempDirectory("graft_rocks_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_rocks_batch"))
       val part = all.filter(filter)
       part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -275,7 +280,7 @@ class EventStreamsSpec extends SparkSpec {
   test("streaming incremental dedup equals sequential batch splits across restart") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Dedup
-    val base = Files.createTempDirectory("graft_inc_dedup")
+    val base = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_inc_dedup"))
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val docs = Tables.documents(spark, sf)
     val ids = docs.select(col("doc_id")).orderBy(col("doc_id"))
@@ -290,7 +295,8 @@ class EventStreamsSpec extends SparkSpec {
     Dedup.writeGoldIndex(gold0, s"$base/index")
 
     def stageFile(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_inc_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_inc_batch"))
       part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -336,7 +342,8 @@ class EventStreamsSpec extends SparkSpec {
       "crashed doc is still rejected") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Dedup
-    val base = Files.createTempDirectory("graft_dedup_crash")
+    val base = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_dedup_crash"))
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val docs = Tables.documents(spark, sf)
     val ids = docs.select(col("doc_id")).orderBy(col("doc_id"))
@@ -364,7 +371,8 @@ class EventStreamsSpec extends SparkSpec {
     // the duplicate would be judged unique and admitted forever
     val dup = crashedDoc.withColumn("doc_id", lit(ids.max + 1))
       .localCheckpoint()
-    val tmp = Files.createTempDirectory("graft_dedup_crash_b")
+    val tmp = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_dedup_crash_b"))
     dup.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val f = new java.io.File(tmp.toString).listFiles()
       .find(_.getName.endsWith(".parquet")).get
@@ -382,7 +390,8 @@ class EventStreamsSpec extends SparkSpec {
   test("streaming curation: exactly-once dispositions, parity with batch " +
       "pipeline outside the online-dedup delta") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_stream_cur")
+    val base = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_stream_cur"))
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val docs = Tables.documents(spark, sf)
     val ids = docs.select(col("doc_id")).orderBy(col("doc_id"))
@@ -391,7 +400,8 @@ class EventStreamsSpec extends SparkSpec {
     val bitmask = graft.ext.Curation.evalBitmask(spark, sf)
 
     def stageFile(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_cur_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_cur_batch"))
       part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -450,7 +460,8 @@ class EventStreamsSpec extends SparkSpec {
 
   test("curation disposition repair closes the gold-before-log crash window") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_cur_repair")
+    val base = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_cur_repair"))
     val accepted = Tables.documents(spark, sf).limit(20)
     accepted.write.mode("overwrite").parquet(s"$base/gold")
     // crash before the disposition append: log dir empty
@@ -489,7 +500,7 @@ class EventStreamsSpec extends SparkSpec {
   test("dropDuplicatesWithinWatermark collapses in-watermark duplicates " +
       "arriving in a later micro-batch") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_wm_dedup").toString
+    val base = graft.ops.Scratch.dir("graft_wm_dedup")
     val srcDir = s"$base/src"
     // single file per write (coalesce(1)): with maxFilesPerTrigger=1
     // the file source replays exactly two micro-batches in mtime
@@ -531,7 +542,7 @@ class EventStreamsSpec extends SparkSpec {
       "across micro-batches; replays and restarts are no-ops") {
     import java.nio.file.Files
     import graft.ext.Selection
-    val base = Files.createTempDirectory("graft_drift").toString
+    val base = graft.ops.Scratch.dir("graft_drift")
     val docs = Tables.documents(spark, sf)
     docs.filter(col("doc_id") < 250)
       .coalesce(1).write.mode("append").parquet(s"$base/src")
@@ -571,7 +582,7 @@ class EventStreamsSpec extends SparkSpec {
       "batches do not, and counts parity stays exact") {
     import java.nio.file.Files
     import graft.ext.Selection
-    val base = Files.createTempDirectory("graft_driftalert").toString
+    val base = graft.ops.Scratch.dir("graft_driftalert")
     val docs = Tables.documents(spark, sf)
     docs.filter(col("doc_id") < 250)
       .coalesce(1).write.mode("append").parquet(s"$base/src")
@@ -664,7 +675,7 @@ class EventStreamsSpec extends SparkSpec {
       "replay no-op, ADC parity, compaction preserves the store") {
     import java.nio.file.{Files, Paths}
     import graft.ext.{KMeans, ProductQuant}
-    val base = Files.createTempDirectory("graft_vec_stream").toString
+    val base = graft.ops.Scratch.dir("graft_vec_stream")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val e = Tables.embeddings(spark, sf)
     val ids = e.select(col("vec_id")).orderBy(col("vec_id"))
@@ -685,7 +696,8 @@ class EventStreamsSpec extends SparkSpec {
       .parquet(s"$base/codes")
 
     def stageFile(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_vec_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_vec_batch"))
       part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -750,7 +762,7 @@ class EventStreamsSpec extends SparkSpec {
       "prologue repair re-encodes the crashed vectors") {
     import java.nio.file.{Files, Paths}
     import graft.ext.{KMeans, ProductQuant}
-    val base = Files.createTempDirectory("graft_vec_crash").toString
+    val base = graft.ops.Scratch.dir("graft_vec_crash")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val e = Tables.embeddings(spark, sf)
     val ids = e.select(col("vec_id")).orderBy(col("vec_id"))
@@ -774,7 +786,8 @@ class EventStreamsSpec extends SparkSpec {
     graft.ops.StoreFiles.deleteIdWatermark(s"$base/gold")
     // drive the next batch through the sink
     val b2 = e.filter(col("vec_id") > c1)
-    val tmp = Files.createTempDirectory("graft_vec_crash_b")
+    val tmp = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_vec_crash_b"))
     b2.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     Files.move(new java.io.File(tmp.toString).listFiles()
       .find(_.getName.endsWith(".parquet")).get.toPath,
@@ -797,7 +810,7 @@ class EventStreamsSpec extends SparkSpec {
       "the prologue repair re-derives the missing verdicts") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Dedup
-    val base = Files.createTempDirectory("graft_sem_crash").toString
+    val base = graft.ops.Scratch.dir("graft_sem_crash")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val cellsDir = s"$base/cells"; val verdictsDir = s"$base/verdicts"
     val e = Tables.embeddings(spark, sf)
@@ -808,7 +821,8 @@ class EventStreamsSpec extends SparkSpec {
       .filter(col("vec_id") <= c0)
     val (coarse, subs) = Dedup.trainSemanticQuantizers(goldVecs, Dedup.SubK)
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_semc_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_semc_batch"))
       e.filter(col("vec_id") > lo && col("vec_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       Files.move(new java.io.File(tmp.toString).listFiles()
@@ -861,7 +875,7 @@ class EventStreamsSpec extends SparkSpec {
       "replays no-op, and the crash-window repair is exact") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Dedup
-    val base = Files.createTempDirectory("graft_sem_stream").toString
+    val base = graft.ops.Scratch.dir("graft_sem_stream")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val cellsDir = s"$base/cells"; val verdictsDir = s"$base/verdicts"
     val e = Tables.embeddings(spark, sf)
@@ -875,7 +889,8 @@ class EventStreamsSpec extends SparkSpec {
     val (coarse, subs) = Dedup.trainSemanticQuantizers(gold, Dedup.SubK)
 
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_sem_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_sem_batch"))
       e.filter(col("vec_id") > lo && col("vec_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -970,7 +985,7 @@ class EventStreamsSpec extends SparkSpec {
       "repair is exact") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Retrieval
-    val base = Files.createTempDirectory("graft_bm25_stream").toString
+    val base = graft.ops.Scratch.dir("graft_bm25_stream")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val store = s"$base/ix"
     val d = Tables.documents(spark, sf)
@@ -979,7 +994,8 @@ class EventStreamsSpec extends SparkSpec {
     val c0 = ids(ids.length / 3); val c1 = ids(ids.length * 2 / 3)
 
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_bm25_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_bm25_batch"))
       d.filter(col("doc_id") > lo && col("doc_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -1064,7 +1080,7 @@ class EventStreamsSpec extends SparkSpec {
       "repair is exact") {
     import java.nio.file.{Files, Paths}
     import graft.ext.{ClusterOps, KMeans}
-    val base = Files.createTempDirectory("graft_knn_stream").toString
+    val base = graft.ops.Scratch.dir("graft_knn_stream")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val cellsDir = s"$base/cells"; val edgesDir = s"$base/edges"
     val e = Tables.embeddings(spark, sf)
@@ -1078,7 +1094,8 @@ class EventStreamsSpec extends SparkSpec {
         .select(col("vec_id"), col("v")), KMeans.K)
 
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_knn_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_knn_batch"))
       e.filter(col("vec_id") > lo && col("vec_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -1143,7 +1160,7 @@ class EventStreamsSpec extends SparkSpec {
       "on re-append instead of being treated as seen") {
     import java.nio.file.Files
     import graft.ext.Retrieval
-    val store = Files.createTempDirectory("graft_bm25_torn").toString + "/ix"
+    val store = graft.ops.Scratch.dir("graft_bm25_torn") + "/ix"
     val td = Tables.documents(spark, sf)
       .select(col("doc_id"), graft.ext.TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) > 0)
@@ -1194,7 +1211,7 @@ class EventStreamsSpec extends SparkSpec {
       "seed without _SUCCESS still wipes") {
     import java.nio.file.Files
     import graft.ext.Retrieval
-    val store = Files.createTempDirectory("graft_bm25_boot").toString + "/ix"
+    val store = graft.ops.Scratch.dir("graft_bm25_boot") + "/ix"
     val td = Tables.documents(spark, sf)
       .select(col("doc_id"), graft.ext.TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) > 0)
@@ -1246,7 +1263,7 @@ class EventStreamsSpec extends SparkSpec {
       "torn (the crash-inside-a-meta-rewrite window)") {
     import java.nio.file.Files
     import graft.ext.Retrieval
-    val store = Files.createTempDirectory("graft_bm25_meta").toString + "/ix"
+    val store = graft.ops.Scratch.dir("graft_bm25_meta") + "/ix"
     val td = Tables.documents(spark, sf)
       .select(col("doc_id"), graft.ext.TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) > 0)
@@ -1273,7 +1290,7 @@ class EventStreamsSpec extends SparkSpec {
       "lexical sink batch instead of overwrite-seeding the store") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Retrieval
-    val base = Files.createTempDirectory("graft_bm25_swapcrash").toString
+    val base = graft.ops.Scratch.dir("graft_bm25_swapcrash")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val store = s"$base/ix"
     val d = Tables.documents(spark, sf)
@@ -1281,7 +1298,8 @@ class EventStreamsSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     val c0 = ids(ids.length * 2 / 3)
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_bm25_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_bm25_batch"))
       d.filter(col("doc_id") > lo && col("doc_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -1318,7 +1336,7 @@ class EventStreamsSpec extends SparkSpec {
       "cell is absent from the cells store") {
     import java.nio.file.Files
     import graft.ext.{ClusterOps, KMeans}
-    val base = Files.createTempDirectory("graft_knn_debris").toString
+    val base = graft.ops.Scratch.dir("graft_knn_debris")
     val cellsDir = s"$base/cells"; val edgesDir = s"$base/edges"
     val cents = KMeans.train(spark, sf)
     val cells = KMeans.vecs(spark, sf).select(col("vec_id"),
@@ -1352,7 +1370,7 @@ class EventStreamsSpec extends SparkSpec {
       "restores a lost partition exactly") {
     import java.nio.file.{Files, Paths}
     import graft.ext.{ClusterOps, KMeans}
-    val base = Files.createTempDirectory("graft_comm_stream").toString
+    val base = graft.ops.Scratch.dir("graft_comm_stream")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val cellsDir = s"$base/cells"; val edgesDir = s"$base/edges"
     val labelsDir = s"$base/labels"
@@ -1364,7 +1382,8 @@ class EventStreamsSpec extends SparkSpec {
       KMeans.vecs(spark, sf).filter(col("vec_id") <= c0)
         .select(col("vec_id"), col("v")), KMeans.K)
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_comm_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_comm_batch"))
       e.filter(col("vec_id") > lo && col("vec_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -1418,7 +1437,7 @@ class EventStreamsSpec extends SparkSpec {
       "stored cell, not just the adopting batch's") {
     import java.nio.file.{Files, Paths}
     import graft.ext.{ClusterOps, KMeans}
-    val base = Files.createTempDirectory("graft_comm_adopt").toString
+    val base = graft.ops.Scratch.dir("graft_comm_adopt")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val cellsDir = s"$base/cells"; val edgesDir = s"$base/edges"
     val labelsDir = s"$base/labels"
@@ -1430,7 +1449,8 @@ class EventStreamsSpec extends SparkSpec {
       KMeans.vecs(spark, sf).filter(col("vec_id") <= c0)
         .select(col("vec_id"), col("v")), KMeans.K)
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_comm_adopt_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_comm_adopt_batch"))
       e.filter(col("vec_id") > lo && col("vec_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -1504,12 +1524,13 @@ class EventStreamsSpec extends SparkSpec {
       "equals the one-shot rebuild through a replay, staged debris, " +
       "and a renamed-aside live store") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_card_stream").toString
+    val base = graft.ops.Scratch.dir("graft_card_stream")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val aggDir = s"$base/agg"
     val (jAll, assign, c0, c1) = cardFixture()
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_card_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_card_batch"))
       jAll.filter(col("doc_id") > lo && col("doc_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -1553,12 +1574,13 @@ class EventStreamsSpec extends SparkSpec {
       "card as the rebuild through orphan-version and torn-pointer " +
       "crashes, and a replayed batch is a no-op") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_card_ptr_stream").toString
+    val base = graft.ops.Scratch.dir("graft_card_ptr_stream")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val aggDir = s"$base/agg"
     val (jAll, assign, c0, c1) = cardFixture()
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_card_ptr_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_card_ptr_batch"))
       jAll.filter(col("doc_id") > lo && col("doc_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -1600,14 +1622,15 @@ class EventStreamsSpec extends SparkSpec {
   test("the card sink refuses a foreign store with no watermark, and " +
       "adopts it once one is set") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_card_adopt").toString
+    val base = graft.ops.Scratch.dir("graft_card_adopt")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val aggDir = s"$base/agg"
     val (jAll, assign, _, c1) = cardFixture()
     // a store seeded OUTSIDE the sink: batch API, no watermark
     graft.ext.ClusterOps.writeClusterCardAgg(
       assign(jAll.filter(col("doc_id") <= c1)), aggDir)
-    val tmp = Files.createTempDirectory("graft_card_adopt_batch")
+    val tmp = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_card_adopt_batch"))
     jAll.filter(col("doc_id") > c1)
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     Files.move(
@@ -1637,7 +1660,7 @@ class EventStreamsSpec extends SparkSpec {
       "(compaction rides the rename-aside, the sink recovers it)") {
     import java.nio.file.{Files, Paths}
     import graft.ext.KMeans
-    val base = Files.createTempDirectory("graft_knn_swapcrash").toString
+    val base = graft.ops.Scratch.dir("graft_knn_swapcrash")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val cellsDir = s"$base/cells"; val edgesDir = s"$base/edges"
     val e = Tables.embeddings(spark, sf)
@@ -1648,7 +1671,8 @@ class EventStreamsSpec extends SparkSpec {
       KMeans.vecs(spark, sf).filter(col("vec_id") <= c0)
         .select(col("vec_id"), col("v")), KMeans.K)
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_knn_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_knn_batch"))
       e.filter(col("vec_id") > lo && col("vec_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -1694,7 +1718,7 @@ class EventStreamsSpec extends SparkSpec {
       "unchanged") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Bpe
-    val base = Files.createTempDirectory("graft_hist_stream").toString
+    val base = graft.ops.Scratch.dir("graft_hist_stream")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val histDir = s"$base/hist"
     val docs = Tables.documents(spark, sf)
@@ -1703,7 +1727,8 @@ class EventStreamsSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     val c0 = ids(ids.length / 2)
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_hist_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_hist_batch"))
       docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -1742,8 +1767,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("an empty-corpus word-hist seed bootstraps a foldable store") {
     import graft.ext.Bpe
-    val histDir = java.nio.file.Files
-      .createTempDirectory("graft_hist_empty").toString + "/hist"
+    val histDir = graft.ops.Scratch.dir("graft_hist_empty") + "/hist"
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     Bpe.writeWordHistStore(docs.filter(lit(false)), histDir)
     // watermark present (MinValue: everything future is fresh)
@@ -1761,7 +1785,7 @@ class EventStreamsSpec extends SparkSpec {
       "and adopts a seeded store exactly once") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Bpe
-    val base = Files.createTempDirectory("graft_hist_adopt").toString
+    val base = graft.ops.Scratch.dir("graft_hist_adopt")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val histDir = s"$base/hist"
     val docs = Tables.documents(spark, sf)
@@ -1770,7 +1794,8 @@ class EventStreamsSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     val c0 = ids(ids.length / 2)
     Bpe.writeWordHistStore(docs.filter(col("doc_id") <= c0), histDir)
-    val tmp = Files.createTempDirectory("graft_hist_adopt_batch")
+    val tmp = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_hist_adopt_batch"))
     docs.filter(col("doc_id") > c0)
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     Files.move(
@@ -1790,7 +1815,8 @@ class EventStreamsSpec extends SparkSpec {
       "the seeded store must fold the batch exactly once")
     // a store stripped of its watermark is refused loudly
     graft.ops.StoreFiles.deleteIdWatermark(histDir)
-    val tmp2 = Files.createTempDirectory("graft_hist_adopt_batch2")
+    val tmp2 = java.nio.file.Paths.get(
+      graft.ops.Scratch.dir("graft_hist_adopt_batch2"))
     docs.filter(col("doc_id") <= c0)
       .coalesce(1).write.mode("overwrite").parquet(tmp2.toString)
     Files.move(
@@ -1811,7 +1837,7 @@ class EventStreamsSpec extends SparkSpec {
       "anti-join fallback") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Dedup
-    val base = Files.createTempDirectory("graft_sem_rm").toString
+    val base = graft.ops.Scratch.dir("graft_sem_rm")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val cellsRoot = s"$base/cells"; val verdictsDir = s"$base/verdicts"
     val e = Tables.embeddings(spark, sf)
@@ -1819,7 +1845,7 @@ class EventStreamsSpec extends SparkSpec {
     val (coarse, subs) = Dedup.trainSemanticQuantizers(
       graft.ext.KMeans.vecs(spark, sf), Dedup.SubK)
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_rm_batch")
+      val tmp = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_rm_batch"))
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -1878,7 +1904,7 @@ class EventStreamsSpec extends SparkSpec {
       "and the removed-id log holds through the fallback") {
     import java.nio.file.{Files, Paths}
     import graft.ext.{ClusterOps, Dedup, KMeans}
-    val base = Files.createTempDirectory("graft_knn_rm_crash").toString
+    val base = graft.ops.Scratch.dir("graft_knn_rm_crash")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val cellsRoot = s"$base/cells"; val edgesDir = s"$base/edges"
     val labelsDir = s"$base/labels"
@@ -1891,7 +1917,7 @@ class EventStreamsSpec extends SparkSpec {
         graft.functions.NearestCentroid(col("v"), cents.map(_._2))
           .as("cell"), col("v"))
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_rm_batch")
+      val tmp = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_rm_batch"))
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
         .find(_.getName.endsWith(".parquet")).get

@@ -68,8 +68,7 @@ class KMeansSpec extends SparkSpec {
   test("batched IVF over the cell-partitioned store: identical answers, " +
     "probe filter is partition pruning, no assignment in the scan") {
     val cents = KMeans.train(spark, sf)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_ivfcells").toString + "/cells"
+    val store = graft.ops.Scratch.dir("graft_ivfcells") + "/cells"
     KMeans.writeCellVectors(spark, sf, store, cents)
     val qrows = KMeans.batchQueryRows(spark, sf)
     val steady = KMeans.ivfBatchTopKFromCells(spark, store, cents, qrows)

@@ -64,7 +64,7 @@ class ManifestSinksSpec extends SparkSpec {
   private def stage(df: org.apache.spark.sql.DataFrame, srcDir: String,
       name: String): Unit = {
     import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("graft_man_batch")
+    val tmp = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_man_batch"))
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val f = new java.io.File(tmp.toString).listFiles()
       .find(_.getName.endsWith(".parquet")).get
@@ -78,7 +78,7 @@ class ManifestSinksSpec extends SparkSpec {
     withoutSuccessMarkers {
       import java.nio.file.{Files, Paths}
       import graft.ext.Retrieval
-      val base = Files.createTempDirectory("graft_bm25_man").toString
+      val base = graft.ops.Scratch.dir("graft_bm25_man")
       val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
       val store = s"$base/ix"
       val d = Tables.documents(spark, sf)
@@ -157,7 +157,7 @@ class ManifestSinksSpec extends SparkSpec {
     withoutSuccessMarkers {
       import java.nio.file.{Files, Paths}
       import graft.ext.Retrieval
-      val base = Files.createTempDirectory("graft_bm25_man2").toString
+      val base = graft.ops.Scratch.dir("graft_bm25_man2")
       val store = s"$base/ix"
       val d = Tables.documents(spark, sf)
       val ids = d.select(col("doc_id")).orderBy(col("doc_id"))
@@ -256,7 +256,7 @@ class ManifestSinksSpec extends SparkSpec {
     withoutSuccessMarkers {
       import java.nio.file.{Files, Paths}
       import graft.ext.Dedup
-      val base = Files.createTempDirectory("graft_dedup_man").toString
+      val base = graft.ops.Scratch.dir("graft_dedup_man")
       val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
       val ixRoot = s"$base/ix"; val goldDir = s"$base/gold"
       val d = Tables.documents(spark, sf)
@@ -334,7 +334,7 @@ class ManifestSinksSpec extends SparkSpec {
     withoutSuccessMarkers {
       import java.nio.file.{Files, Paths}
       import graft.ext.Dedup
-      val base = Files.createTempDirectory("graft_sem_man").toString
+      val base = graft.ops.Scratch.dir("graft_sem_man")
       val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
       val cellsRoot = s"$base/cells"; val verdictsDir = s"$base/verdicts"
       val e = Tables.embeddings(spark, sf)
@@ -386,7 +386,7 @@ class ManifestSinksSpec extends SparkSpec {
     withoutSuccessMarkers {
       import java.nio.file.{Files, Paths}
       import graft.ext.ProductQuant
-      val base = Files.createTempDirectory("graft_vec_man").toString
+      val base = graft.ops.Scratch.dir("graft_vec_man")
       val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
       val codesRoot = s"$base/codes"; val goldDir = s"$base/gold"
       val e = Tables.embeddings(spark, sf)
@@ -444,7 +444,7 @@ class ManifestSinksSpec extends SparkSpec {
     withoutSuccessMarkers {
       import java.nio.file.{Files, Paths}
       import graft.ext.{ClusterOps, KMeans}
-      val base = Files.createTempDirectory("graft_knn_man").toString
+      val base = graft.ops.Scratch.dir("graft_knn_man")
       val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
       val cellsRoot = s"$base/cells"; val edgesDir = s"$base/edges"
       val labelsDir = s"$base/labels"

@@ -127,7 +127,7 @@ class OpsSpec extends SparkSpec {
     import graft.ops.ArtifactSwap
     val s = spark
     import s.implicits._
-    val base = JF.createTempDirectory("graft_swap").toString
+    val base = graft.ops.Scratch.dir("graft_swap")
     val live = s"$base/t.parquet"
     def write(v: Long, to: String): Unit =
       Seq(v).toDF("x").coalesce(1).write.mode("overwrite").parquet(to)
@@ -194,7 +194,7 @@ class OpsSpec extends SparkSpec {
       "torn pointer, missing pointer) recovers to the right state") {
     import graft.ops.{PointerSwap, StoreFiles}
     import java.nio.file.{Files => JF, Paths}
-    val root = JF.createTempDirectory("graft_ptr").toString + "/t"
+    val root = graft.ops.Scratch.dir("graft_ptr") + "/t"
     def write(v: Long, to: String): Unit =
       Seq(v).toDF("x").coalesce(1).write.mode("overwrite").parquet(to)
     def readBack: Long =
@@ -284,7 +284,7 @@ class OpsSpec extends SparkSpec {
       "under hidden (_-prefixed) subdirs are not store content") {
     import java.nio.file.Files
     val sess = spark; import sess.implicits._
-    val d = Files.createTempDirectory("graft_hidden").toString
+    val d = graft.ops.Scratch.dir("graft_hidden")
     Seq(1, 2, 3).toDF("a").coalesce(1).write.parquet(s"$d/store")
     // the guard root's permanent removed-id log, and torn staging
     Seq(4L, 5L).toDF("id").coalesce(1).write

@@ -27,7 +27,7 @@ class OptimizationR18Spec extends SparkSpec {
   test("residualCodebooks rejects custom coarse centroids even after " +
       "the per-dir memo is warm (r17 verdict: the guard used to sit " +
       "inside the memoized block and only fired for the first payer)") {
-    val dir = java.nio.file.Files.createTempDirectory("r18rc").toString
+    val dir = graft.ops.Scratch.dir("r18rc")
     writeEmbeddings(dir, seed = 1, n = 40)
     val coarse = graft.ext.KMeans.train(spark, dir)
     // first payer with the canonical coarse — warms the memo

@@ -17,7 +17,7 @@ class PointerSinksSpec extends SparkSpec {
   private def stage(df: org.apache.spark.sql.DataFrame, srcDir: String,
       name: String): Unit = {
     import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("graft_ptr_batch")
+    val tmp = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_ptr_batch"))
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val f = new java.io.File(tmp.toString).listFiles()
       .find(_.getName.endsWith(".parquet")).get
@@ -39,7 +39,7 @@ class PointerSinksSpec extends SparkSpec {
       "log == full recompute, replay no-ops, compaction flips versions") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Dedup
-    val base = Files.createTempDirectory("graft_sem_ptr").toString
+    val base = graft.ops.Scratch.dir("graft_sem_ptr")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val cellsRoot = s"$base/cells"; val verdictsDir = s"$base/verdicts"
     val e = Tables.embeddings(spark, sf)
@@ -140,7 +140,7 @@ class PointerSinksSpec extends SparkSpec {
       "replay, adoption, torn-append recovery, and compaction flips") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Retrieval
-    val base = Files.createTempDirectory("graft_bm25_ptr").toString
+    val base = graft.ops.Scratch.dir("graft_bm25_ptr")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val store = s"$base/ix"
     val d = Tables.documents(spark, sf)
@@ -229,7 +229,7 @@ class PointerSinksSpec extends SparkSpec {
       "re-encode through replay and a compaction version flip") {
     import java.nio.file.{Files, Paths}
     import graft.ext.ProductQuant
-    val base = Files.createTempDirectory("graft_vec_ptr").toString
+    val base = graft.ops.Scratch.dir("graft_vec_ptr")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val codesRoot = s"$base/codes"; val goldDir = s"$base/gold"
     val e = Tables.embeddings(spark, sf)
@@ -282,7 +282,7 @@ class PointerSinksSpec extends SparkSpec {
       "replay no-op, index compaction flips versions") {
     import java.nio.file.{Files, Paths}
     import graft.ext.Dedup
-    val base = Files.createTempDirectory("graft_dedup_ptr").toString
+    val base = graft.ops.Scratch.dir("graft_dedup_ptr")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val ixRoot = s"$base/ix"; val goldDir = s"$base/gold"
     val d = Tables.documents(spark, sf)
@@ -336,7 +336,7 @@ class PointerSinksSpec extends SparkSpec {
     // duplicate admitted to the append-only gold corpus unjudged
     import java.nio.file.{Files, Paths}
     import graft.ext.Dedup
-    val base = Files.createTempDirectory("graft_dedup_ptr_crash").toString
+    val base = graft.ops.Scratch.dir("graft_dedup_ptr_crash")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val ixRoot = s"$base/ix"; val goldDir = s"$base/gold"
     val d = Tables.documents(spark, sf)
@@ -376,7 +376,7 @@ class PointerSinksSpec extends SparkSpec {
       "one-shot rebuild with cells under pointer commit") {
     import java.nio.file.{Files, Paths}
     import graft.ext.{ClusterOps, KMeans}
-    val base = Files.createTempDirectory("graft_knn_ptr").toString
+    val base = graft.ops.Scratch.dir("graft_knn_ptr")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val cellsRoot = s"$base/cells"; val edgesDir = s"$base/edges"
     val labelsDir = s"$base/labels"

@@ -74,7 +74,7 @@ class ProductQuantSpec extends SparkSpec {
 
   test("adc over persisted codes equals the live pq top-k") {
     val cbs = ProductQuant.codebooks(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("pq_codes").toString
+    val dir = graft.ops.Scratch.dir("pq_codes")
     ProductQuant.encodeWith(spark, sf, cbs)
       .write.mode("overwrite").parquet(dir)
     val (qid, dt) = ProductQuant.queryTable(spark, sf, cbs)
@@ -99,7 +99,7 @@ class ProductQuantSpec extends SparkSpec {
   test("cell-partitioned codes: ADC equals the live IVF-PQ and prunes partitions") {
     val coarse = KMeans.train(spark, sf)
     val cbs = ProductQuant.codebooks(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("pq_cells").toString
+    val dir = graft.ops.Scratch.dir("pq_cells")
     ProductQuant.encodeWithCells(spark, sf, coarse, cbs)
       .write.mode("overwrite").partitionBy("cell").parquet(dir)
     val (qid, qCell, dt) = ProductQuant.queryPrep(spark, sf, coarse, cbs)
@@ -309,7 +309,7 @@ class ProductQuantSpec extends SparkSpec {
   test("residual codes table: ADC equals the live residual IVF-PQ and prunes") {
     val coarse = KMeans.train(spark, sf)
     val rcbs = ProductQuant.residualCodebooks(spark, sf, coarse)
-    val dir = java.nio.file.Files.createTempDirectory("pq_resid").toString
+    val dir = graft.ops.Scratch.dir("pq_resid")
     ProductQuant.encodeWithCellsResidual(spark, sf, coarse, rcbs)
       .write.mode("overwrite").partitionBy("cell").parquet(dir)
     val (qid, qCell, dt) =
@@ -432,7 +432,7 @@ class ProductQuantSpec extends SparkSpec {
 
   test("ADC over codes plans one exchange only (the final top-k gather)") {
     val cbs = ProductQuant.codebooks(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("pq_plan").toString
+    val dir = graft.ops.Scratch.dir("pq_plan")
     ProductQuant.encodeWith(spark, sf, cbs)
       .write.mode("overwrite").parquet(dir)
     val (qid, dt) = ProductQuant.queryTable(spark, sf, cbs)
@@ -493,7 +493,7 @@ class ProductQuantSpec extends SparkSpec {
     assert(live.filter(_._1 == q0).sortBy(_._5)
       .map(r => (r._2, r._4)).toSeq == single.toSeq)
     // codes-store-fed form: identical rows, partition-pruned scan
-    val dir = java.nio.file.Files.createTempDirectory("pq_batch").toString
+    val dir = graft.ops.Scratch.dir("pq_batch")
     ProductQuant.encodeWithCellsResidual(spark, sf, coarse, rcbs)
       .write.mode("overwrite").partitionBy("cell").parquet(dir)
     val fed = ProductQuant.adcBatchTopKOverCoded(
@@ -511,7 +511,7 @@ class ProductQuantSpec extends SparkSpec {
       "gold bytes reclaim, the watermark survives, re-vacuum no-ops") {
     import java.nio.file.Files
     import graft.ext.{KMeans, ProductQuant}
-    val base = Files.createTempDirectory("graft_pq_vac").toString
+    val base = graft.ops.Scratch.dir("graft_pq_vac")
     val goldDir = s"$base/gold"; val codesDir = s"$base/codes"
     val e = Tables.embeddings(spark, sf)
     val maxId = e.agg(max(col("vec_id"))).head().getLong(0)

@@ -149,15 +149,13 @@ class RetrievalSpec extends SparkSpec {
       "prunes BOTH stores (term buckets and probed cells)") {
     import graft.ext.KMeans
     val live = Retrieval.hybridRrfBatch(spark, sf).collect().toSeq
-    val ixStore = java.nio.file.Files
-      .createTempDirectory("graft_hyb_spec").toString + "/ix"
+    val ixStore = graft.ops.Scratch.dir("graft_hyb_spec") + "/ix"
     Retrieval.writeBm25Index(
       Tables.documents(spark, sf)
         .select(col("doc_id"), graft.ext.TextOps.tokens(col("text")).as("t"))
         .filter(size(col("t")) > 0), ixStore)
     val cents = KMeans.train(spark, sf)
-    val cellsDir = java.nio.file.Files
-      .createTempDirectory("graft_hyb_spec_cells").toString + "/cells"
+    val cellsDir = graft.ops.Scratch.dir("graft_hyb_spec_cells") + "/cells"
     KMeans.writeCellVectors(spark, sf, cellsDir, cents)
     val served = Retrieval.hybridRrfBatchFromStores(spark, sf, ixStore,
       cellsDir, cents)
@@ -189,8 +187,7 @@ class RetrievalSpec extends SparkSpec {
     assert(live.nonEmpty && served == live)
     // the store scan must carry a tbucket PARTITION filter (the
     // inverted-index read: probed buckets, never the whole store)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_bm25_spec").toString + "/ix"
+    val store = graft.ops.Scratch.dir("graft_bm25_spec") + "/ix"
     val td = Tables.documents(spark, sf)
       .select(col("doc_id"), graft.ext.TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) > 0)
@@ -240,7 +237,7 @@ class RetrievalSpec extends SparkSpec {
       "vacuum applies physically + resets the list, torn vacuum " +
       "recovers, re-tombstone and never-indexed ids no-op") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_take").toString
+    val base = graft.ops.Scratch.dir("graft_take")
     val store = s"$base/ix"; val freshStore = s"$base/fresh"
     val d = Tables.documents(spark, sf)
     val td = d.select(col("doc_id"),
@@ -287,7 +284,7 @@ class RetrievalSpec extends SparkSpec {
   test("a torn takedown vacuum heals through the lexical sink: the " +
       "degraded double-subtract window closes without operator action") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_take_heal").toString
+    val base = graft.ops.Scratch.dir("graft_take_heal")
     val store = s"$base/ix"
     val d = Tables.documents(spark, sf)
     val ids = d.select(col("doc_id")).orderBy(col("doc_id"))
@@ -310,7 +307,7 @@ class RetrievalSpec extends SparkSpec {
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val fresh = d.orderBy(col("doc_id").desc).limit(1)
       .withColumn("doc_id", lit(ids.max + 1)).localCheckpoint()
-    val tmp = Files.createTempDirectory("graft_heal_batch")
+    val tmp = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_heal_batch"))
     fresh.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val f = new java.io.File(tmp.toString).listFiles()
       .find(_.getName.endsWith(".parquet")).get

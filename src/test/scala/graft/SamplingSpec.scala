@@ -254,7 +254,7 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("artifact merge: write gold labels, merge batch, read == rebuild") {
-    val out = java.nio.file.Files.createTempDirectory("graft_merge").toString
+    val out = graft.ops.Scratch.dir("graft_merge")
     val d = Tables.documents(spark, sf)
     val cutoff = d.agg(floor(max(col("doc_id")) * 0.8).cast("long"))
       .head().getLong(0)

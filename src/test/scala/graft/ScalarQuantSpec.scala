@@ -118,9 +118,8 @@ class ScalarQuantSpec extends SparkSpec {
   }
 
   test("codes-store serving path equals the on-the-fly encode ranking") {
-    import java.nio.file.Files
     val stats = ScalarQuant.dimStats(spark, sf)
-    val store = Files.createTempDirectory("graft_sq8").toString + "/codes"
+    val store = graft.ops.Scratch.dir("graft_sq8") + "/codes"
     ScalarQuant.encodeFrame(spark, sf, stats)
       .write.mode("overwrite").parquet(store)
     val (qid, qcodes) = ScalarQuant.encodeQuery(spark, sf, stats)

@@ -68,7 +68,7 @@ class ScaleTechniquesSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes non-matching partitions at scan") {
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val out = graft.ops.Scratch.dir("graft_part")
     val o = Tables.orders(spark, sf)
       .withColumn("order_year", year(col("o_orderdate")))
     o.write.mode("overwrite").partitionBy("order_year").parquet(out)

@@ -206,8 +206,7 @@ class SelectionSpec extends SparkSpec {
     assert(merged == full)
     // persisted artifact round-trip: write gold counts, merge the
     // batch against the on-disk table
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tokcounts").toString + "/counts"
+    val dir = graft.ops.Scratch.dir("graft_tokcounts") + "/counts"
     Selection.tokenCountsOn(gold).write.mode("overwrite").parquet(dir)
     val fromDisk = Selection.jsDivergenceFromCounts(
       Selection.mergeTokenCounts(spark.read.parquet(dir), batch))
@@ -225,8 +224,7 @@ class SelectionSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val gold = docs.filter(col("doc_id") < 400)
     val batch = docs.filter(col("doc_id") >= 400)
-    val countsDir = java.nio.file.Files
-      .createTempDirectory("graft_seedcounts").toString
+    val countsDir = graft.ops.Scratch.dir("graft_seedcounts")
     Selection.tokenCountsOn(gold).write.mode("overwrite")
       .parquet(s"$countsDir/${Selection.TokenCountsTable}.parquet")
     assert(Selection.mergeTokenCountsArtifact(spark, countsDir, batch, 0L))

@@ -12,7 +12,7 @@ import graft.ops.ColumnOps
 class SourcesSpec extends SparkSpec {
 
   test("CSV sink then scan with inferSchema round-trips orders (S1/S7)") {
-    val out = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val out = graft.ops.Scratch.dir("graft_csv")
     val orders = Tables.orders(spark, sf)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
     orders.coalesce(1).write.mode("overwrite")
@@ -27,7 +27,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("overwrite is idempotent full refresh, append accumulates (S5/S9)") {
-    val out = java.nio.file.Files.createTempDirectory("graft_modes").toString
+    val out = graft.ops.Scratch.dir("graft_modes")
     val n = Tables.nation(spark, sf)
     n.write.mode("overwrite").parquet(s"$out/t")
     n.write.mode("overwrite").parquet(s"$out/t")
@@ -46,7 +46,7 @@ class SourcesSpec extends SparkSpec {
 
   test("HTTP fetch + zip staging lands a readable bronze CSV (S2/S3)") {
     import graft.sources.Staging
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stage")
+    val tmp = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_stage"))
     // fixture: a zip archive holding a CSV, served via file:// (the
     // sandbox has zero egress; the URL path is what S2 exercises)
     val csv = "k,v\n1,a\n2,b\n3,c\n"
@@ -81,7 +81,7 @@ class SourcesSpec extends SparkSpec {
 
   test("staged zip ingest feeds C1 transform + C2 star build end to end") {
     import graft.sources.BronzeIngest
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ingest")
+    val tmp = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_ingest"))
     // fixture: the reference's feed shape — one zip holding a CSV per
     // table, exported from the parquet tables so values round-trip
     val tabs = Seq("orders", "customer", "nation", "region", "part")

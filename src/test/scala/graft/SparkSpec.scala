@@ -10,7 +10,7 @@ object SparkSpec {
   lazy val spark: SparkSession = GraftSession.builder("local[8]", "8")
     .appName("graft-test")
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      graft.ops.Scratch.dir("graft_wh"))
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"

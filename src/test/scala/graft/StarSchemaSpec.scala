@@ -38,11 +38,31 @@ class StarSchemaSpec extends SparkSpec {
   }
 
   test("materialize writes a readable gold layer") {
-    val out = java.nio.file.Files.createTempDirectory("graft_star").toString
+    val out = graft.ops.Scratch.dir("graft_star")
     StarSchema.materialize(spark, sf, out)
     val f = spark.read.parquet(s"$out/fact_sales")
     val d = spark.read.parquet(s"$out/dim_date")
     assert(f.count() > 0 && d.count() > 0)
     assert(f.join(d, Seq("date_id")).count() == f.count())
+  }
+
+  test("RunPipeline's warehouse check passes an intact warehouse and " +
+      "fails one missing a fact part file") {
+    val out = graft.ops.Scratch.dir("graft_star")
+    StarSchema.materialize(spark, sf, out)
+    // the fact rewritten as two part files, so that one can go missing
+    val fact = s"$out/fact_sales"
+    spark.read.parquet(fact).repartition(2).write.parquet(s"$out/split")
+    graft.ops.StoreFiles.deleteDir(fact)
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$out/split"),
+      java.nio.file.Paths.get(fact))
+    def mismatched = RunPipeline.verifyWarehouse(spark, sf, out)
+      .collect { case (t, m) if m("mismatched_rows") != 0L => t }
+    assert(mismatched.isEmpty)
+    val parts = new java.io.File(fact).listFiles()
+      .filter(_.getName.startsWith("part-"))
+    assert(parts.length == 2)
+    assert(parts.maxBy(_.length).delete())
+    assert(mismatched == Seq("fact_sales", "revenue_by_year"))
   }
 }

@@ -283,8 +283,7 @@ class TextSignalsSpec extends SparkSpec {
   test("text stats served from the BM25 postings store equal the " +
       "live forms exactly (vocab, zipf, heaps)") {
     import org.apache.spark.sql.functions._
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_textstats_store").toString + "/ix"
+    val store = graft.ops.Scratch.dir("graft_textstats_store") + "/ix"
     graft.ext.Retrieval.writeBm25Index(
       Tables.documents(spark, sf)
         .select(col("doc_id"), TextOps.tokens(col("text")).as("t")),

@@ -98,7 +98,7 @@ class ZOrderSpec extends SparkSpec {
       "compaction-crash, and keeps tight envelopes after OPTIMIZE") {
     import java.nio.file.{Files, Paths}
     import graft.streaming.EventStreams
-    val base = Files.createTempDirectory("graft_zstore").toString
+    val base = graft.ops.Scratch.dir("graft_zstore")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val store = s"$base/store"
     val li = Tables.lineitem(spark, sf)
@@ -106,7 +106,8 @@ class ZOrderSpec extends SparkSpec {
     val maxKey = li.agg(max(col("l_orderkey"))).head().getLong(0)
     val cuts = (1 to 5).map(i => maxKey * i / 5)
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_zstore_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_zstore_batch"))
       li.filter(col("l_orderkey") > lo && col("l_orderkey") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()
@@ -154,7 +155,7 @@ class ZOrderSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     val sess = spark
     import sess.implicits._
-    val store = Files.createTempDirectory("graft_ztier").toString + "/s"
+    val store = graft.ops.Scratch.dir("graft_ztier") + "/s"
     val part = (lo: Long, hi: Long) =>
       (lo to hi).map(i => (i, i % 7, i % 5)).toDF("id", "x", "y")
     ZOrderLayout.appendDelta(part(1, 10), store, "id")
@@ -199,7 +200,7 @@ class ZOrderSpec extends SparkSpec {
     import java.nio.file.Files
     val sess = spark
     import sess.implicits._
-    val store = Files.createTempDirectory("graft_zdel").toString + "/s"
+    val store = graft.ops.Scratch.dir("graft_zdel") + "/s"
     val part = (lo: Long, hi: Long) =>
       (lo to hi).map(i => (i, i % 7, i % 5)).toDF("id", "x", "y")
     def ids() = ZOrderLayout.readStore(spark, store)
@@ -245,7 +246,7 @@ class ZOrderSpec extends SparkSpec {
       "commit through versioned dirs, content exact") {
     import java.nio.file.{Files, Paths}
     import graft.streaming.EventStreams
-    val base = Files.createTempDirectory("graft_zstore_ptr").toString
+    val base = graft.ops.Scratch.dir("graft_zstore_ptr")
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
     val store = s"$base/store"
     val li = Tables.lineitem(spark, sf)
@@ -253,7 +254,8 @@ class ZOrderSpec extends SparkSpec {
     val maxKey = li.agg(max(col("l_orderkey"))).head().getLong(0)
     val cuts = (1 to 5).map(i => maxKey * i / 5)
     def stageFile(lo: Long, hi: Long, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_zptr_batch")
+      val tmp = java.nio.file.Paths.get(
+        graft.ops.Scratch.dir("graft_zptr_batch"))
       li.filter(col("l_orderkey") > lo && col("l_orderkey") <= hi)
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val f = new java.io.File(tmp.toString).listFiles()

@@ -66,6 +66,10 @@ class StoreStalenessSpec extends graft.SparkSpec {
     }),
     Family("opqRotation", "embeddings",
       d => value(ProductQuant.learnedRotationFor(spark, d))),
+    Family("queryRow", "embeddings", { d =>
+      val (id, label, v) = KMeans.queryRow(spark, d)
+      Obs(Seq(s"$id|$label|${v.mkString(",")}"), Set(id))
+    }),
     // parquet stores over embeddings
     Family("cosPairs", "embeddings",
       d => frame(Dedup.embeddingCosinePairs(spark, d))),
