@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Two-phase statistics: compute scalar stats in one distributed job,
   * then use them as literals in a second plan — the Spark-idiomatic
-  * re-expression of the reference's client-side IQR/min-max/median
-  * round-trips (`etl_pipeline/transform.py:37-73,163`,
-  * `elt/hold.ipynb:cell12`).
+  * re-expression of the reference's client-side IQR/min-max
+  * round-trips (`etl_pipeline/transform.py:37-73`,
+  * `elt/hold.ipynb:cell12`). The median
+  * (`etl_pipeline/transform.py:163`) is instead a scalar subquery
+  * ([[medianColumn]]) that runs inside the plan using it.
   *
   * Quantiles are defined as *lower order statistics* (the value at
   * zero-based rank `floor(q*(n-1))` of the sorted column). This is
@@ -86,10 +88,28 @@ object StatsOps {
     (row.getDouble(0), row.getDouble(1))
   }
 
-  /** Lower-order-statistic median of the non-null values (reference
-    * median imputation, etl_pipeline/transform.py:161-166). */
+  /** Lower-order-statistic median of the non-null values of `c` cast
+    * to double (reference median imputation,
+    * etl_pipeline/transform.py:161-166), as a scalar subquery: a lazy
+    * column that runs with the plan it is used in, so building that
+    * plan starts no job. `percentile_disc(0.5)` picks the value at
+    * zero-based rank ceil(n/2)-1, which is [[rankOf]]`(0.5, n)` for
+    * every n. A column with no non-null value fails the plan loudly.
+    *
+    * Scale note: percentile_disc counts each distinct value, so the
+    * final aggregate holds the column's distinct values in one task,
+    * as `orderStat`'s sort-limit holds half the rows; see
+    * [[approxQuantile]] for the one-pass sketch. */
+  def medianColumn(df: DataFrame, c: Column): Column =
+    df.select(c.cast("double").as("x")).filter(col("x").isNotNull)
+      .agg(coalesce(
+        expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY x)"),
+        raise_error(lit("median of a column with no non-null value"))))
+      .scalar()
+
+  /** [[medianColumn]], collected. */
   def median(df: DataFrame, c: Column): Double =
-    orderStat(df.filter(c.isNotNull), c, 0.5)
+    df.sparkSession.range(1).select(medianColumn(df, c)).head().getDouble(0)
 
   /** Equal-width histogram bin id with a constant-column guard: when
     * `mx == mn` (e.g. a narrow dashboard filter leaves one distinct

@@ -14,8 +14,9 @@ import graft.ops.StatsOps
   * here Catalyst sees the whole program and can fuse projections,
   * push filters below the union, and prune columns into both scans.
   *
-  * The two-phase stats steps (median impute) collect only scalars —
-  * never rows — so the pipeline is cluster-safe at any data size.
+  * The median impute is a scalar subquery inside that plan, so
+  * building the transform starts no Spark job: the median is computed
+  * when the plan runs, as part of the same action.
   */
 object EtlPipeline {
 
@@ -45,9 +46,9 @@ object EtlPipeline {
         when(col("o_orderkey") % 17 === 0, lit(null)).otherwise(col("o_totalprice")))
       .withColumn("o_orderpriority",
         when(col("o_orderkey") % 19 === 0, lit(null)).otherwise(col("o_orderpriority")))
-    val med = StatsOps.median(masked, col("o_totalprice"))
+    val med = StatsOps.medianColumn(masked, col("o_totalprice"))
     val imputed = masked
-      .withColumn("o_totalprice", coalesce(col("o_totalprice"), lit(med)))
+      .withColumn("o_totalprice", coalesce(col("o_totalprice"), med))
       .withColumn("o_orderpriority", coalesce(col("o_orderpriority"), lit("Unknown")))
 
     // F5/P4: date normalization + null-date drop (dates here are

@@ -90,18 +90,21 @@ object StarSchema {
   /** Persist the schema as a gold layer (reference full-refresh load,
     * etl_pipeline/load.py:143-157 — idempotent overwrite replaces
     * DELETE+append). Dims coalesce to 1 file; the fact keeps its
-    * distributed partitioning. */
+    * distributed partitioning. The fact derives its dims in-plan
+    * rather than reading the written ones, so the five writes are
+    * independent and run concurrently ([[graft.ops.Concurrently]]):
+    * the dims' single-task stages share the cores with the fact's. */
   def materialize(spark: SparkSession, dir: String, outDir: String): Unit = {
-    dimDate(spark, dir).coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/dim_date")
-    dimCountry(spark, dir).coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/dim_country")
-    dimItem(spark, dir).coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/dim_item")
-    dimChannel(spark, dir).coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/dim_channel")
-    factSales(spark, dir).write.mode("overwrite")
-      .parquet(s"$outDir/fact_sales")
+    val tables = Seq(
+      dimDate(spark, dir).coalesce(1),
+      dimCountry(spark, dir).coalesce(1),
+      dimItem(spark, dir).coalesce(1),
+      dimChannel(spark, dir).coalesce(1),
+      factSales(spark, dir))
+    graft.ops.Concurrently.all(WarehouseTables.zip(tables).map {
+      case (name, df) =>
+        () => df.write.mode("overwrite").parquet(s"$outDir/$name")
+    })
   }
 
   /** Analytic query THROUGH the star schema (q2-shape): proves the

@@ -17,10 +17,12 @@ import graft.ops.StatsOps
   * re-materialization, SURVEY.md §7.4.6).
   *
   * Determinism: window dedups always carry a total-order tiebreaker;
-  * two-phase stats (IQR/min-max/median) are lower order statistics
+  * two-phase stats (IQR/min-max) are lower order statistics
   * computed in a first job and inlined as literals — the exact
   * idiom the reference uses client-side (`elt/hold.ipynb:cell12`),
-  * made distributed.
+  * made distributed. The median is a lower order statistic too, but
+  * planned as a scalar subquery ([[StatsOps.medianColumn]]), so it
+  * runs with the plan that uses it.
   */
 object EltOps {
 
@@ -210,15 +212,16 @@ object EltOps {
   }
 
   /** A11+F11 median/constant imputation over synthetically-nulled
-    * columns (reference etl_pipeline/transform.py:161-166). */
+    * columns (reference etl_pipeline/transform.py:161-166); the median
+    * is computed inside the plan, not collected at construction. */
   def medianImpute(spark: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(spark, dir)
     val masked = c.select(col("c_custkey"),
       when(col("c_custkey") % 5 === 0, lit(null)).otherwise(col("c_acctbal")).as("acct"),
       when(col("c_custkey") % 11 === 0, lit(null)).otherwise(col("c_mktsegment")).as("seg"))
-    val med = StatsOps.median(masked, col("acct"))
+    val med = StatsOps.medianColumn(masked, col("acct"))
     masked.select(col("c_custkey"),
-        coalesce(col("acct"), lit(med)).as("acctbal_imputed"),
+        coalesce(col("acct"), med).as("acctbal_imputed"),
         coalesce(col("seg"), lit("Unknown")).as("segment_filled"))
       .orderBy(col("c_custkey"))
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
+import graft.ops.Concurrently
 
 /** Bronze→silver ingestion: turn a staged archive of per-table CSVs
   * into the parquet table layout every query in the engine consumes
@@ -18,9 +19,11 @@ import org.apache.spark.sql.types.StructType
   * and every downstream date function changes meaning). A production
   * feed has a contract; holding the ingest to it keeps failures loud
   * and the scan single-pass. CSV parsing itself is distributed (one
-  * Spark job per table; splittable uncompressed CSVs parallelize by
-  * HDFS-style line splits), and the parquet rewrite is the one-time
-  * cost that buys every later query columnar pruning + pushdown.
+  * Spark write job per table, the tables' jobs running concurrently
+  * so small tables' single-task stages share the cores; splittable
+  * uncompressed CSVs parallelize by HDFS-style line splits), and the
+  * parquet rewrite is the one-time cost that buys every later query
+  * columnar pruning + pushdown.
   */
 object BronzeIngest {
 
@@ -28,26 +31,31 @@ object BronzeIngest {
     * and rewrite every `<table>.csv` entry found in the archive as
     * `$stagingDir/tables/<table>.parquet`, using the declared schema.
     * Tables in `schemas` with no CSV in the archive fail loudly
-    * (a missing feed is an ingest error, not an empty table).
+    * (a missing feed is an ingest error, not an empty table), before
+    * any table is written. The tables are written concurrently
+    * ([[graft.ops.Concurrently]]); a table that fails to parse fails
+    * the ingest with its own error once the other writes have ended.
     * Returns the tables dir — a valid `sfDir` for [[graft.Tables]]. */
   def ingestZip(spark: SparkSession, zipUrl: String, stagingDir: String,
       schemas: Map[String, StructType]): String = {
     val staged = Staging.stage(zipUrl, s"$stagingDir/bronze")
     val byName = staged.map(f => stripCsv(f.getName) -> f).toMap
     val tablesDir = s"$stagingDir/tables"
-    schemas.foreach { case (table, schema) =>
+    val reads = schemas.toSeq.sortBy(_._1).map { case (table, schema) =>
       val csv = byName.getOrElse(table,
         sys.error(s"ingest: no $table.csv in $zipUrl " +
           s"(archive has: ${byName.keys.toSeq.sorted.mkString(", ")})"))
-      spark.read
+      table -> spark.read
         .schema(schema)
         .option("header", "true")
         // loud-by-default: a row that doesn't parse under the declared
         // schema fails the ingest rather than becoming silent nulls
         .option("mode", "FAILFAST")
         .csv(csv.getPath)
-        .write.mode("overwrite").parquet(s"$tablesDir/$table.parquet")
     }
+    Concurrently.all(reads.map { case (table, df) =>
+      () => df.write.mode("overwrite").parquet(s"$tablesDir/$table.parquet")
+    })
     tablesDir
   }
 

@@ -30,10 +30,7 @@ class ConstructionJobsSpec extends SparkSpec {
     "elt_minmax_norm" -> "collects min and max, then plans the scaling",
     "elt_histogram" -> "collects min and max for the bin width",
     "elt_one_hot" -> "one dummy column per collected distinct value",
-    "elt_median_impute" -> "collects the median, then plans the impute",
-    "elt_boxplot" -> "the group-size guard job runs before the window",
-    "etl_transform_sales" -> "median impute collects the median",
-    "etl_transform_quality" -> "built over etl_transform_sales")
+    "elt_boxplot" -> "the group-size guard job runs before the window")
 
   test("every relational query constructs with zero Spark jobs, warm") {
     val queries = modules.flatten

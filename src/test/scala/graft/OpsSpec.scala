@@ -59,6 +59,41 @@ class OpsSpec extends SparkSpec {
     assert(lo == 25.0 - 1.5 * 50.0 && hi == 75.0 + 1.5 * 50.0)
   }
 
+  test("medianColumn is orderStat's lower median, planned lazily") {
+    val cases = Seq(
+      "even n" -> (1 to 10).map(i => Option(i.toDouble)),
+      "odd n" -> (1 to 11).map(i => Option(i.toDouble)),
+      "one value" -> Seq(Option(7.0)),
+      "duplicates" -> Seq(3.0, 1.0, 3.0, 3.0, 2.0, 1.0).map(Option(_)),
+      "nulls" -> (Seq(None, None, None) ++ (1 to 4).map(i => Option(i * 1.5))))
+    cases.foreach { case (name, vals) =>
+      val df = vals.toDF("x").repartition(3)
+      val med = df.withColumn("m", StatsOps.medianColumn(df, $"x"))
+        .select($"m").distinct().as[Double].collect().toSeq
+      assert(med == Seq(StatsOps.orderStat(df, $"x", 0.5)), name)
+    }
+    // the median runs with the plan that uses it, not at construction
+    val df = (1 to 100).map(_.toDouble).toDF("x")
+    assert(JobCount.of(spark)(
+      df.withColumn("m", StatsOps.medianColumn(df, $"x"))) == 0)
+  }
+
+  test("a median over no non-null value fails loudly") {
+    val allNull = Seq(Option.empty[Double], None).toDF("x")
+    val empty = (1 to 3).map(_.toDouble).toDF("x").filter($"x" > 10)
+    def messages(e: Throwable) = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    Seq(allNull, empty).foreach { df =>
+      val eager = intercept[Exception](StatsOps.median(df, $"x"))
+      assert(messages(eager).contains("no non-null value"), messages(eager))
+      // a plan whose rows need that median fails when it runs
+      val rows = Seq(1, 2).toDF("y")
+      val lazyErr = intercept[Exception](
+        rows.withColumn("m", StatsOps.medianColumn(df, $"x")).collect())
+      assert(messages(lazyErr).contains("no non-null value"), messages(lazyErr))
+    }
+  }
+
   test("StageLog.observed collects metrics with the action, no extra pass") {
     val src = Seq((1L, Some(1.0)), (2L, None), (3L, Some(3.0)))
       .toDF("id", "v")

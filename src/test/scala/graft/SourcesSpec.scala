@@ -82,24 +82,8 @@ class SourcesSpec extends SparkSpec {
   test("staged zip ingest feeds C1 transform + C2 star build end to end") {
     import graft.sources.BronzeIngest
     val tmp = java.nio.file.Paths.get(graft.ops.Scratch.dir("graft_ingest"))
-    // fixture: the reference's feed shape — one zip holding a CSV per
-    // table, exported from the parquet tables so values round-trip
     val tabs = Seq("orders", "customer", "nation", "region", "part")
-    tabs.foreach { t =>
-      Tables.load(spark, sf, t).coalesce(1).write.mode("overwrite")
-        .option("header", "true").csv(tmp.resolve(s"csv_$t").toString)
-    }
-    val zipPath = tmp.resolve("feed.zip")
-    val zout = new java.util.zip.ZipOutputStream(
-      java.nio.file.Files.newOutputStream(zipPath))
-    tabs.foreach { t =>
-      val part = new java.io.File(tmp.resolve(s"csv_$t").toString)
-        .listFiles().filter(_.getName.endsWith(".csv")).head
-      zout.putNextEntry(new java.util.zip.ZipEntry(s"$t.csv"))
-      java.nio.file.Files.copy(part.toPath, zout)
-      zout.closeEntry()
-    }
-    zout.close()
+    val zipPath = CsvFeed.zip(spark, sf, tmp, tabs)
 
     // stage → declared-schema CSV scan → parquet tables dir
     val schemas = tabs.map(t => t -> Tables.load(spark, sf, t).schema).toMap
@@ -113,6 +97,10 @@ class SourcesSpec extends SparkSpec {
         schemas + ("lineitem" -> Tables.lineitem(spark, sf).schema))
     }
     assert(err.getMessage.contains("lineitem"))
+    // ... and before any table is written
+    val tables2 = tmp.resolve("staging2").resolve("tables")
+    (tabs :+ "lineitem").foreach(t =>
+      assert(!java.nio.file.Files.exists(tables2.resolve(s"$t.parquet")), t))
 
     // C1: the composed transform over staged tables == over originals
     val a = graft.pipeline.EtlPipeline.transformSales(spark, staged)
