@@ -264,7 +264,7 @@ object ScaleUp {
       val d = Tables.documents(spark, dst)
       if (!new java.io.File(goldDir).exists()) {
         measure("vacuum_store_build", dst) {
-          d.write.mode("overwrite").parquet(goldDir)
+          graft.ops.StoreCommit.replace(goldDir)(d.write.parquet(_))
           graft.ext.Dedup.writeGoldIndex(d, ixDir)
         }
         note("vacuum_store_build", dst,
@@ -495,9 +495,10 @@ object ScaleUp {
         measure("card_labels_artifact_build", dst)(
           graft.ext.Sampling.writeSplitLabels(spark, dst, artDir))
         measure("card_counts_artifact_build", dst)(
-          graft.ext.Selection.tokenCountsOn(Tables.documents(spark, dst))
-            .write.mode("overwrite").parquet(
-              s"$artDir/${graft.ext.Selection.TokenCountsTable}.parquet"))
+          graft.ops.StoreCommit.replace(
+              graft.ext.Selection.tokenCountsRoot(artDir))(
+            graft.ext.Selection.tokenCountsOn(Tables.documents(spark, dst))
+              .write.parquet(_)))
         timed("curation_data_card_artifact", dst, 1)(
           graft.ext.Curation.dataCardFrom(spark, dst, artDir, artDir))
         // per-source card (round-13): same legs grouped by source —

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
-import graft.ops.QueryProfile
+import graft.ops.{QueryProfile, StoreCommit}
 import graft.streaming.EventStreams
 
 /** Dev experiment: the STREAMING counterpart of [[ScaleUp]] — run the
@@ -185,7 +185,7 @@ object StreamScaleUp {
           .option("maxFilesPerTrigger", 1).parquet(docsDir),
         s"$base/dedup_index", s"$base/gold_docs", s"$base/ckpt_dedup")
       q.stop()
-      val goldRows = spark.read.parquet(s"$base/gold_docs").count()
+      val goldRows = StoreCommit.read(spark, s"$base/gold_docs").count()
       println(f"[streamscale] dedup sink total " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s, gold rows $goldRows%d")
       // compaction economics: the file count the micro-batch appends
@@ -215,7 +215,7 @@ object StreamScaleUp {
         bitmask, s"$base/cur_index", s"$base/cur_gold",
         s"$base/cur_disp", s"$base/ckpt_curation")
       q.stop()
-      val accepted = spark.read.parquet(s"$base/cur_gold").count()
+      val accepted = StoreCommit.read(spark, s"$base/cur_gold").count()
       val disp = spark.read.parquet(s"$base/cur_disp")
       println(f"[streamscale] curation sink total " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s, accepted $accepted%d " +
@@ -234,8 +234,8 @@ object StreamScaleUp {
           .option("maxFilesPerTrigger", 1).parquet(docsDir),
         s"$base/drift_counts", s"$base/ckpt_drift")
       q.stop()
-      val art = spark.read.parquet(
-        s"$base/drift_counts/${graft.ext.Selection.TokenCountsTable}.parquet")
+      val art = StoreCommit.read(spark,
+        graft.ext.Selection.tokenCountsRoot(s"$base/drift_counts"))
       println(f"[streamscale] drift sink total " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s, artifact rows " +
         f"${art.count()}%d (vocabulary × sources bounded, never corpus)")
@@ -351,7 +351,7 @@ object StreamScaleUp {
         coarse, rcbs, s"$base/vec_codes", s"$base/vec_gold",
         s"$base/ckpt_vec")
       q.stop()
-      val goldRows = spark.read.parquet(s"$base/vec_gold").count()
+      val goldRows = StoreCommit.read(spark, s"$base/vec_gold").count()
       println(f"[streamscale] vector sink total " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s, gold vectors $goldRows%d")
       // fragmentation left by per-batch appends, and the compaction
@@ -366,7 +366,7 @@ object StreamScaleUp {
       val (qid, qCell, dt) = graft.ext.ProductQuant.queryPrepResidual(
         spark, src, coarse, rcbs)
       measure("vec_adc_probe")(graft.ext.ProductQuant.adcOverCodes(
-        spark.read.parquet(s"$base/vec_codes")
+        StoreCommit.read(spark, s"$base/vec_codes")
           .filter(col("cell") === qCell), dt, qid).collect())
     }
 
@@ -389,8 +389,8 @@ object StreamScaleUp {
         coarse, subs, subK, s"$base/sem_cells", s"$base/sem_verdicts",
         s"$base/ckpt_sem")
       q.stop()
-      val cells = spark.read.parquet(s"$base/sem_cells")
-      val verdicts = spark.read.parquet(s"$base/sem_verdicts")
+      val cells = StoreCommit.read(spark, s"$base/sem_cells")
+      val verdicts = StoreCommit.read(spark, s"$base/sem_verdicts")
       println(f"[streamscale] sem sink total " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s, " +
         f"${cells.count()}%d vectors in cells, " +
@@ -421,7 +421,7 @@ object StreamScaleUp {
         sig(oneShot.select(col("vec_id"), col("cell")),
           Seq("vec_id", "cell"))
       val full = graft.ext.Dedup
-        .semanticDedupFromCells(spark, s"$base/sem_cells")
+        .semanticDedupFromCells(spark, StoreCommit.readDir(s"$base/sem_cells"))
       val verdictCols = Seq("vec_id", "cell", "is_dup", "dup_of")
       val verdictPar = sig(verdicts.select(col("vec_id"),
           col("cell").cast("int").as("cell"), col("is_dup"),
@@ -449,7 +449,7 @@ object StreamScaleUp {
           .option("maxFilesPerTrigger", 1).parquet(docsDir),
         s"$base/bm25_ix", s"$base/ckpt_lex")
       q.stop()
-      val meta = spark.read.parquet(s"$base/bm25_ix/meta").head()
+      val meta = StoreCommit.read(spark, s"$base/bm25_ix/meta").head()
       println(f"[streamscale] lexical sink total " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s, " +
         f"indexed docs ${meta.getLong(0)}%d, sum_dl ${meta.getLong(1)}%d")
@@ -477,48 +477,6 @@ object StreamScaleUp {
           threshold = 1))
       note("bm25_postings_compaction", s"$frag part files -> " +
         s"${graft.ext.Dedup.cellsFileCount(s"$base/bm25_ix/postings")}")
-    }
-
-    if (on("lexman")) locally {
-      // manifest-mode lexical sink at 100×: what does the rename-free
-      // protocol COST where it is structurally priciest? Every
-      // streamed append pays the pointer resolution plus TWO
-      // recursive listings of the live version (the before/after
-      // delta that extends the committed file list) — O(store files)
-      // metadata work per batch by design. The numbers to read: the
-      // manifest sink wall vs the swap-mode `lex` section's, and
-      // serve parity EXACT against a swap-mode one-shot rebuild.
-      import graft.ops.{ManifestCommit, Manifest, StoreFiles}
-      val docsSchema = spark.read.parquet(docsDir).schema
-      val store = s"$base/bm25_ix_man"
-      StoreFiles.deleteDir(store)
-      StoreFiles.deleteDir(s"$base/ckpt_lexman")
-      val t0 = System.nanoTime()
-      EventStreams.lexicalIndexSink(
-        spark.readStream.schema(docsSchema)
-          .option("maxFilesPerTrigger", 1).parquet(docsDir),
-        store, s"$base/ckpt_lexman", commit = ManifestCommit).stop()
-      val pLive = ManifestCommit.readDir(s"$store/postings")
-      println(f"[streamscale] lexman sink total " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s " +
-        f"(manifest ${Manifest.read(pLive).map(_.size).getOrElse(-1)}%d " +
-        f"committed objects)")
-      def tdOf(df: DataFrame): DataFrame = df
-        .select(col("doc_id"),
-          graft.ext.TextOps.tokens(col("text")).as("t"))
-        .filter(size(col("t")) > 0)
-      val rebuildStore = s"$base/bm25_man_rebuild"
-      StoreFiles.deleteDir(rebuildStore)
-      measure("lexman_swap_one_shot_rebuild")(
-        graft.ext.Retrieval.writeBm25Index(
-          tdOf(spark.read.parquet(docsDir)), rebuildStore))
-      val served = measure("lexman_serve_manifest")(graft.ext.Retrieval
-        .bm25BatchFromIndex(spark, base, store, ManifestCommit)
-        .collect()).toSeq
-      val rebuilt = graft.ext.Retrieval
-        .bm25BatchFromIndex(spark, base, rebuildStore).collect().toSeq
-      println(s"[streamscale] lexman parity vs swap rebuild: " +
-        (if (served == rebuilt) "EXACT" else "MISMATCH"))
     }
 
     if (on("takedown")) locally {
@@ -581,7 +539,7 @@ object StreamScaleUp {
       val edges = spark.read.parquet(s"$base/knn_edges")
       println(f"[streamscale] knn sink total " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s, " +
-        f"${spark.read.parquet(s"$base/knn_cells").count()}%d vectors, " +
+        f"${StoreCommit.read(spark, s"$base/knn_cells").count()}%d vectors, " +
         f"${edges.count()}%d edges " +
         f"(${graft.ext.KMeans.K * subK}%d effective cells)")
       // per-batch trigger rows print above; expected shape: each
@@ -616,7 +574,7 @@ object StreamScaleUp {
           measure("knn_replay_guard_watermark")(
             probe.filter(col("vec_id") > wm.get).count())
           measure("knn_replay_guard_anti_join")(probe.join(
-            spark.read.parquet(s"$base/knn_cells").select("vec_id"),
+            StoreCommit.read(spark, s"$base/knn_cells").select("vec_id"),
             Seq("vec_id"), "left_anti").count())
         }
       }
@@ -642,7 +600,7 @@ object StreamScaleUp {
       val subK = graft.ext.Dedup.subKFor(total)
       val (coarse, subs) = graft.ext.Dedup.trainSemanticQuantizers(
         graft.ext.KMeans.vecs(spark, src), subK, cap = 2 * subK)
-      val rem = spark.read.parquet(cells)
+      val rem = StoreCommit.read(spark, cells)
         .filter(col("vec_id") % 10 === 7).select(col("vec_id"))
         .localCheckpoint()
       val n = measure("knnrm_removal")(graft.ext.ClusterOps
@@ -738,14 +696,16 @@ object StreamScaleUp {
       measure("card_one_shot_rebuild")(graft.ext.ClusterOps
         .writeClusterCardAgg(assign(spark.read.parquet(cardDir)),
           s"$base/card_rebuild"))
-      def rows(aggDir: String) = graft.ext.ClusterOps
-        .clusterCardFromAgg(spark, aggDir).collect().map(_.toSeq).toSeq
-      val par = rows(s"$base/card_agg") == rows(s"$base/card_rebuild")
+      def rows(card: DataFrame) = card.collect().map(_.toSeq).toSeq
+      val par = rows(graft.ext.ClusterOps.clusterCardFromStore(spark,
+          s"$base/card_agg")) ==
+        rows(graft.ext.ClusterOps.clusterCardFromAgg(spark,
+          s"$base/card_rebuild"))
       println(s"[streamscale] card parity vs rebuild: " +
         (if (par) "EXACT" else "MISMATCH"))
       // the steady-state report read: bounded store, no corpus scan
       measure("card_from_store")(graft.ext.ClusterOps
-        .clusterCardFromAgg(spark, s"$base/card_agg").collect())
+        .clusterCardFromStore(spark, s"$base/card_agg").collect())
     }
 
     if (on("wordhist")) locally {
@@ -817,32 +777,24 @@ object StreamScaleUp {
         println(s"[streamscale] staged $liDir (${copies}x, " +
           s"$nBatches batches)")
       }
-      // SPARK_GRAFT_STREAMSCALE_COMMIT=pointer drives the identical
-      // loop through the object-store commit protocol (versioned dirs
-      // + pointer flips on every major) — the overhead-parity row
-      val ptr = sys.env.get("SPARK_GRAFT_STREAMSCALE_COMMIT")
-        .contains("pointer")
-      val commitMode: graft.ops.StoreCommit =
-        if (ptr) graft.ops.PointerCommit else graft.ops.SwapCommit
-      val tag = if (ptr) "_ptr" else ""
-      val store = s"$base/zstore16" + (if (ptr) "_ptr" else "")
+      val store = s"$base/zstore16"
       val files = Option(new java.io.File(liDir).listFiles())
         .getOrElse(Array.empty).map(_.getPath).sorted
       val (x, y, idc) = ("l_partkey", "l_suppkey", "l_orderkey")
       for ((f, i) <- files.zipWithIndex) {
         val rows = spark.read.parquet(f)
-        commitMode.recover(store)
-        val live = commitMode.writeDir(store)
-        val step = f"zstore$tag t${i + 1}%02d"
+        StoreCommit.recover(store)
+        val live = StoreCommit.writeDir(store)
+        val step = f"zstore t${i + 1}%02d"
         measure(s"$step append")(ZOrderLayout.appendDelta(rows, live, idc))
         val major =
           ZOrderLayout.deltaCount(live) >= ZOrderLayout.CompactAfter && {
             measure(s"$step minor")(
               ZOrderLayout.minorCompact(spark, live, x, y))
             measure(s"$step maybe_major")(ZOrderLayout.maybeCompactStore(
-              spark, store, x, y, idc, commitMode))._2
+              spark, store, x, y, idc))._2
           }
-        val liveNow = commitMode.readDir(store)
+        val liveNow = StoreCommit.readDir(store)
         val baseMb =
           graft.ops.StoreFiles.dirBytes(s"$liveNow/base") / (1 << 20)
         val l1Mb =
@@ -850,7 +802,7 @@ object StreamScaleUp {
         note(step, s"major $major  (base $baseMb MB, l1 $l1Mb MB)")
       }
       val got = ZOrderLayout
-        .readStore(spark, commitMode.readDir(store)).count()
+        .readStore(spark, StoreCommit.readDir(store)).count()
       val want = spark.read.parquet(liDir).count()
       println(s"[streamscale] zstore parity vs landing: " +
         (if (got == want) s"EXACT ($got rows)"
@@ -865,7 +817,7 @@ object StreamScaleUp {
         spans(spans.length / 2)
       }
       println(s"[streamscale] zstore median y-span per file: base " +
-        s"${medianSpan(s"${commitMode.readDir(store)}/base")} vs landing " +
+        s"${medianSpan(s"${StoreCommit.readDir(store)}/base")} vs landing " +
         s"${medianSpan(liDir)}")
     }
 
@@ -890,24 +842,27 @@ object StreamScaleUp {
       for ((f, i) <- files.zipWithIndex) {
         val rows = spark.read.parquet(f)
         val step = f"zdel t${i + 1}%02d"
-        measure(s"$step append")(ZOrderLayout.appendDelta(rows, store, idc))
+        val live = StoreCommit.writeDir(store)
+        measure(s"$step append")(ZOrderLayout.appendDelta(rows, live, idc))
         measure(s"$step del")(ZOrderLayout.appendDeleteDelta(
-          rows.filter(col(idc) % 10 === 3), store, idc))
+          rows.filter(col(idc) % 10 === 3), live, idc))
         val major =
-          ZOrderLayout.deltaCount(store) >= ZOrderLayout.CompactAfter && {
+          ZOrderLayout.deltaCount(live) >= ZOrderLayout.CompactAfter && {
             measure(s"$step minor")(
-              ZOrderLayout.minorCompact(spark, store, x, y))
+              ZOrderLayout.minorCompact(spark, live, x, y))
             measure(s"$step maybe_major")(ZOrderLayout.maybeCompactStore(
               spark, store, x, y, idc))._2
           }
+        val liveNow = StoreCommit.readDir(store)
         val baseMb =
-          graft.ops.StoreFiles.dirBytes(s"$store/base") / (1 << 20)
-        val delN = ZOrderLayout.pendingDeletes(spark, store)
+          graft.ops.StoreFiles.dirBytes(s"$liveNow/base") / (1 << 20)
+        val delN = ZOrderLayout.pendingDeletes(spark, liveNow)
           .map(_.count()).getOrElse(0L)
         note(step,
           s"major $major  (base $baseMb MB, pending deletes $delN)")
       }
-      val got = ZOrderLayout.readStore(spark, store).count()
+      val got =
+        ZOrderLayout.readStore(spark, StoreCommit.readDir(store)).count()
       val landing = spark.read.parquet(liDir)
       val want = landing.filter(col(idc) % 10 =!= 3).count()
       println(s"[streamscale] zdel parity vs landing-minus-removed: " +

@@ -339,10 +339,9 @@ object Bpe {
     // MinValue watermark makes every future id fresh
     val mx = docs.agg(max(col("doc_id"))).head()
     val maxId = if (mx.isNullAt(0)) Long.MinValue else mx.getLong(0)
-    graft.ops.ArtifactSwap.writeAndSwap(histDir) { next =>
+    graft.ops.StoreCommit.replace(histDir) { next =>
       wordHist(docs).write.parquet(s"$next/hist")
       graft.ops.StoreFiles.writeIdWatermark(next, maxId)
-      graft.ops.StoreFiles.createMarker(next, "_SUCCESS")
     }
   }
 
@@ -351,33 +350,32 @@ object Bpe {
     * ([[ClusterOps.foldClusterCardAgg]]): the fold is a
     * non-idempotent sum over a store that holds no doc ids, so a
     * crashed batch is undetectable from store contents; instead the
-    * whole (vocabulary-bounded) store swaps through
-    * [[graft.ops.ArtifactSwap]] with `_id_watermark` inside, so a
-    * replayed batch either re-folds in full or drops in full. The
+    * whole (vocabulary-bounded) store replaces through
+    * [[graft.ops.StoreCommit]] with `_id_watermark` inside the version,
+    * so a replayed batch either re-folds in full or drops in full. The
     * O(store) rewrite is the RIGHT trade for a vocabulary-bounded
     * artifact, exactly as argued for the card store — the
     * corpus-sized stores (cells/edges/postings) keep their
     * partition-pruned appends. */
   def foldWordHist(spark: SparkSession, histDir: String,
-      batchHist: DataFrame, batchMax: Long): Unit =
-    graft.ops.ArtifactSwap.writeAndSwap(histDir) { next =>
-      val seeded =
-        graft.ops.StoreFiles.parquetFileCount(s"$histDir/hist") > 0
+      batchHist: DataFrame, batchMax: Long): Unit = {
+    val seeded = graft.ops.StoreCommit.subFileCount(histDir, "hist") > 0
+    graft.ops.StoreCommit.replace(histDir) { next =>
       val merged =
         if (!seeded) batchHist
-        else spark.read.parquet(s"$histDir/hist")
-          .select(col("word"), col("n"))
+        else wordHistFromStore(spark, histDir)
           .unionByName(batchHist)
           .groupBy(col("word")).agg(sum(col("n")).as("n"))
       merged.write.parquet(s"$next/hist")
       graft.ops.StoreFiles.writeIdWatermark(next, batchMax)
-      graft.ops.StoreFiles.createMarker(next, "_SUCCESS")
     }
+  }
 
   /** The histogram read back from its artifact — the trainer input a
     * sink-maintained store serves ([[trainOn]] accepts it as-is). */
   def wordHistFromStore(spark: SparkSession, histDir: String): DataFrame =
-    spark.read.parquet(s"$histDir/hist").select(col("word"), col("n"))
+    graft.ops.StoreCommit.readSub(spark, histDir, "hist")
+      .select(col("word"), col("n"))
 
   /** DRIVER-GATED scaffold: ONE training per source fingerprint,
     * shared by both gate entries (the shared-scratch discipline,

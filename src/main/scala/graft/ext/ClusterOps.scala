@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ops.StoreCommit
 
 /** Embedding-cluster corpus analysis — the topic-level report and the
   * topic-rebalancing sample a large-scale training-data pipeline runs
@@ -267,101 +268,77 @@ object ClusterOps {
     * protocol is to commit the fold and the watermark in ONE atomic
     * step. That is affordable here precisely because the agg store is
     * BOUNDED (K·|sources| + K·|labels| rows, independent of corpus
-    * size): the whole store rewrites into `.next` — merged `src/` and
-    * `lab/`, the `_id_watermark` scalar, then a top-level `_SUCCESS`
-    * so [[graft.ops.ArtifactSwap]]'s roll-forward probe sees a
-    * complete staging dir — and one rename publishes fold+watermark
-    * together. Every crash shape resolves exactly-once: before the
-    * swap the watermark is unchanged and the replayed batch re-folds;
-    * after it the watermark has advanced and the replay drops.
+    * size): the whole store rewrites into the next version of the
+    * [[graft.ops.StoreCommit]] store at `root` — merged `src/` and
+    * `lab/` plus the `_id_watermark` scalar, inside the version — and
+    * one pointer flip publishes fold+watermark together. Every crash
+    * shape resolves exactly-once: before the flip the watermark is
+    * unchanged and the replayed batch re-folds; after it the
+    * watermark has advanced and the replay drops.
     * [[mergeClusterCardAgg]]'s partition-pruned dynamic overwrite
     * remains the batch-API form where the caller owns replay. */
-  def foldClusterCardAgg(spark: SparkSession, aggDir: String,
-      batchJ: DataFrame, batchMax: Long): Unit =
-    graft.ops.ArtifactSwap.writeAndSwap(aggDir) { next =>
-      // `live` reads lazily while `.next` materializes — safe: the
-      // live dir is untouched until the body returns
-      writeFoldedCardAgg(spark,
-        if (graft.ops.StoreFiles.parquetFileCount(s"$aggDir/src") > 0)
-          Some(aggDir)
-        else None,
-        next, batchJ, batchMax)
-    }
-
-  /** [[foldClusterCardAgg]] committed through the OBJECT-STORE-SAFE
-    * pointer protocol ([[graft.ops.PointerSwap]]) instead of the
-    * rename-aside swap: the merged store writes into the next version
-    * dir (reading the committed version, which stays live throughout)
-    * and one small-object pointer replace publishes fold + watermark
-    * together — the same exactly-once argument as the swap form, on
-    * filesystems whose directory rename [[graft.ops.ArtifactSwap]]
-    * refuses (S3-class copy+delete semantics). */
-  def foldClusterCardAggPointer(spark: SparkSession, root: String,
-      batchJ: DataFrame, batchMax: Long): Unit =
-    graft.ops.PointerSwap.writeAndCommit(root) { next =>
-      writeFoldedCardAgg(spark, graft.ops.PointerSwap.resolve(root),
-        next, batchJ, batchMax)
-    }
-
-  /** The fold body both commit disciplines share: merged `src/` and
-    * `lab/` (batch partials re-summed with the stored rows read from
-    * `from`, when seeded), the `_id_watermark` scalar, then a
-    * top-level `_SUCCESS` so the committers' completeness probes see
-    * a fully-staged artifact. */
-  private def writeFoldedCardAgg(spark: SparkSession,
-      from: Option[String], next: String, batchJ: DataFrame,
-      batchMax: Long): Unit = {
-    def fold(sub: String, key: String, batchAgg: DataFrame,
-        sums: Seq[String]): Unit = {
-      val merged = from match {
-        case None => batchAgg
-        case Some(f) => spark.read.parquet(s"$f/$sub")
-          .select(col("cluster").cast("int").as("cluster") +:
-            col(key) +: sums.map(col): _*)
-          .unionByName(batchAgg)
-          .groupBy(col("cluster"), col(key))
-          .agg(sum(col(sums.head)).as(sums.head),
-            sums.tail.map(s => sum(col(s)).as(s)): _*)
+  def foldClusterCardAgg(spark: SparkSession, root: String,
+      batchJ: DataFrame, batchMax: Long): Unit = {
+    val seeded = StoreCommit.subFileCount(root, "src") > 0
+    // the committed version reads lazily while the next one
+    // materializes — safe: it stays live until the flip
+    StoreCommit.replace(root) { next =>
+      def fold(sub: String, key: String, batchAgg: DataFrame,
+          sums: Seq[String]): Unit = {
+        val merged =
+          if (!seeded) batchAgg
+          else StoreCommit.readSub(spark, root, sub)
+            .select(col("cluster").cast("int").as("cluster") +:
+              col(key) +: sums.map(col): _*)
+            .unionByName(batchAgg)
+            .groupBy(col("cluster"), col(key))
+            .agg(sum(col(sums.head)).as(sums.head),
+              sums.tail.map(s => sum(col(s)).as(s)): _*)
+        merged.repartition(col("cluster"))
+          .write.mode("overwrite").partitionBy("cluster")
+          .parquet(s"$next/$sub")
       }
-      merged.repartition(col("cluster"))
-        .write.mode("overwrite").partitionBy("cluster")
-        .parquet(s"$next/$sub")
+      fold("src", "source",
+        batchJ.groupBy(col("cluster"), col("source"))
+          .agg(count(lit(1)).as("sdocs"),
+            sum(col("n_tokens")).as("stoks")),
+        Seq("sdocs", "stoks"))
+      fold("lab", "label",
+        batchJ.groupBy(col("cluster"), col("label"))
+          .agg(count(lit(1)).as("ldocs")),
+        Seq("ldocs"))
+      graft.ops.StoreFiles.writeIdWatermark(next, batchMax)
     }
-    fold("src", "source",
-      batchJ.groupBy(col("cluster"), col("source"))
-        .agg(count(lit(1)).as("sdocs"),
-          sum(col("n_tokens")).as("stoks")),
-      Seq("sdocs", "stoks"))
-    fold("lab", "label",
-      batchJ.groupBy(col("cluster"), col("label"))
-        .agg(count(lit(1)).as("ldocs")),
-      Seq("ldocs"))
-    graft.ops.StoreFiles.writeIdWatermark(next, batchMax)
-    graft.ops.StoreFiles.createMarker(next, "_SUCCESS")
   }
 
   /** The card answered from the aggregate artifact alone — no corpus
     * scan, no assignment: two K·|sources| / K·|labels|-row reads plus
     * the bounded ranks. The steady-state report path. */
   def clusterCardFromAgg(spark: SparkSession, aggDir: String): DataFrame =
-    cardFromParts(
-      spark.read.parquet(s"$aggDir/src")
-        .select(col("cluster").cast("int").as("cluster"), col("source"),
-          col("sdocs"), col("stoks")),
-      spark.read.parquet(s"$aggDir/lab")
-        .select(col("cluster").cast("int").as("cluster"), col("label"),
-          col("ldocs")))
+    cardFromAggParts(spark.read.parquet(s"$aggDir/src"),
+      spark.read.parquet(s"$aggDir/lab"))
 
-  /** DRIVER-GATED merge paths, ALL THREE fold disciplines in one
-    * form-tagged entry: gold card-aggregate artifact under the
-    * gold-trained FROZEN quantizer, the batch folded in by the
-    * partition-pruned dynamic overwrite ([[mergeClusterCardAgg]],
-    * form `merge`), by the atomic rename-aside swap
-    * ([[foldClusterCardAgg]], form `swap` — the streaming sink's
-    * default protocol), and by the object-store-safe pointer commit
-    * ([[foldClusterCardAggPointer]], form `pointer`), each card read
-    * from its STORE — the gate proves store-after-fold == the full
-    * frozen-quantizer card rebuild for all three (counts/sums merge
+  /** [[clusterCardFromAgg]] over the committed version of a
+    * [[foldClusterCardAgg]] store (the card sink's). */
+  def clusterCardFromStore(spark: SparkSession, root: String): DataFrame =
+    cardFromAggParts(StoreCommit.readSub(spark, root, "src"),
+      StoreCommit.readSub(spark, root, "lab"))
+
+  private def cardFromAggParts(src: DataFrame, lab: DataFrame): DataFrame =
+    cardFromParts(
+      src.select(col("cluster").cast("int").as("cluster"), col("source"),
+        col("sdocs"), col("stoks")),
+      lab.select(col("cluster").cast("int").as("cluster"), col("label"),
+        col("ldocs")))
+
+  /** DRIVER-GATED merge paths, both fold disciplines in one form-tagged
+    * entry: gold card-aggregate artifact under the gold-trained FROZEN
+    * quantizer, the batch folded in by the partition-pruned dynamic
+    * overwrite ([[mergeClusterCardAgg]], form `merge`) and by the
+    * committed whole-store fold ([[foldClusterCardAgg]], form `fold` —
+    * the streaming sink's exactly-once protocol), each card read from
+    * its STORE — the gate proves store-after-fold == the full
+    * frozen-quantizer card rebuild for both (counts/sums merge
     * exactly; the modal ranks re-derive from the merged frames with
     * the same tie-breaks), paying the DuckDB rebuild chain once. */
   def clusterCardMergeForms(spark: SparkSession, dir: String): DataFrame = {
@@ -376,18 +353,12 @@ object ClusterOps {
     val mergeDir = graft.ops.Scratch.dir("graft_card_merge") + "/agg"
     writeClusterCardAgg(gold, mergeDir)
     mergeClusterCardAgg(spark, mergeDir, batch)
-    val swapDir = graft.ops.Scratch.dir("graft_card_swap") + "/agg"
-    writeClusterCardAgg(gold, swapDir)
-    foldClusterCardAgg(spark, swapDir, batch, batchMax)
-    val ptrRoot = graft.ops.Scratch.dir("graft_card_ptr") + "/agg"
-    graft.ops.PointerSwap.writeAndCommit(ptrRoot)(
-      writeClusterCardAgg(gold, _))
-    foldClusterCardAggPointer(spark, ptrRoot, batch, batchMax)
+    val foldRoot = graft.ops.Scratch.dir("graft_card_fold") + "/agg"
+    StoreCommit.replace(foldRoot)(writeClusterCardAgg(gold, _))
+    foldClusterCardAgg(spark, foldRoot, batch, batchMax)
     OracleForms.union(
         "merge" -> clusterCardFromAgg(spark, mergeDir),
-        "swap" -> clusterCardFromAgg(spark, swapDir),
-        "pointer" -> clusterCardFromAgg(spark,
-          graft.ops.PointerSwap.resolve(ptrRoot).get))
+        "fold" -> clusterCardFromStore(spark, foldRoot))
       .select(col("form"), col("cluster"), col("docs"),
         col("total_tokens"), col("n_sources"), col("top_source"),
         col("top_source_docs"), col("top_label"), col("top_label_docs"))
@@ -751,9 +722,8 @@ object ClusterOps {
     * the cells store and its partition overwritten. Returns the
     * number of repaired cells. */
   def repairKnnEdges(spark: SparkSession, cellsDir: String,
-      edgesDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Int = {
-    val cells = commit.read(spark, cellsDir)
+      edgesDir: String): Int = {
+    val cells = StoreCommit.read(spark, cellsDir)
       .select(col("vec_id"), col("cell").cast("int").as("cell"), col("v"))
     // expectation covers EVERY cell in the cells store (a cell of
     // n < 2 members expects ZERO edge rows — round-14 ADVICE: the
@@ -812,7 +782,7 @@ object ClusterOps {
     * takedown, the sibling of [[graft.ext.Dedup.vacuumGold]] and
     * [[graft.ext.Retrieval.vacuumBm25]]): the cells store (the
     * family's SOURCE OF TRUTH) rewrites without the removed ids
-    * through the commit protocol; the removed ids join the guard
+    * through [[graft.ops.StoreCommit]]; the removed ids join the guard
     * root's permanent `_removed` log
     * ([[graft.ops.SinkGuard.appendRemovedIds]] — a replayed batch
     * must never re-admit them through the post-crash anti-join
@@ -828,12 +798,11 @@ object ClusterOps {
     * the marker down → the next streamed batch's prologue runs the
     * same repairs. Returns the number of removed vectors. */
   def removeKnnVectors(spark: SparkSession, removedIds: DataFrame,
-      cellsDir: String, edgesDir: String, labelsDir: Option[String],
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Long = {
+      cellsDir: String, edgesDir: String, labelsDir: Option[String]): Long = {
     val rem = removedIds.select(col("vec_id")).distinct()
       .localCheckpoint()
     if (rem.isEmpty) return 0L
-    val stored = commit.read(spark, cellsDir)
+    val stored = StoreCommit.read(spark, cellsDir)
     val retained = stored
       .join(broadcast(rem), Seq("vec_id"), "left_anti")
       .withColumn("cell", col("cell").cast("int"))
@@ -844,12 +813,12 @@ object ClusterOps {
     val wm = graft.ops.StoreFiles.readIdWatermark(edgesDir)
     graft.ops.SinkGuard.appendRemovedIds(rem, edgesDir)
     graft.ops.StoreFiles.deleteMarker(edgesDir, "_cells_synced")
-    commit.replace(cellsDir) { next =>
+    StoreCommit.replace(cellsDir) { next =>
       retained.write.partitionBy("cell").parquet(next)
     }
-    repairKnnEdges(spark, cellsDir, edgesDir, commit)
+    repairKnnEdges(spark, cellsDir, edgesDir)
     labelsDir.foreach(ld =>
-      repairKnnCommunityLabels(spark, cellsDir, ld, commit))
+      repairKnnCommunityLabels(spark, cellsDir, ld))
     wm.foreach(graft.ops.StoreFiles.writeIdWatermark(edgesDir, _))
     graft.ops.StoreFiles.createMarker(edgesDir, "_cells_synced")
     removedN
@@ -875,8 +844,8 @@ object ClusterOps {
           KMeans.assignOn(col("v"), cents).cast("int").as("cell"),
           col("v"))
         .localCheckpoint()
-      assigned.repartition(col("cell"))
-        .write.partitionBy("cell").parquet(cells)
+      StoreCommit.replace(cells)(assigned.repartition(col("cell"))
+        .write.partitionBy("cell").parquet(_))
       // r18: seed the mutable edges store by COPYING the shared
       // full-corpus store (K·N skinny rows) instead of re-running the
       // Σ|cell|² pairwise derivation — identical content (the shared
@@ -1195,9 +1164,8 @@ object ClusterOps {
     * from the cells store — the [[repairKnnEdges]] full-outer lesson)
     * relabel / delete. Returns the number of repaired cells. */
   def repairKnnCommunityLabels(spark: SparkSession, cellsDir: String,
-      labelsDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Int = {
-    val cells = commit.read(spark, cellsDir)
+      labelsDir: String): Int = {
+    val cells = StoreCommit.read(spark, cellsDir)
       .select(col("vec_id"), col("cell").cast("int").as("cell"), col("v"))
     val expect = cells.groupBy(col("cell"))
       .agg(count(lit(1)).as("want_rows"),
@@ -1639,11 +1607,10 @@ object ClusterOps {
     // merge == rebuild for BOTH fold disciplines: DuckDB rebuilds the
     // card under the gold-trained frozen quantizer ONCE; Spark folds
     // the batch via the partition-pruned dynamic overwrite (`merge`)
-    // and via the atomic swap commit (`swap`, the streaming sink's
-    // exactly-once protocol) and answers each from its store
-    // (round-14 verdict #4 + the round-15 card sink)
+    // and via the committed whole-store fold (`fold`, the streaming
+    // sink's exactly-once protocol) and answers each from its store
     "curation_cluster_card_merge_forms" ->
-      OracleForms.sql(cardMergeSql, Seq("merge", "pointer", "swap")),
+      OracleForms.sql(cardMergeSql, Seq("fold", "merge")),
     "sample_cluster_balance_forms" ->
       OracleForms.sql(balanceSql, Seq("live", "served")),
     // in-cell pairwise cosine + per-vector rank — the IVF single-probe

@@ -379,8 +379,8 @@ object Curation {
   def curateBatch(spark: SparkSession, fresh: DataFrame,
       words: Array[Long], indexDir: String): DataFrame = {
     val flt = TextOps.corpusFilterOn(fresh).select(col("doc_id"), col("reason"))
-    val hasIndex = graft.ops.StoreFiles
-      .hasTopLevelParquet(s"$indexDir/fingerprints")
+    val hasIndex =
+      graft.ops.StoreCommit.subFileCount(indexDir, "fingerprints") > 0
     val verdicts =
       if (hasIndex)
         Dedup.incrementalAgainstIndex(spark, fresh, indexDir)
@@ -1014,8 +1014,9 @@ SELECT doc_id, source, status FROM j WHERE status <> 'unchanged' ORDER BY doc_id
   private[ext] def tokenCountsFor(spark: SparkSession, dir: String): String =
     graft.ops.SessionStore.dir("tokenCounts", s"$dir/documents.parquet") {
       artDir =>
-        Selection.tokenCountsOn(graft.Tables.documents(spark, dir))
-          .write.parquet(s"$artDir/${Selection.TokenCountsTable}.parquet")
+        graft.ops.StoreCommit.replace(Selection.tokenCountsRoot(artDir))(
+          Selection.tokenCountsOn(graft.Tables.documents(spark, dir))
+            .write.parquet(_))
     }
 
   private val pipelineOracle: Map[String, String] = Map(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.TextOps.{tokens, shingles3}
+import graft.ops.StoreCommit
 
 /** Deduplication operators for LLM training-data pipelines: exact
   * (hash group), n-gram Jaccard (exactness baseline), MinHash+LSH
@@ -571,12 +572,11 @@ object Dedup {
     assignSemanticCells(batch, coarse, subs, subK)
       .write.mode("append").partitionBy("cell").parquet(cellsDir)
 
-  /** Parquet part-file count of a cell-partitioned semantic artifact —
+  /** Committed part-file count of a cell-partitioned semantic store —
     * the fragmentation measure [[maybeCompactSemanticCells]] watches
     * (each streamed append writes one file per touched cell per
     * micro-batch). */
-  def cellsFileCount(cellsDir: String): Int =
-    graft.ops.StoreFiles.parquetFileCount(cellsDir)
+  def cellsFileCount(cellsDir: String): Int = StoreCommit.fileCount(cellsDir)
 
   /** Compaction policy for the append-mode semantic-cells store:
     * rewrite toward one file per cell once fragmentation exceeds
@@ -590,47 +590,33 @@ object Dedup {
     * (vec_id, v, cell under frozen quantizers), so compaction is a
     * read → hash-repartition on `cell` (each cell lands in one
     * task → one output file) → replace; content is bit-identical,
-    * no re-assignment runs. The replace rides the commit protocol
-    * ([[graft.ops.StoreCommit]] — rename-aside by default,
-    * [[graft.ops.PointerCommit]]'s versioned dirs on object storage),
+    * no re-assignment runs. The replace rides [[graft.ops.StoreCommit]],
     * NOT an in-place overwrite: the cells store is the knn/dedup
     * families' SOURCE OF TRUTH (the edges repair derives FROM it and
     * could not rebuild it), and the source batches are already
     * checkpoint-committed when compaction runs, so a crash inside an
-    * in-place rewrite would lose stored rows unrecoverably (round-14
-    * ADVICE). Sinks run `commit.recover` on the store at batch start,
-    * which closes the protocol's own crash windows. Returns whether a
-    * rewrite ran. */
+    * in-place rewrite would lose stored rows unrecoverably. Sinks run
+    * `StoreCommit.recover` on the store at batch start, which closes
+    * the protocol's own crash windows. The guard root's removed-id log
+    * ([[removeSemanticVectors]]) lives outside the versions and
+    * survives the replace untouched. Returns whether a rewrite ran. */
   def maybeCompactSemanticCells(spark: SparkSession, cellsDir: String,
-      threshold: Int = CompactFileThreshold,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Boolean = {
-    val live = commit.readDir(cellsDir)
+      threshold: Int = CompactFileThreshold): Boolean = {
     // cell count from the partition layout — a directory listing,
     // no data read
-    val cellDirs =
-      graft.ops.StoreFiles.partitionDirCount(live, "cell=")
-    if (commit.fileCount(cellsDir) > math.max(threshold, 2 * cellDirs)) {
+    val cellDirs = graft.ops.StoreFiles
+      .partitionDirCount(StoreCommit.readDir(cellsDir), "cell=")
+    if (cellsFileCount(cellsDir) > math.max(threshold, 2 * cellDirs)) {
       // schema-preserving (keeps cell2 and any future data column):
-      // compaction must not silently drop what the build wrote; read
-      // through the commit seam, so manifest mode compacts exactly
-      // the committed content — never torn junk a listing would adopt
-      val compacted = commit.read(spark, cellsDir)
+      // compaction must not silently drop what the build wrote, and it
+      // compacts exactly the committed content — never torn junk a
+      // listing would adopt
+      val compacted = StoreCommit.read(spark, cellsDir)
         .withColumn("cell", col("cell").cast("int"))
         .repartition(col("cell"))
         .localCheckpoint()
-      // the guard root's removed-id log ([[removeSemanticVectors]])
-      // lives inside the root a SWAP-mode replace destroys — carry it
-      // inside the staging dir (atomic with the content). In pointer
-      // and manifest modes the root survives the version flip and the
-      // log must not be touched (a re-append would duplicate it on
-      // every compaction cycle).
-      val carriedLog =
-        if (commit.rootSurvivesReplace) None
-        else graft.ops.SinkGuard.removedIds(spark, cellsDir)
-          .map(_.localCheckpoint())
-      commit.replace(cellsDir) { next =>
+      StoreCommit.replace(cellsDir) { next =>
         compacted.write.partitionBy("cell").parquet(next)
-        carriedLog.foreach(_.write.parquet(s"$next/_removed"))
       }
       true
     } else false
@@ -652,23 +638,18 @@ object Dedup {
     * (the takedown HOLDS) with stale verdict rows for the removed
     * vecs — re-running the removal (idempotent: the anti-join is a
     * no-op, the rewrite completes) converges the log. The replay
-    * watermark is restored at its PRE-removal value. NOTE: the
-    * verdict log is a FLAT dir by the sink family's contract, so its
-    * rewrite rides the rename-aside swap — the same atomic-rename
-    * caveat as [[vacuumGold]]'s flat gold dir; the CELLS side (the
-    * source of truth) commits through `commit` and is object-store
-    * safe in pointer/manifest modes. Returns the number of removed
-    * vectors. */
+    * watermark is restored at its PRE-removal value. Both the cells
+    * store and the verdict log commit through [[graft.ops.StoreCommit]].
+    * Returns the number of removed vectors. */
   def removeSemanticVectors(spark: SparkSession, removedIds: DataFrame,
-      cellsDir: String, verdictsDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Long = {
+      cellsDir: String, verdictsDir: String): Long = {
     val rem = removedIds.select(col("vec_id")).distinct()
       .localCheckpoint()
     if (rem.isEmpty) return 0L
     // schema-preserving, like the compaction: the store carries cell2
     // (the runner-up probe cell) and any future data column — a
     // removal must not silently drop them
-    val stored = commit.read(spark, cellsDir)
+    val stored = StoreCommit.read(spark, cellsDir)
       .withColumn("cell", col("cell").cast("int"))
     val touched = stored.join(broadcast(rem), Seq("vec_id"))
       .select(col("cell")).distinct()
@@ -681,37 +662,22 @@ object Dedup {
     val removedN = stored.count() - retained.count()
     val wm = graft.ops.StoreFiles.readIdWatermark(cellsDir)
     graft.ops.StoreFiles.deleteMarker(cellsDir, "_ids_synced")
-    if (commit.rootSurvivesReplace) {
-      // pointer/manifest: the root-level log survives the version
-      // flip — append ONLY this removal's ids (a carry would
-      // duplicate the whole log on every removal)
-      commit.replace(cellsDir) { next =>
-        retained.write.partitionBy("cell").parquet(next)
-      }
-      graft.ops.SinkGuard.appendRemovedIds(rem, cellsDir)
-    } else {
-      // swap: the replace destroys the root and the log with it, so
-      // the carry (old log ∪ this removal) is written INTO the
-      // staging dir — one atomic swap moves data and log together
-      val carriedLog = graft.ops.SinkGuard.removedIds(spark, cellsDir)
-        .map(_.select(col("vec_id")).unionByName(rem).distinct())
-        .getOrElse(rem).localCheckpoint()
-      commit.replace(cellsDir) { next =>
-        retained.write.partitionBy("cell").parquet(next)
-        carriedLog.write.parquet(s"$next/_removed")
-      }
+    // the root-level log survives the version flip: append ONLY this
+    // removal's ids
+    StoreCommit.replace(cellsDir) { next =>
+      retained.write.partitionBy("cell").parquet(next)
     }
+    graft.ops.SinkGuard.appendRemovedIds(rem, cellsDir)
     val touchedVals = touched.map(Integer.valueOf)
     val rewritten = (
-      spark.read.parquet(verdictsDir)
+      StoreCommit.read(spark, verdictsDir)
         .select(col("vec_id"), col("cell").cast("int").as("cell"),
           col("is_dup"), col("dup_of"))
         .filter(!col("cell").isin(touchedVals: _*))
         unionByName semanticDedupOverCells(
           retained.filter(col("cell").isin(touchedVals: _*)))
-      ).localCheckpoint() // pinned BEFORE the swap reads-own-writes
-    graft.ops.ArtifactSwap.writeAndSwap(verdictsDir)(
-      rewritten.write.parquet(_))
+      ).localCheckpoint() // pinned BEFORE the replace reads-own-writes
+    StoreCommit.replace(verdictsDir)(rewritten.write.parquet(_))
     wm.foreach(graft.ops.StoreFiles.writeIdWatermark(cellsDir, _))
     graft.ops.StoreFiles.createMarker(cellsDir, "_ids_synced")
     removedN
@@ -1608,26 +1574,23 @@ object Dedup {
       d.filter(col("doc_id") > cutoff))
   }
 
-  /** DRIVER-GATED manifest serve — the dedup-family sibling of
+  /** DRIVER-GATED store serve — the dedup-family sibling of
     * [[graft.ext.Retrieval.bm25Served]]: build the gold index as a
-    * MANIFEST-committed store ([[graft.ops.ManifestCommit]] —
-    * versioned dir + pointer flip + committed file list, no rename
-    * dependency anywhere), then judge the held-out 20% against it
-    * through the manifest read path ([[incrementalAgainstIndex]]'s
-    * per-component manifest-filtered reads). Oracle =
-    * `dedup_incremental`'s replay verbatim, so hash equality proves a
-    * manifest-committed index store serves exactly like the live
-    * split. */
+    * committed store ([[graft.ops.StoreCommit]] — versioned dir +
+    * pointer flip + committed file list, no rename dependency
+    * anywhere), then judge the held-out 20% against it through the
+    * manifest read path ([[incrementalAgainstIndex]]'s per-component
+    * manifest-filtered reads). Oracle = `dedup_incremental`'s replay
+    * verbatim, so hash equality proves a committed index store serves
+    * exactly like the live split. */
   def incrementalManifestServed(spark: SparkSession,
       dir: String): DataFrame = {
     val ix = graft.ops.Scratch.dir("graft_dedup_manix") + "/ix"
     val d = graft.pipeline.GoldLayout.documentsBucketed(spark, dir)
     val cutoff = d.agg(floor(max(col("doc_id")) * 0.8).cast("long"))
       .head().getLong(0)
-    graft.ops.ManifestCommit.replace(ix)(next =>
-      writeGoldIndex(d.filter(col("doc_id") <= cutoff), next))
-    incrementalAgainstIndex(spark, d.filter(col("doc_id") > cutoff), ix,
-      graft.ops.ManifestCommit)
+    writeGoldIndex(d.filter(col("doc_id") <= cutoff), ix)
+    incrementalAgainstIndex(spark, d.filter(col("doc_id") > cutoff), ix)
   }
 
   /** Core of [[incrementalNearDups]] over explicit gold/new frames
@@ -1644,17 +1607,23 @@ object Dedup {
     incrementalCore(fresh, goldFp, bandTable(goldSh), goldSh)
   }
 
-  /** Persist the gold corpus's dedup index: fingerprint set, LSH band
-    * table (partitioned by band_idx so a band probe prunes to one
-    * directory), and shingle sets for candidate verification. This is
-    * the state an incremental pipeline accumulates batch over batch. */
-  /** `outFiles` > 0 shapes the write to roughly that many part files
+  /** Persist the gold corpus's dedup index as one committed version of
+    * the store at `root` ([[graft.ops.StoreCommit]]): fingerprint set,
+    * LSH band table (partitioned by band_idx so a band probe prunes to
+    * one directory), and shingle sets for candidate verification. This
+    * is the state an incremental pipeline accumulates batch over
+    * batch. */
+  def writeGoldIndex(gold: DataFrame, root: String): Unit =
+    StoreCommit.replace(root)(writeIndexVersion(gold, _))
+
+  /** The three index components written into one staging version.
+    * `outFiles` > 0 shapes the write to roughly that many part files
     * total (key-hashed repartitions, so probe-side pruning semantics
     * are unchanged) — the COMPACTION form [[maybeCompactIndex]] uses.
     * The default 0 writes at plan parallelism: full throughput for
     * the initial corpus-scale build, where file counts are already
     * proportional to data, not to append history. */
-  def writeGoldIndex(gold: DataFrame, path: String,
+  private def writeIndexVersion(gold: DataFrame, path: String,
       outFiles: Int = 0): Unit = {
     val n = math.max(1, outFiles / 6)
     def shaped(df: DataFrame, keys: org.apache.spark.sql.Column*) =
@@ -1692,8 +1661,7 @@ object Dedup {
     * it the compaction path for a store fragmented by many small
     * appends. */
   def rebuildIndex(spark: SparkSession, goldDir: String,
-      indexDir: String, outFiles: Int = 0,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Unit = {
+      indexDir: String, outFiles: Int = 0): Unit = {
     // tombstoned docs stay out of the rebuilt components (a rebuild
     // from full gold would silently resurrect them), and the
     // tombstone set is CARRIED into the fresh store — gold is
@@ -1703,17 +1671,17 @@ object Dedup {
     // carried list is compacted to its distinct ids — removal-set-
     // sized, and the probe-side anti-join over the rebuilt
     // components is a no-op until new tombstones arrive.
-    val ts = tombstonesOf(spark, indexDir, commit)
+    val ts = tombstonesOf(spark, indexDir)
       .map(_.localCheckpoint())
-    val gold0 = spark.read.parquet(goldDir)
+    val gold0 = StoreCommit.read(spark, goldDir)
     val gold = ts.map(t =>
       gold0.join(broadcast(t), Seq("doc_id"), "left_anti"))
       .getOrElse(gold0)
-    // the whole three-component index replaces atomically through the
-    // commit protocol (the index is derived state — the staged
-    // replace just makes the rebuild itself crash-safe for free)
-    commit.replace(indexDir) { next =>
-      writeGoldIndex(gold, next, outFiles)
+    // the whole three-component index replaces atomically (the index
+    // is derived state — the staged replace just makes the rebuild
+    // itself crash-safe for free)
+    StoreCommit.replace(indexDir) { next =>
+      writeIndexVersion(gold, next, outFiles)
       ts.foreach(_.write.parquet(s"$next/tombstones"))
     }
   }
@@ -1725,12 +1693,11 @@ object Dedup {
     * probe join stays key-unique. The streaming pipeline
     * ([[graft.streaming.EventStreams.incrementalDedupSink]]) calls
     * this once per micro-batch. */
-  def appendGoldIndex(docs: DataFrame, path: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Unit =
-    // through commit.append: in manifest mode the committed file list
-    // extends AFTER all three component writes land — the append's
-    // one commit point, covering every component at once
-    commit.append(path) { live =>
+  def appendGoldIndex(docs: DataFrame, path: String): Unit =
+    // the committed file list extends AFTER all three component
+    // writes land — the append's one commit point, covering every
+    // component at once
+    StoreCommit.append(path) { live =>
       docs.select(fingerprint(col("text")).as("fp"), col("doc_id"))
         .groupBy(col("fp")).agg(min(col("doc_id")).as("exact_match"))
         .write.mode("append").parquet(s"$live/fingerprints")
@@ -1752,11 +1719,12 @@ object Dedup {
     * ~threshold appends). */
   val CompactFileThreshold = 64
 
-  /** Total parquet part files across the three index components —
-    * the fragmentation measure the compaction policy watches. */
+  /** Total committed part files across the three index components —
+    * the fragmentation measure the compaction policy watches (never a
+    * listing that could include torn junk). */
   def indexFileCount(path: String): Int =
     Seq("fingerprints", "bands", "shingles")
-      .map(c => graft.ops.StoreFiles.parquetFileCount(s"$path/$c")).sum
+      .map(StoreCommit.subFileCount(path, _)).sum
 
   /** Compaction policy for the append-mode index store: when
     * [[appendGoldIndex]] has fragmented the store past `threshold`
@@ -1767,12 +1735,8 @@ object Dedup {
     * call this once per micro-batch (a file listing when under
     * threshold — cheap); batch deployments can call it on a schedule. */
   def maybeCompactIndex(spark: SparkSession, goldDir: String,
-      indexDir: String, threshold: Int = CompactFileThreshold,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Boolean = {
-    // per-component commit probes, so manifest mode counts the
-    // COMMITTED list, never a listing that could include torn junk
-    val n = Seq("fingerprints", "bands", "shingles")
-      .map(c => commit.subFileCount(indexDir, c)).sum
+      indexDir: String, threshold: Int = CompactFileThreshold): Boolean = {
+    val n = indexFileCount(indexDir)
     // compact to ~half the threshold, so the next compaction is
     // ~threshold/2 appends away instead of immediate — without the
     // file target the rebuild writes at plan parallelism and can
@@ -1780,7 +1744,7 @@ object Dedup {
     // 81-file store "compacted" to 81 files)
     if (n > threshold) {
       rebuildIndex(spark, goldDir, indexDir,
-        outFiles = math.max(6, threshold / 2), commit = commit)
+        outFiles = math.max(6, threshold / 2))
       true
     } else false
   }
@@ -1803,17 +1767,15 @@ object Dedup {
     * new monotone id after its old id is tombstoned; the gold corpus
     * files themselves keep the removed rows — the index (what probes
     * consult) is what forgets them. */
-  def tombstoneGoldIndex(removed: DataFrame, path: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Unit =
-    commit.append(path) { live =>
+  def tombstoneGoldIndex(removed: DataFrame, path: String): Unit =
+    StoreCommit.append(path) { live =>
       removed.select(col("doc_id")).write.mode("append")
         .parquet(s"$live/tombstones")
     }
 
-  private def tombstonesOf(spark: SparkSession, path: String,
-      commit: graft.ops.StoreCommit): Option[DataFrame] =
-    if (commit.subFileCount(path, "tombstones") > 0)
-      Some(commit.readSub(spark, path, "tombstones")
+  private def tombstonesOf(spark: SparkSession, path: String): Option[DataFrame] =
+    if (StoreCommit.subFileCount(path, "tombstones") > 0)
+      Some(StoreCommit.readSub(spark, path, "tombstones")
         .select(col("doc_id")).distinct())
     else None
 
@@ -1831,65 +1793,49 @@ object Dedup {
     * the append-only contract is deliberately broken, as a
     * maintenance pass under the commit protocol:
     *
-    *  1. gold rewrites WITHOUT the tombstoned rows (rename-aside
-    *     replace — NOTE: gold is a FLAT append-only dir by the sink
-    *     family's contract, so its whole-dir swap needs an
-    *     atomic-rename filesystem; an object-store deployment runs
-    *     the vacuum against a posix/HDFS staging mount, or adopts a
-    *     versioned gold root before using it. The guard watermark
-    *     and sync marker are restored after the swap — the watermark
-    *     must stay at its PRE-vacuum value, because the retained max
-    *     id can be lower and replayed old batches must still drop);
+    *  1. gold rewrites WITHOUT the tombstoned rows
+    *     ([[graft.ops.StoreCommit.replace]]); the vacuumed ids join
+    *     the guard root's permanent `_removed` log, and the guard
+    *     watermark keeps its PRE-vacuum value (the retained max id can
+    *     be lower, and replayed old batches must still drop);
     *  2. the index rebuilds from the retained corpus with the
     *     tombstone list RESET (the removals are now physical — a
     *     carried list would be a permanent no-op tax on every probe).
     *
-    * Crash windows: a crash inside the gold swap recovers via
-    * [[graft.ops.ArtifactSwap.recover]] (run at entry); a crash
-    * between the gold swap and the index rebuild leaves the OLD index
+    * Crash windows: a crash inside the gold replace leaves the old
+    * version committed (recovered at entry); a crash between the
+    * gold replace and the index rebuild leaves the OLD index
     * whose tombstone filter still masks the removed docs — reads stay
     * correct, and the next vacuum (or the sink's crash-gated
     * [[rebuildIndex]]) converges the index. Returns (removed rows,
     * reclaimed gold bytes); (0, 0) when there is nothing to vacuum. */
-  def vacuumGold(spark: SparkSession, goldDir: String, indexDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): (Long, Long) = {
-    graft.ops.ArtifactSwap.recover(goldDir)
-    commit.recover(indexDir)
-    val ts = tombstonesOf(spark, indexDir, commit)
+  def vacuumGold(spark: SparkSession, goldDir: String,
+      indexDir: String): (Long, Long) = {
+    StoreCommit.recover(goldDir)
+    StoreCommit.recover(indexDir)
+    val ts = tombstonesOf(spark, indexDir)
       .map(_.localCheckpoint())
       .getOrElse(return (0L, 0L))
     if (ts.isEmpty) return (0L, 0L)
-    val bytesBefore = graft.ops.StoreFiles.dataBytes(goldDir)
-    val wm = graft.ops.StoreFiles.readIdWatermark(goldDir)
-    val gold0 = spark.read.parquet(goldDir)
+    val bytesBefore =
+      graft.ops.StoreFiles.dataBytes(StoreCommit.readDir(goldDir))
+    val gold0 = StoreCommit.read(spark, goldDir)
     val before = gold0.count()
     val retained = gold0
       .join(broadcast(ts), Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    // the PERMANENT removed-id log (round 17): after the physical
-    // rewrite, "absent from gold" no longer implies "never admitted",
-    // so the sink's post-crash anti-join fallback unions this log —
-    // a replayed batch must not re-admit a vacuumed doc. The log
-    // lives inside the root the swap destroys, so the carry (old log
-    // ∪ this vacuum's ids) is written INTO the staging dir — one
-    // atomic swap moves data and log together; a crash anywhere
-    // leaves the OLD root with the old log intact.
-    val carriedLog = graft.ops.SinkGuard.removedIds(spark, goldDir)
-      .map(_.select(col("doc_id")).unionByName(ts).distinct())
-      .getOrElse(ts).localCheckpoint()
-    graft.ops.SwapCommit.replace(goldDir) { next =>
-      retained.write.parquet(next)
-      carriedLog.write.parquet(s"$next/_removed")
-    }
-    // guard state died with the swapped-out root; the rewrite removed
-    // rows the index is ABOUT to forget too, so re-arming keeps the
-    // sink's prologue crash-gated (the index rebuild below IS the
-    // repair a crashed marker would trigger)
-    wm.foreach(graft.ops.StoreFiles.writeIdWatermark(goldDir, _))
-    graft.ops.StoreFiles.createMarker(goldDir, "_ids_synced")
-    commit.replace(indexDir)(next => writeGoldIndex(retained, next))
-    (before - retained.count(),
-      bytesBefore - graft.ops.StoreFiles.dataBytes(goldDir))
+    // the PERMANENT removed-id log: after the physical rewrite,
+    // "absent from gold" no longer implies "never admitted", so the
+    // sink's post-crash anti-join fallback unions this log — a
+    // replayed batch must not re-admit a vacuumed doc. Appended
+    // BEFORE the replace (a crash in between only logs ids gold still
+    // holds; the log is read through distinct). The log, watermark
+    // and sync marker live at the root and survive the replace.
+    graft.ops.SinkGuard.appendRemovedIds(ts, goldDir)
+    StoreCommit.replace(goldDir)(retained.write.parquet(_))
+    writeGoldIndex(retained, indexDir)
+    (before - retained.count(), bytesBefore -
+      graft.ops.StoreFiles.dataBytes(StoreCommit.readDir(goldDir)))
   }
 
   /** The vacuum, gated end to end: build gold + index on the ≤80%
@@ -1907,7 +1853,7 @@ object Dedup {
     val cutoff = d.agg(floor(max(col("doc_id")) * 0.8).cast("long"))
       .head().getLong(0)
     val gold = d.filter(col("doc_id") <= cutoff)
-    gold.write.parquet(goldDir)
+    StoreCommit.replace(goldDir)(gold.write.parquet(_))
     writeGoldIndex(gold, ixDir)
     tombstoneGoldIndex(
       gold.filter(col("doc_id") % 7 === VacuumResidue), ixDir)
@@ -1918,21 +1864,31 @@ object Dedup {
   /** Incremental dedup of `fresh` against a [[writeGoldIndex]] store —
     * no access to the gold texts, only the persisted index.
     * Tombstoned docs (see [[tombstoneGoldIndex]]) are invisible on
-    * every component. */
+    * every component. An index whose `bands.band_val` is not BINARY(16)
+    * (the md5-hex string of indexes written before the band table was
+    * unhexed) is refused: joined against fresh binary bands it would
+    * match no near-duplicate at all, silently. */
   def incrementalAgainstIndex(spark: SparkSession, fresh: DataFrame,
-      path: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): DataFrame = {
-    val ts = tombstonesOf(spark, path, commit)
+      path: String): DataFrame = {
+    val ts = tombstonesOf(spark, path)
     def dropTs(df: DataFrame, idCol: String): DataFrame =
       ts.map(t => df.join(
         broadcast(t.withColumnRenamed("doc_id", idCol)),
         Seq(idCol), "left_anti")).getOrElse(df)
+    val bands = StoreCommit.readSub(spark, path, "bands")
+    val bandType = bands.schema("band_val").dataType
+    if (bandType != org.apache.spark.sql.types.BinaryType)
+      throw new IllegalStateException(
+        s"gold index at $path stores bands.band_val as " +
+          s"${bandType.simpleString}, not binary: it predates the " +
+          "BINARY(16) band format and would match no near-duplicate. " +
+          "Rebuild it from the gold corpus with Dedup.rebuildIndex " +
+          "(the gold index rebuild).")
     incrementalCore(fresh,
-      dropTs(commit.readSub(spark, path, "fingerprints"), "exact_match"),
-      dropTs(commit.readSub(spark, path, "bands")
-        .select(col("doc_id"), col("band_idx"), col("band_val")),
+      dropTs(StoreCommit.readSub(spark, path, "fingerprints"), "exact_match"),
+      dropTs(bands.select(col("doc_id"), col("band_idx"), col("band_val")),
         "doc_id"),
-      dropTs(commit.readSub(spark, path, "shingles"), "doc_id"))
+      dropTs(StoreCommit.readSub(spark, path, "shingles"), "doc_id"))
   }
 
   private def incrementalCore(fresh: DataFrame, goldFp: DataFrame,
@@ -2220,9 +2176,9 @@ object Dedup {
     // cutoff split, the fingerprint lookup, the band join restricted to
     // gold × new, and the best-match precedence
     "dedup_incremental" -> incrementalOracleSql(""),
-    // same replay: the Spark side serves from a MANIFEST-committed
-    // index store, so the match proves the rename-free commit path
-    // end to end for the dedup family
+    // same replay: the Spark side serves from a committed index
+    // store, so the match proves the rename-free commit path end to
+    // end for the dedup family
     "dedup_incremental_manifest" -> incrementalOracleSql(""),
     // the vacuum gate: same incremental replay, but the gold side is
     // the RETAINED corpus (tombstoned doc_id % 7 = 3 rows physically

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.StoreCommit
 
 /** Product quantization (PQ) with asymmetric-distance (ADC) search over
   * the embeddings table — the memory-compression tier of the ANN
@@ -357,9 +358,8 @@ object ProductQuant {
           slice(col("rv"), m * SubDim + 1, SubDim), rcbs(m))
           .as(s"code$m")): _*)
 
-  /** Part-file count of a cell-partitioned codes store. */
-  def codesFileCount(codesDir: String): Int =
-    graft.ops.StoreFiles.parquetFileCount(codesDir)
+  /** Committed part-file count of a cell-partitioned codes store. */
+  def codesFileCount(codesDir: String): Int = StoreCommit.fileCount(codesDir)
 
   /** Codes-store compaction — same policy as
     * [[graft.ext.Dedup.maybeCompactIndex]]: past `threshold` part
@@ -375,10 +375,9 @@ object ProductQuant {
   def maybeCompactCodes(spark: SparkSession, goldDir: String,
       codesDir: String, coarse: Seq[(Int, Seq[Double])],
       rcbs: Seq[Seq[(Int, Seq[Double])]],
-      threshold: Int = Dedup.CompactFileThreshold,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Boolean = {
-    if (commit.fileCount(codesDir) > threshold) {
-      rebuildCodes(spark, goldDir, codesDir, coarse, rcbs, commit)
+      threshold: Int = Dedup.CompactFileThreshold): Boolean = {
+    if (codesFileCount(codesDir) > threshold) {
+      rebuildCodes(spark, goldDir, codesDir, coarse, rcbs)
       true
     } else false
   }
@@ -388,9 +387,8 @@ object ProductQuant {
     * window (the vector sink wires it as its guard-prologue repair). */
   def rebuildCodes(spark: SparkSession, goldDir: String,
       codesDir: String, coarse: Seq[(Int, Seq[Double])],
-      rcbs: Seq[Seq[(Int, Seq[Double])]],
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Unit = {
-    val gold = spark.read.parquet(goldDir)
+      rcbs: Seq[Seq[(Int, Seq[Double])]]): Unit = {
+    val gold = StoreCommit.read(spark, goldDir)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
     // materialize BEFORE the replace: the plan reads goldDir, not
@@ -398,61 +396,50 @@ object ProductQuant {
     val rebuilt = encodeFrameResidual(gold, coarse, rcbs)
       .repartition(coarse.size, col("cell"))
       .localCheckpoint()
-    // through the commit protocol (was an in-place overwrite):
-    // codes are derived state, but the staged replace also makes
-    // the rebuild itself crash-safe for free on both modes
-    commit.replace(codesDir) { next =>
+    // codes are derived state, but the staged replace also makes the
+    // rebuild itself crash-safe for free
+    StoreCommit.replace(codesDir) { next =>
       rebuilt.write.partitionBy("cell").parquet(next)
     }
   }
 
-  /** Remove vectors from the PQ family (round 17 — the codes tier's
-    * takedown, composing two already-gated pieces): the vector gold
-    * corpus rewrites without the removed ids (rename-aside replace —
-    * like [[graft.ext.Dedup.vacuumGold]], the flat gold dir's swap
-    * needs an atomic-rename filesystem; see the caveat there —
-    * watermark restored at its PRE-removal value, removed ids carried
-    * into the permanent `_removed` log the sink's post-crash fallback
-    * unions), then [[rebuildCodes]] — the same derived-state recovery
-    * compaction uses — re-derives the codes store from the retained
-    * gold through the commit protocol. A crash between the two leaves
-    * the marker down, so the next streamed batch's prologue runs the
-    * SAME rebuild. Returns (removed vectors, reclaimed gold bytes). */
+  /** Remove vectors from the PQ family (the codes tier's takedown,
+    * composing two already-gated pieces): the removed ids join the
+    * permanent `_removed` log the sink's post-crash fallback unions,
+    * the vector gold corpus rewrites without them
+    * ([[graft.ops.StoreCommit.replace]]; the root's watermark keeps
+    * its PRE-removal value), then [[rebuildCodes]] — the same
+    * derived-state recovery compaction uses — re-derives the codes
+    * store from the retained gold. A crash between the two leaves the
+    * marker down, so the next streamed batch's prologue runs the SAME
+    * rebuild. Returns (removed vectors, reclaimed gold bytes). */
   def vacuumVectorGold(spark: SparkSession, removedIds: DataFrame,
       goldDir: String, codesDir: String,
       coarse: Seq[(Int, Seq[Double])],
-      rcbs: Seq[Seq[(Int, Seq[Double])]],
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): (Long, Long) = {
-    graft.ops.ArtifactSwap.recover(goldDir)
-    commit.recover(codesDir)
+      rcbs: Seq[Seq[(Int, Seq[Double])]]): (Long, Long) = {
+    StoreCommit.recover(goldDir)
+    StoreCommit.recover(codesDir)
     val rem = removedIds.select(col("vec_id")).distinct()
       .localCheckpoint()
     if (rem.isEmpty) return (0L, 0L)
-    val bytesBefore = graft.ops.StoreFiles.dataBytes(goldDir)
-    val wm = graft.ops.StoreFiles.readIdWatermark(goldDir)
-    val gold0 = spark.read.parquet(goldDir)
+    val bytesBefore =
+      graft.ops.StoreFiles.dataBytes(StoreCommit.readDir(goldDir))
+    val gold0 = StoreCommit.read(spark, goldDir)
     val before = gold0.count()
     val retained = gold0
       .join(broadcast(rem), Seq("vec_id"), "left_anti")
       .localCheckpoint()
     val removedN = before - retained.count()
     if (removedN == 0L) return (0L, 0L)
-    // carry written INTO the staging dir: one atomic swap moves the
-    // retained rows and the removed-id log together (a crash leaves
-    // the old root with the old log — no window where the log is gone)
-    val carriedLog = graft.ops.SinkGuard.removedIds(spark, goldDir)
-      .map(_.select(col("vec_id")).unionByName(rem).distinct())
-      .getOrElse(rem).localCheckpoint()
+    // the log lands BEFORE the replace (a crash in between only logs
+    // ids gold still holds; the log is read through distinct)
+    graft.ops.SinkGuard.appendRemovedIds(rem, goldDir)
     graft.ops.StoreFiles.deleteMarker(goldDir, "_ids_synced")
-    graft.ops.SwapCommit.replace(goldDir) { next =>
-      retained.write.parquet(next)
-      carriedLog.write.parquet(s"$next/_removed")
-    }
-    wm.foreach(graft.ops.StoreFiles.writeIdWatermark(goldDir, _))
-    rebuildCodes(spark, goldDir, codesDir, coarse, rcbs, commit)
+    StoreCommit.replace(goldDir)(retained.write.parquet(_))
+    rebuildCodes(spark, goldDir, codesDir, coarse, rcbs)
     graft.ops.StoreFiles.createMarker(goldDir, "_ids_synced")
-    (removedN,
-      bytesBefore - graft.ops.StoreFiles.dataBytes(goldDir))
+    (removedN, bytesBefore -
+      graft.ops.StoreFiles.dataBytes(StoreCommit.readDir(goldDir)))
   }
 
   /** Driver-side query prep for the residual layout: query id, coarse
@@ -894,21 +881,21 @@ object ProductQuant {
   // so a serve pays query prep + one pruned codes scan, never the
   // 5-quantizer training pass. ----
 
-  /** Persist the OPQ serving artifact under `commit`: `rotation/`
+  /** Persist the OPQ serving artifact as one committed version:
+    * `rotation/`
     * (row-indexed d-vectors), `coarse/` (cid, cv), `codebooks/`
     * (m, cid, cv), and `codes/` (vec_id, label, cell, code0..M−1,
     * cell-partitioned — the ADC scan prunes to the probed cell).
     * Quantizer metadata is KB-sized; codes are the corpus-sized
     * component, repartitioned to one file per cell. */
   def writeOpqStore(spark: SparkSession, dir: String, store: String,
-      rot: Seq[Seq[Double]],
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Unit = {
+      rot: Seq[Seq[Double]]): Unit = {
     import spark.implicits._
     val (rvecs, coarse, rcbs) = opqTrain(spark, dir, rot)
     val codes = encodeFrameResidual(rvecs, coarse, rcbs)
       .repartition(KMeans.K, col("cell"))
       .localCheckpoint()
-    commit.replace(store) { next =>
+    StoreCommit.replace(store) { next =>
       rot.zipWithIndex.map { case (r, i) => (i, r) }.toDF("i", "vals")
         .coalesce(1).write.parquet(s"$next/rotation")
       coarse.toDF("cid", "cv")
@@ -924,17 +911,16 @@ object ProductQuant {
   /** Read the store's frozen quantizers back (bounded collects:
     * d² + K·d + M·Ks·SubDim doubles ≈ tens of KB), in the exact
     * positional order the driver math indexes by. */
-  def readOpqQuantizers(spark: SparkSession, store: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit)
+  def readOpqQuantizers(spark: SparkSession, store: String)
       : (Seq[Seq[Double]], Seq[(Int, Seq[Double])],
          Seq[Seq[(Int, Seq[Double])]]) = {
-    val rot = commit.readSub(spark, store, "rotation")
+    val rot = StoreCommit.readSub(spark, store, "rotation")
       .orderBy(col("i")).select(col("vals"))
       .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    val coarse = commit.readSub(spark, store, "coarse")
+    val coarse = StoreCommit.readSub(spark, store, "coarse")
       .orderBy(col("cid")).select(col("cid"), col("cv"))
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
-    val cbRows = commit.readSub(spark, store, "codebooks")
+    val cbRows = StoreCommit.readSub(spark, store, "codebooks")
       .orderBy(col("m"), col("cid"))
       .select(col("m"), col("cid"), col("cv"))
       .collect()
@@ -949,14 +935,13 @@ object ProductQuant {
     * anywhere. Doubles round-trip parquet exactly and the ADC sum
     * replays [[opqChainWith]]'s expression order, so serve ==
     * rebuild bit for bit (the gated contract). */
-  def opqServedTopK(spark: SparkSession, dir: String, store: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): DataFrame = {
-    val (rot, coarse, rcbs) = readOpqQuantizers(spark, store, commit)
+  def opqServedTopK(spark: SparkSession, dir: String, store: String): DataFrame = {
+    val (rot, coarse, rcbs) = readOpqQuantizers(spark, store)
     val (qid, qCid, dt) = opqQueryPrep(spark, dir, rot, coarse, rcbs)
     val adc = (0 until M).map { m =>
       element_at(array(dt(m).map(lit): _*), col(s"code$m") + lit(1))
     }.reduceLeft(_ + _)
-    commit.readSub(spark, store, "codes")
+    StoreCommit.readSub(spark, store, "codes")
       .filter(col("cell") === qCid && col("vec_id") =!= qid)
       .select(col("vec_id"), col("label"), adc.as("adc_dist"))
       .orderBy(col("adc_dist"), col("vec_id"))
@@ -974,15 +959,14 @@ object ProductQuant {
     * Candidate ids collect (k′ = 40 longs) and push down as an In
     * filter, the [[ivfPqRerankTopK]] point-fetch discipline. */
   def opqRerankServedTopK(spark: SparkSession, dir: String,
-      store: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): DataFrame = {
-    val (rot, coarse, rcbs) = readOpqQuantizers(spark, store, commit)
+      store: String): DataFrame = {
+    val (rot, coarse, rcbs) = readOpqQuantizers(spark, store)
     val (qid, qCid, dt) = opqQueryPrep(spark, dir, rot, coarse, rcbs)
     val qv = ScalarQuant.rotateLocal(KMeans.queryRow(spark, dir)._3, rot)
     val adc = (0 until M).map { m =>
       element_at(array(dt(m).map(lit): _*), col(s"code$m") + lit(1))
     }.reduceLeft(_ + _)
-    val candIds = commit.readSub(spark, store, "codes")
+    val candIds = StoreCommit.readSub(spark, store, "codes")
       .filter(col("cell") === qCid && col("vec_id") =!= qid)
       .select(col("vec_id"), adc.as("adc_dist"))
       .orderBy(col("adc_dist"), col("vec_id"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.SkewOps
+import graft.ops.StoreCommit
 
 /** Lexical retrieval (BM25) and hybrid lexical+vector fusion — the
   * search surface the ANN ladder lacks. A training-data platform
@@ -246,13 +247,8 @@ object Retrieval {
     * out at SERVE time from the integers, so an append merges stats
     * by summation and stays bit-identical to a rebuild.
     *
-    * Each sub-artifact commits through `commit`
-    * ([[graft.ops.StoreCommit]]): the default rename-aside on
-    * atomic-rename filesystems, or [[graft.ops.PointerCommit]]'s
-    * versioned dirs + one-file pointer on object storage — the
-    * round-15 verdict #1 seam. */
-  def writeBm25Index(td: DataFrame, out: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Unit = {
+    * Each sub-artifact is its own [[graft.ops.StoreCommit]] store. */
+  def writeBm25Index(td: DataFrame, out: String): Unit = {
     // The three td passes (meta agg, postings, committed ids) are
     // deliberate. r17 measured the "obvious" fix — write postings
     // first and derive meta + committed ids from the written store
@@ -267,12 +263,12 @@ object Retrieval {
     val meta = td.agg(count(lit(1)).as("n_docs"),
       sum(size(col("t")).cast("long")).as("sum_dl"))
       .coalesce(1).localCheckpoint()
-    commit.replace(s"$out/meta")(meta.write.parquet(_))
+    StoreCommit.replace(s"$out/meta")(meta.write.parquet(_))
     val post = postingsOf(td)
-    commit.replace(s"$out/postings")(
+    StoreCommit.replace(s"$out/postings")(
       post.write.partitionBy("tbucket").parquet(_))
     val ids = td.select(col("doc_id"))
-    commit.replace(committedDir(out))(ids.write.parquet(_))
+    StoreCommit.replace(committedDir(out))(ids.write.parquet(_))
   }
 
   /** Append a document batch to the index: new postings rows land in
@@ -286,12 +282,11 @@ object Retrieval {
     * docs uncommitted, and [[recoverBm25Store]] removes their partial
     * rows so a replay re-appends them from scratch. */
   def appendBm25Index(spark: SparkSession, batchTd: DataFrame,
-      store: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Unit = {
-    val old = commit.read(spark, s"$store/meta").head()
+      store: String): Unit = {
+    val old = StoreCommit.read(spark, s"$store/meta").head()
     val add = batchTd.agg(count(lit(1)).cast("long"),
       sum(size(col("t")).cast("long"))).head()
-    commit.append(s"$store/postings") { dir =>
+    StoreCommit.append(s"$store/postings") { dir =>
       postingsOf(batchTd).write.mode("append").partitionBy("tbucket")
         .parquet(dir)
     }
@@ -299,8 +294,8 @@ object Retrieval {
       .select(lit(old.getLong(0) + add.getLong(0)).as("n_docs"),
         lit(old.getLong(1) + add.getLong(1)).as("sum_dl"))
       .coalesce(1).localCheckpoint()
-    commit.replace(s"$store/meta")(meta.write.parquet(_))
-    commit.append(committedDir(store)) { dir =>
+    StoreCommit.replace(s"$store/meta")(meta.write.parquet(_))
+    StoreCommit.append(committedDir(store)) { dir =>
       batchTd.select(col("doc_id")).write.mode("append").parquet(dir)
     }
   }
@@ -315,14 +310,13 @@ object Retrieval {
     * hash-repartition on tbucket → overwrite; meta is untouched.
     * Returns whether a rewrite ran. */
   def maybeCompactPostings(spark: SparkSession, store: String,
-      threshold: Int = 256,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Boolean = {
-    val dir = commit.readDir(s"$store/postings")
+      threshold: Int = 256): Boolean = {
+    val dir = StoreCommit.readDir(s"$store/postings")
     val buckets =
       graft.ops.StoreFiles.partitionDirCount(dir, "tbucket=")
-    if (commit.fileCount(s"$store/postings") >
+    if (StoreCommit.fileCount(s"$store/postings") >
         math.max(threshold, 2 * buckets)) {
-      val compacted = commit.read(spark, s"$store/postings")
+      val compacted = StoreCommit.read(spark, s"$store/postings")
         .select(col("doc_id"), col("dl"), col("term"), col("tf"),
           col("tbucket").cast("int").as("tbucket"))
         .repartition(col("tbucket"))
@@ -332,16 +326,16 @@ object Retrieval {
       // store IS the source of truth for the lexical index — a crash
       // inside an in-place overwrite would lose committed docs
       // unrecoverably
-      commit.replace(s"$store/postings") { next =>
+      StoreCommit.replace(s"$store/postings") { next =>
         compacted.write.partitionBy("tbucket").parquet(next)
       }
       // the committed log accrues one small file per batch — compact
       // it on the same trigger (derived from nothing: it IS the
       // guard's key, so the rewrite rides the same commit protocol)
-      if (commit.fileCount(committedDir(store)) > 0) {
-        val docs = commit.read(spark, committedDir(store))
+      if (StoreCommit.fileCount(committedDir(store)) > 0) {
+        val docs = StoreCommit.read(spark, committedDir(store))
           .select(col("doc_id")).distinct().coalesce(1).localCheckpoint()
-        commit.replace(committedDir(store)) { next =>
+        StoreCommit.replace(committedDir(store)) { next =>
           docs.write.parquet(next)
         }
       }
@@ -367,10 +361,9 @@ object Retrieval {
   def committedDir(store: String): String = s"$store/committed"
 
   /** Committed doc_ids (empty frame when the log does not exist). */
-  private def committedDocs(spark: SparkSession, store: String,
-      commit: graft.ops.StoreCommit): DataFrame = {
-    if (commit.fileCount(committedDir(store)) > 0)
-      commit.read(spark, committedDir(store)).select("doc_id").distinct()
+  private def committedDocs(spark: SparkSession, store: String): DataFrame = {
+    if (StoreCommit.fileCount(committedDir(store)) > 0)
+      StoreCommit.read(spark, committedDir(store)).select("doc_id").distinct()
     else {
       import org.apache.spark.sql.types._
       spark.createDataFrame(
@@ -385,48 +378,41 @@ object Retrieval {
     * — remove them so the replay guard re-processes those docs from
     * scratch, and re-derive meta when rows were removed (the crash
     * may have landed either side of the meta rewrite). The rewrite
-    * itself goes through [[graft.ops.ArtifactSwap.writeAndSwap]]
-    * (rename-aside), so recovery cannot introduce the very tear it
-    * repairs. Cost: one column-pruned doc_id scan per call — the same
-    * class as the old postings-keyed guard scan this protocol
-    * replaces. Returns whether a repair ran. */
-  def recoverBm25Store(spark: SparkSession, store: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Boolean = {
+    * itself goes through [[graft.ops.StoreCommit.replace]], so
+    * recovery cannot introduce the very tear it repairs. Cost: one
+    * column-pruned doc_id scan per call — the same class as the old
+    * postings-keyed guard scan this protocol replaces. Returns whether
+    * a repair ran. */
+  def recoverBm25Store(spark: SparkSession, store: String): Boolean = {
     // finish/abort any half-done commit — postings compaction,
     // committed-log compaction, meta rewrite, or a previous recovery
-    // — before probing liveness (round-14 ADVICE: a crash inside the
-    // committed-log swap used to leave the log renamed aside with no
-    // caller ever recovering it)
-    commit.recover(s"$store/postings")
-    commit.recover(committedDir(store))
-    commit.recover(s"$store/meta")
-    val dir = commit.readDir(s"$store/postings")
-    if (commit.fileCount(s"$store/postings") == 0) return false
-    // Non-empty postings with NO committed log: if the postings write
-    // job COMMITTED (`_SUCCESS` present — FileOutputCommitter writes
-    // it last, so every posted doc is fully present), this is either
-    // a store seeded outside the sink protocol (pre-committed-log
-    // writer, e.g. a cached ScaleUp index) or a seed that crashed
-    // between the postings commit and the committed-log write; both
-    // recover by BOOTSTRAPPING the log from the live postings
-    // (round-14 ADVICE: classifying every doc as torn here swapped in
-    // an empty store). Without `_SUCCESS` the seed itself tore and
-    // the torn path below removes the partial rows.
-    if (commit.fileCount(committedDir(store)) == 0 &&
-        graft.ops.StoreFiles.markerExists(dir, "_SUCCESS")) {
-      val docs = commit.read(spark, s"$store/postings")
+    // — before probing liveness
+    StoreCommit.recover(s"$store/postings")
+    StoreCommit.recover(committedDir(store))
+    StoreCommit.recover(s"$store/meta")
+    if (StoreCommit.fileCount(s"$store/postings") == 0) return false
+    // Committed postings with NO committed log: a store seeded outside
+    // the sink protocol (a pre-committed-log writer, e.g. a cached
+    // ScaleUp index) or a seed that crashed between the postings
+    // commit and the committed-log write; both recover by
+    // BOOTSTRAPPING the log from the committed postings (classifying
+    // every doc as torn here would replace the store with an empty
+    // one). A seed whose postings version never completed was never
+    // committed, and the recover above deleted it.
+    if (StoreCommit.fileCount(committedDir(store)) == 0) {
+      val docs = StoreCommit.read(spark, s"$store/postings")
         .select(col("doc_id"))
         .distinct().coalesce(1).localCheckpoint()
-      commit.replace(committedDir(store)) { next =>
+      StoreCommit.replace(committedDir(store)) { next =>
         docs.write.parquet(next)
       }
-      if (!metaConsistent(spark, store, commit))
-        rederiveMeta(spark, store, commit)
+      if (!metaConsistent(spark, store))
+        rederiveMeta(spark, store)
       return true
     }
-    val torn = commit.read(spark, s"$store/postings")
+    val torn = StoreCommit.read(spark, s"$store/postings")
       .select("doc_id").distinct()
-      .join(committedDocs(spark, store, commit), Seq("doc_id"), "left_anti")
+      .join(committedDocs(spark, store), Seq("doc_id"), "left_anti")
       .localCheckpoint()
     if (torn.isEmpty) {
       // no torn postings, but a crash inside a previous META rewrite
@@ -434,23 +420,23 @@ object Retrieval {
       // here used to skip meta entirely, so broken meta never
       // self-healed) — validate n_docs against the committed count
       // and re-derive on any mismatch
-      if (metaConsistent(spark, store, commit)) return false
-      rederiveMeta(spark, store, commit)
+      if (metaConsistent(spark, store)) return false
+      rederiveMeta(spark, store)
       return true
     }
-    val clean = commit.read(spark, s"$store/postings")
+    val clean = StoreCommit.read(spark, s"$store/postings")
       .join(torn, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("dl"), col("term"), col("tf"),
         col("tbucket").cast("int").as("tbucket"))
       .repartition(col("tbucket"))
       .localCheckpoint()
-    commit.replace(s"$store/postings") { next =>
+    StoreCommit.replace(s"$store/postings") { next =>
       clean.write.partitionBy("tbucket").parquet(next)
     }
     // meta from the pinned clean frame, not a store re-read: a fully
-    // torn seed leaves the swapped-in store EMPTY (no files to infer
+    // torn seed leaves the replaced store EMPTY (no files to infer
     // a schema from), while clean's schema is known
-    writeMetaFrom(spark, clean, store, commit)
+    writeMetaFrom(spark, clean, store)
     true
   }
 
@@ -460,13 +446,12 @@ object Retrieval {
     * sum_dl is derived by the same single pass that derives n_docs,
     * so a matched n_docs from an intact file implies a matched
     * sum_dl). */
-  private def metaConsistent(spark: SparkSession, store: String,
-      commit: graft.ops.StoreCommit): Boolean =
+  private def metaConsistent(spark: SparkSession, store: String): Boolean =
     scala.util.Try {
-      val m = commit.read(spark, s"$store/meta")
+      val m = StoreCommit.read(spark, s"$store/meta")
         .select(col("n_docs"), col("sum_dl")).head()
       !m.isNullAt(0) && !m.isNullAt(1) &&
-        m.getLong(0) == commit.read(spark, s"$store/postings")
+        m.getLong(0) == StoreCommit.read(spark, s"$store/postings")
           .select(col("doc_id")).distinct().count()
     }.getOrElse(false)
 
@@ -475,19 +460,18 @@ object Retrieval {
     * rewrite a crash landed on. Routed through the commit protocol so
     * the repair cannot itself tear meta (round-14 ADVICE: this was a
     * plain overwrite). */
-  private def rederiveMeta(spark: SparkSession, store: String,
-      commit: graft.ops.StoreCommit): Unit =
+  private[graft] def rederiveMeta(spark: SparkSession, store: String): Unit =
     writeMetaFrom(spark,
-      commit.read(spark, s"$store/postings"), store, commit)
+      StoreCommit.read(spark, s"$store/postings"), store)
 
   private def writeMetaFrom(spark: SparkSession, postings: DataFrame,
-      store: String, commit: graft.ops.StoreCommit): Unit = {
+      store: String): Unit = {
     val m = postings
       .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("dl").cast("long")).as("sum_dl"))
       .coalesce(1).localCheckpoint()
-    commit.replace(s"$store/meta") { next =>
+    StoreCommit.replace(s"$store/meta") { next =>
       m.write.parquet(next)
     }
   }
@@ -499,20 +483,18 @@ object Retrieval {
     * never the corpus. The in-bucket non-query terms are cut by the
     * same broadcast term join as the live path. */
   def bm25FromIndex(spark: SparkSession, store: String,
-      docsDir: String, nq: Int,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): DataFrame =
-    bm25FromIndexTd(spark, store, toksD(spark, docsDir), nq, commit)
+      docsDir: String, nq: Int): DataFrame =
+    bm25FromIndexTd(spark, store, toksD(spark, docsDir), nq)
 
   /** [[bm25FromIndex]] over an explicit query-side td frame — the
     * composable core the takedown gate feeds the RETAINED corpus. */
   private def bm25FromIndexTd(spark: SparkSession, store: String,
-      queryTd: DataFrame, nq: Int,
-      commit: graft.ops.StoreCommit): DataFrame = {
-    val meta = commit.read(spark, s"$store/meta").head()
+      queryTd: DataFrame, nq: Int): DataFrame = {
+    val meta = StoreCommit.read(spark, s"$store/meta").head()
     // serve-time takedown correction: n/avgdl shift by the removed
     // docs' (count, Σdl) — removal-sized reads — so a masked store
     // scores EXACTLY like a fresh build on the retained corpus
-    val rem = removedBm25(spark, store, commit)
+    val rem = removedBm25(spark, store)
     val remAgg = rem.map(_.agg(count(lit(1)), sum(col("dl"))).head())
     val n = meta.getLong(0) - remAgg.map(_.getLong(0)).getOrElse(0L)
     require(n > 0, s"takedown removed every indexed doc at $store")
@@ -524,7 +506,7 @@ object Retrieval {
     val buckets = qt
       .select(pmod(hash(col("term")), lit(TermBuckets))).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val tf0 = commit.read(spark, s"$store/postings")
+    val tf0 = StoreCommit.read(spark, s"$store/postings")
       .filter(col("tbucket").isin(buckets: _*))
       .join(broadcast(qt.select(col("term")).distinct()), "term")
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
@@ -539,34 +521,28 @@ object Retrieval {
   /** The standard query batch answered from an existing index store
     * (the steady-state serve form ScaleUp times). */
   def bm25BatchFromIndex(spark: SparkSession, dir: String,
-      store: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): DataFrame =
-    servedBatch(spark, dir, store, commit)
+      store: String): DataFrame =
+    servedBatch(spark, dir, store)
 
   private def servedBatch(spark: SparkSession, dir: String,
-      store: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): DataFrame =
+      store: String): DataFrame =
     bm25TopPerQuery(
-        bm25FromIndex(spark, store, dir, BatchQueries, commit), BmK)
+        bm25FromIndex(spark, store, dir, BatchQueries), BmK)
       .select(col("query_id"), col("doc_id"), col("matched_terms"),
         col("bm25_micronats"), col("rank").cast("long").as("rank"))
       .orderBy(col("query_id"), col("rank"))
 
   /** DRIVER-GATED serve path: build the index into a scratch dir,
     * answer the query batch from it — oracle = `rag_bm25_batch`'s
-    * replay verbatim (serve == rebuild). The store commits through
-    * the MANIFEST protocol ([[graft.ops.ManifestCommit]] — versioned
-    * dirs + pointer flip + committed file list, the rename-free end
-    * of round-16 verdict #2): the gate proves a manifest-committed
-    * store builds AND serves hash-exactly, with every read resolving
-    * the committed file list instead of a directory listing.
-    * `rag_bm25_index_append` keeps the rename-aside mode covered, and
-    * ManifestSinksSpec covers pointer-mode crash shapes under
-    * `marksuccessfuljobs=false`. */
+    * replay verbatim (serve == rebuild): the gate proves a committed
+    * store ([[graft.ops.StoreCommit]]) builds AND serves hash-exactly,
+    * with every read resolving the committed file list instead of a
+    * directory listing. ManifestSinksSpec covers the crash shapes
+    * under `marksuccessfuljobs=false`. */
   def bm25Served(spark: SparkSession, dir: String): DataFrame = {
     val store = graft.ops.Scratch.dir("graft_bm25_served") + "/ix"
-    writeBm25Index(toksD(spark, dir), store, graft.ops.ManifestCommit)
-    servedBatch(spark, dir, store, graft.ops.ManifestCommit)
+    writeBm25Index(toksD(spark, dir), store)
+    servedBatch(spark, dir, store)
   }
 
   /** DRIVER-GATED append path: build the index from the ~90% gold
@@ -711,10 +687,9 @@ object Retrieval {
   /** The pending removed set as (doc_id, dl), None when the takedown
     * tier is empty. Distinct on doc_id (a replayed tombstone append
     * is harmless; dl is a pure function of the doc). */
-  private def removedBm25(spark: SparkSession, store: String,
-      commit: graft.ops.StoreCommit): Option[DataFrame] =
-    if (commit.fileCount(removedDir(store)) > 0)
-      Some(commit.read(spark, removedDir(store))
+  private def removedBm25(spark: SparkSession, store: String): Option[DataFrame] =
+    if (StoreCommit.fileCount(removedDir(store)) > 0)
+      Some(StoreCommit.read(spark, removedDir(store))
         .groupBy(col("doc_id")).agg(first(col("dl")).as("dl")))
     else None
 
@@ -726,18 +701,17 @@ object Retrieval {
     * (resolving each doc's dl) happens HERE, at maintenance time,
     * so the per-serve correction stays removal-sized. */
   def tombstoneBm25Docs(spark: SparkSession, removedIds: DataFrame,
-      store: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Unit = {
+      store: String): Unit = {
     // finish a torn prior vacuum first: tombstoning on top of a
     // half-applied one would mix exact and degraded corrections
-    recoverBm25Takedown(spark, store, commit)
-    val withDl = commit.read(spark, s"$store/postings")
+    recoverBm25Takedown(spark, store)
+    val withDl = StoreCommit.read(spark, s"$store/postings")
       .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
       .join(broadcast(removedIds.select(col("doc_id")).distinct()),
         Seq("doc_id"))
       .localCheckpoint()
     if (withDl.isEmpty) return
-    commit.append(removedDir(store)) { dir =>
+    StoreCommit.append(removedDir(store)) { dir =>
       withDl.write.mode("append").parquet(dir)
     }
     // the masked state is exact by construction — stamp it consistent
@@ -755,22 +729,21 @@ object Retrieval {
     * list reset, shifts scores conservatively and is closed by
     * [[recoverBm25Takedown]]). Returns (removed docs, reclaimed
     * postings bytes). */
-  def vacuumBm25(spark: SparkSession, store: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): (Long, Long) = {
-    val rem = removedBm25(spark, store, commit)
+  def vacuumBm25(spark: SparkSession, store: String): (Long, Long) = {
+    val rem = removedBm25(spark, store)
       .map(_.localCheckpoint()).getOrElse(return (0L, 0L))
     val remIds = rem.select(col("doc_id"))
     val nRem = rem.count()
     if (nRem == 0) return (0L, 0L)
     val bytesBefore =
-      graft.ops.StoreFiles.dirBytes(commit.readDir(s"$store/postings"))
+      graft.ops.StoreFiles.dirBytes(StoreCommit.readDir(s"$store/postings"))
     graft.ops.StoreFiles.deleteMarker(store, TakedownMarker)
-    val retained = commit.read(spark, s"$store/postings")
+    val retained = StoreCommit.read(spark, s"$store/postings")
       .join(broadcast(remIds), Seq("doc_id"), "left_anti")
       .withColumn("tbucket", col("tbucket").cast("int"))
       .repartition(col("tbucket"))
       .localCheckpoint()
-    commit.replace(s"$store/postings") { next =>
+    StoreCommit.replace(s"$store/postings") { next =>
       retained.write.partitionBy("tbucket").parquet(next)
     }
     val meta = retained
@@ -778,27 +751,23 @@ object Retrieval {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("dl").cast("long")).as("sum_dl"))
       .coalesce(1).localCheckpoint()
-    commit.replace(s"$store/meta")(meta.write.parquet(_))
+    StoreCommit.replace(s"$store/meta")(meta.write.parquet(_))
     // the committed replay log keeps the removed ids ON PURPOSE: ids
     // are never reused, and a replayed old batch containing a removed
     // doc must stay a no-op, not re-admit it.
-    // The reset commits an EMPTY removed version — the marker write
-    // materializes the staging dir (a bodiless replace would leave
-    // the swap with nothing to rename)
-    commit.replace(removedDir(store))(next =>
-      graft.ops.StoreFiles.createMarker(next, "_reset"))
+    // The reset commits an EMPTY removed version.
+    StoreCommit.replace(removedDir(store))(_ => ())
     graft.ops.StoreFiles.createMarker(store, TakedownMarker)
     (nRem, bytesBefore - graft.ops.StoreFiles.dirBytes(
-      commit.readDir(s"$store/postings")))
+      StoreCommit.readDir(s"$store/postings")))
   }
 
   /** Close a torn [[vacuumBm25]] (marker down, removals pending):
     * finish the vacuum. Steady state pays two existence probes. */
-  def recoverBm25Takedown(spark: SparkSession, store: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Boolean =
-    if (commit.fileCount(removedDir(store)) > 0 &&
+  def recoverBm25Takedown(spark: SparkSession, store: String): Boolean =
+    if (StoreCommit.fileCount(removedDir(store)) > 0 &&
         !graft.ops.StoreFiles.markerExists(store, TakedownMarker)) {
-      vacuumBm25(spark, store, commit)
+      vacuumBm25(spark, store)
       true
     } else false
 
@@ -824,8 +793,7 @@ object Retrieval {
       td.filter(col("doc_id") % 9 === TakedownResidue)
         .select(col("doc_id")), store)
     def serve(): DataFrame = bm25TopPerQuery(
-        bm25FromIndexTd(spark, store, retainedTd, BatchQueries,
-          graft.ops.SwapCommit), BmK)
+        bm25FromIndexTd(spark, store, retainedTd, BatchQueries), BmK)
       .select(col("query_id"), col("doc_id"), col("matched_terms"),
         col("bm25_micronats"), col("rank").cast("long").as("rank"))
     val masked = serve().localCheckpoint()
@@ -870,8 +838,7 @@ object Retrieval {
         .select(col("doc_id")), Seq("doc_id"))
     appendBm25Index(spark, tdOf(incoming), store)
     bm25TopPerQuery(
-        bm25FromIndexTd(spark, store, tdOf(v2), BatchQueries,
-          graft.ops.SwapCommit), BmK)
+        bm25FromIndexTd(spark, store, tdOf(v2), BatchQueries), BmK)
       .select(col("query_id"), col("doc_id"), col("matched_terms"),
         col("bm25_micronats"), col("rank").cast("long").as("rank"))
       .orderBy(col("query_id"), col("rank"))

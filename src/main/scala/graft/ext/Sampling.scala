@@ -504,11 +504,21 @@ object Sampling {
   }
 
   /** Table name for the persisted split-label artifact under a
-    * curated-output dir (parquet at `<outDir>/split_labels.parquet`,
-    * matching the [[graft.Tables]] path convention so
-    * [[graft.pipeline.GoldLayout.ensureBucketedTable]] can bucket it
-    * like any other table). */
+    * curated-output dir: a [[graft.ops.StoreCommit]] store at
+    * `<outDir>/split_labels` whose committed version holds
+    * `split_labels.parquet`, matching the [[graft.Tables]] path
+    * convention so [[graft.pipeline.GoldLayout.ensureBucketedTable]]
+    * can bucket the committed version like any other table. */
   val SplitLabelsTable = "split_labels"
+
+  private def labelsRoot(outDir: String): String = s"$outDir/$SplitLabelsTable"
+
+  /** The bucketed catalog table over the committed label version — a
+    * new version is a new path, so a stale layout is never served. */
+  private def labelsTable(spark: SparkSession, outDir: String): String =
+    graft.pipeline.GoldLayout.ensureBucketedTable(spark,
+      graft.ops.StoreCommit.readDir(labelsRoot(outDir)), SplitLabelsTable,
+      "doc_id")
 
   /** Persist the doc_id → (cluster_id, split) label table as a gold
     * artifact, doc_id-bucketed. This is THE fix for the split's 100×
@@ -546,10 +556,9 @@ object Sampling {
     * [[mergeSplitLabelsArtifact]] per batch). */
   def writeLabelArtifact(spark: SparkSession, labels: DataFrame,
       outDir: String): String = {
-    labels.write.mode("overwrite")
-      .parquet(s"$outDir/$SplitLabelsTable.parquet")
-    graft.pipeline.GoldLayout.ensureBucketedTable(
-      spark, outDir, SplitLabelsTable, "doc_id")
+    graft.ops.StoreCommit.replace(labelsRoot(outDir))(next =>
+      labels.write.parquet(s"$next/$SplitLabelsTable.parquet"))
+    labelsTable(spark, outDir)
   }
 
   /** Split labels from the persisted artifact instead of the live CC
@@ -558,28 +567,26 @@ object Sampling {
     * ([[GoldLayout.ensureBucketedTable]] is build-once per source
     * fingerprint, so repeat calls are a catalog lookup). */
   def trainTestSplitFrom(spark: SparkSession, labelsDir: String): DataFrame =
-    spark.table(graft.pipeline.GoldLayout.ensureBucketedTable(
-      spark, labelsDir, SplitLabelsTable, "doc_id"))
+    spark.table(labelsTable(spark, labelsDir))
 
   /** Merge a batch into the PERSISTED label artifact
     * ([[writeSplitLabels]]): read the stored labels, run
     * [[mergeBatchLabels]], and replace the artifact through
-    * [[graft.ops.ArtifactSwap]] — the merged frame fully materializes
-    * aside, the swap is rename-rename, and every crash window rolls
-    * forward or back at the next access (a plain delete-then-move has
-    * a window where the artifact is simply GONE — the round-11 review
-    * finding). The bucketed catalog layout re-derives on next read
-    * because [[graft.pipeline.GoldLayout.ensureBucketedTable]]
-    * fingerprints the source files — a stale layout is never
-    * served. */
+    * [[graft.ops.StoreCommit]] — the merged frame fully materializes
+    * in the next version, and every crash window rolls forward or
+    * back at the next access (a plain delete-then-move has a window
+    * where the artifact is simply GONE). The bucketed catalog layout
+    * re-derives on next read because the committed version is a new
+    * path — a stale layout is never served. */
   def mergeSplitLabelsArtifact(spark: SparkSession, labelsDir: String,
       gold: DataFrame, batch: DataFrame): Unit = {
-    val live = s"$labelsDir/$SplitLabelsTable.parquet"
-    graft.ops.ArtifactSwap.recover(live)
-    val merged = mergeBatchLabels(spark.read.parquet(live), gold, batch)
-    graft.ops.ArtifactSwap.writeAndSwap(live) { tmp =>
-      merged.write.mode("overwrite").parquet(tmp)
-    }
+    val root = labelsRoot(labelsDir)
+    val table = s"$SplitLabelsTable.parquet"
+    graft.ops.StoreCommit.recover(root)
+    val merged = mergeBatchLabels(
+      graft.ops.StoreCommit.readSub(spark, root, table), gold, batch)
+    graft.ops.StoreCommit.replace(root)(next =>
+      merged.write.parquet(s"$next/$table"))
   }
 
   /** Sample size for [[prioritySample]]. */

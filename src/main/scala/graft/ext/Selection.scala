@@ -373,42 +373,44 @@ object Selection {
   /** On-disk layout of the drift-monitor artifact. */
   val TokenCountsTable = "token_counts"
 
+  /** The [[graft.ops.StoreCommit]] root of the count artifact under
+    * `countsDir`. Seed it with `StoreCommit.replace(root)` over
+    * [[tokenCountsOn]]. */
+  def tokenCountsRoot(countsDir: String): String =
+    s"$countsDir/$TokenCountsTable.parquet"
+
+  /** The last batch id folded into the committed counts, None when no
+    * batch was recorded (a seeded table merges everything). */
+  def appliedBatchId(countsDir: String): Option[Long] =
+    graft.ops.StoreFiles.readLong(
+      graft.ops.StoreCommit.readDir(tokenCountsRoot(countsDir)), "_batch_id")
+
   /** Fold a micro-batch into the PERSISTED count artifact with
     * exactly-once semantics: the applied batch id rides INSIDE the
-    * swapped directory as an underscore-prefixed marker file (parquet
+    * committed version as an underscore-prefixed marker file (parquet
     * readers skip `_`-files), so the marker and the counts commit in
-    * the SAME atomic rename — a crash before the swap leaves the old
+    * the SAME pointer flip — a crash before the flip leaves the old
     * artifact + old marker (replay re-merges correctly), a crash
     * after leaves the new artifact + new marker (replay no-ops).
-    * Write-aside-then-swap, the [[Sampling.mergeSplitLabelsArtifact]]
-    * idiom. Returns true when the batch was applied, false on a
-    * replay no-op. */
+    * Returns true when the batch was applied, false on a replay
+    * no-op. */
   def mergeTokenCountsArtifact(spark: SparkSession, countsDir: String,
       batch: DataFrame, batchId: Long): Boolean = {
-    val live = s"$countsDir/$TokenCountsTable.parquet"
-    graft.ops.ArtifactSwap.recover(live)
-    // Existence of the LIVE DIRECTORY (not the marker) decides whether
-    // to merge: a count table seeded via the documented batch path
-    // (`tokenCountsOn(docs).write.parquet`) has no _batch_id marker,
-    // and treating that as "no artifact" would silently replace the
-    // accumulated counts with just this batch — the
-    // re-initialize-from-one-batch failure the ArtifactSwap work
-    // closed, through a different door. A missing marker on an
-    // existing table means lastApplied = -1 (merge everything).
-    val liveDir = new java.io.File(live)
-    val marker = new java.io.File(s"$live/_batch_id")
-    if (marker.exists() &&
-        java.nio.file.Files.readString(marker.toPath).trim.toLong >= batchId)
-      return false
+    val root = tokenCountsRoot(countsDir)
+    graft.ops.StoreCommit.recover(root)
+    if (appliedBatchId(countsDir).exists(_ >= batchId)) return false
+    // Committed counts (not the marker) decide whether to merge: a
+    // seeded table has no _batch_id marker, and treating that as "no
+    // artifact" would silently replace the accumulated counts with
+    // just this batch. A missing marker on committed counts means
+    // lastApplied = -1 (merge everything).
     val merged =
-      if (liveDir.exists())
-        mergeTokenCounts(spark.read.parquet(live), batch)
+      if (graft.ops.StoreCommit.fileCount(root) > 0)
+        mergeTokenCounts(graft.ops.StoreCommit.read(spark, root), batch)
       else tokenCountsOn(batch)
-    graft.ops.ArtifactSwap.writeAndSwap(live) { tmp =>
-      merged.write.mode("overwrite").parquet(tmp)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(tmp, "_batch_id"), batchId.toString)
-      ()
+    graft.ops.StoreCommit.replace(root) { next =>
+      merged.write.parquet(next)
+      graft.ops.StoreFiles.writeLong(next, "_batch_id", batchId)
     }
     true
   }
@@ -418,7 +420,7 @@ object Selection {
   def jsDivergenceFromArtifact(spark: SparkSession,
       countsDir: String): DataFrame =
     jsDivergenceFromCounts(
-      spark.read.parquet(s"$countsDir/$TokenCountsTable.parquet"))
+      graft.ops.StoreCommit.read(spark, tokenCountsRoot(countsDir)))
 
   /** [[jsDivergence]] over an explicit count table — the scoring leg
     * the persisted-artifact path shares with the fresh path. */

@@ -422,7 +422,7 @@ object TextOps {
     * lifecycle keeps current anyway (build → append → stream). */
   def termFreqsFromPostings(spark: SparkSession,
       postingsDir: String): DataFrame =
-    spark.read.parquet(postingsDir)
+    graft.ops.StoreCommit.read(spark, postingsDir)
       .groupBy(col("term"))
       .agg(sum(col("tf")).cast("long").as("cnt"))
       .select(col("term").as("token"), col("cnt"))
@@ -595,9 +595,9 @@ object TextOps {
     * counts them), which can shift checkpoint boundaries only when
     * the corpus max-id doc itself has no tokens. */
   def heapsFitFromStore(spark: SparkSession, store: String): DataFrame = {
-    val m = spark.read.parquet(Retrieval.committedDir(store))
+    val m = graft.ops.StoreCommit.read(spark, Retrieval.committedDir(store))
       .agg(max(col("doc_id"))).head().getLong(0) + 1
-    val p = spark.read.parquet(s"$store/postings")
+    val p = graft.ops.StoreCommit.read(spark, s"$store/postings")
     val jOf = floor(col("doc_id") * lit(HeapsPoints.toLong) / lit(m))
       .cast("long")
     val tokJ = p.groupBy(col("doc_id"))

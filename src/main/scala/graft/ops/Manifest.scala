@@ -2,37 +2,34 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The committed FILE LIST of a store version — the piece that makes
-  * the pointer protocol rename-free end to end (round-16 verdict #2).
+/** The file half of [[StoreCommit]]: the committed FILE LIST of a
+  * store version.
   *
-  * [[PointerCommit]] made the whole-store replace object-store-safe
-  * (versioned dirs + a one-file pointer flip), but per-object writes
-  * INSIDE a version still ride Spark's FileOutputCommitter, whose
-  * task-file renames at job commit are non-atomic on S3-class stores:
-  * a crash mid-commit can leave a PARTIAL set of task files already
-  * renamed into the destination, and any reader that trusts the
-  * directory LISTING trusts those torn renames. The manifest removes
-  * that trust: each commit records the version's data files in one
-  * small `_MANIFEST` object (write-temp + single-file rename — the
-  * same atomicity class as the pointer itself), and manifest readers
-  * read EXACTLY the listed files. Objects a torn job commit strands
-  * in the directory are simply invisible — no recovery scan has to
-  * find them, and the engine's own correctness no longer depends on
-  * any directory rename or listing consistency.
+  * The pointer flip ([[PointerSwap]]) commits a whole version, but
+  * per-object writes INSIDE a version ride Spark's FileOutputCommitter,
+  * whose task-file renames at job commit are non-atomic on S3-class
+  * stores: a crash mid-commit can leave a PARTIAL set of task files
+  * already renamed into the destination, and any reader that trusts
+  * the directory LISTING trusts those torn renames. The manifest
+  * removes that trust: each commit records the version's data files in
+  * one small `_MANIFEST` object (write-temp + single-file rename — the
+  * same atomicity class as the pointer itself), and readers read
+  * EXACTLY the listed files. Objects a torn job commit strands in the
+  * directory are invisible — no recovery scan has to find them.
   *
-  * Append protocol ([[ManifestCommit.append]]): new objects land
-  * first (uniquely named by the writing job), then the manifest is
-  * extended by the delta of the writer's own before/after listings —
+  * Append protocol ([[StoreCommit.append]]): new objects land first
+  * (uniquely named by the writing job), then the manifest is extended
+  * by the delta of the writer's own before/after listings —
   * single-writer, so the delta is exactly this append's objects, and
   * junk stranded by an EARLIER torn job (present in the before
-  * listing) can never be adopted. A crash before the manifest
-  * replace leaves the new objects unlisted → invisible → the sink's
+  * listing) can never be adopted. A crash before the manifest replace
+  * leaves the new objects unlisted, hence invisible, and the sink's
   * replay guard re-runs the batch; the manifest replace itself is the
   * commit point.
   *
-  * Format: one RELATIVE path per line, sorted, UTF-8 — diffable,
-  * and the relative form survives a store being mounted under a
-  * different root (bucket remount, local mirror).
+  * Format: one RELATIVE path per line, sorted, UTF-8, terminated by a
+  * seal line — diffable, and the relative form survives a store being
+  * mounted under a different root (bucket remount, local mirror).
   */
 object Manifest {
 
@@ -67,11 +64,8 @@ object Manifest {
     * single-file replace window (delete landed, rename didn't) is
     * HEALED here, not fallen through: in that window the sealed
     * `.tmp` object still holds the exact intended list, so the read
-    * recovers it verbatim. Only a store that never had a manifest
-    * (adopted pre-manifest) reads as None — callers then fall back to
-    * the listing, i.e. pointer-mode behavior, whose correctness the
-    * sinks' committed-log guards already cover (and an adopted store
-    * has no unmanifested junk to mis-adopt by construction). */
+    * recovers it verbatim. None means the version was never stamped,
+    * which [[StoreCommit]] refuses as a damaged store. */
   def read(dir: String): Option[Seq[String]] = {
     val (fs, p) = StoreFiles.fsOf(dir)
     def parse(path: Path): Option[Seq[String]] =

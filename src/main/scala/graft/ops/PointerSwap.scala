@@ -2,14 +2,11 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Object-store-safe commit of a directory-shaped artifact: versioned
-  * staging dirs plus a one-file commit POINTER — the alternative
-  * [[ArtifactSwap]]'s atomic-rename contract points object-store
-  * deployments at (round-14 verdict #5: "a conditional-PUT pointer").
-  * Layout under the artifact root:
+/** The version half of [[StoreCommit]]: versioned staging dirs plus
+  * a one-file commit POINTER. Layout under the store root:
   *
   * {{{
-  *   root/v_00000001/...   fully-written artifact versions
+  *   root/v_00000001/...   fully-written store versions
   *   root/CURRENT          one line: the committed version's dir name
   * }}}
   *
@@ -19,26 +16,23 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * [[resolve]] the pointer and read that version dir — never a
   * half-written one.
   *
-  * Why this survives S3-class semantics where the rename-aside swap
-  * cannot: nothing is ever renamed between directories. A crash
-  * mid-version-write leaves an incomplete orphan the pointer never
-  * references; the pointer replacement is a single SMALL-OBJECT
-  * write — an atomic object replace on S3 (a PUT is all-or-nothing
-  * per object), a tmp-file + single-file rename elsewhere — and,
-  * unlike a torn directory rename, every pointer failure shape is
-  * RECOVERABLE from layout alone: version numbers are monotone and a
-  * new version is only ever completed as part of committing it, so
-  * "pointer missing or torn" resolves to the HIGHEST COMPLETE
-  * version, which is exactly the commit that was in flight (roll
-  * forward), while an orphan above a VALID pointer is an uncommitted
-  * fold that [[recover]] deletes so the caller's replay re-runs it
-  * (roll back). The commit point is the pointer replace, atomically
-  * observable in both directions.
+  * Why this is safe on S3-class object stores: nothing is ever renamed
+  * between directories. A crash mid-version-write leaves an incomplete
+  * orphan the pointer never references; the pointer replacement is a
+  * single SMALL-OBJECT write (one atomic object PUT on S3, a tmp-file
+  * plus single-file rename elsewhere), and every pointer failure shape
+  * is RECOVERABLE from layout alone: version numbers are monotone and
+  * a new version is only ever completed as part of committing it, so
+  * "pointer missing or torn" resolves to the HIGHEST COMPLETE version,
+  * which is exactly the commit that was in flight (roll forward),
+  * while an orphan above a VALID pointer is an uncommitted write that
+  * [[recover]] deletes so the caller's replay re-runs it (roll back).
+  * The commit point is the pointer replace, atomically observable in
+  * both directions.
   *
-  * Single-writer contract (the streaming sinks' foreachBatch
-  * serialization), like [[ArtifactSwap]]. Committed-version GC keeps
-  * only the committed dir: version history is not this mechanism's
-  * job (a table format's snapshot log is), crash safety is.
+  * Single-writer contract. Garbage collection keeps only the committed
+  * version: version history is not this mechanism's job, crash safety
+  * is.
   */
 object PointerSwap {
 
@@ -80,6 +74,13 @@ object PointerSwap {
     }.toOption
       .filter(VersionRe.pattern.matcher(_).matches())
       .filter(complete(fs, root, _))
+  }
+
+  /** Whether `root` is laid out by this protocol: it holds a pointer
+    * file or at least one version dir (complete or not). */
+  def versioned(root: String): Boolean = {
+    val (fs, rootP) = fsOf(root)
+    fs.exists(new Path(rootP, "CURRENT")) || versions(fs, rootP).nonEmpty
   }
 
   /** The COMMITTED version dir: the pointer's target when valid, else

@@ -3,12 +3,9 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** THE artifact-sink guard protocol, in one place (round-15 verdict
-  * #5: the watermark/marker prologue was hand-copied into five
-  * `foreachBatch` bodies with drifting re-arm orders — five places to
-  * patch next time the protocol changes). Every corpus-sized artifact
-  * sink ([[graft.streaming.EventStreams]]: dedup gold+index, PQ
-  * codes, semantic cells, BM25 postings, kNN graph) runs the same
+/** The artifact-sink guard protocol, in one place. Every corpus-sized
+  * artifact sink ([[graft.streaming.EventStreams]]: dedup gold+index,
+  * PQ codes, semantic cells, BM25 postings, kNN graph) runs the same
   * three movements per micro-batch:
   *
   *  1. [[prologue]] — if the sync marker is absent where the gate
@@ -21,19 +18,19 @@ import org.apache.spark.sql.functions.col
   *  2. [[fresh]] — the replay guard: under the family's MONOTONE-id
   *     ingest contract, "already stored" reduces to one scalar (ids
   *     at or below the watermark drop); the store-wide id anti-join
-  *     survives only as the post-crash fallback (round-14 verdict #2:
-  *     that scan was the sinks' only store-sized happy-path read).
+  *     survives only as the post-crash fallback, so the happy path
+  *     never reads a store-sized input.
   *  3. [[commit]] — marker DOWN, the batch's writes, watermark,
   *     marker UP. The order is the whole trust protocol: the
   *     watermark commits strictly before the marker re-arms, so a
   *     crash between the two discards it at the next batch — a stale
   *     scalar is never silently trusted.
   *
-  * Marker and watermark live at the store's guard ROOT — single
-  * small-object writes, atomic on any filesystem scheme, so the
-  * protocol itself never needs an atomic directory rename (the
-  * commit-mode choice, [[StoreCommit]], is orthogonal and governs
-  * only the whole-store replaces).
+  * Marker and watermark live at the store's guard ROOT, outside every
+  * [[StoreCommit]] version: single small-object writes, atomic on any
+  * filesystem scheme, and untouched by the version flips of the
+  * store's whole-store replaces (a content-preserving compaction keeps
+  * the watermark valid).
   */
 object SinkGuard {
 

@@ -2,233 +2,158 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Commit-protocol selector for directory-shaped artifact stores —
-  * the round-15 verdict's top task: every corpus-sized streaming
-  * store (postings, semantic cells, PQ codes, dedup index, z-order
-  * store) committed through [[ArtifactSwap]], whose rename-aside
-  * REQUIRES atomic directory rename and so refuses S3-class object
-  * storage. This trait is the one seam the sinks, compactions, and
-  * serve paths thread a commit mode through:
+/** The one commit protocol of every durable, directory-shaped store
+  * (the dedup gold corpus and index, BM25 postings, PQ codes and
+  * gold, semantic cells and verdicts, kNN cells, the OPQ and z-order
+  * stores, and the card, word-histogram, split-label and token-count
+  * artifacts). Layout under a store root:
   *
-  *  - [[SwapCommit]] (default, unchanged behavior): the store root IS
-  *    the live directory; whole-store replaces ride the
-  *    [[ArtifactSwap]] rename-aside. Correct on local/posix/HDFS.
-  *  - [[PointerCommit]]: the store root holds versioned dirs plus the
-  *    [[PointerSwap]] one-file commit pointer. Reads resolve the
-  *    committed version; appends write INTO it (new objects only —
-  *    their replay safety is the sinks' watermark/marker protocol,
-  *    which never needed rename atomicity); whole-store replaces
-  *    stage the next version and flip the pointer — one small-object
-  *    PUT, atomic on S3. Marker/watermark scalars live at the ROOT
-  *    (single-object PUT/DELETE, atomic on any store), so they
-  *    survive version flips — a content-preserving compaction keeps
-  *    the replay watermark valid, unlike the swap mode where the
-  *    whole-dir rename clears in-store markers and the next batch
-  *    pays a one-off anti-join fallback. Both behaviors are correct;
-  *    pointer mode just skips the fallback.
+  * {{{
+  *   root/v_00000007/...            one committed version (data files)
+  *   root/v_00000007/_MANIFEST      the version's committed file list
+  *   root/CURRENT                   one line: the committed version
+  *   root/_<marker>, root/_removed  guard state, outside any version
+  * }}}
   *
-  *  - [[ManifestCommit]]: pointer mode plus a committed FILE LIST
-  *    ([[Manifest]]) per version — readers trust neither directory
-  *    listings nor the FileOutputCommitter's task-file renames, which
-  *    closes the one window pointer mode left open: per-object writes
-  *    INSIDE a version dir go through Spark's job committer, whose
-  *    task-file renames are non-atomic on S3-class stores, so a torn
-  *    job commit can strand a partial set of renamed files that any
-  *    listing-trusting reader would adopt. Manifest readers read
-  *    exactly the committed list; the committer's renames become a
-  *    performance detail (tune with the S3A committers), never a
-  *    correctness dependency.
+  * The pointer flip ([[PointerSwap]]) commits a VERSION and the
+  * manifest ([[Manifest]]) commits its FILE SET. Both are single
+  * small-object replaces, so no step depends on an atomic directory
+  * rename or on a consistent listing, and the protocol is safe on
+  * posix, HDFS and S3-class object stores alike. Readers read exactly
+  * the committed list: objects a torn FileOutputCommitter job strands
+  * inside a version are never read.
+  *
+  * Invariants:
+  *  - every committed version carries a manifest — [[replace]] stamps
+  *    it before the flip, so a committed version WITHOUT one is a
+  *    damaged store and every access throws instead of falling back to
+  *    the listing;
+  *  - root-level state (guard markers, watermarks, the permanent
+  *    `_removed` id log) survives every [[replace]], which touches
+  *    only version dirs;
+  *  - a root holding data files but no `CURRENT` and no `v_*` dir was
+  *    written outside this protocol (by the retired rename-aside
+  *    swap, or a plain write). Every access throws and names the
+  *    rebuild; reading it as "nothing committed" would serve an empty,
+  *    unseeded store — a silent wrong answer.
+  *
+  * Single-writer contract: the streaming sinks' foreachBatch
+  * serialization, or one maintenance call at a time.
   */
-sealed trait StoreCommit {
+object StoreCommit {
 
-  /** Close every crash window of this protocol at `root`. */
-  def recover(root: String): Unit
-
-  /** The committed live directory for READS and existence probes.
-    * Swap mode: the root itself. Pointer mode: the resolved committed
-    * version, or a never-existing placeholder when nothing is
-    * committed yet (so `parquetFileCount`/`markerExists` probes read
-    * empty/absent, the unseeded answer). */
-  def readDir(root: String): String
-
-  /** The live directory APPENDS write into. Pointer mode commits an
-    * empty first version when none exists, so the append target is
-    * always a committed dir readers can resolve. */
-  def writeDir(root: String): String
-
-  /** Replace the whole store content atomically: `body` fully writes
-    * the replacement into the staging path it is given; the commit
-    * point is the swap/pointer-flip after it returns. */
-  def replace(root: String)(body: String => Unit): Unit
-
-  /** Run `body` as an APPEND into the committed live dir. Swap and
-    * pointer modes: a plain write into [[writeDir]] (replay safety is
-    * the sinks' watermark/marker protocol). Manifest mode overrides
-    * this to extend the committed file list afterwards — the append's
-    * commit point. */
-  def append(root: String)(body: String => Unit): Unit =
-    body(writeDir(root))
-
-  /** Read the committed store content. Swap and pointer modes read
-    * the live directory (trusting its listing); manifest mode reads
-    * exactly the committed file list, so objects stranded by a torn
-    * job commit are invisible. `basePath` is pinned to the live dir
-    * either way, preserving partition-column discovery and pruning. */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val live = readDir(root)
-    spark.read.option("basePath", live).parquet(live)
+  /** Close every crash window at `root` (roll a torn pointer forward,
+    * delete uncommitted or superseded versions). */
+  def recover(root: String): Unit = {
+    committed(root)
+    PointerSwap.recover(root)
   }
 
-  /** Number of committed data objects under root — the seeded-store
-    * probe ([[StoreFiles.parquetFileCount]] in listing modes, the
-    * manifest length in manifest mode). */
-  def fileCount(root: String): Int =
-    StoreFiles.parquetFileCount(readDir(root))
-
-  /** Read one SUBCOMPONENT of the committed version — the shape of
-    * the multi-component artifact stores (the dedup index's
-    * `fingerprints`/`bands`/`shingles`/`tombstones`, the OPQ store's
-    * `rotation`/`codebooks`/`codes`). Listing modes read the
-    * subdirectory; manifest mode reads exactly the committed list's
-    * `sub/` entries, so objects a torn job commit strands inside the
-    * component are invisible. `basePath` pins to the component dir
-    * either way, preserving partition-column discovery (`band_idx=`,
-    * `cell=`) and pruning. */
-  def readSub(spark: SparkSession, root: String, sub: String): DataFrame = {
-    val d = s"${readDir(root)}/$sub"
-    spark.read.option("basePath", d).parquet(d)
+  /** The committed version dir, None when nothing is committed yet. */
+  private def committed(root: String): Option[String] = {
+    val live = PointerSwap.resolve(root)
+    if (live.isEmpty && !PointerSwap.versioned(root) &&
+        StoreFiles.parquetFileCount(root) > 0)
+      throw new IllegalStateException(
+        s"$root holds data files but no CURRENT pointer and no v_* " +
+          "version: it was written outside graft.ops.StoreCommit (a " +
+          "rename-aside swap-era store or a plain write) and cannot be " +
+          "read as committed. Rebuild it from its source through " +
+          "StoreCommit.replace (the family's build, rebuild or seeding " +
+          "sink), or move its files into a fresh root that way.")
+    live
   }
 
-  /** Committed data-object count under one subcomponent — the
-    * seeded/fragmentation probe for multi-component stores (the
-    * per-component face of [[fileCount]]). */
-  def subFileCount(root: String, sub: String): Int =
-    StoreFiles.parquetFileCount(s"${readDir(root)}/$sub")
+  /** The committed version's file list — a committed version without
+    * one is damaged, never silently listed. */
+  private def files(live: String): Seq[String] =
+    Manifest.read(live).getOrElse(throw new IllegalStateException(
+      s"committed store version $live has no ${Manifest.Name}: every " +
+        "version is stamped when StoreCommit.replace commits it, so " +
+        "this store was damaged or written outside the protocol — " +
+        "rebuild it through StoreCommit.replace"))
 
-  /** Whether root-level state OUTSIDE the committed content (guard
-    * markers, the permanent `_removed` id log) survives a
-    * [[replace]]. Swap mode replaces the root itself — callers that
-    * keep root-adjacent state must carry it INSIDE the replace body
-    * (atomically, into the staging dir). Pointer/manifest modes
-    * replace only version dirs under the root, so root state
-    * survives untouched and must NOT be duplicated by a carry. */
-  def rootSurvivesReplace: Boolean
-}
-
-/** [[ArtifactSwap]] rename-aside commits — atomic-rename filesystems
-  * only (local/posix/HDFS); the store root is the live dir. */
-case object SwapCommit extends StoreCommit {
-  def recover(root: String): Unit = ArtifactSwap.recover(root)
-  def readDir(root: String): String = root
-  def writeDir(root: String): String = root
-  def replace(root: String)(body: String => Unit): Unit =
-    ArtifactSwap.writeAndSwap(root)(body)
-  def rootSurvivesReplace: Boolean = false
-}
-
-/** [[PointerSwap]] versioned-dir commits — object-store-safe (the
-  * commit point is one small-object pointer replace). */
-case object PointerCommit extends StoreCommit {
-  def recover(root: String): Unit = PointerSwap.recover(root)
+  /** The committed version dir for reads and existence probes, or a
+    * never-existing placeholder when nothing is committed (so probes
+    * read the unseeded answer). */
   def readDir(root: String): String =
-    // v_00000000 can never exist (versions start at 1): a stable
-    // absent path, so every existence probe reads the unseeded answer
-    PointerSwap.resolve(root).getOrElse(s"$root/v_00000000")
-  def writeDir(root: String): String =
-    PointerSwap.resolve(root).getOrElse {
-      PointerSwap.writeAndCommit(root)(_ => ())
-      PointerSwap.resolve(root).getOrElse(
-        sys.error(s"PointerCommit: empty seed commit failed at $root"))
-    }
-  def replace(root: String)(body: String => Unit): Unit =
-    PointerSwap.writeAndCommit(root)(body)
-  def rootSurvivesReplace: Boolean = true
-}
+    // v_00000000 can never exist (versions start at 1)
+    committed(root).getOrElse(s"$root/v_00000000")
 
-/** [[PointerSwap]] versioned dirs PLUS a committed file list
-  * ([[Manifest]]) per version — the rename-free end of the protocol
-  * (round-16 verdict #2): the pointer flip commits the VERSION, the
-  * manifest commits its FILE SET, and manifest readers trust neither
-  * directory listings nor the FileOutputCommitter's task-file renames
-  * — an object a torn job commit strands in the version dir is
-  * simply never read. Appends extend the manifest by the writer's own
-  * before/after listing delta (single-writer, so the delta is exactly
-  * the append's objects; pre-existing junk can never be adopted), and
-  * the manifest replace — one small-object PUT — is the append's
-  * commit point: a crash before it leaves the new objects invisible
-  * and the sink's replay guard re-runs the batch. */
-case object ManifestCommit extends StoreCommit {
-  def recover(root: String): Unit = PointerSwap.recover(root)
-  def rootSurvivesReplace: Boolean = true
-  def readDir(root: String): String = PointerCommit.readDir(root)
+  /** The committed version appends write into; an empty first version
+    * (with its empty manifest) is committed when none exists. */
   def writeDir(root: String): String =
-    PointerSwap.resolve(root).getOrElse {
-      // seed an empty first version WITH its (empty) manifest, so
-      // manifest readers of a just-seeded store see a committed list
+    committed(root).getOrElse {
       replace(root)(_ => ())
       PointerSwap.resolve(root).getOrElse(
-        sys.error(s"ManifestCommit: empty seed commit failed at $root"))
+        sys.error(s"StoreCommit: empty seed commit failed at $root"))
     }
+
+  /** Replace the whole store content: `body` fully writes the
+    * replacement into the staging version it is given; the manifest is
+    * stamped from the writer's own post-write listing (every rename the
+    * job does has happened when its write call returns), and the
+    * pointer flip is the commit point. */
   def replace(root: String)(body: String => Unit): Unit =
     PointerSwap.writeAndCommit(root) { next =>
       body(next)
-      // the writer's own post-write listing is authoritative: every
-      // rename the job will do has happened by the time the write
-      // call returns, and nothing else writes here (single-writer)
       Manifest.stamp(next)
     }
-  override def append(root: String)(body: String => Unit): Unit = {
+
+  /** Run `body` as an APPEND into the committed version, then extend
+    * its manifest by the writer's own before/after listing delta —
+    * single-writer, so the delta is exactly this append's objects and
+    * junk an earlier torn job stranded can never be adopted. The
+    * manifest replace is the append's commit point: a crash before it
+    * leaves the new objects invisible, and the sink's replay guard
+    * re-runs the batch. */
+  def append(root: String)(body: String => Unit): Unit = {
     val live = writeDir(root)
+    val committedFiles = files(live)
     val before = Manifest.dataFiles(live)
     body(live)
     val added = Manifest.dataFiles(live).filterNot(before.toSet)
-    // a MISSING manifest (the torn single-file-replace window, or an
-    // adopted pre-manifest store) must fall back to the BEFORE
-    // listing — the same pointer-mode semantics the read path uses.
-    // Falling back to empty would commit a manifest naming only this
-    // append's objects and silently hide the whole store.
-    val committed = Manifest.read(live).getOrElse(before)
-    Manifest.write(live, (committed ++ added).distinct)
+    Manifest.write(live, (committedFiles ++ added).distinct)
   }
-  override def read(spark: SparkSession, root: String): DataFrame = {
-    val live = readDir(root)
-    Manifest.read(live) match {
-      case Some(files) if files.nonEmpty =>
-        spark.read.option("basePath", live)
-          .parquet(files.map(f => s"$live/$f"): _*)
-      case _ =>
-        // no/empty manifest: fall back to the listing — pointer-mode
-        // behavior, covered by the sinks' committed-log guards (and
-        // the empty case only arises on a just-seeded store, which
-        // callers gate on fileCount > 0 before reading)
-        spark.read.option("basePath", live).parquet(live)
-    }
+
+  /** Read exactly the committed file list. `basePath` is pinned to the
+    * version dir, preserving partition-column discovery and pruning. */
+  def read(spark: SparkSession, root: String): DataFrame = {
+    val live = committedDir(root)
+    readFiles(spark, live, "", files(live))
   }
-  override def fileCount(root: String): Int = {
-    val live = readDir(root)
-    Manifest.read(live).map(_.size)
-      .getOrElse(StoreFiles.parquetFileCount(live))
+
+  /** Number of committed data objects — the seeded-store probe (0 when
+    * nothing is committed). */
+  def fileCount(root: String): Int =
+    committed(root).map(files(_).size).getOrElse(0)
+
+  /** Read one SUBCOMPONENT of the committed version — the shape of the
+    * multi-component stores (the dedup index's `fingerprints`/`bands`/
+    * `shingles`/`tombstones`, the OPQ store's `rotation`/`codebooks`/
+    * `codes`): exactly the committed list's `sub/` entries, `basePath`
+    * pinned to the component dir (`band_idx=`, `cell=` discovery). */
+  def readSub(spark: SparkSession, root: String, sub: String): DataFrame = {
+    val live = committedDir(root)
+    readFiles(spark, live, sub, files(live).filter(_.startsWith(s"$sub/")))
   }
-  override def readSub(spark: SparkSession, root: String,
-      sub: String): DataFrame = {
-    val live = readDir(root)
-    Manifest.read(live) match {
-      case Some(files) =>
-        val hits = files.filter(_.startsWith(s"$sub/"))
-        if (hits.isEmpty)
-          // empty component of a committed store — same contract as a
-          // listing mode reading an empty dir (callers gate on
-          // subFileCount first, exactly as they gate on fileCount)
-          spark.read.option("basePath", s"$live/$sub")
-            .parquet(s"$live/$sub")
-        else spark.read.option("basePath", s"$live/$sub")
-          .parquet(hits.map(f => s"$live/$f"): _*)
-      case None => super.readSub(spark, root, sub)
-    }
-  }
-  override def subFileCount(root: String, sub: String): Int = {
-    val live = readDir(root)
-    Manifest.read(live).map(_.count(_.startsWith(s"$sub/")))
-      .getOrElse(StoreFiles.parquetFileCount(s"$live/$sub"))
+
+  /** Committed data-object count of one subcomponent — the
+    * per-component face of [[fileCount]]. */
+  def subFileCount(root: String, sub: String): Int =
+    committed(root).map(files(_).count(_.startsWith(s"$sub/"))).getOrElse(0)
+
+  private def committedDir(root: String): String =
+    committed(root).getOrElse(throw new IllegalStateException(
+      s"nothing is committed at $root (callers gate reads on fileCount)"))
+
+  private def readFiles(spark: SparkSession, live: String, sub: String,
+      listed: Seq[String]): DataFrame = {
+    val base = if (sub.isEmpty) live else s"$live/$sub"
+    // an empty component of a committed store reads its (empty) dir,
+    // which fails schema inference exactly as an empty listing would;
+    // callers gate on the counts first
+    val paths = if (listed.isEmpty) Seq(base) else listed.map(f => s"$live/$f")
+    spark.read.option("basePath", base).parquet(paths: _*)
   }
 }

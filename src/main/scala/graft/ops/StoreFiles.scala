@@ -131,9 +131,14 @@ object StoreFiles {
     * sync marker re-arms; deleted whenever the marker is found absent
     * (a crashed batch), which makes the guard fall back to the exact
     * anti-join for one batch and re-derive the scalar from it. */
-  def readIdWatermark(dir: String): Option[Long] = {
+  def readIdWatermark(dir: String): Option[Long] =
+    readLong(dir, "_id_watermark")
+
+  /** A one-line integer scalar file `name` under `dir` (underscore
+    * names, invisible to parquet readers); None when absent or torn. */
+  def readLong(dir: String, name: String): Option[Long] = {
     val (fs, p) = fsOf(dir)
-    val f = new Path(p, "_id_watermark")
+    val f = new Path(p, name)
     if (!fs.exists(f)) None
     else
       scala.util.Try {
@@ -150,10 +155,14 @@ object StoreFiles {
   /** Write (replace) the id watermark. A crash mid-write leaves a
     * torn file that [[readIdWatermark]] fails to parse → None → the
     * anti-join fallback, never a wrong scalar silently trusted. */
-  def writeIdWatermark(dir: String, v: Long): Unit = {
+  def writeIdWatermark(dir: String, v: Long): Unit =
+    writeLong(dir, "_id_watermark", v)
+
+  /** Write (replace) the scalar file `name` under `dir`. */
+  def writeLong(dir: String, name: String, v: Long): Unit = {
     val (fs, p) = fsOf(dir)
     fs.mkdirs(p)
-    val out = fs.create(new Path(p, "_id_watermark"), true)
+    val out = fs.create(new Path(p, name), true)
     try out.write(v.toString.getBytes(
       java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.OracleForms
+import graft.ops.StoreCommit
 
 /** Z-order (Morton-curve) data layout — multi-dimensional clustering
   * for file skipping, [[GoldLayout]]'s sibling for the OTHER gold
@@ -415,17 +416,15 @@ object ZOrderLayout {
     * deleted id. O(store) by design — the size-ratio trigger in
     * [[maybeCompactStore]] bounds how often it is paid. */
   def compactStore(spark: SparkSession, store: String,
-      x: String, y: String, idCol: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Unit = {
-    // tiers are read from the LIVE dir (the root in swap mode, the
-    // committed version in pointer mode); the replace targets the ROOT
-    val live = commit.readDir(store)
+      x: String, y: String, idCol: String): Unit = {
+    // tiers are read from the committed version; the replace targets
+    // the ROOT
+    val live = StoreCommit.readDir(store)
     val wm = storeWatermark(spark, live, idCol)
     val all = readStore(spark, live).localCheckpoint()
-    commit.replace(store) { next =>
+    StoreCommit.replace(store) { next =>
       zorderWrite(all, x, y, s"$next/base")
       wm.foreach(graft.ops.StoreFiles.writeIdWatermark(next, _))
-      graft.ops.StoreFiles.createMarker(next, "_SUCCESS")
     }
   }
 
@@ -435,10 +434,9 @@ object ZOrderLayout {
     * metadata call per tier) or [[MaxL1Runs]] runs. Returns
     * (minorRan, majorRan). */
   def maybeCompactStore(spark: SparkSession, store: String,
-      x: String, y: String, idCol: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit)
+      x: String, y: String, idCol: String)
       : (Boolean, Boolean) = {
-    val live = commit.readDir(store)
+    val live = StoreCommit.readDir(store)
     val minor = deltaCount(live) >= CompactAfter
     if (minor) minorCompact(spark, live, x, y)
     val runs = runDirs(live)
@@ -446,7 +444,7 @@ object ZOrderLayout {
       graft.ops.StoreFiles.dirBytes(s"$live/l1") >=
         (MajorSizeRatio * graft.ops.StoreFiles
           .dirBytes(s"$live/base")).toLong)
-    if (major) compactStore(spark, store, x, y, idCol, commit)
+    if (major) compactStore(spark, store, x, y, idCol)
     (minor, major)
   }
 
@@ -468,12 +466,13 @@ object ZOrderLayout {
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
     val store = graft.ops.SessionStore.dir("zstore",
         s"$dir/lineitem.parquet") { s =>
-      landTiers(spark, li, s)
+      landTiers(spark, li, StoreCommit.writeDir(s))
       compactStore(spark, s, "l_partkey", "l_suppkey", "l_orderkey")
     }
     OracleForms.union(
         "source" -> zorderGroupStats(li, "l_partkey", "l_suppkey"),
-        "store" -> zorderGroupStats(readStore(spark, store),
+        "store" -> zorderGroupStats(
+          readStore(spark, StoreCommit.readDir(store)),
           "l_partkey", "l_suppkey"))
       .select(col("form"), col("grp"), col("n"),
         col("x_min"), col("x_max"), col("y_min"), col("y_max"))
@@ -518,17 +517,19 @@ object ZOrderLayout {
     val base = graft.ops.SessionStore.dir("zstoreDel",
         s"$dir/lineitem.parquet") { base =>
       val s = s"$base/store"
-      landTiers(spark, li, s)
+      val live = StoreCommit.writeDir(s)
+      landTiers(spark, li, live)
       appendDeleteDelta(
         li.filter(col("l_orderkey") % 5 === DeleteResidue),
-        s, "l_orderkey")
+        live, "l_orderkey")
       // write the masked read BEFORE the major applies the deletes
-      zorderGroupStats(readStore(spark, s), "l_partkey", "l_suppkey")
+      zorderGroupStats(readStore(spark, live), "l_partkey", "l_suppkey")
         .write.parquet(s"$base/masked")
       compactStore(spark, s, "l_partkey", "l_suppkey", "l_orderkey")
     }
     OracleForms.union(
-        "compacted" -> zorderGroupStats(readStore(spark, s"$base/store"),
+        "compacted" -> zorderGroupStats(
+          readStore(spark, StoreCommit.readDir(s"$base/store")),
           "l_partkey", "l_suppkey"),
         "masked" -> spark.read.parquet(s"$base/masked"))
       .select(col("form"), col("grp"), col("n"),

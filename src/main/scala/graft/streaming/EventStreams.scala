@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import graft.ops.StoreCommit
 
 /** Structured Streaming extension (SURVEY.md §2.9: the reference is
   * batch-only; the `events` table invites the streaming surface).
@@ -269,20 +270,16 @@ object EventStreams {
     graft.ops.StoreFiles.hasTopLevelParquet(dir)
 
   def incrementalDedupSink(docs: DataFrame, indexDir: String,
-      goldDir: String, checkpointDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit)
+      goldDir: String, checkpointDir: String)
       : StreamingQuery = {
     import org.apache.spark.sql.functions.col
     val q = docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        // the gold corpus is a flat APPEND-ONLY store (new objects
-        // only — no rename ever), so only the derived index, whose
-        // compaction is a whole-store rewrite, rides the commit
-        // protocol
-        commit.recover(indexDir)
-        val goldSeeded = hasParquet(goldDir)
+        StoreCommit.recover(goldDir)
+        StoreCommit.recover(indexDir)
+        val goldSeeded = StoreCommit.fileCount(goldDir) > 0
         // guard prologue + replay filter: graft.ops.SinkGuard owns
         // the watermark/marker trust protocol for every artifact sink.
         // Repair: a crash between the gold append and the index
@@ -294,13 +291,13 @@ object EventStreams {
         // gold is O(gold) but crash/adoption-gated only.
         graft.ops.SinkGuard.prologue(goldDir, "_ids_synced", goldSeeded,
           repair = Some(() => graft.ext.Dedup.rebuildIndex(
-            spark, goldDir, indexDir, commit = commit)))
+            spark, goldDir, indexDir)))
         // the anti-join fallback unions the permanent removed-id log
         // (Dedup.vacuumGold): a vacuumed doc absent from gold must
         // not read as never-admitted
         val fresh = graft.ops.SinkGuard.fresh(batch, goldDir, "doc_id",
           goldSeeded, {
-            val stored = spark.read.parquet(goldDir).select("doc_id")
+            val stored = StoreCommit.read(spark, goldDir).select("doc_id")
             graft.ops.SinkGuard.removedIds(spark, goldDir)
               .map(r => stored.unionByName(r.select("doc_id")))
               .getOrElse(stored)
@@ -316,32 +313,31 @@ object EventStreams {
         // anti-join the batch against itself (verified failure mode:
         // the index appends wrote zero rows). Checkpointing pins the
         // rows and truncates the lineage before any append happens.
-        // probe the index through the COMMIT seam, and AFTER the
-        // prologue: in pointer mode the repair above commits a NEW
-        // version dir (a pre-repair resolution could name a
-        // placeholder or a dir the repair's PointerSwap already
-        // deleted, miss the fingerprints, and mis-take the "first
-        // batch seeds it" branch — appending near-duplicates to gold
-        // unjudged); in manifest mode the probe counts the committed
-        // list, never a listing with torn junk.
+        // probe the index AFTER the prologue: the repair above commits
+        // a NEW version (a pre-repair resolution could name a
+        // placeholder or a version the repair already deleted, miss
+        // the fingerprints, and mis-take the "first batch seeds it"
+        // branch — appending near-duplicates to gold unjudged); the
+        // probe counts the committed list, never a listing with torn
+        // junk.
         val uniques = (
-          if (commit.subFileCount(indexDir, "fingerprints") > 0) {
+          if (StoreCommit.subFileCount(indexDir, "fingerprints") > 0) {
             val verdicts = graft.ext.Dedup
-              .incrementalAgainstIndex(spark, fresh, indexDir, commit)
+              .incrementalAgainstIndex(spark, fresh, indexDir)
               .filter(col("verdict") === "unique").select("doc_id")
             fresh.join(verdicts, Seq("doc_id"))
           } else fresh // empty store: the first batch seeds it
         ).localCheckpoint()
         graft.ops.SinkGuard.commit(goldDir, "_ids_synced",
             if (batchMax.isNullAt(0)) None else Some(batchMax.getLong(0))) {
-          uniques.write.mode("append").parquet(goldDir)
-          graft.ext.Dedup.appendGoldIndex(uniques, indexDir, commit)
+          StoreCommit.append(goldDir)(
+            uniques.write.mode("append").parquet(_))
+          graft.ext.Dedup.appendGoldIndex(uniques, indexDir)
         }
         // compaction policy: many small appends fragment the store;
         // past the file-count threshold the batch's tail rebuilds it
         // from gold (sequential per micro-batch, so race-free)
-        graft.ext.Dedup.maybeCompactIndex(spark, goldDir, indexDir,
-          commit = commit)
+        graft.ext.Dedup.maybeCompactIndex(spark, goldDir, indexDir)
         ()
       }
       .start()
@@ -386,21 +382,19 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val live =
-          s"$countsDir/${graft.ext.Selection.TokenCountsTable}.parquet"
-        // replay guard (ADVICE r12): if the merge below already
-        // committed this batch, its alert rows are already in the log
-        // and the pre-merge artifact they were scored against is gone
-        // — skip, don't re-score against the merged counts
-        val marker = new java.io.File(s"$live/_batch_id")
-        val applied = marker.exists() &&
-          java.nio.file.Files.readString(marker.toPath).trim.toLong >= batchId
-        if (hasParquet(live) && !applied) {
+        val root = graft.ext.Selection.tokenCountsRoot(countsDir)
+        // replay guard: if the merge below already committed this
+        // batch, its alert rows are already in the log and the
+        // pre-merge artifact they were scored against is gone — skip,
+        // don't re-score against the merged counts
+        val applied = graft.ext.Selection.appliedBatchId(countsDir)
+          .exists(_ >= batchId)
+        if (StoreCommit.fileCount(root) > 0 && !applied) {
           // localCheckpoint (EAGER): the score's lineage reads the
-          // live artifact the merge below REPLACES — the same
+          // committed artifact the merge below REPLACES — the same
           // pin-before-append discipline as the dedup sink
           graft.ext.Selection.batchDriftScore(
-              spark.read.parquet(live), batch)
+              StoreCommit.read(spark, root), batch)
             .withColumn("batch_id", org.apache.spark.sql.functions
               .lit(batchId))
             .withColumn("drifted",
@@ -472,26 +466,23 @@ object EventStreams {
       coarse: Seq[(Int, Seq[Double])],
       rcbs: Seq[Seq[(Int, Seq[Double])]],
       codesDir: String, goldDir: String,
-      checkpointDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit)
+      checkpointDir: String)
       : StreamingQuery = {
     import org.apache.spark.sql.functions.col
     val q = vectors.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        // gold is flat append-only (no rename ever); the codes store,
-        // whose compaction rebuilds it whole, rides the commit
-        // protocol
-        commit.recover(codesDir)
-        val goldSeeded = hasParquet(goldDir)
+        StoreCommit.recover(goldDir)
+        StoreCommit.recover(codesDir)
+        val goldSeeded = StoreCommit.fileCount(goldDir) > 0
         // repair: the gold→codes append window (gold rows whose codes
         // never landed) — the replay anti-joins against gold and would
         // otherwise never re-encode them; the rebuild is the same
         // derived-state recovery maybeCompactCodes runs, crash-gated
         graft.ops.SinkGuard.prologue(goldDir, "_ids_synced", goldSeeded,
           repair = Some(() => graft.ext.ProductQuant.rebuildCodes(
-            spark, goldDir, codesDir, coarse, rcbs, commit)))
+            spark, goldDir, codesDir, coarse, rcbs)))
         // localCheckpoint (EAGER): the fresh set's lineage reads the
         // gold dir this batch appends to — same re-execution hazard
         // as incrementalDedupSink's accepted set
@@ -500,7 +491,7 @@ object EventStreams {
         // from gold must not read as never-admitted
         val fresh = graft.ops.SinkGuard.fresh(batch, goldDir, "vec_id",
           goldSeeded, {
-            val stored = spark.read.parquet(goldDir).select("vec_id")
+            val stored = StoreCommit.read(spark, goldDir).select("vec_id")
             graft.ops.SinkGuard.removedIds(spark, goldDir)
               .map(r => stored.unionByName(r.select("vec_id")))
               .getOrElse(stored)
@@ -509,8 +500,8 @@ object EventStreams {
         val mx = fresh.agg(max(col("vec_id"))).head() // pinned frame
         graft.ops.SinkGuard.commit(goldDir, "_ids_synced",
             if (mx.isNullAt(0)) None else Some(mx.getLong(0))) {
-          fresh.write.mode("append").parquet(goldDir)
-          commit.append(codesDir) { live =>
+          StoreCommit.append(goldDir)(fresh.write.mode("append").parquet(_))
+          StoreCommit.append(codesDir) { live =>
             graft.ext.ProductQuant.encodeFrameResidual(
               fresh.select(col("vec_id"), col("label"),
                 col("embedding").cast("array<double>").as("v")),
@@ -520,7 +511,7 @@ object EventStreams {
           }
         }
         graft.ext.ProductQuant.maybeCompactCodes(
-          spark, goldDir, codesDir, coarse, rcbs, commit = commit)
+          spark, goldDir, codesDir, coarse, rcbs)
         ()
       }
       .start()
@@ -554,9 +545,9 @@ object EventStreams {
     *     cannot re-derive;
     *  4. past the part-file threshold the store compacts
     *     ([[graft.ext.Dedup.maybeCompactSemanticCells]] — rewrite
-    *     toward one file per cell through the ArtifactSwap
-    *     rename-aside; self-contained store, no gold needed; the
-    *     sink recovers the swap at batch start).
+    *     toward one file per cell through [[graft.ops.StoreCommit]];
+    *     self-contained store, no gold needed; the sink recovers the
+    *     store at batch start).
     *
     * Verdict-currency contract (shared with the batch append path,
     * [[graft.ext.Dedup.batchSemanticDups]]): vec_ids must be assigned
@@ -570,8 +561,7 @@ object EventStreams {
       coarse: Seq[(Int, Seq[Double])],
       subs: Seq[Seq[(Int, Seq[Double])]], subK: Int,
       cellsDir: String, verdictsDir: String,
-      checkpointDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit)
+      checkpointDir: String)
       : StreamingQuery = {
     val q = vectors.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -580,37 +570,28 @@ object EventStreams {
         val batch = raw.select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))
         // close any crash window of the compaction's whole-store
-        // replace BEFORE probing the store (round-14 ADVICE:
-        // compaction used to rewrite the source-of-truth cells store
-        // in place — it now rides the commit protocol, and this
-        // recover is its other half: existence checks + small
-        // renames/deletes only, cheap every batch)
-        commit.recover(cellsDir)
-        // the cells store is cell-PARTITIONED: its part files live
-        // under cell=N/ subdirs, so the presence probe must recurse
-        // (the flat hasParquet sees only _SUCCESS at the top level
-        // and would report an always-empty store — verified failure
-        // mode: zero gold candidates, every verdict false).
-        // commit.fileCount recurses in every mode, and in manifest
-        // mode counts the COMMITTED list.
-        val storeSeeded = commit.fileCount(cellsDir) > 0
-        // guard state (marker + watermark) lives at the store ROOT:
-        // in pointer mode the root survives version flips; in swap
-        // mode the compaction swap would clear it, so the compaction
-        // call below re-arms both after a content-preserving swap —
-        // either way the prologue repair stays crash-gated
+        // replace BEFORE probing the store: existence checks + small
+        // deletes only, cheap every batch
+        StoreCommit.recover(cellsDir)
+        StoreCommit.recover(verdictsDir)
+        // the probe counts the COMMITTED list (cell-partitioned files
+        // included)
+        val storeSeeded = StoreCommit.fileCount(cellsDir) > 0
+        // guard state (marker + watermark) lives at the store ROOT and
+        // survives the compaction's version flips, so the prologue
+        // repair stays crash-gated
         // repair: the cells→verdicts append window — stored vectors
         // whose verdict row never landed get one re-derived from the
         // store itself (exact, idempotent; crash-gated only)
         graft.ops.SinkGuard.prologue(cellsDir, "_ids_synced",
           storeSeeded, repair = Some(() =>
-            repairSemanticVerdicts(spark, cellsDir, verdictsDir, commit)))
+            repairSemanticVerdicts(spark, cellsDir, verdictsDir)))
         // the anti-join fallback unions the permanent removed-id log
         // (Dedup.removeSemanticVectors): a taken-down id absent from
         // the store must not read as never-admitted
         val fresh = graft.ops.SinkGuard.fresh(batch, cellsDir,
           "vec_id", storeSeeded, {
-            val stored = commit.read(spark, cellsDir).select("vec_id")
+            val stored = StoreCommit.read(spark, cellsDir).select("vec_id")
             graft.ops.SinkGuard.removedIds(spark, cellsDir)
               .map(r => stored.unionByName(r.select("vec_id")))
               .getOrElse(stored)
@@ -621,7 +602,7 @@ object EventStreams {
         if (!batchCells.isEmpty) {
           val goldCells =
             if (storeSeeded)
-              commit.read(spark, cellsDir).select(col("vec_id"),
+              StoreCommit.read(spark, cellsDir).select(col("vec_id"),
                 col("cell").cast("int").as("cell"), col("v"))
             else emptyCells(spark)
           val verdicts = graft.ext.Dedup
@@ -631,24 +612,14 @@ object EventStreams {
             batchCells.agg(max(col("vec_id"))).head().getLong(0)
           graft.ops.SinkGuard.commit(cellsDir, "_ids_synced",
               Some(batchMax)) {
-            commit.append(cellsDir) { live =>
+            StoreCommit.append(cellsDir) { live =>
               batchCells.write.mode("append").partitionBy("cell")
                 .parquet(live)
             }
-            verdicts.write.mode("append").parquet(verdictsDir)
+            StoreCommit.append(verdictsDir)(
+              verdicts.write.mode("append").parquet(_))
           }
-          // in swap mode the compaction's whole-root replace also
-          // swaps out the guard state that lives there; the rewrite
-          // is content-preserving (same rows, fewer files), so the
-          // marker+watermark this batch just committed are still
-          // EXACTLY right — re-arm them, keeping the prologue repair
-          // genuinely crash-gated (it used to fire, O(store), on the
-          // first batch after every compaction cycle)
-          if (graft.ext.Dedup.maybeCompactSemanticCells(spark,
-              cellsDir, commit = commit)) {
-            graft.ops.StoreFiles.writeIdWatermark(cellsDir, batchMax)
-            graft.ops.StoreFiles.createMarker(cellsDir, "_ids_synced")
-          }
+          graft.ext.Dedup.maybeCompactSemanticCells(spark, cellsDir)
         }
         ()
       }
@@ -688,8 +659,8 @@ object EventStreams {
     *  4. past the file threshold the store compacts toward one file
     *     per term bucket
     *     ([[graft.ext.Retrieval.maybeCompactPostings]], the
-    *     2×-bucket-floor policy, now through the ArtifactSwap
-    *     rename-aside — postings are this store's source of truth).
+    *     2×-bucket-floor policy, through [[graft.ops.StoreCommit]] —
+    *     postings are this store's source of truth).
     *
     * Crash windows, all closed by step 1 + the commit ordering:
     * inside the postings append, or between postings/meta/commit —
@@ -697,26 +668,21 @@ object EventStreams {
     * removes whatever landed (half a doc or all of it) and the replay
     * re-processes the batch from scratch. */
   def lexicalIndexSink(docs: DataFrame, storeDir: String,
-      checkpointDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit)
+      checkpointDir: String)
       : StreamingQuery = {
     val q = docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (raw: DataFrame, _: Long) =>
         val spark = raw.sparkSession
         // commit-protocol recovery runs UNCONDITIONALLY — it is only
-        // existence checks and small renames/deletes, and it must not
-        // hide behind the marker: compaction runs AFTER the marker is
+        // existence checks and small deletes, and it must not hide
+        // behind the marker: compaction runs AFTER the marker is
         // re-created, so a crash inside either of its replace windows
         // (postings or committed log) leaves the marker present with
-        // a half-done commit; the gated path below would then skip
-        // recoverBm25Store (the only full-recovery caller), see the
-        // missing dir as unseeded, and overwrite-seed the
-        // source-of-truth store from one batch (round-14 ADVICE,
-        // medium — silent loss of the whole index)
-        commit.recover(s"$storeDir/postings")
-        commit.recover(graft.ext.Retrieval.committedDir(storeDir))
-        commit.recover(s"$storeDir/meta")
+        // a half-done commit
+        StoreCommit.recover(s"$storeDir/postings")
+        StoreCommit.recover(graft.ext.Retrieval.committedDir(storeDir))
+        StoreCommit.recover(s"$storeDir/meta")
         // the full recovery is an O(doc_ids) scan, so it is GATED on
         // the sync marker (SinkGuard.prologue with gate = true: a
         // store seeded OUTSIDE the sink has no marker yet — its first
@@ -724,14 +690,13 @@ object EventStreams {
         // committed log from committed postings, and arms it).
         graft.ops.SinkGuard.prologue(storeDir, "_committed_synced",
           gate = true, repair = Some(() =>
-            { graft.ext.Retrieval.recoverBm25Store(spark, storeDir,
-                commit); () }))
+            { graft.ext.Retrieval.recoverBm25Store(spark, storeDir); () }))
         // heal a torn takedown vacuum (round 17): removals pending
         // with the consistency marker down means a vacuum crashed
         // between its flips — finishing it here keeps the serve-side
         // stat correction exact without any operator intervention.
         // Steady state pays two existence probes.
-        graft.ext.Retrieval.recoverBm25Takedown(spark, storeDir, commit)
+        graft.ext.Retrieval.recoverBm25Takedown(spark, storeDir)
         val batchTd = raw
           .select(col("doc_id"),
             graft.ext.TextOps.tokens(col("text")).as("t"))
@@ -739,15 +704,14 @@ object EventStreams {
         // post-recovery invariant: every posted doc is committed, so
         // the committed log is the complete seen-set (and unlike raw
         // part-file presence it can never claim a half-present doc).
-        // Probes and the fallback read go through the commit seam so
-        // manifest mode resolves the COMMITTED file list, never a
-        // listing a torn job commit could have polluted.
+        // Probes and the fallback read resolve the COMMITTED file
+        // list, never a listing a torn job commit could have polluted.
         val committedStore = graft.ext.Retrieval.committedDir(storeDir)
-        val seeded = commit.fileCount(s"$storeDir/postings") > 0 &&
-          commit.fileCount(committedStore) > 0
+        val seeded = StoreCommit.fileCount(s"$storeDir/postings") > 0 &&
+          StoreCommit.fileCount(committedStore) > 0
         val fresh = graft.ops.SinkGuard.fresh(batchTd, storeDir,
             "doc_id", seeded,
-            commit.read(spark, committedStore).select("doc_id").distinct())
+            StoreCommit.read(spark, committedStore).select("doc_id").distinct())
           .localCheckpoint()
         if (!fresh.isEmpty) {
           val batchMax = fresh.agg(max(col("doc_id"))).head().getLong(0)
@@ -755,12 +719,10 @@ object EventStreams {
               Some(batchMax)) {
             if (seeded)
               graft.ext.Retrieval.appendBm25Index(spark, fresh,
-                storeDir, commit)
-            else graft.ext.Retrieval.writeBm25Index(fresh, storeDir,
-              commit)
+                storeDir)
+            else graft.ext.Retrieval.writeBm25Index(fresh, storeDir)
           }
-          graft.ext.Retrieval.maybeCompactPostings(spark, storeDir,
-            commit = commit)
+          graft.ext.Retrieval.maybeCompactPostings(spark, storeDir)
         }
         ()
       }
@@ -775,18 +737,10 @@ object EventStreams {
     * per doc). With the committed-log protocol this is subsumed by
     * [[graft.ext.Retrieval.recoverBm25Store]] (which also removes
     * torn postings); kept as the standalone meta repair for stores
-    * maintained through the batch append API, where the caller owns
-    * atomicity. */
-  def repairBm25Meta(spark: SparkSession, storeDir: String): Unit = {
-    val postingsDir = s"$storeDir/postings"
-    if (graft.ext.Dedup.cellsFileCount(postingsDir) == 0) return
-    spark.read.parquet(postingsDir)
-      .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("dl").cast("long")).as("sum_dl"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$storeDir/meta")
-  }
+    * maintained through the batch append API. */
+  def repairBm25Meta(spark: SparkSession, storeDir: String): Unit =
+    if (StoreCommit.fileCount(s"$storeDir/postings") > 0)
+      graft.ext.Retrieval.rederiveMeta(spark, storeDir)
 
   /** Empty (vec_id, cell, v) frame — the gold side of a first batch
     * seeding an empty semantic-cells store. */
@@ -844,11 +798,10 @@ object EventStreams {
   def knnEdgesSink(vectors: DataFrame,
       assign: DataFrame => DataFrame,
       cellsDir: String, edgesDir: String,
-      checkpointDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit)
+      checkpointDir: String)
       : StreamingQuery =
     knnGraphSink(vectors, assign, cellsDir, edgesDir, None,
-      checkpointDir, commit)
+      checkpointDir)
 
   /** [[knnEdgesSink]] one level up (round-14 stretch #7): when
     * `labelsDir` is given, each micro-batch ALSO folds the touched
@@ -867,25 +820,22 @@ object EventStreams {
       assign: DataFrame => DataFrame,
       cellsDir: String, edgesDir: String,
       labelsDir: Option[String],
-      checkpointDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit)
+      checkpointDir: String)
       : StreamingQuery = {
     val q = vectors.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (raw: DataFrame, _: Long) =>
         val spark = raw.sparkSession
         // close any crash window of the cells compaction's
-        // whole-store replace BEFORE the seeded probe (round-14
-        // ADVICE: the in-place rewrite this replaces could lose
-        // stored cells rows on a crash, and repairKnnEdges cannot
-        // rebuild cells). The edges/labels stores keep their
-        // dynamic-partition-overwrite + consistency-repair protocol
-        // in BOTH commit modes — the repair detects torn partition
-        // commits from layout + content (count/owner-set disagreement
-        // vs the cells store), never from rename atomicity, so it is
-        // scheme-agnostic by construction.
-        commit.recover(cellsDir)
-        val storeSeeded = commit.fileCount(cellsDir) > 0
+        // whole-store replace BEFORE the seeded probe (repairKnnEdges
+        // cannot rebuild cells). The edges/labels stores keep their
+        // dynamic-partition-overwrite + consistency-repair protocol —
+        // the repair detects torn partition commits from layout +
+        // content (count/owner-set disagreement vs the cells store),
+        // never from rename atomicity, so it is scheme-agnostic by
+        // construction.
+        StoreCommit.recover(cellsDir)
+        val storeSeeded = StoreCommit.fileCount(cellsDir) > 0
         // repair is O(store) (two consistency aggregates), so it is
         // GATED on the sync marker the happy path maintains below:
         // steady state pays one existence probe, and only a batch
@@ -894,9 +844,9 @@ object EventStreams {
         graft.ops.SinkGuard.prologue(edgesDir, "_cells_synced",
           storeSeeded, repair = Some(() => {
             graft.ext.ClusterOps.repairKnnEdges(spark, cellsDir,
-              edgesDir, commit)
+              edgesDir)
             labelsDir.foreach(ld => graft.ext.ClusterOps
-              .repairKnnCommunityLabels(spark, cellsDir, ld, commit))
+              .repairKnnCommunityLabels(spark, cellsDir, ld))
           }))
         val batch = raw.select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))
@@ -905,7 +855,7 @@ object EventStreams {
         // the store, and "absent" must not read as "never admitted"
         val fresh = graft.ops.SinkGuard.fresh(batch, edgesDir,
           "vec_id", storeSeeded, {
-            val stored = commit.read(spark, cellsDir).select("vec_id")
+            val stored = StoreCommit.read(spark, cellsDir).select("vec_id")
             graft.ops.SinkGuard.removedIds(spark, edgesDir)
               .map(r => stored.unionByName(r.select("vec_id")))
               .getOrElse(stored)
@@ -920,7 +870,7 @@ object EventStreams {
             }
           graft.ops.SinkGuard.commit(edgesDir, "_cells_synced",
               Some(batchMax)) {
-            commit.append(cellsDir) { live =>
+            StoreCommit.append(cellsDir) { live =>
               assigned.write.mode("append").partitionBy("cell")
                 .parquet(live)
             }
@@ -935,7 +885,7 @@ object EventStreams {
             val touchedCells = assigned.select(col("cell")).distinct()
               .collect().map(_.get(0).toString.toInt).sorted
               .map(Integer.valueOf)
-            val storeCells = commit.read(spark, cellsDir)
+            val storeCells = StoreCommit.read(spark, cellsDir)
               .select(col("vec_id"), col("cell").cast("int").as("cell"),
                 col("v"))
               .filter(col("cell").isin(touchedCells: _*))
@@ -951,7 +901,7 @@ object EventStreams {
               val seedNeeded =
                 graft.ops.StoreFiles.partitionDirCount(ld, "cell=") == 0
               val labelInput =
-                if (seedNeeded) commit.read(spark, cellsDir)
+                if (seedNeeded) StoreCommit.read(spark, cellsDir)
                   .select(col("vec_id"),
                     col("cell").cast("int").as("cell"), col("v"))
                 else storeCells
@@ -960,8 +910,7 @@ object EventStreams {
                   batchFrom)
             }
           }
-          graft.ext.Dedup.maybeCompactSemanticCells(spark, cellsDir,
-            commit = commit)
+          graft.ext.Dedup.maybeCompactSemanticCells(spark, cellsDir)
         }
         ()
       }
@@ -986,52 +935,42 @@ object EventStreams {
     * cannot be detected from store contents at all. Instead the fold
     * and the replay watermark commit ATOMICALLY
     * ([[graft.ext.ClusterOps.foldClusterCardAgg]] — the whole bounded
-    * store swaps through the [[graft.ops.ArtifactSwap]] rename-aside
-    * with the `_id_watermark` inside), so after
-    * [[graft.ops.ArtifactSwap.recover]] at batch start the store and
-    * its watermark are always mutually consistent: a replayed batch
-    * either re-folds in full (crash before the swap — the fold was
-    * lost with it) or drops in full (crash after — the watermark
-    * advanced with the fold). Exactly-once without a repair path.
+    * store replaces through [[graft.ops.StoreCommit]] with the
+    * `_id_watermark` inside the version), so after recovery at batch
+    * start the store and its watermark are always mutually
+    * consistent: a replayed batch either re-folds in full (crash
+    * before the flip — the fold was lost with it) or drops in full
+    * (crash after — the watermark advanced with the fold).
+    * Exactly-once without a repair path.
     *
-    * A store seeded OUTSIDE the sink must carry a watermark before
-    * adoption (set [[graft.ops.StoreFiles.writeIdWatermark]] to the
-    * max folded doc_id): with no ids stored, replay protection cannot
-    * be re-derived, and the sink refuses loudly rather than risk a
-    * silent double-count. Stream-accumulated card == one-shot
+    * A store seeded OUTSIDE the sink must carry a watermark in its
+    * committed version (write [[graft.ops.StoreFiles.writeIdWatermark]]
+    * into the version the seeding `StoreCommit.replace` commits): with
+    * no ids stored, replay protection cannot be re-derived, and the
+    * sink refuses loudly rather than risk a silent double-count.
+    * Stream-accumulated card == one-shot
     * [[graft.ext.ClusterOps.writeClusterCardAgg]] rebuild, asserted
-    * EXACT in EventStreamsSpec.
-    *
-    * `pointer = true` commits through [[graft.ops.PointerSwap]]
-    * (versioned dirs + one-file pointer) instead of the rename-aside
-    * swap — the same exactly-once protocol on object stores whose
-    * directory rename [[graft.ops.ArtifactSwap]] refuses; `aggDir`
-    * is then the pointer ROOT and readers resolve the committed
-    * version ([[graft.ops.PointerSwap.resolve]]). */
+    * EXACT in EventStreamsSpec; read it with
+    * [[graft.ext.ClusterOps.clusterCardFromStore]]. */
   def clusterCardSink(docs: DataFrame,
       assign: DataFrame => DataFrame,
-      aggDir: String, checkpointDir: String,
-      pointer: Boolean = false): StreamingQuery = {
+      aggDir: String, checkpointDir: String): StreamingQuery = {
     val q = docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (raw: DataFrame, _: Long) =>
         val spark = raw.sparkSession
         // closes every commit crash window; afterwards store+watermark
         // are the last atomically-committed pair
-        if (pointer) graft.ops.PointerSwap.recover(aggDir)
-        else graft.ops.ArtifactSwap.recover(aggDir)
-        val store =
-          if (pointer) graft.ops.PointerSwap.resolve(aggDir)
-          else Some(aggDir)
-        val seeded = store.exists(s =>
-          graft.ops.StoreFiles.parquetFileCount(s"$s/src") > 0)
-        val wm = store.flatMap(graft.ops.StoreFiles.readIdWatermark)
+        StoreCommit.recover(aggDir)
+        val seeded = StoreCommit.subFileCount(aggDir, "src") > 0
+        val wm = graft.ops.StoreFiles.readIdWatermark(
+          StoreCommit.readDir(aggDir))
         require(!seeded || wm.isDefined,
           s"card-agg store at $aggDir has no replay watermark: the " +
             "card fold is non-idempotent and the store holds no ids, " +
             "so replay protection cannot be re-derived — seed through " +
-            "this sink, or set StoreFiles.writeIdWatermark to the max " +
-            "folded doc_id before adopting the store")
+            "this sink, or write StoreFiles.writeIdWatermark (the max " +
+            "folded doc_id) into the seeding version")
         val fresh = wm match {
           case Some(w) if seeded => raw.filter(col("doc_id") > w)
           case _ => raw
@@ -1043,11 +982,8 @@ object EventStreams {
           .localCheckpoint()
         if (!batchJ.isEmpty) {
           val batchMax = batchJ.agg(max(col("doc_id"))).head().getLong(0)
-          if (pointer)
-            graft.ext.ClusterOps.foldClusterCardAggPointer(spark,
-              aggDir, batchJ, batchMax)
-          else graft.ext.ClusterOps.foldClusterCardAgg(spark, aggDir,
-            batchJ, batchMax)
+          graft.ext.ClusterOps.foldClusterCardAgg(spark, aggDir, batchJ,
+            batchMax)
         }
         ()
       }
@@ -1069,7 +1005,7 @@ object EventStreams {
     * reason: the fold is a non-idempotent sum into a store holding no
     * doc ids, so replay protection cannot be re-derived from contents
     * — fold + `_id_watermark` commit atomically
-    * ([[graft.ext.Bpe.foldWordHist]] swaps the whole
+    * ([[graft.ext.Bpe.foldWordHist]] replaces the whole
     * vocabulary-bounded store), recovery at batch start makes
     * store+watermark the last committed pair, and a foreign store
     * without a watermark is REFUSED (seed via
@@ -1084,16 +1020,16 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (raw: DataFrame, _: Long) =>
         val spark = raw.sparkSession
-        graft.ops.ArtifactSwap.recover(histDir)
-        val seeded =
-          graft.ops.StoreFiles.parquetFileCount(s"$histDir/hist") > 0
-        val wm = graft.ops.StoreFiles.readIdWatermark(histDir)
+        StoreCommit.recover(histDir)
+        val seeded = StoreCommit.subFileCount(histDir, "hist") > 0
+        val wm = graft.ops.StoreFiles.readIdWatermark(
+          StoreCommit.readDir(histDir))
         require(!seeded || wm.isDefined,
           s"word-hist store at $histDir has no replay watermark: the " +
             "sum fold is non-idempotent and the store holds no ids — " +
-            "seed through Bpe.writeWordHistStore, or set " +
-            "StoreFiles.writeIdWatermark to the max folded doc_id " +
-            "before adopting the store")
+            "seed through Bpe.writeWordHistStore, or write " +
+            "StoreFiles.writeIdWatermark (the max folded doc_id) into " +
+            "the seeding version")
         val fresh = wm match {
           case Some(w) if seeded => raw.filter(col("doc_id") > w)
           case _ => raw
@@ -1127,41 +1063,35 @@ object EventStreams {
     * own subdir instead of duplicating; the watermark scalar is an
     * optimization whose loss merely re-derives from a max() read
     * ([[graft.pipeline.ZOrderLayout.storeWatermark]]); compaction is
-    * one whole-store [[graft.ops.ArtifactSwap]] swap (watermark
+    * one whole-store [[graft.ops.StoreCommit.replace]] (watermark
     * inside), so a crash mid-OPTIMIZE resolves to old-or-new, never
     * a mix. Stream content == source EXACT through crash + replay,
     * asserted in ZOrderSpec.
     *
-    * Why this family does NOT need [[graft.ops.ManifestCommit]]: each
-    * delta/run subdir is sealed by a self-stamped `_SUCCESS` (a
-    * single-object PUT — [[graft.pipeline.ZOrderLayout]]'s listings
-    * skip unsealed dirs), and a job that dies mid-commit leaves its
-    * dir unsealed → invisible → the replay overwrites the SAME
-    * name. The per-dir marker is this store's committed file list:
-    * one marker per batch instead of one manifest per version, with
-    * the same no-rename-trust guarantee. */
+    * Inside the committed version, each delta/run subdir is sealed by
+    * a self-stamped `_SUCCESS` (a single-object PUT —
+    * [[graft.pipeline.ZOrderLayout]]'s listings skip unsealed dirs),
+    * and a job that dies mid-commit leaves its dir unsealed →
+    * invisible → the replay overwrites the SAME name: the per-dir
+    * marker plays the manifest's role for the appends. */
   def zorderStoreSink(rows: DataFrame, store: String,
-      checkpointDir: String, x: String, y: String, idCol: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit)
+      checkpointDir: String, x: String, y: String, idCol: String)
       : StreamingQuery = {
     import graft.pipeline.ZOrderLayout
     val q = rows.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (raw: DataFrame, _: Long) =>
         val spark = raw.sparkSession
-        commit.recover(store)
-        // the live dir: the store root (swap mode) or the committed
-        // pointer version (pointer mode) — appends and tier listings
-        // all run against it; the major compaction alone replaces the
-        // ROOT through the commit protocol
-        val live = commit.writeDir(store)
+        StoreCommit.recover(store)
+        // the committed version: appends and tier listings all run
+        // against it; the major compaction alone replaces the ROOT
+        val live = StoreCommit.writeDir(store)
         val wm = ZOrderLayout.storeWatermark(spark, live, idCol)
         val fresh = wm.map(w => raw.filter(col(idCol) > w))
           .getOrElse(raw).localCheckpoint()
         if (!fresh.isEmpty) {
           ZOrderLayout.appendDelta(fresh, live, idCol)
-          ZOrderLayout.maybeCompactStore(spark, store, x, y, idCol,
-            commit)
+          ZOrderLayout.maybeCompactStore(spark, store, x, y, idCol)
         }
         ()
       }
@@ -1180,20 +1110,19 @@ object EventStreams {
     * aggregate, and the gold side still prunes to touched cells — so
     * a repaired log equals the crash-free one. */
   def repairSemanticVerdicts(spark: SparkSession, cellsDir: String,
-      verdictsDir: String,
-      commit: graft.ops.StoreCommit = graft.ops.SwapCommit): Unit = {
-    if (commit.fileCount(cellsDir) == 0) return
-    val stored = commit.read(spark, cellsDir).select(col("vec_id"),
+      verdictsDir: String): Unit = {
+    if (StoreCommit.fileCount(cellsDir) == 0) return
+    val stored = StoreCommit.read(spark, cellsDir).select(col("vec_id"),
       col("cell").cast("int").as("cell"), col("v"))
     val missing =
-      if (hasParquet(verdictsDir))
-        stored.join(spark.read.parquet(verdictsDir).select("vec_id"),
+      if (StoreCommit.fileCount(verdictsDir) > 0)
+        stored.join(StoreCommit.read(spark, verdictsDir).select("vec_id"),
           Seq("vec_id"), "left_anti")
       else stored
     val repaired = graft.ext.Dedup
       .batchSemanticDups(stored, missing.localCheckpoint())
       .localCheckpoint()
-    repaired.write.mode("append").parquet(verdictsDir)
+    StoreCommit.append(verdictsDir)(repaired.write.mode("append").parquet(_))
   }
 
   /** Streaming curation — the sketch pipeline run over ARRIVING
@@ -1231,8 +1160,15 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val fresh = Seq(goldDir, dispDir).filter(hasParquet)
-          .map(d => spark.read.parquet(d).select("doc_id"))
+        val goldSeen =
+          if (StoreCommit.fileCount(goldDir) > 0)
+            Seq(StoreCommit.read(spark, goldDir).select("doc_id"))
+          else Nil
+        val dispSeen =
+          if (hasParquet(dispDir))
+            Seq(spark.read.parquet(dispDir).select("doc_id"))
+          else Nil
+        val fresh = (goldSeen ++ dispSeen)
           .foldLeft(batch)((b, seen) => b.join(seen, Seq("doc_id"), "left_anti"))
         val disp = graft.ext.Curation
           .curateBatch(spark, fresh, evalBitmask, indexDir)
@@ -1242,7 +1178,7 @@ object EventStreams {
               .isin("train", "validation", "test"))
             .select("doc_id"),
           Seq("doc_id")).localCheckpoint()
-        accepted.write.mode("append").parquet(goldDir)
+        StoreCommit.append(goldDir)(accepted.write.mode("append").parquet(_))
         graft.ext.Dedup.appendGoldIndex(accepted, indexDir)
         disp.write.mode("append").parquet(dispDir)
         graft.ext.Dedup.maybeCompactIndex(spark, goldDir, indexDir)
@@ -1262,8 +1198,8 @@ object EventStreams {
   def repairCurationDispositions(spark: SparkSession, goldDir: String,
       dispDir: String): Unit = {
     import org.apache.spark.sql.functions.col
-    if (!hasParquet(goldDir)) return
-    val gold = spark.read.parquet(goldDir).select("doc_id")
+    if (StoreCommit.fileCount(goldDir) == 0) return
+    val gold = StoreCommit.read(spark, goldDir).select("doc_id")
     val missing =
       if (hasParquet(dispDir))
         gold.join(spark.read.parquet(dispDir).select("doc_id"),

@@ -466,16 +466,18 @@ class ClusterOpsSpec extends SparkSpec {
     assert(fromStore.nonEmpty)
     // the ATOMIC fold (the streaming sink's form) lands the same
     // merged aggregates, with the replay watermark committed inside
-    // the same swap — store and watermark can never disagree
+    // the same version — store and watermark can never disagree
     val swapDir = graft.ops.Scratch.dir("graft_card_swap_spec") + "/agg"
-    ClusterOps.writeClusterCardAgg(j.filter(col("doc_id") <= cut), swapDir)
+    graft.ops.StoreCommit.replace(swapDir)(
+      ClusterOps.writeClusterCardAgg(j.filter(col("doc_id") <= cut), _))
     val maxId = j.agg(max(col("doc_id"))).head().getLong(0)
     ClusterOps.foldClusterCardAgg(spark, swapDir,
       j.filter(col("doc_id") > cut), maxId)
-    assert(rows(ClusterOps.clusterCardFromAgg(spark, swapDir)) == fromStore,
+    assert(rows(ClusterOps.clusterCardFromStore(spark, swapDir)) == fromStore,
       "atomic fold must equal the dynamic-overwrite merge")
-    assert(graft.ops.StoreFiles.readIdWatermark(swapDir) == Some(maxId),
-      "the watermark must be part of the swapped artifact")
+    assert(graft.ops.StoreFiles.readIdWatermark(
+        graft.ops.StoreCommit.readDir(swapDir)) == Some(maxId),
+      "the watermark must be part of the committed artifact")
     // NOT idempotent by design: the merge is an aggregate FOLD, so a
     // replayed batch would double-count — replay protection is the
     // CALLER's contract (the sinks' id-watermark guard), unlike the

@@ -385,9 +385,8 @@ class CurationSpec extends SparkSpec {
     val labelsDir = s"$base/labels"
     val countsDir = s"$base/counts"
     Sampling.writeSplitLabels(spark, sf, labelsDir)
-    Selection.tokenCountsOn(Tables.documents(spark, sf))
-      .write.mode("overwrite")
-      .parquet(s"$countsDir/${Selection.TokenCountsTable}.parquet")
+    graft.ops.StoreCommit.replace(Selection.tokenCountsRoot(countsDir))(
+      Selection.tokenCountsOn(Tables.documents(spark, sf)).write.parquet(_))
     val live = Curation.dataCard(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     val fed = Curation.dataCardFrom(spark, sf, labelsDir, countsDir)
@@ -425,8 +424,8 @@ class CurationSpec extends SparkSpec {
     Sampling.mergeSplitLabelsArtifact(spark, labelsDir, gold, batch)
     // counts: gold store, then the batch folds in (the count-artifact
     // merge path, exactly-once via the batch-id marker)
-    Selection.tokenCountsOn(gold).write.mode("overwrite")
-      .parquet(s"$countsDir/${Selection.TokenCountsTable}.parquet")
+    graft.ops.StoreCommit.replace(Selection.tokenCountsRoot(countsDir))(
+      Selection.tokenCountsOn(gold).write.parquet(_))
     assert(Selection.mergeTokenCountsArtifact(spark, countsDir,
       batch, 0L))
     val live = Curation.dataCard(spark, sf).collect()

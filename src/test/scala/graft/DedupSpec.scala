@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
+import graft.ops.StoreCommit
 
 class DedupSpec extends SparkSpec {
 
@@ -70,7 +71,7 @@ class DedupSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     val cutoff = ids(ids.length * 4 / 5)
     val gold = d.filter(col("doc_id") <= cutoff)
-    gold.write.parquet(goldDir)
+    StoreCommit.replace(goldDir)(gold.write.parquet(_))
     graft.ops.StoreFiles.writeIdWatermark(goldDir, cutoff)
     graft.ops.StoreFiles.createMarker(goldDir, "_ids_synced")
     Dedup.writeGoldIndex(gold, ixDir)
@@ -78,13 +79,13 @@ class DedupSpec extends SparkSpec {
     val nDoomed = doomed.count()
     assert(nDoomed > 0)
     Dedup.tombstoneGoldIndex(doomed, ixDir)
-    val goldBefore = spark.read.parquet(goldDir).count()
+    val goldBefore = StoreCommit.read(spark, goldDir).count()
     val (removed, reclaimed) = Dedup.vacuumGold(spark, goldDir, ixDir)
     assert(removed == nDoomed && reclaimed > 0,
       s"vacuum removed=$removed (want $nDoomed) reclaimed=$reclaimed")
-    assert(spark.read.parquet(goldDir).count() == goldBefore - nDoomed)
+    assert(StoreCommit.read(spark, goldDir).count() == goldBefore - nDoomed)
     // the tombstone list is RESET (removals are physical now)
-    assert(!graft.ops.StoreFiles.hasTopLevelParquet(s"$ixDir/tombstones"))
+    assert(StoreCommit.subFileCount(ixDir, "tombstones") == 0)
     // the PRE-vacuum watermark survives: replayed old batches drop
     assert(graft.ops.StoreFiles.readIdWatermark(goldDir).contains(cutoff))
     assert(graft.ops.StoreFiles.markerExists(goldDir, "_ids_synced"))
@@ -232,6 +233,30 @@ class DedupSpec extends SparkSpec {
     assert(viaIndex == direct)
   }
 
+  test("a gold index whose bands.band_val is the md5-hex string is " +
+      "refused, naming the rebuild, instead of matching nothing") {
+    val d = graft.Tables.documents(spark, sf)
+    val cutoff = d.agg(floor(max(col("doc_id")) * 0.8).cast("long"))
+      .head().getLong(0)
+    val base = graft.ops.Scratch.dir("gold_hex")
+    val current = s"$base/current"; val hexEra = s"$base/hex"
+    Dedup.writeGoldIndex(d.filter(col("doc_id") <= cutoff), current)
+    // the same index in the pre-BINARY(16) band format: band_val as
+    // the 32-char md5 hex string
+    StoreCommit.replace(hexEra) { next =>
+      Seq("fingerprints", "shingles").foreach(c =>
+        StoreCommit.readSub(spark, current, c).write.parquet(s"$next/$c"))
+      StoreCommit.readSub(spark, current, "bands")
+        .withColumn("band_val", lower(hex(col("band_val"))))
+        .write.partitionBy("band_idx").parquet(s"$next/bands")
+    }
+    val e = intercept[IllegalStateException] {
+      Dedup.incrementalAgainstIndex(spark,
+        d.filter(col("doc_id") > cutoff), hexEra)
+    }
+    assert(e.getMessage.contains("rebuildIndex"), e.getMessage)
+  }
+
   test("rebuildIndex recovers the crash window between gold append " +
       "and index append") {
     val d = graft.Tables.documents(spark, sf)
@@ -242,7 +267,7 @@ class DedupSpec extends SparkSpec {
     val batch2 = d.filter(col("doc_id") > maxId * 8 / 10)
     val base = graft.ops.Scratch.dir("gold_crash")
     // healthy start: gold corpus + matching index
-    gold0.write.parquet(s"$base/gold")
+    StoreCommit.replace(s"$base/gold")(gold0.write.parquet(_))
     Dedup.writeGoldIndex(gold0, s"$base/index")
     // simulated crash: batch1's uniques reach the gold corpus but the
     // index append never happens (the sink's documented crash window
@@ -251,7 +276,7 @@ class DedupSpec extends SparkSpec {
       Dedup.incrementalAgainstIndex(spark, batch1, s"$base/index")
         .filter(col("verdict") === "unique").select("doc_id"),
       Seq("doc_id")).localCheckpoint()
-    uniques1.write.mode("append").parquet(s"$base/gold")
+    StoreCommit.append(s"$base/gold")(uniques1.write.mode("append").parquet(_))
     // recovery: rebuild the index from the gold source of truth …
     Dedup.rebuildIndex(spark, s"$base/gold", s"$base/index")
     val recovered = Dedup.incrementalAgainstIndex(
@@ -259,7 +284,7 @@ class DedupSpec extends SparkSpec {
     // … and it must judge batch2 exactly like an index built directly
     // from the same gold corpus by a crash-free run
     val cleanIdx = graft.ops.Scratch.dir("gold_clean")
-    Dedup.writeGoldIndex(spark.read.parquet(s"$base/gold"), cleanIdx)
+    Dedup.writeGoldIndex(StoreCommit.read(spark, s"$base/gold"), cleanIdx)
     val clean = Dedup.incrementalAgainstIndex(
       spark, batch2, cleanIdx).collect().toSeq
     assert(recovered == clean)
@@ -280,7 +305,7 @@ class DedupSpec extends SparkSpec {
     val gold = slice.join(keepIds, Seq("doc_id")).localCheckpoint()
     val probe = d.filter(col("doc_id") > maxId * 8 / 10).localCheckpoint()
     val base = graft.ops.Scratch.dir("gold_ts")
-    gold.write.parquet(s"$base/gold")
+    StoreCommit.replace(s"$base/gold")(gold.write.parquet(_))
     Dedup.writeGoldIndex(gold, s"$base/index")
     val orig = Dedup.incrementalAgainstIndex(spark, probe, s"$base/index")
       .localCheckpoint()
@@ -307,7 +332,7 @@ class DedupSpec extends SparkSpec {
     // is append-only — dropping it would resurrect the docs at the
     // NEXT rebuild)
     Dedup.rebuildIndex(spark, s"$base/gold", s"$base/index")
-    assert(new java.io.File(s"$base/index/tombstones").exists(),
+    assert(StoreCommit.subFileCount(s"$base/index", "tombstones") > 0,
       "rebuild must carry the tombstone component forward")
     val rebuilt = Dedup.incrementalAgainstIndex(
       spark, probe, s"$base/index").collect().toSeq
@@ -328,7 +353,7 @@ class DedupSpec extends SparkSpec {
     val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
     val base = graft.ops.Scratch.dir("gold_compact")
     val gold0 = d.filter(col("doc_id") <= maxId / 2)
-    gold0.write.parquet(s"$base/gold")
+    StoreCommit.replace(s"$base/gold")(gold0.write.parquet(_))
     Dedup.writeGoldIndex(gold0, s"$base/index")
     // fragment the store with several small appends (each append adds
     // part files per component, like the streaming sink's micro-batches)
@@ -342,7 +367,7 @@ class DedupSpec extends SparkSpec {
         Dedup.incrementalAgainstIndex(spark, b, s"$base/index")
           .filter(col("verdict") === "unique").select("doc_id"),
         Seq("doc_id")).localCheckpoint()
-      uniques.write.mode("append").parquet(s"$base/gold")
+      StoreCommit.append(s"$base/gold")(uniques.write.mode("append").parquet(_))
       Dedup.appendGoldIndex(uniques, s"$base/index")
     }
     val fragmented = Dedup.indexFileCount(s"$base/index")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
+import graft.ops.StoreCommit
 
 class EventStreamsSpec extends SparkSpec {
 
@@ -291,7 +292,7 @@ class EventStreamsSpec extends SparkSpec {
     val fresh2 = docs.filter(col("doc_id") > c1)
 
     // seed the store with the initial gold corpus + its index
-    gold0.write.mode("overwrite").parquet(s"$base/gold")
+    StoreCommit.replace(s"$base/gold")(gold0.write.parquet(_))
     Dedup.writeGoldIndex(gold0, s"$base/index")
 
     def stageFile(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
@@ -313,7 +314,7 @@ class EventStreamsSpec extends SparkSpec {
     // restart boundary: second batch arrives while the query is down
     stageFile(fresh2, "b2.parquet")
     runOnce()
-    val streamed = spark.read.parquet(s"$base/gold")
+    val streamed = StoreCommit.read(spark, s"$base/gold")
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
 
     // batch replay of the same sequence: fresh1 against gold0, then
@@ -334,7 +335,7 @@ class EventStreamsSpec extends SparkSpec {
     // a replayed batch after the run is a no-op (idempotent sink)
     stageFile(fresh2, "b2_replay.parquet")
     runOnce()
-    assert(spark.read.parquet(s"$base/gold").count() == expected.size)
+    assert(StoreCommit.read(spark, s"$base/gold").count() == expected.size)
   }
 
   test("dedup sink crash between gold append and index append: the " +
@@ -350,7 +351,7 @@ class EventStreamsSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     val c0 = ids(ids.length / 2)
     val gold0 = docs.filter(col("doc_id") <= c0)
-    gold0.write.mode("overwrite").parquet(s"$base/gold")
+    StoreCommit.replace(s"$base/gold")(gold0.write.parquet(_))
     Dedup.writeGoldIndex(gold0, s"$base/index")
     // a doc the index would accept, landed in gold by a batch that
     // CRASHED before its index append: gold has it, the index is
@@ -362,7 +363,7 @@ class EventStreamsSpec extends SparkSpec {
       .select(col("doc_id")).collect().head.getLong(0)
     val crashedDoc = docs.filter(col("doc_id") === crashed)
       .localCheckpoint()
-    crashedDoc.write.mode("append").parquet(s"$base/gold")
+    StoreCommit.append(s"$base/gold")(crashedDoc.write.mode("append").parquet(_))
     graft.ops.StoreFiles.deleteMarker(s"$base/gold", "_ids_synced")
     graft.ops.StoreFiles.deleteIdWatermark(s"$base/gold")
     // next batch: an EXACT duplicate of the crashed doc under a new
@@ -377,13 +378,13 @@ class EventStreamsSpec extends SparkSpec {
     val f = new java.io.File(tmp.toString).listFiles()
       .find(_.getName.endsWith(".parquet")).get
     Files.move(f.toPath, Paths.get(srcDir, "dup.parquet"))
-    val before = spark.read.parquet(s"$base/gold").count()
+    val before = StoreCommit.read(spark, s"$base/gold").count()
     EventStreams.incrementalDedupSink(
       spark.readStream.schema(docs.schema).parquet(srcDir),
       s"$base/index", s"$base/gold", s"$base/chk").stop()
-    assert(spark.read.parquet(s"$base/gold").count() == before,
+    assert(StoreCommit.read(spark, s"$base/gold").count() == before,
       "the duplicate of the crashed doc must be rejected")
-    assert(!spark.read.parquet(s"$base/gold")
+    assert(!StoreCommit.read(spark, s"$base/gold")
       .filter(col("doc_id") === ids.max + 1).collect().nonEmpty)
   }
 
@@ -426,7 +427,7 @@ class EventStreamsSpec extends SparkSpec {
     val dispMap = disp.toMap
 
     // accepted gold corpus == docs with a split disposition
-    val gold = spark.read.parquet(s"$base/gold")
+    val gold = StoreCommit.read(spark, s"$base/gold")
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     val splits = Set("train", "validation", "test")
     assert(gold == dispMap.collect {
@@ -436,7 +437,7 @@ class EventStreamsSpec extends SparkSpec {
     stageFile(docs.filter(col("doc_id") > cut), "b2_replay.parquet")
     runOnce()
     assert(spark.read.parquet(s"$base/disp").count() == ids.length.toLong)
-    assert(spark.read.parquet(s"$base/gold").count() == gold.size.toLong)
+    assert(StoreCommit.read(spark, s"$base/gold").count() == gold.size.toLong)
 
     // parity with the batch pipeline everywhere the two tiers share
     // semantics: the dedup stages differ by design (global CC vs
@@ -463,7 +464,7 @@ class EventStreamsSpec extends SparkSpec {
     val base = java.nio.file.Paths.get(
       graft.ops.Scratch.dir("graft_cur_repair"))
     val accepted = Tables.documents(spark, sf).limit(20)
-    accepted.write.mode("overwrite").parquet(s"$base/gold")
+    StoreCommit.replace(s"$base/gold")(accepted.write.parquet(_))
     // crash before the disposition append: log dir empty
     EventStreams.repairCurationDispositions(spark, s"$base/gold", s"$base/disp")
     val repaired = spark.read.parquet(s"$base/disp")
@@ -554,8 +555,8 @@ class EventStreamsSpec extends SparkSpec {
     val q = EventStreams.driftMonitorSink(stream, s"$base/counts",
       s"$base/ckpt")
     q.stop()
-    def counts = spark.read
-      .parquet(s"$base/counts/${Selection.TokenCountsTable}.parquet")
+    def counts = StoreCommit
+      .read(spark, Selection.tokenCountsRoot(s"$base/counts"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .toSet
     val expect = Selection.tokenCountsOn(docs).collect()
@@ -626,8 +627,8 @@ class EventStreamsSpec extends SparkSpec {
     assert(normal.forall(_._3 < tripped.head._3),
       "the drifted score must dominate every natural score")
     // parity through the alerting path: counts == artifact-free merge
-    val counts = spark.read
-      .parquet(s"$base/counts/${Selection.TokenCountsTable}.parquet")
+    val counts = StoreCommit
+      .read(spark, Selection.tokenCountsRoot(s"$base/counts"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .toSet
     val expect = Selection.mergeTokenCounts(
@@ -652,8 +653,8 @@ class EventStreamsSpec extends SparkSpec {
     q3.stop()
     assert(rawAlertRows == rawBefore,
       "replayed applied batches must not append re-scored alert rows")
-    val countsAfter = spark.read
-      .parquet(s"$base/counts/${Selection.TokenCountsTable}.parquet")
+    val countsAfter = StoreCommit
+      .read(spark, Selection.tokenCountsRoot(s"$base/counts"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .toSet
     assert(countsAfter == expect, "replays must not perturb the counts")
@@ -690,10 +691,10 @@ class EventStreamsSpec extends SparkSpec {
     def cast(df: org.apache.spark.sql.DataFrame) =
       df.select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
-    seed.write.mode("overwrite").parquet(s"$base/gold")
-    ProductQuant.encodeFrameResidual(cast(seed), coarse, rcbs)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$base/codes")
+    StoreCommit.replace(s"$base/gold")(seed.write.parquet(_))
+    StoreCommit.replace(s"$base/codes")(
+      ProductQuant.encodeFrameResidual(cast(seed), coarse, rcbs)
+        .write.partitionBy("cell").parquet(_))
 
     def stageFile(part: org.apache.spark.sql.DataFrame, name: String): Unit = {
       val tmp = java.nio.file.Paths.get(
@@ -721,9 +722,9 @@ class EventStreamsSpec extends SparkSpec {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
           r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6))).toSet
-    val streamedGold = spark.read.parquet(s"$base/gold")
+    val streamedGold = StoreCommit.read(spark, s"$base/gold")
     assert(streamedGold.count() == ids.length.toLong)
-    val streamed = codeRows(spark.read.parquet(s"$base/codes"))
+    val streamed = codeRows(StoreCommit.read(spark, s"$base/codes"))
     val full = codeRows(
       ProductQuant.encodeFrameResidual(cast(streamedGold), coarse, rcbs))
     assert(streamed == full,
@@ -732,7 +733,7 @@ class EventStreamsSpec extends SparkSpec {
     // a replayed batch is a no-op (idempotent sink)
     stageFile(b2, "b2_replay.parquet")
     runOnce()
-    assert(codeRows(spark.read.parquet(s"$base/codes")) == full)
+    assert(codeRows(StoreCommit.read(spark, s"$base/codes")) == full)
 
     // ADC search served from the streamed store == from a fresh encode
     val (qid, qCell, dt) =
@@ -741,7 +742,7 @@ class EventStreamsSpec extends SparkSpec {
       ProductQuant.adcOverCodes(
         codes.filter(col("cell") === qCell), dt, qid)
         .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    assert(top(spark.read.parquet(s"$base/codes")) ==
+    assert(top(StoreCommit.read(spark, s"$base/codes")) ==
       top(ProductQuant.encodeFrameResidual(cast(streamedGold), coarse, rcbs)))
 
     // compaction: a tiny threshold forces the rebuild; the store
@@ -752,7 +753,7 @@ class EventStreamsSpec extends SparkSpec {
     val after = ProductQuant.codesFileCount(s"$base/codes")
     assert(after <= before && after <= coarse.size + 2,
       s"compaction should shrink toward one file per cell ($before -> $after)")
-    assert(codeRows(spark.read.parquet(s"$base/codes")) == full)
+    assert(codeRows(StoreCommit.read(spark, s"$base/codes")) == full)
     // and below threshold it is a no-op
     assert(!ProductQuant.maybeCompactCodes(spark, s"$base/gold",
       s"$base/codes", coarse, rcbs, threshold = 10000))
@@ -774,14 +775,16 @@ class EventStreamsSpec extends SparkSpec {
       df.select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
     val seed = e.filter(col("vec_id") <= c0)
-    seed.write.mode("overwrite").parquet(s"$base/gold")
-    ProductQuant.encodeFrameResidual(cast(seed), coarse, rcbs)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$base/codes")
+    StoreCommit.replace(s"$base/gold")(seed.write.parquet(_))
+    StoreCommit.replace(s"$base/codes")(
+      ProductQuant.encodeFrameResidual(cast(seed), coarse, rcbs)
+        .write.partitionBy("cell").parquet(_))
     // crash shape: b1's vectors reached gold, their codes never did,
     // the marker is down — the replay guard would drop them as
     // already-in-gold, so only the prologue repair can re-encode them
-    e.filter(col("vec_id") > c0 && col("vec_id") <= c1)
-      .write.mode("append").parquet(s"$base/gold")
+    StoreCommit.append(s"$base/gold")(
+      e.filter(col("vec_id") > c0 && col("vec_id") <= c1)
+        .write.mode("append").parquet(_))
     graft.ops.StoreFiles.deleteMarker(s"$base/gold", "_ids_synced")
     graft.ops.StoreFiles.deleteIdWatermark(s"$base/gold")
     // drive the next batch through the sink
@@ -801,8 +804,8 @@ class EventStreamsSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getInt(1),
           r.getInt(2), r.getInt(3))).toSet
     val full = codeRows(ProductQuant.encodeFrameResidual(
-      cast(spark.read.parquet(s"$base/gold")), coarse, rcbs))
-    assert(codeRows(spark.read.parquet(s"$base/codes")) == full,
+      cast(StoreCommit.read(spark, s"$base/gold")), coarse, rcbs))
+    assert(codeRows(StoreCommit.read(spark, s"$base/codes")) == full,
       "the codes store must include the crashed batch's re-encoded rows")
   }
 
@@ -842,15 +845,16 @@ class EventStreamsSpec extends SparkSpec {
       graft.ext.KMeans.vecs(spark, sf)
         .filter(col("vec_id") > c0 && col("vec_id") <= c1),
       coarse, subs, Dedup.SubK).localCheckpoint()
-    b1Assigned.write.mode("append").partitionBy("cell").parquet(cellsDir)
+    StoreCommit.append(cellsDir)(
+      b1Assigned.write.mode("append").partitionBy("cell").parquet(_))
     graft.ops.StoreFiles.deleteMarker(cellsDir, "_ids_synced")
     graft.ops.StoreFiles.deleteIdWatermark(cellsDir)
     // next batch through the sink: the prologue repair must backfill
     // b1's verdicts BEFORE b2 lands (so their currency matches the
     // crash-free run's)
     stageFile(c1, Long.MaxValue, "b2.parquet"); runOnce()
-    val stored = spark.read.parquet(cellsDir)
-    val verdicts = spark.read.parquet(verdictsDir)
+    val stored = StoreCommit.read(spark, cellsDir)
+    val verdicts = StoreCommit.read(spark, verdictsDir)
     assert(verdicts.count() == stored.count(),
       "every stored vector must have a verdict row")
     assert(verdicts.select("vec_id").distinct().count() == stored.count(),
@@ -913,7 +917,7 @@ class EventStreamsSpec extends SparkSpec {
       df.select(col("vec_id"), col("cell").cast("int"), col("v"))
         .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2))).toSet
-    val store = spark.read.parquet(cellsDir)
+    val store = StoreCommit.read(spark, cellsDir)
     assert(store.count() == ids.length.toLong)
     val oneShot = Dedup.assignSemanticCells(
       graft.ext.KMeans.vecs(spark, sf), coarse, subs, Dedup.SubK)
@@ -926,8 +930,8 @@ class EventStreamsSpec extends SparkSpec {
         .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2),
           if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
-    val full = verdictRows(Dedup.semanticDedupFromCells(spark, cellsDir))
-    val logged = verdictRows(spark.read.parquet(verdictsDir))
+    val full = verdictRows(Dedup.semanticDedupFromCells(spark, StoreCommit.readDir(cellsDir)))
+    val logged = verdictRows(StoreCommit.read(spark, verdictsDir))
     assert(logged == full,
       "accumulated verdict log must equal the full-store recompute")
     assert(full.exists(_._3), "stream should surface semantic dups")
@@ -935,10 +939,10 @@ class EventStreamsSpec extends SparkSpec {
     // a replayed batch is a no-op (idempotent sink) — counts too, so
     // a double-append can't hide behind the set compare
     stageFile(c1, Long.MaxValue, "b2_replay.parquet"); runOnce()
-    assert(spark.read.parquet(cellsDir).count() == ids.length.toLong)
-    assert(spark.read.parquet(verdictsDir).count() == ids.length.toLong)
-    assert(cellRows(spark.read.parquet(cellsDir)) == cellRows(oneShot))
-    assert(verdictRows(spark.read.parquet(verdictsDir)) == full)
+    assert(StoreCommit.read(spark, cellsDir).count() == ids.length.toLong)
+    assert(StoreCommit.read(spark, verdictsDir).count() == ids.length.toLong)
+    assert(cellRows(StoreCommit.read(spark, cellsDir)) == cellRows(oneShot))
+    assert(verdictRows(StoreCommit.read(spark, verdictsDir)) == full)
 
     // crash window: verdicts lost after the cells append — the repair
     // re-derives them from the store, exactly
@@ -948,11 +952,11 @@ class EventStreamsSpec extends SparkSpec {
     }
     rmrf(new java.io.File(verdictsDir))
     EventStreams.repairSemanticVerdicts(spark, cellsDir, verdictsDir)
-    assert(verdictRows(spark.read.parquet(verdictsDir)) == full,
+    assert(verdictRows(StoreCommit.read(spark, verdictsDir)) == full,
       "repaired verdict log diverges from the crash-free one")
     // and on an intact log the repair appends nothing
     EventStreams.repairSemanticVerdicts(spark, cellsDir, verdictsDir)
-    assert(verdictRows(spark.read.parquet(verdictsDir)) == full)
+    assert(verdictRows(StoreCommit.read(spark, verdictsDir)) == full)
 
     // compaction policy: the floor is 2× the cell count (one file
     // per cell is the store's NATURAL layout — a flat threshold
@@ -965,17 +969,17 @@ class EventStreamsSpec extends SparkSpec {
         threshold = 1))
     // … and a genuinely fragmented store (forced: many files per
     // cell) rewrites back toward one file per cell, content unchanged
-    val frag = spark.read.parquet(cellsDir)
+    val frag = StoreCommit.read(spark, cellsDir)
       .select(col("vec_id"), col("v"), col("cell").cast("int").as("cell"))
       .repartition(8).localCheckpoint()
-    frag.write.mode("overwrite").partitionBy("cell").parquet(cellsDir)
+    StoreCommit.replace(cellsDir)(frag.write.partitionBy("cell").parquet(_))
     val before = Dedup.cellsFileCount(cellsDir)
     assert(before > 2 * nCells, s"fragmentation setup too weak: $before")
     assert(Dedup.maybeCompactSemanticCells(spark, cellsDir, threshold = 1))
     val after = Dedup.cellsFileCount(cellsDir)
     assert(after <= before && after <= nCells + 2,
       s"compaction should shrink toward one file per cell ($before -> $after)")
-    assert(cellRows(spark.read.parquet(cellsDir)) == cellRows(oneShot))
+    assert(cellRows(StoreCommit.read(spark, cellsDir)) == cellRows(oneShot))
     assert(!Dedup.maybeCompactSemanticCells(spark, cellsDir,
       threshold = 10000))
   }
@@ -1020,7 +1024,7 @@ class EventStreamsSpec extends SparkSpec {
       "stream-accumulated index must answer like the live batch form")
 
     // meta carries the EXACT merged integers
-    val meta = spark.read.parquet(s"$store/meta").head()
+    val meta = StoreCommit.read(spark, s"$store/meta").head()
     val wantDocs = d.filter(length(trim(col("text"))) > 0).count()
     assert(meta.getLong(0) == wantDocs)
 
@@ -1030,10 +1034,10 @@ class EventStreamsSpec extends SparkSpec {
 
     // a replayed batch is a no-op (idempotent sink) — postings count
     // too, so a double-append can't hide behind the score compare
-    val nPostings = spark.read.parquet(s"$store/postings").count()
+    val nPostings = StoreCommit.read(spark, s"$store/postings").count()
     stageFile(c1, Long.MaxValue, "b2_replay.parquet"); runOnce()
-    assert(spark.read.parquet(s"$store/postings").count() == nPostings)
-    assert(spark.read.parquet(s"$store/meta").head().getLong(0)
+    assert(StoreCommit.read(spark, s"$store/postings").count() == nPostings)
+    assert(StoreCommit.read(spark, s"$store/meta").head().getLong(0)
       == wantDocs)
     assert(rows(Retrieval.bm25BatchFromIndex(spark, sf, store)) == live)
 
@@ -1046,25 +1050,25 @@ class EventStreamsSpec extends SparkSpec {
     }
     rmrf(new java.io.File(s"$store/meta"))
     EventStreams.repairBm25Meta(spark, store)
-    val repaired = spark.read.parquet(s"$store/meta").head()
+    val repaired = StoreCommit.read(spark, s"$store/meta").head()
     assert(repaired.getLong(0) == wantDocs &&
       repaired.getLong(1) == sumDl,
       "repaired meta diverges from the crash-free one")
 
     // compaction: no-op at the 2×-bucket floor; a forced-fragmented
     // store rewrites toward one file per bucket, answers unchanged
-    val nBuckets = spark.read.parquet(s"$store/postings")
+    val nBuckets = StoreCommit.read(spark, s"$store/postings")
       .select(col("tbucket")).distinct().count().toInt
     if (graft.ext.Dedup.cellsFileCount(s"$store/postings")
         <= 2 * nBuckets)
       assert(!Retrieval.maybeCompactPostings(spark, store,
         threshold = 1))
-    val frag = spark.read.parquet(s"$store/postings")
+    val frag = StoreCommit.read(spark, s"$store/postings")
       .select(col("doc_id"), col("dl"), col("term"), col("tf"),
         col("tbucket").cast("int").as("tbucket"))
       .repartition(8).localCheckpoint()
-    frag.write.mode("overwrite").partitionBy("tbucket")
-      .parquet(s"$store/postings")
+    StoreCommit.replace(s"$store/postings")(
+      frag.write.partitionBy("tbucket").parquet(_))
     val before = graft.ext.Dedup.cellsFileCount(s"$store/postings")
     assert(before > 2 * nBuckets, s"fragmentation setup too weak: $before")
     assert(Retrieval.maybeCompactPostings(spark, store, threshold = 1))
@@ -1166,27 +1170,27 @@ class EventStreamsSpec extends SparkSpec {
       .filter(size(col("t")) > 0)
     val lastId = td.agg(max(col("doc_id"))).head().getLong(0)
     Retrieval.writeBm25Index(td.filter(col("doc_id") =!= lastId), store)
-    val meta0 = spark.read.parquet(s"$store/meta").head()
+    val meta0 = StoreCommit.read(spark, s"$store/meta").head()
 
-    // torn append: HALF of the last doc's term rows land (the
-    // FileOutputCommitter mid-commit shape the round-13 ADVICE
-    // names), neither meta nor the committed log is written
+    // torn append: HALF of the last doc's term rows land in the
+    // committed postings, neither meta nor the committed log is
+    // written (a crash between the postings append and the log)
     val lastPost = Retrieval.postingsOf(td.filter(col("doc_id") === lastId))
     val nTerms = lastPost.count()
     assert(nTerms >= 2, "fixture doc too short to tear")
-    lastPost.filter(pmod(hash(col("term")), lit(2)) === 0)
-      .write.mode("append").partitionBy("tbucket")
-      .parquet(s"$store/postings")
-    assert(spark.read.parquet(s"$store/postings")
+    StoreCommit.append(s"$store/postings")(
+      lastPost.filter(pmod(hash(col("term")), lit(2)) === 0)
+        .write.mode("append").partitionBy("tbucket").parquet(_))
+    assert(StoreCommit.read(spark, s"$store/postings")
       .filter(col("doc_id") === lastId).count() > 0)
 
     // recovery: the uncommitted doc's rows are removed entirely and
     // meta re-derives to the pre-crash integers
     assert(Retrieval.recoverBm25Store(spark, store),
       "recovery must detect the torn doc")
-    assert(spark.read.parquet(s"$store/postings")
+    assert(StoreCommit.read(spark, s"$store/postings")
       .filter(col("doc_id") === lastId).count() == 0)
-    val metaR = spark.read.parquet(s"$store/meta").head()
+    val metaR = StoreCommit.read(spark, s"$store/meta").head()
     assert(metaR.getLong(0) == meta0.getLong(0) &&
       metaR.getLong(1) == meta0.getLong(1))
     // a consistent store recovers as a no-op
@@ -1197,7 +1201,7 @@ class EventStreamsSpec extends SparkSpec {
     // part-file-presence guard would have dropped it forever)
     Retrieval.appendBm25Index(spark,
       td.filter(col("doc_id") === lastId), store)
-    assert(spark.read.parquet(s"$store/postings")
+    assert(StoreCommit.read(spark, s"$store/postings")
       .filter(col("doc_id") === lastId).count() == nTerms)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -1216,8 +1220,8 @@ class EventStreamsSpec extends SparkSpec {
       .select(col("doc_id"), graft.ext.TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) > 0)
     Retrieval.writeBm25Index(td, store)
-    val nPost = spark.read.parquet(s"$store/postings").count()
-    val meta0 = spark.read.parquet(s"$store/meta").head()
+    val nPost = StoreCommit.read(spark, s"$store/postings").count()
+    val meta0 = StoreCommit.read(spark, s"$store/meta").head()
     def rmrf(p: java.io.File): Unit = {
       Option(p.listFiles()).getOrElse(Array.empty).foreach(rmrf)
       p.delete(); ()
@@ -1228,15 +1232,15 @@ class EventStreamsSpec extends SparkSpec {
     rmrf(new java.io.File(Retrieval.committedDir(store)))
     assert(Retrieval.recoverBm25Store(spark, store),
       "bootstrapping the missing log is a repair")
-    assert(spark.read.parquet(s"$store/postings").count() == nPost,
+    assert(StoreCommit.read(spark, s"$store/postings").count() == nPost,
       "bootstrap must not touch the postings")
-    val committedSet = spark.read.parquet(Retrieval.committedDir(store))
+    val committedSet = StoreCommit.read(spark, Retrieval.committedDir(store))
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val postedSet = spark.read.parquet(s"$store/postings")
+    val postedSet = StoreCommit.read(spark, s"$store/postings")
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(committedSet == postedSet,
       "bootstrapped log must equal the posted doc set")
-    val metaB = spark.read.parquet(s"$store/meta").head()
+    val metaB = StoreCommit.read(spark, s"$store/meta").head()
     assert(metaB.getLong(0) == meta0.getLong(0) &&
       metaB.getLong(1) == meta0.getLong(1))
     assert(!Retrieval.recoverBm25Store(spark, store),
@@ -1248,11 +1252,13 @@ class EventStreamsSpec extends SparkSpec {
       rows(Retrieval.bm25Batch(spark, sf)))
 
     // the torn-seed shape: no committed log AND no _SUCCESS (the
-    // postings write job never committed) — doc completeness is
-    // unprovable, so recovery wipes rather than committing torn rows
+    // postings version never completed, so it was never committed) —
+    // the commit protocol's recovery removes it rather than
+    // committing torn rows
     rmrf(new java.io.File(Retrieval.committedDir(store)))
-    new java.io.File(s"$store/postings/_SUCCESS").delete()
-    assert(Retrieval.recoverBm25Store(spark, store))
+    new java.io.File(
+      s"${StoreCommit.readDir(s"$store/postings")}/_SUCCESS").delete()
+    Retrieval.recoverBm25Store(spark, store)
     // the wiped store holds no part files (an empty dir — unreadable
     // as parquet by design; the sink's seeded probe counts files)
     assert(graft.ops.StoreFiles.parquetFileCount(s"$store/postings") == 0,
@@ -1268,7 +1274,7 @@ class EventStreamsSpec extends SparkSpec {
       .select(col("doc_id"), graft.ext.TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) > 0)
     Retrieval.writeBm25Index(td, store)
-    val meta0 = spark.read.parquet(s"$store/meta").head()
+    val meta0 = StoreCommit.read(spark, s"$store/meta").head()
     def rmrf(p: java.io.File): Unit = {
       Option(p.listFiles()).getOrElse(Array.empty).foreach(rmrf)
       p.delete(); ()
@@ -1279,7 +1285,7 @@ class EventStreamsSpec extends SparkSpec {
     rmrf(new java.io.File(s"$store/meta"))
     assert(Retrieval.recoverBm25Store(spark, store),
       "recovery must detect and re-derive broken meta")
-    val metaR = spark.read.parquet(s"$store/meta").head()
+    val metaR = StoreCommit.read(spark, s"$store/meta").head()
     assert(metaR.getLong(0) == meta0.getLong(0) &&
       metaR.getLong(1) == meta0.getLong(1),
       "re-derived meta must equal the crash-free integers")
@@ -1311,19 +1317,23 @@ class EventStreamsSpec extends SparkSpec {
         spark.readStream.schema(d.schema).parquet(srcDir),
         store, s"$base/chk").stop()
     stageFile(Long.MinValue, c0, "b0.parquet"); runOnce()
-    val nPost0 = spark.read.parquet(s"$store/postings").count()
+    val nPost0 = StoreCommit.read(spark, s"$store/postings").count()
     assert(graft.ops.StoreFiles.markerExists(store, "_committed_synced"))
-    // the round-14 ADVICE medium: compaction runs AFTER the marker is
-    // re-created, so a crash inside its rename-aside (live renamed to
-    // .old, .next not yet in) leaves the marker present and the store
-    // missing. The marker-gated recovery alone would then see an
-    // unseeded store and overwrite-seed from the next batch.
-    Files.move(Paths.get(s"$store/postings"),
-      Paths.get(s"$store/postings.old"))
+    // compaction runs AFTER the marker is re-created, so a crash
+    // inside its replace (an incomplete version staged above the
+    // committed one, the pointer torn mid-replace) leaves the marker
+    // present. The marker-gated recovery alone would then skip it.
+    val pRoot = s"$store/postings"
+    Files.createDirectories(Paths.get(pRoot, "v_00000099"))
+    Files.write(Paths.get(pRoot, "v_00000099", "part-junk.parquet"),
+      Array[Byte](1, 2, 3))
+    Files.writeString(Paths.get(pRoot, "CURRENT"), "v_0000")
     stageFile(c0, Long.MaxValue, "b1.parquet"); runOnce()
-    // the unconditional batch-start recover rolled the rename back,
+    // the unconditional batch-start recover rolled the pointer
+    // forward to the last complete version and dropped the orphan,
     // so the store now holds BOTH batches — equal to the live answer
-    assert(spark.read.parquet(s"$store/postings").count() > nPost0,
+    assert(!Files.exists(Paths.get(pRoot, "v_00000099")))
+    assert(StoreCommit.read(spark, s"$store/postings").count() > nPost0,
       "store must retain the pre-crash batch after the swap recovery")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -1341,7 +1351,8 @@ class EventStreamsSpec extends SparkSpec {
     val cents = KMeans.train(spark, sf)
     val cells = KMeans.vecs(spark, sf).select(col("vec_id"),
       KMeans.assignOn(col("v"), cents).as("cell"), col("v"))
-    cells.write.mode("overwrite").partitionBy("cell").parquet(cellsDir)
+    StoreCommit.replace(cellsDir)(
+      cells.write.partitionBy("cell").parquet(_))
     ClusterOps.writeKnnEdges(cells, edgesDir)
     def edgeRows() = spark.read.parquet(edgesDir)
       .select(col("vec_id"), col("rk").cast("int"), col("nbr_id"),
@@ -1520,6 +1531,10 @@ class EventStreamsSpec extends SparkSpec {
     graft.ext.ClusterOps.clusterCardFromAgg(spark, aggDir)
       .collect().map(_.toSeq).toSeq
 
+  private def storeCardRows(root: String) =
+    graft.ext.ClusterOps.clusterCardFromStore(spark, root)
+      .collect().map(_.toSeq).toSeq
+
   test("streaming card sink: the atomically-committed card store " +
       "equals the one-shot rebuild through a replay, staged debris, " +
       "and a renamed-aside live store") {
@@ -1542,30 +1557,33 @@ class EventStreamsSpec extends SparkSpec {
         spark.readStream.schema(jAll.schema).parquet(srcDir),
         assign, aggDir, s"$base/chk").stop()
     stageFile(Long.MinValue, c0, "b0.parquet"); runOnce()
-    // abandoned-staging debris: a half-written .next (no _SUCCESS)
+    // abandoned-staging debris: a half-written version (no _SUCCESS)
     // must be swept by recovery, not block or corrupt the next fold
-    Files.createDirectories(Paths.get(s"$aggDir.next"))
-    Files.write(Paths.get(s"$aggDir.next/junk"), Array[Byte](1, 2, 3))
+    Files.createDirectories(Paths.get(s"$aggDir/v_00000050"))
+    Files.write(Paths.get(s"$aggDir/v_00000050/junk"),
+      Array[Byte](1, 2, 3))
     stageFile(c0, c1, "b1.parquet"); runOnce()
-    // crash between the swap's two renames with an incomplete .next:
-    // live sits at .old — recovery must roll it back, and because the
-    // watermark lives INSIDE the swapped dir it rolls back WITH the
-    // store, so the two can never disagree
-    Files.move(Paths.get(aggDir), Paths.get(s"$aggDir.old"))
+    // crash inside the pointer replace, between its delete and its
+    // rename: the live store's pointer sits aside as CURRENT.tmp —
+    // recovery rolls forward to the last complete version, and
+    // because the watermark lives INSIDE the version it moves WITH
+    // the store, so the two can never disagree
+    Files.move(Paths.get(s"$aggDir/CURRENT"),
+      Paths.get(s"$aggDir/CURRENT.tmp"))
     stageFile(c1, Long.MaxValue, "b2.parquet"); runOnce()
     val oneShotDir = s"$base/agg_oneshot"
     graft.ext.ClusterOps.writeClusterCardAgg(assign(jAll), oneShotDir)
     val want = cardRows(oneShotDir)
-    assert(want.nonEmpty && cardRows(aggDir) == want,
+    assert(want.nonEmpty && storeCardRows(aggDir) == want,
       "stream-accumulated card must equal the one-shot rebuild")
     // a replayed batch drops in full on the committed watermark (a
     // double-fold would double-count — the non-idempotence the atomic
     // commit exists to contain)
     stageFile(c1, Long.MaxValue, "b2_replay.parquet"); runOnce()
-    assert(cardRows(aggDir) == want,
+    assert(storeCardRows(aggDir) == want,
       "a replayed batch must be a no-op")
     val maxId = jAll.agg(max(col("doc_id"))).head().getLong(0)
-    assert(graft.ops.StoreFiles.readIdWatermark(aggDir)
+    assert(graft.ops.StoreFiles.readIdWatermark(StoreCommit.readDir(aggDir))
         .contains(maxId),
       "the watermark must have committed atomically with the fold")
   }
@@ -1590,7 +1608,7 @@ class EventStreamsSpec extends SparkSpec {
     def runOnce(): Unit =
       EventStreams.clusterCardSink(
         spark.readStream.schema(jAll.schema).parquet(srcDir),
-        assign, aggDir, s"$base/chk", pointer = true).stop()
+        assign, aggDir, s"$base/chk").stop()
     stageFile(Long.MinValue, c0, "b0.parquet"); runOnce()
     // crash mid-version-write: an incomplete orphan above the
     // committed version must be swept, never read
@@ -1606,15 +1624,14 @@ class EventStreamsSpec extends SparkSpec {
     val oneShotDir = s"$base/agg_oneshot"
     graft.ext.ClusterOps.writeClusterCardAgg(assign(jAll), oneShotDir)
     val want = cardRows(oneShotDir)
-    val resolved = graft.ops.PointerSwap.resolve(aggDir).get
-    assert(want.nonEmpty && cardRows(resolved) == want,
+    assert(want.nonEmpty && storeCardRows(aggDir) == want,
       "pointer-committed stream card must equal the one-shot rebuild")
     // a replayed batch drops in full on the committed watermark
     stageFile(c1, Long.MaxValue, "b2_replay.parquet"); runOnce()
-    assert(cardRows(graft.ops.PointerSwap.resolve(aggDir).get) == want)
+    assert(storeCardRows(aggDir) == want)
     val maxId = jAll.agg(max(col("doc_id"))).head().getLong(0)
     assert(graft.ops.StoreFiles
-        .readIdWatermark(graft.ops.PointerSwap.resolve(aggDir).get)
+        .readIdWatermark(StoreCommit.readDir(aggDir))
         .contains(maxId),
       "the watermark must ride the committed version dir")
   }
@@ -1627,8 +1644,8 @@ class EventStreamsSpec extends SparkSpec {
     val aggDir = s"$base/agg"
     val (jAll, assign, _, c1) = cardFixture()
     // a store seeded OUTSIDE the sink: batch API, no watermark
-    graft.ext.ClusterOps.writeClusterCardAgg(
-      assign(jAll.filter(col("doc_id") <= c1)), aggDir)
+    StoreCommit.replace(aggDir)(graft.ext.ClusterOps.writeClusterCardAgg(
+      assign(jAll.filter(col("doc_id") <= c1)), _))
     val tmp = java.nio.file.Paths.get(
       graft.ops.Scratch.dir("graft_card_adopt_batch"))
     jAll.filter(col("doc_id") > c1)
@@ -1647,12 +1664,13 @@ class EventStreamsSpec extends SparkSpec {
     assert(ex.getMessage.contains("replay watermark") ||
       Option(ex.getCause).exists(_.getMessage.contains("replay watermark")),
       s"must refuse loudly, got: ${ex.getMessage}")
-    // adoption: the operator asserts the store's max folded id
-    graft.ops.StoreFiles.writeIdWatermark(aggDir, c1)
+    // adoption: the operator asserts the store's max folded id in
+    // the committed version
+    graft.ops.StoreFiles.writeIdWatermark(StoreCommit.readDir(aggDir), c1)
     runOnce()
     val oneShotDir = s"$base/agg_oneshot"
     graft.ext.ClusterOps.writeClusterCardAgg(assign(jAll), oneShotDir)
-    assert(cardRows(aggDir) == cardRows(oneShotDir),
+    assert(storeCardRows(aggDir) == cardRows(oneShotDir),
       "the adopted store must fold the batch exactly once")
   }
 
@@ -1688,14 +1706,17 @@ class EventStreamsSpec extends SparkSpec {
         spark.readStream.schema(e.schema).parquet(srcDir),
         assign, cellsDir, edgesDir, s"$base/chk").stop()
     stageFile(Long.MinValue, c0, "b0.parquet"); runOnce()
-    val nCells0 = spark.read.parquet(cellsDir).count()
-    // crash inside the cells compaction's rename-aside: live renamed
-    // aside, .next never moved in (round-14 ADVICE: the in-place
-    // overwrite this replaces would have LOST these rows, and
-    // repairKnnEdges cannot rebuild cells)
-    Files.move(Paths.get(cellsDir), Paths.get(s"$cellsDir.old"))
+    val nCells0 = StoreCommit.read(spark, cellsDir).count()
+    // crash inside the cells compaction's replace: the next version
+    // half-staged, the pointer torn mid-replace (an in-place
+    // overwrite would have LOST these rows, and repairKnnEdges cannot
+    // rebuild cells)
+    Files.createDirectories(Paths.get(cellsDir, "v_00000099"))
+    Files.write(Paths.get(cellsDir, "v_00000099", "part-junk.parquet"),
+      Array[Byte](1, 2, 3))
+    Files.writeString(Paths.get(cellsDir, "CURRENT"), "v_0000")
     stageFile(c0, Long.MaxValue, "b1.parquet"); runOnce()
-    assert(spark.read.parquet(cellsDir).count() > nCells0,
+    assert(StoreCommit.read(spark, cellsDir).count() > nCells0,
       "cells store must retain the pre-crash batch after recovery")
     // final store == one-shot build on the full corpus
     val oneShotDir = s"$base/oneshot"
@@ -1740,9 +1761,11 @@ class EventStreamsSpec extends SparkSpec {
         spark.readStream.schema(docs.schema).parquet(srcDir),
         histDir, s"$base/chk").stop()
     stageFile(Long.MinValue, c0, "b0.parquet"); runOnce()
-    // crash between the swap's renames: live sits at .old, recovery
-    // must roll the store AND its inner watermark back together
-    Files.move(Paths.get(histDir), Paths.get(s"$histDir.old"))
+    // crash inside the pointer replace, between its delete and its
+    // rename: recovery must roll the store AND its inner watermark
+    // forward together
+    Files.move(Paths.get(s"$histDir/CURRENT"),
+      Paths.get(s"$histDir/CURRENT.tmp"))
     stageFile(c0, Long.MaxValue, "b1.parquet"); runOnce()
     def histRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
@@ -1754,7 +1777,7 @@ class EventStreamsSpec extends SparkSpec {
     stageFile(c0, Long.MaxValue, "b1_replay.parquet"); runOnce()
     assert(histRows(Bpe.wordHistFromStore(spark, histDir)) == want,
       "a replayed batch must be a no-op")
-    assert(graft.ops.StoreFiles.readIdWatermark(histDir)
+    assert(graft.ops.StoreFiles.readIdWatermark(StoreCommit.readDir(histDir))
         .contains(ids.last),
       "the watermark must have committed atomically with the fold")
     // the trainer is a pure function of the histogram
@@ -1771,7 +1794,7 @@ class EventStreamsSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     Bpe.writeWordHistStore(docs.filter(lit(false)), histDir)
     // watermark present (MinValue: everything future is fresh)
-    assert(graft.ops.StoreFiles.readIdWatermark(histDir)
+    assert(graft.ops.StoreFiles.readIdWatermark(StoreCommit.readDir(histDir))
       .contains(Long.MinValue))
     Bpe.foldWordHist(spark, histDir, Bpe.wordHist(docs),
       docs.agg(max(col("doc_id"))).head().getLong(0))
@@ -1814,7 +1837,7 @@ class EventStreamsSpec extends SparkSpec {
       histRows(Bpe.wordHist(docs)),
       "the seeded store must fold the batch exactly once")
     // a store stripped of its watermark is refused loudly
-    graft.ops.StoreFiles.deleteIdWatermark(histDir)
+    graft.ops.StoreFiles.deleteIdWatermark(StoreCommit.readDir(histDir))
     val tmp2 = java.nio.file.Paths.get(
       graft.ops.Scratch.dir("graft_hist_adopt_batch2"))
     docs.filter(col("doc_id") <= c0)
@@ -1865,10 +1888,10 @@ class EventStreamsSpec extends SparkSpec {
       verdictsDir) == nExpected)
     // store clean, and SCHEMA-preserving (cell2 — the runner-up
     // probe cell — must survive the rewrite)
-    val cellIds = () => spark.read.parquet(cellsRoot)
+    val cellIds = () => StoreCommit.read(spark, cellsRoot)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(cellIds().forall(_ % 9 != 4))
-    assert(spark.read.parquet(cellsRoot).columns.contains("cell2"),
+    assert(StoreCommit.read(spark, cellsRoot).columns.contains("cell2"),
       "removal must not silently drop store columns")
     // the STRONG gate: the rewritten log equals a full recompute on
     // the retained store (kept cells verbatim + touched re-election)
@@ -1877,8 +1900,8 @@ class EventStreamsSpec extends SparkSpec {
           col("dup_of"))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2),
           if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
-    assert(vr(spark.read.parquet(verdictsDir)) ==
-      vr(Dedup.semanticDedupFromCells(spark, cellsRoot)))
+    assert(vr(StoreCommit.read(spark, verdictsDir)) ==
+      vr(Dedup.semanticDedupFromCells(spark, StoreCommit.readDir(cellsRoot))))
     // watermark preserved at its PRE-removal value; re-removal no-ops
     assert(graft.ops.StoreFiles.readIdWatermark(cellsRoot)
       .contains(maxId))
@@ -1940,7 +1963,7 @@ class EventStreamsSpec extends SparkSpec {
     graft.ops.StoreFiles.deleteIdWatermark(edgesDir)
     // stale edges: poison one retained cell's edge partition so the
     // prologue repair has something real to converge
-    val cell0 = spark.read.parquet(cellsRoot).select(col("cell"))
+    val cell0 = StoreCommit.read(spark, cellsRoot).select(col("cell"))
       .distinct().orderBy(col("cell")).head().get(0).toString.toInt
     graft.ops.StoreFiles.deleteDir(s"$edgesDir/cell=$cell0")
     // next batch: one replayed removed id (must stay out) + one new
@@ -1948,7 +1971,7 @@ class EventStreamsSpec extends SparkSpec {
       .orderBy(col("vec_id")).limit(1).localCheckpoint()
     val freshOne = removedOne.withColumn("vec_id", lit(maxId + 10))
     stage(removedOne.unionByName(freshOne), "b1.parquet"); runOnce()
-    val cellIds = spark.read.parquet(cellsRoot)
+    val cellIds = StoreCommit.read(spark, cellsRoot)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(cellIds.contains(maxId + 10))
     assert(cellIds.forall(_ % 9 != 4),

@@ -247,4 +247,43 @@ class FunctionsSpec extends SparkSpec {
       .head.getLong(0)
     assert(r == single)
   }
+
+  test("MinHashes equals the legacy per-hash transform/array_min " +
+      "chain on normal, empty, null, null-element and unicode shingle sets") {
+    val NumHashes = 8
+    import scala.jdk.CollectionConverters._
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("sh",
+        org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.StringType, containsNull = true))))
+    val rows = Seq(
+      org.apache.spark.sql.Row(1L, Seq("a b c", "b c d", "c d e")),
+      org.apache.spark.sql.Row(2L, Seq.empty[String]),
+      org.apache.spark.sql.Row(3L, null),
+      org.apache.spark.sql.Row(4L, Seq("x y z", null, "y z w")),
+      org.apache.spark.sql.Row(5L, Seq("héllo wörld ünïcode", "日本 語 テスト")),
+      org.apache.spark.sql.Row(6L, Seq("dup dup dup", "dup dup dup")))
+    val df = spark.createDataFrame(rows.asJava, schema)
+    def legacy(j: Int) =
+      array_min(transform(col("sh"), s =>
+        md5(concat(lit(s"$j|"), s).cast("binary"))))
+    val cmp = df.select(
+      col("id"),
+      graft.functions.MinHashes(col("sh"), NumHashes).as("fast"),
+      array((0 until NumHashes).map(legacy): _*).as("slow"))
+    val bad = cmp.collect().filter { r =>
+      val fast = if (r.isNullAt(1)) null else r.getSeq[String](1)
+      val slow = r.getSeq[String](2)
+      // legacy has no single null-array form (array() of per-hash
+      // nulls); the expression returns null for a null input array —
+      // its consumer getItem(j) yields null either way
+      if (fast == null) slow.exists(_ != null)
+      else fast != slow
+    }
+    assert(bad.isEmpty,
+      s"MinHashes diverges from the legacy chain on ids " +
+        s"${bad.map(_.getLong(0)).toSeq}")
+  }
 }

@@ -86,4 +86,41 @@ class KMeansSpec extends SparkSpec {
     assert(!plan.contains("nearestcentroid"),
       s"steady scan must not re-assign raw vectors:\n$plan")
   }
+
+  test("trainFramesGrouped equals per-group trainFrame, including a " +
+      "group that exercises the empty-cell keep-previous path") {
+    import scala.jdk.CollectionConverters._
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("grp",
+        org.apache.spark.sql.types.IntegerType),
+      org.apache.spark.sql.types.StructField("vec_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("v",
+        org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.DoubleType, containsNull = false))))
+    def row(g: Int, id: Long, v: Double*) =
+      org.apache.spark.sql.Row(g, id, v.toSeq)
+    val rows = Seq(
+      // group 0: a spread set whose assignment shifts across rounds
+      row(0, 1L, 0.1, 0.2, 0.3), row(0, 2L, 0.9, 0.8, 0.7),
+      row(0, 3L, 0.15, 0.25, 0.35), row(0, 5L, 0.85, 0.75, 0.65),
+      row(0, 8L, 0.5, 0.5, 0.5), row(0, 13L, 0.45, 0.55, 0.5),
+      // group 1: ALL-IDENTICAL vectors — both init centroids
+      // coincide, every member ties to cid 0, centroid 1 loses all
+      // members and must keep its previous position (the
+      // empty-cell COALESCE path, in both trainers)
+      row(1, 4L, 0.3, 0.3, 0.3), row(1, 6L, 0.3, 0.3, 0.3),
+      row(1, 7L, 0.3, 0.3, 0.3),
+      // group 2: two tight clusters, different ids than group 0
+      row(2, 9L, 0.0, 0.0, 1.0), row(2, 10L, 0.02, 0.01, 0.98),
+      row(2, 11L, 1.0, 1.0, 0.0), row(2, 12L, 0.97, 0.99, 0.03))
+    val df = spark.createDataFrame(rows.asJava, schema)
+    val grouped = graft.ext.KMeans.trainFramesGrouped(df, 3, 2)
+    val per = (0 until 3).map(g =>
+      graft.ext.KMeans.trainFrame(
+        df.filter(col("grp") === g).select(col("vec_id"), col("v")), 2))
+    assert(grouped.size == 3)
+    (0 until 3).foreach(g => assert(grouped(g) == per(g),
+      s"group $g diverged:\n grouped=${grouped(g)}\n per-group=${per(g)}"))
+  }
 }

@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
-import graft.ops.{Manifest, ManifestCommit}
+import graft.ops.{Manifest, StoreCommit}
 
-/** The artifact-sink families in MANIFEST-commit mode (round-16
-  * verdict #2, extended to the whole family in round 17): versioned
-  * dirs + pointer flip + a committed FILE LIST per version, so no
-  * read trusts a directory listing or a FileOutputCommitter task-file
-  * rename. Every test runs with
+/** The file-list half of [[graft.ops.StoreCommit]] under every
+  * artifact-sink family: versioned dirs + pointer flip + a committed
+  * FILE LIST per version, so no read trusts a directory listing or a
+  * FileOutputCommitter task-file rename (PointerSinksSpec covers the
+  * version half). Every test runs with
   * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` — the
   * object-store tuning that strips Spark's own `_SUCCESS` markers —
   * proving the protocol's completeness stamps are all self-written,
@@ -88,7 +88,7 @@ class ManifestSinksSpec extends SparkSpec {
       def runOnce(): Unit =
         EventStreams.lexicalIndexSink(
           spark.readStream.schema(d.schema).parquet(srcDir),
-          store, s"$base/chk", commit = ManifestCommit).stop()
+          store, s"$base/chk").stop()
 
       stage(d.filter(col("doc_id") <= c0), srcDir, "b0.parquet"); runOnce()
       stage(d.filter(col("doc_id") > c0 && col("doc_id") <= c1),
@@ -97,7 +97,7 @@ class ManifestSinksSpec extends SparkSpec {
 
       // the committed postings version carries a manifest covering
       // exactly its data files (seed + append both sealed)
-      val pLive = ManifestCommit.readDir(s"$store/postings")
+      val pLive = StoreCommit.readDir(s"$store/postings")
       val man = Manifest.read(pLive)
       assert(man.isDefined && man.get.nonEmpty)
       assert(man.get.toSet == Manifest.dataFiles(pLive).toSet)
@@ -107,14 +107,14 @@ class ManifestSinksSpec extends SparkSpec {
           r.getLong(3), r.getLong(4))).toSeq
       val live = rows(Retrieval.bm25Batch(spark, sf))
       assert(live.nonEmpty && rows(Retrieval.bm25BatchFromIndex(
-        spark, sf, store, ManifestCommit)) == live,
+        spark, sf, store)) == live,
         "manifest-committed store must answer like the live batch form")
 
       // replay no-op (watermark guard, no manifest growth)
       val manBefore = Manifest.read(pLive).get.toSet
       stage(d.filter(col("doc_id") > c1), srcDir, "b2r.parquet"); runOnce()
       assert(Manifest.read(
-        ManifestCommit.readDir(s"$store/postings")).get.toSet == manBefore)
+        StoreCommit.readDir(s"$store/postings")).get.toSet == manBefore)
 
       // torn append: a ghost doc's rows land in the live version with
       // NO manifest seal and NO committed-log entry (the crash right
@@ -129,25 +129,24 @@ class ManifestSinksSpec extends SparkSpec {
         .withColumn("doc_id", lit(ids.max + 1000)).localCheckpoint()
       ghost.write.mode("append").partitionBy("tbucket").parquet(pLive)
       assert(rows(Retrieval.bm25BatchFromIndex(
-        spark, sf, store, ManifestCommit)) == live,
+        spark, sf, store)) == live,
         "unmanifested objects must be invisible to manifest reads")
       // ...and the sink-level recovery pass agrees there is nothing
       // torn (the committed view is consistent), so the marker path
       // stays green
       graft.ops.StoreFiles.deleteMarker(store, "_committed_synced")
-      Retrieval.recoverBm25Store(spark, store, ManifestCommit)
+      Retrieval.recoverBm25Store(spark, store)
       assert(rows(Retrieval.bm25BatchFromIndex(
-        spark, sf, store, ManifestCommit)) == live)
+        spark, sf, store)) == live)
 
       // compaction rewrites into a NEW version (junk objects die with
       // the old one) whose manifest covers the compacted files
-      assert(Retrieval.maybeCompactPostings(spark, store, threshold = 1,
-        commit = ManifestCommit))
-      val v1 = ManifestCommit.readDir(s"$store/postings")
+      assert(Retrieval.maybeCompactPostings(spark, store, threshold = 1))
+      val v1 = StoreCommit.readDir(s"$store/postings")
       assert(v1 != pLive)
       assert(Manifest.read(v1).get.toSet == Manifest.dataFiles(v1).toSet)
       assert(rows(Retrieval.bm25BatchFromIndex(
-        spark, sf, store, ManifestCommit)) == live)
+        spark, sf, store)) == live)
     }
   }
 
@@ -166,30 +165,29 @@ class ManifestSinksSpec extends SparkSpec {
       val td = d.select(col("doc_id"),
           graft.ext.TextOps.tokens(col("text")).as("t"))
         .filter(size(col("t")) > 0)
-      Retrieval.writeBm25Index(td.filter(col("doc_id") <= c0), store,
-        ManifestCommit)
+      Retrieval.writeBm25Index(td.filter(col("doc_id") <= c0), store)
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4))).toSeq
       val before = rows(Retrieval.bm25BatchFromIndex(
-        spark, sf, store, ManifestCommit))
+        spark, sf, store))
       // the crash: the batch's postings objects land in the live
       // version, but neither the manifest seal nor meta nor the
       // committed log ever ran
       val batch = td.filter(col("doc_id") > c0)
       Retrieval.postingsOf(batch).write.mode("append")
         .partitionBy("tbucket")
-        .parquet(ManifestCommit.readDir(s"$store/postings"))
+        .parquet(StoreCommit.readDir(s"$store/postings"))
       assert(rows(Retrieval.bm25BatchFromIndex(
-        spark, sf, store, ManifestCommit)) == before,
+        spark, sf, store)) == before,
         "the crashed batch must be invisible")
       // the replay: the SAME batch appended through the protocol —
       // the store now answers like a one-shot build on the union,
       // with no double counting from the stranded objects
-      Retrieval.appendBm25Index(spark, batch, store, ManifestCommit)
+      Retrieval.appendBm25Index(spark, batch, store)
       val live = rows(Retrieval.bm25Batch(spark, sf))
       assert(rows(Retrieval.bm25BatchFromIndex(
-        spark, sf, store, ManifestCommit)) == live,
+        spark, sf, store)) == live,
         "replayed append must commit exactly once (no stranded-object " +
           "double counting)")
 
@@ -201,7 +199,7 @@ class ManifestSinksSpec extends SparkSpec {
       // manifest naming only its own objects (hiding the store), and
       // a listing fallback would adopt the stranded duplicates this
       // very test planted above (double-counted scores)
-      val pLive = ManifestCommit.readDir(s"$store/postings")
+      val pLive = StoreCommit.readDir(s"$store/postings")
       val committed = Manifest.read(pLive).get
       val conf = spark.sparkContext.hadoopConfiguration
       val mPath = new org.apache.hadoop.fs.Path(pLive, Manifest.Name)
@@ -234,7 +232,7 @@ class ManifestSinksSpec extends SparkSpec {
       val extra = td.filter(col("doc_id") === ids.max)
         .withColumn("doc_id", col("doc_id") + 77777L)
         .localCheckpoint()
-      Retrieval.appendBm25Index(spark, extra, store, ManifestCommit)
+      Retrieval.appendBm25Index(spark, extra, store)
       assert(Manifest.read(pLive).isDefined,
         "the append must re-seal a manifest")
       // exactness: the store must answer like a one-shot build on
@@ -243,7 +241,7 @@ class ManifestSinksSpec extends SparkSpec {
       val oneShot = s"$base/ix_torn_ref"
       Retrieval.writeBm25Index(td.unionByName(extra), oneShot)
       assert(rows(Retrieval.bm25BatchFromIndex(
-          spark, sf, store, ManifestCommit)) ==
+          spark, sf, store)) ==
         rows(Retrieval.bm25BatchFromIndex(spark, sf, oneShot)),
         "after a torn-manifest append the store must still equal the " +
           "full one-shot build (no silent store hiding)")
@@ -266,11 +264,11 @@ class ManifestSinksSpec extends SparkSpec {
       def runOnce(): Unit =
         EventStreams.incrementalDedupSink(
           spark.readStream.schema(d.schema).parquet(srcDir),
-          ixRoot, goldDir, s"$base/chk", commit = ManifestCommit).stop()
+          ixRoot, goldDir, s"$base/chk").stop()
 
       stage(d.filter(col("doc_id") <= c0), srcDir, "b0.parquet"); runOnce()
       stage(d.filter(col("doc_id") > c0), srcDir, "b1.parquet"); runOnce()
-      val streamed = spark.read.parquet(goldDir)
+      val streamed = StoreCommit.read(spark, goldDir)
         .select(col("doc_id")).collect().map(_.getLong(0)).toSet
       val u1 = Dedup.incrementalSplit(d.filter(col("doc_id") <= c0),
           d.filter(col("doc_id") > c0))
@@ -280,10 +278,10 @@ class ManifestSinksSpec extends SparkSpec {
       assert(streamed == expected, "manifest-mode gold diverged")
       // replay no-op
       stage(d.filter(col("doc_id") > c0), srcDir, "b1r.parquet"); runOnce()
-      assert(spark.read.parquet(goldDir).count() == streamed.size.toLong)
+      assert(StoreCommit.read(spark, goldDir).count() == streamed.size.toLong)
       // every committed index version seals a manifest that covers
       // exactly its data files (seed + per-batch appends)
-      val ixLive = ManifestCommit.readDir(ixRoot)
+      val ixLive = StoreCommit.readDir(ixRoot)
       assert(Manifest.read(ixLive).get.toSet ==
         Manifest.dataFiles(ixLive).toSet)
 
@@ -299,16 +297,17 @@ class ManifestSinksSpec extends SparkSpec {
         .withColumn("text", lit(ghostText)).localCheckpoint()
       val tmpIx = s"$base/ghost_ix"
       Dedup.appendGoldIndex(ghost, tmpIx)
-      assert(strandInto(s"$tmpIx/fingerprints", s"$ixLive/fingerprints") > 0)
+      assert(strandInto(s"${StoreCommit.readDir(tmpIx)}/fingerprints",
+        s"$ixLive/fingerprints") > 0)
       val probe = Dedup.incrementalAgainstIndex(spark,
         ghost.withColumn("doc_id", lit(ids.max + 600)),
-        ixRoot, ManifestCommit)
+        ixRoot)
       assert(probe.filter(col("verdict") === "unique").count() == 1,
         "a stranded unmanifested fingerprint must be invisible: the " +
           "ghost text has never been committed, so its dup is unique")
       stage(ghost.withColumn("doc_id", lit(ids.max + 600)),
         srcDir, "ghost.parquet"); runOnce()
-      assert(spark.read.parquet(goldDir)
+      assert(StoreCommit.read(spark, goldDir)
         .filter(col("doc_id") === ids.max + 600).count() == 1,
         "the sink must admit the ghost text (stranded object unseen)")
 
@@ -316,13 +315,13 @@ class ManifestSinksSpec extends SparkSpec {
       // dies with the superseded dir, the fresh manifest is complete
       val v0 = ixLive
       assert(Dedup.maybeCompactIndex(spark, goldDir, ixRoot,
-        threshold = 0, commit = ManifestCommit))
-      val v1 = ManifestCommit.readDir(ixRoot)
+        threshold = 0))
+      val v1 = StoreCommit.readDir(ixRoot)
       assert(v1 != v0)
       assert(Manifest.read(v1).get.toSet == Manifest.dataFiles(v1).toSet)
       val probe2 = Dedup.incrementalAgainstIndex(spark,
         ghost.withColumn("doc_id", lit(ids.max + 700)),
-        ixRoot, ManifestCommit)
+        ixRoot)
       assert(probe2.filter(col("verdict") =!= "unique").count() == 1,
         "post-compaction the admitted ghost doc IS committed — its " +
           "duplicate must now be recognized")
@@ -348,7 +347,7 @@ class ManifestSinksSpec extends SparkSpec {
         EventStreams.semanticDedupSink(
           spark.readStream.schema(e.schema).parquet(srcDir),
           coarse, subs, Dedup.SubK, cellsRoot, verdictsDir,
-          s"$base/chk", commit = ManifestCommit).stop()
+          s"$base/chk").stop()
 
       stage(e.filter(col("vec_id") <= c0), srcDir, "b0.parquet"); runOnce()
       stage(e.filter(col("vec_id") > c0), srcDir, "b1.parquet"); runOnce()
@@ -361,22 +360,22 @@ class ManifestSinksSpec extends SparkSpec {
           .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2))).toSet
       val oneShot = cellRows(Dedup.assignSemanticCells(
         graft.ext.KMeans.vecs(spark, sf), coarse, subs, Dedup.SubK))
-      assert(cellRows(ManifestCommit.read(spark, cellsRoot)) == oneShot,
+      assert(cellRows(StoreCommit.read(spark, cellsRoot)) == oneShot,
         "manifest-committed cells must equal the one-shot assignment")
-      assert(spark.read.parquet(verdictsDir).count() == ids.length.toLong)
+      assert(StoreCommit.read(spark, verdictsDir).count() == ids.length.toLong)
 
       // strand a COPY of a committed cells partition file (what a
       // replayed-then-crashed task would leave): a listing read now
       // double-counts those vectors; the manifest read must not
-      val live = ManifestCommit.readDir(cellsRoot)
+      val live = StoreCommit.readDir(cellsRoot)
       val victim = firstCellPart(live)
       Files.copy(victim,
         victim.getParent.resolve("torn-replay-copy.parquet"))
       assert(spark.read.parquet(live).count() > ids.length.toLong,
         "precondition: the listing view really is poisoned")
-      assert(cellRows(ManifestCommit.read(spark, cellsRoot)) == oneShot,
+      assert(cellRows(StoreCommit.read(spark, cellsRoot)) == oneShot,
         "the stranded copy must be invisible to manifest reads")
-      assert(ManifestCommit.fileCount(cellsRoot) ==
+      assert(StoreCommit.fileCount(cellsRoot) ==
         Manifest.read(live).get.size)
     }
   }
@@ -401,8 +400,7 @@ class ManifestSinksSpec extends SparkSpec {
       def runOnce(): Unit =
         EventStreams.incrementalVectorIndexSink(
           spark.readStream.schema(e.schema).parquet(srcDir),
-          coarse, rcbs, codesRoot, goldDir, s"$base/chk",
-          commit = ManifestCommit).stop()
+          coarse, rcbs, codesRoot, goldDir, s"$base/chk").stop()
 
       stage(e.filter(col("vec_id") <= c0), srcDir, "b0.parquet"); runOnce()
       stage(e.filter(col("vec_id") > c0), srcDir, "b1.parquet"); runOnce()
@@ -416,26 +414,26 @@ class ManifestSinksSpec extends SparkSpec {
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
             r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6))).toSet
       val want = codeRows(ProductQuant.encodeFrameResidual(
-        cast(spark.read.parquet(goldDir)), coarse, rcbs))
-      assert(codeRows(ManifestCommit.read(spark, codesRoot)) == want,
+        cast(StoreCommit.read(spark, goldDir)), coarse, rcbs))
+      assert(codeRows(StoreCommit.read(spark, codesRoot)) == want,
         "manifest-committed codes must equal the full re-encode")
 
       // stranded replay copy: listing poisoned, manifest clean
-      val live = ManifestCommit.readDir(codesRoot)
+      val live = StoreCommit.readDir(codesRoot)
       val victim = firstCellPart(live)
       Files.copy(victim,
         victim.getParent.resolve("torn-replay-copy.parquet"))
-      assert(codeRows(ManifestCommit.read(spark, codesRoot)) == want,
+      assert(codeRows(StoreCommit.read(spark, codesRoot)) == want,
         "stranded codes must be invisible to manifest reads")
 
       // compaction (rebuild from gold) — junk dies with the old
       // version; the new version's manifest covers exactly its files
       assert(ProductQuant.maybeCompactCodes(spark, goldDir, codesRoot,
-        coarse, rcbs, threshold = 1, commit = ManifestCommit))
-      val v1 = ManifestCommit.readDir(codesRoot)
+        coarse, rcbs, threshold = 1))
+      val v1 = StoreCommit.readDir(codesRoot)
       assert(v1 != live)
       assert(Manifest.read(v1).get.toSet == Manifest.dataFiles(v1).toSet)
-      assert(codeRows(ManifestCommit.read(spark, codesRoot)) == want)
+      assert(codeRows(StoreCommit.read(spark, codesRoot)) == want)
     }
   }
 
@@ -462,8 +460,7 @@ class ManifestSinksSpec extends SparkSpec {
       def runOnce(): Unit =
         EventStreams.knnGraphSink(
           spark.readStream.schema(e.schema).parquet(srcDir),
-          assign, cellsRoot, edgesDir, Some(labelsDir), s"$base/chk",
-          commit = ManifestCommit).stop()
+          assign, cellsRoot, edgesDir, Some(labelsDir), s"$base/chk").stop()
 
       stage(e.filter(col("vec_id") <= c0), srcDir, "b0.parquet"); runOnce()
       stage(e.filter(col("vec_id") > c0), srcDir, "b1.parquet"); runOnce()
@@ -488,16 +485,15 @@ class ManifestSinksSpec extends SparkSpec {
       // disagrees with the edges store (inflated member counts), so a
       // listing-trusting consistency repair would fire and rewrite
       // healthy edge partitions; the manifest view stays consistent
-      val live = ManifestCommit.readDir(cellsRoot)
+      val live = StoreCommit.readDir(cellsRoot)
       val victim = firstCellPart(live)
       Files.copy(victim,
         victim.getParent.resolve("torn-replay-copy.parquet"))
-      assert(ClusterOps.repairKnnEdges(spark, cellsRoot, edgesDir,
-        ManifestCommit) == 0,
+      assert(ClusterOps.repairKnnEdges(spark, cellsRoot, edgesDir) == 0,
         "the committed view is consistent — a stranded object must " +
           "not trigger a false repair")
       assert(ClusterOps.repairKnnCommunityLabels(spark, cellsRoot,
-        labelsDir, ManifestCommit) == 0)
+        labelsDir) == 0)
       assert(edgeRows(edgesDir) == edgeRows(oneShotE),
         "edges must be untouched after the no-op repair")
 
@@ -508,8 +504,8 @@ class ManifestSinksSpec extends SparkSpec {
       val removed = e.filter(col("vec_id") % 9 === 4)
         .select(col("vec_id"))
       assert(ClusterOps.removeKnnVectors(spark, removed, cellsRoot,
-        edgesDir, Some(labelsDir), ManifestCommit) == removed.count())
-      val vLive = ManifestCommit.readDir(cellsRoot)
+        edgesDir, Some(labelsDir)) == removed.count())
+      val vLive = StoreCommit.readDir(cellsRoot)
       assert(Manifest.read(vLive).get.toSet ==
         Manifest.dataFiles(vLive).toSet,
         "the removal's version must seal a complete manifest")

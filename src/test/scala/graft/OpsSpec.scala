@@ -156,72 +156,49 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("ArtifactSwap closes every crash window: roll-forward, " +
-      "roll-back, debris cleanup") {
+  test("StoreCommit refuses a swap-era root and an unstamped version " +
+      "loudly, never reading them as empty or by listing") {
     import java.nio.file.{Files => JF, Paths}
-    import graft.ops.ArtifactSwap
+    import graft.ops.{Manifest, StoreCommit, StoreFiles}
     val s = spark
     import s.implicits._
-    val base = graft.ops.Scratch.dir("graft_swap")
-    val live = s"$base/t.parquet"
-    def write(v: Long, to: String): Unit =
-      Seq(v).toDF("x").coalesce(1).write.mode("overwrite").parquet(to)
-    def readBack: Long =
-      spark.read.parquet(live).head.getLong(0)
-    ArtifactSwap.writeAndSwap(live)(write(1L, _))
-    assert(readBack == 1L)
-    ArtifactSwap.writeAndSwap(live)(write(2L, _))
-    assert(readBack == 2L)
-    // crash window between rename(live -> old) and move(next -> live):
-    // live missing, .old = current state, .next = COMPLETE replacement
-    write(3L, s"$live.next")
-    JF.move(Paths.get(live), Paths.get(s"$live.old"))
-    ArtifactSwap.recover(live)
-    assert(readBack == 3L, "complete .next must roll FORWARD")
-    assert(!new java.io.File(s"$live.old").exists())
-    // crash with an INCOMPLETE .next (no _SUCCESS): must roll back
-    JF.createDirectories(Paths.get(s"$live.next"))
-    JF.writeString(Paths.get(s"$live.next/part-junk"), "partial")
-    JF.move(Paths.get(live), Paths.get(s"$live.old"))
-    ArtifactSwap.recover(live)
-    assert(readBack == 3L, "incomplete .next must roll BACK")
-    assert(!new java.io.File(s"$live.next").exists())
-    // healthy live + leftover staging dirs: debris removed, live kept
-    write(9L, s"$live.next")
-    JF.createDirectories(Paths.get(s"$live.old"))
-    ArtifactSwap.recover(live)
-    assert(readBack == 3L)
-    assert(!new java.io.File(s"$live.next").exists())
-    assert(!new java.io.File(s"$live.old").exists())
-  }
-
-  test("ArtifactSwap refuses a filesystem without atomic directory " +
-      "rename, and the verified-deployment escape hatch admits it") {
-    import graft.ops.ArtifactSwap
-    // a local fs masquerading as an object store: rename semantics
-    // are whatever the scheme implies, and s3a's is copy+delete — the
-    // swap must refuse LOUDLY instead of running with a crash window
-    // recover() cannot close (round-14 verdict #5)
-    def fakeFs(scheme: String) = {
-      val fs = new org.apache.hadoop.fs.RawLocalFileSystem() {
-        override def getUri: java.net.URI =
-          java.net.URI.create(s"$scheme://fake")
-      }
-      fs.setConf(new org.apache.hadoop.conf.Configuration())
-      fs
-    }
-    val e = intercept[IllegalArgumentException] {
-      ArtifactSwap.requireAtomicRename(fakeFs("s3a"))
-    }
-    assert(e.getMessage.contains("ATOMIC directory rename"))
-    // local/posix and HDFS-class schemes pass
-    ArtifactSwap.requireAtomicRename(fakeFs("file"))
-    ArtifactSwap.requireAtomicRename(fakeFs("hdfs"))
-    // explicit opt-in for a store whose rename the deployment
-    // verified (documented conf key)
-    val optIn = fakeFs("abfs")
-    optIn.getConf.setBoolean(ArtifactSwap.AssumeAtomicKey, true)
-    ArtifactSwap.requireAtomicRename(optIn)
+    val base = graft.ops.Scratch.dir("graft_swap_era")
+    def refused(body: => Any): String =
+      intercept[IllegalStateException](body).getMessage
+    // the rename-aside layout: data files at the root, no CURRENT and
+    // no v_* dir — every access throws and names the rebuild
+    val legacy = s"$base/legacy"
+    Seq(1L, 2L).toDF("x").write.parquet(legacy)
+    Seq(refused(StoreCommit.recover(legacy)),
+        refused(StoreCommit.read(spark, legacy)),
+        refused(StoreCommit.fileCount(legacy)),
+        refused(StoreCommit.append(legacy)(_ => ()))).foreach(m =>
+      assert(m.contains("StoreCommit.replace"), m))
+    // a partitioned swap-era store (files only under cell= dirs), and
+    // a family API over a swap-era dedup index
+    val legacyCells = s"$base/legacy_cells"
+    Seq((1L, 0), (2L, 1)).toDF("x", "cell")
+      .write.partitionBy("cell").parquet(legacyCells)
+    refused(StoreCommit.readDir(legacyCells))
+    val legacyIx = s"$base/legacy_ix"
+    Seq(("fp", 1L)).toDF("fp", "exact_match")
+      .write.parquet(s"$legacyIx/fingerprints")
+    refused(graft.ext.Dedup.incrementalAgainstIndex(spark,
+      Tables.documents(spark, sf).limit(1), legacyIx))
+    // absent roots and roots holding only guard state are unseeded
+    assert(StoreCommit.fileCount(s"$base/absent") == 0)
+    StoreFiles.createMarker(s"$base/guarded", "_ids_synced")
+    Seq(3L).toDF("vec_id").write.parquet(s"$base/guarded/_removed")
+    assert(StoreCommit.fileCount(s"$base/guarded") == 0)
+    // the rebuild: the same content committed through replace
+    val fresh = s"$base/fresh"
+    StoreCommit.replace(fresh)(Seq(1L, 2L).toDF("x").write.parquet(_))
+    assert(StoreCommit.read(spark, fresh).count() == 2)
+    // a committed version whose manifest is gone is damaged: loud,
+    // never a directory-listing fallback
+    JF.delete(Paths.get(StoreCommit.readDir(fresh), Manifest.Name))
+    assert(refused(StoreCommit.read(spark, fresh)).contains(Manifest.Name))
+    refused(StoreCommit.fileCount(fresh))
   }
 
   test("PointerSwap: versioned commits resolve through the pointer, " +

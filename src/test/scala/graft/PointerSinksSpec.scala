@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
-import graft.ops.{PointerCommit, PointerSwap}
+import graft.ops.{PointerSwap, StoreCommit}
 
-/** The artifact sinks in POINTER-commit mode (round-15 verdict #1):
-  * every corpus-sized store committed through versioned dirs + the
-  * one-file pointer instead of the rename-aside swap — the protocol
-  * an S3-class object store needs. Each family replays its lifecycle
-  * (seed → append → replay no-op → mid-commit crash → compaction
-  * version flip) and must answer exactly like its swap-mode /
-  * one-shot sibling.
+/** The version half of [[graft.ops.StoreCommit]] under every artifact
+  * sink: each corpus-sized store commits through versioned dirs + the
+  * one-file pointer. Each family replays its lifecycle (seed → append
+  * → replay no-op → orphan version from a mid-commit crash →
+  * compaction version flip) and must answer exactly like its one-shot
+  * sibling. ManifestSinksSpec covers the file-list half (objects a
+  * torn job strands inside a committed version).
   */
 class PointerSinksSpec extends SparkSpec {
 
@@ -53,7 +53,7 @@ class PointerSinksSpec extends SparkSpec {
       EventStreams.semanticDedupSink(
         spark.readStream.schema(e.schema).parquet(srcDir),
         coarse, subs, Dedup.SubK, cellsRoot, verdictsDir,
-        s"$base/chk", commit = PointerCommit).stop()
+        s"$base/chk").stop()
 
     stage(e.filter(col("vec_id") <= c0), srcDir, "b0.parquet"); runOnce()
     // crash mid-commit between batches: an orphan staged version
@@ -64,7 +64,7 @@ class PointerSinksSpec extends SparkSpec {
       "orphan version must be rolled back at the next batch")
     stage(e.filter(col("vec_id") > c1), srcDir, "b2.parquet"); runOnce()
 
-    val live = PointerCommit.readDir(cellsRoot)
+    val live = StoreCommit.readDir(cellsRoot)
     assert(live != cellsRoot &&
       java.nio.file.Files.exists(java.nio.file.Paths.get(cellsRoot, "CURRENT")))
     def cellRows(df: org.apache.spark.sql.DataFrame) =
@@ -82,24 +82,24 @@ class PointerSinksSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2),
           if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
     val full = verdictRows(Dedup.semanticDedupFromCells(spark, live))
-    assert(verdictRows(spark.read.parquet(verdictsDir)) == full)
+    assert(verdictRows(StoreCommit.read(spark, verdictsDir)) == full)
 
     // replay no-op (counts too)
     stage(e.filter(col("vec_id") > c1), srcDir, "b2r.parquet"); runOnce()
-    assert(spark.read.parquet(PointerCommit.readDir(cellsRoot)).count()
+    assert(spark.read.parquet(StoreCommit.readDir(cellsRoot)).count()
       == ids.length.toLong)
-    assert(spark.read.parquet(verdictsDir).count() == ids.length.toLong)
+    assert(StoreCommit.read(spark, verdictsDir).count() == ids.length.toLong)
 
-    // forced compaction: fragment the live version, then compact —
-    // the store must flip to a NEW version with identical content
-    val v0 = PointerCommit.readDir(cellsRoot)
-    val frag = spark.read.parquet(v0)
+    // forced compaction: fragment the store, then compact — the
+    // store must flip to a NEW version with identical content
+    val frag = StoreCommit.read(spark, cellsRoot)
       .select(col("vec_id"), col("v"), col("cell").cast("int").as("cell"))
       .repartition(8).localCheckpoint()
-    frag.write.mode("overwrite").partitionBy("cell").parquet(v0)
+    StoreCommit.replace(cellsRoot)(frag.write.partitionBy("cell").parquet(_))
+    val v0 = StoreCommit.readDir(cellsRoot)
     assert(Dedup.maybeCompactSemanticCells(spark, cellsRoot,
-      threshold = 1, commit = PointerCommit))
-    val v1 = PointerCommit.readDir(cellsRoot)
+      threshold = 1))
+    val v1 = StoreCommit.readDir(cellsRoot)
     assert(v1 != v0, "compaction must commit a new version")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(v0)),
       "the superseded version is garbage-collected")
@@ -109,29 +109,28 @@ class PointerSinksSpec extends SparkSpec {
     assert(graft.ops.StoreFiles.readIdWatermark(cellsRoot)
       .contains(ids.max))
 
-    // takedown in pointer mode: the cells replace flips a version,
+    // takedown: the cells replace flips a version,
     // the ROOT-level removed-id log survives it, and neither the
     // removal nor a later compaction duplicates the log (the
     // review-caught unbounded-growth path)
     val remIds = e.filter(col("vec_id") % 9 === 4).select(col("vec_id"))
     val n = graft.ext.Dedup.removeSemanticVectors(spark, remIds,
-      cellsRoot, verdictsDir, PointerCommit)
+      cellsRoot, verdictsDir)
     assert(n == remIds.count() && n > 0)
     def logRows() = spark.read.parquet(s"$cellsRoot/_removed").count()
     assert(logRows() == n, "the log must hold exactly the removed ids")
-    assert(spark.read.parquet(verdictsDir).count() ==
+    assert(StoreCommit.read(spark, verdictsDir).count() ==
       ids.length.toLong - n)
     // force a compaction cycle; the log must not grow
-    val vr = PointerCommit.readDir(cellsRoot)
-    val frag2 = spark.read.parquet(vr)
+    val frag2 = StoreCommit.read(spark, cellsRoot)
       .withColumn("cell", col("cell").cast("int"))
       .repartition(8).localCheckpoint()
-    frag2.write.mode("overwrite").partitionBy("cell").parquet(vr)
+    StoreCommit.replace(cellsRoot)(frag2.write.partitionBy("cell").parquet(_))
     assert(Dedup.maybeCompactSemanticCells(spark, cellsRoot,
-      threshold = 1, commit = PointerCommit))
+      threshold = 1))
     assert(logRows() == n,
       "a compaction must not re-append (duplicate) the removed log")
-    assert(cellRows(PointerCommit.read(spark, cellsRoot)) ==
+    assert(cellRows(StoreCommit.read(spark, cellsRoot)) ==
       cellRows(oneShot.join(broadcast(remIds), Seq("vec_id"),
         "left_anti")))
   }
@@ -150,7 +149,7 @@ class PointerSinksSpec extends SparkSpec {
     def runOnce(): Unit =
       EventStreams.lexicalIndexSink(
         spark.readStream.schema(d.schema).parquet(srcDir),
-        store, s"$base/chk", commit = PointerCommit).stop()
+        store, s"$base/chk").stop()
 
     stage(d.filter(col("doc_id") <= c0), srcDir, "b0.parquet"); runOnce()
     val orphan = orphanVersion(s"$store/postings")
@@ -164,18 +163,18 @@ class PointerSinksSpec extends SparkSpec {
         r.getLong(3), r.getLong(4))).toSeq
     val live = rows(Retrieval.bm25Batch(spark, sf))
     assert(live.nonEmpty && rows(Retrieval.bm25BatchFromIndex(
-      spark, sf, store, PointerCommit)) == live,
+      spark, sf, store)) == live,
       "pointer-committed store must answer like the live batch form")
 
     // replay no-op
-    val pLive = PointerCommit.readDir(s"$store/postings")
+    val pLive = StoreCommit.readDir(s"$store/postings")
     val nPost = spark.read.parquet(pLive).count()
     stage(d.filter(col("doc_id") > c1), srcDir, "b2r.parquet"); runOnce()
     assert(spark.read.parquet(
-      PointerCommit.readDir(s"$store/postings")).count() == nPost)
+      StoreCommit.readDir(s"$store/postings")).count() == nPost)
 
-    // torn append into the live version: half a doc's rows, no
-    // committed-log entry — pointer-mode recovery removes them
+    // torn append: a doc's postings committed, but its committed-log
+    // entry never landed — recovery removes them
     val lastId = ids.max
     val td = d.select(col("doc_id"),
         graft.ext.TextOps.tokens(col("text")).as("t"))
@@ -187,41 +186,40 @@ class PointerSinksSpec extends SparkSpec {
     // appending rows for an id the log has never seen
     val ghost = lastPost.withColumn("doc_id", lit(lastId + 1000))
       .localCheckpoint()
-    ghost.write.mode("append").partitionBy("tbucket")
-      .parquet(PointerCommit.writeDir(s"$store/postings"))
+    StoreCommit.append(s"$store/postings")(
+      ghost.write.mode("append").partitionBy("tbucket").parquet(_))
     graft.ops.StoreFiles.deleteMarker(store, "_committed_synced")
-    assert(Retrieval.recoverBm25Store(spark, store, PointerCommit),
+    assert(Retrieval.recoverBm25Store(spark, store),
       "recovery must detect the torn ghost doc")
-    assert(spark.read.parquet(PointerCommit.readDir(s"$store/postings"))
+    assert(spark.read.parquet(StoreCommit.readDir(s"$store/postings"))
       .filter(col("doc_id") === lastId + 1000).count() == 0)
     assert(rows(Retrieval.bm25BatchFromIndex(
-      spark, sf, store, PointerCommit)) == live)
+      spark, sf, store)) == live)
 
     // compaction flips the postings version; answers unchanged
-    val v0 = PointerCommit.readDir(s"$store/postings")
-    val frag = spark.read.parquet(v0)
+    val frag = StoreCommit.read(spark, s"$store/postings")
       .select(col("doc_id"), col("dl"), col("term"), col("tf"),
         col("tbucket").cast("int").as("tbucket"))
       .repartition(8).localCheckpoint()
-    frag.write.mode("overwrite").partitionBy("tbucket").parquet(v0)
-    assert(Retrieval.maybeCompactPostings(spark, store, threshold = 1,
-      commit = PointerCommit))
-    assert(PointerCommit.readDir(s"$store/postings") != v0)
+    StoreCommit.replace(s"$store/postings")(
+      frag.write.partitionBy("tbucket").parquet(_))
+    val v0 = StoreCommit.readDir(s"$store/postings")
+    assert(Retrieval.maybeCompactPostings(spark, store, threshold = 1))
+    assert(StoreCommit.readDir(s"$store/postings") != v0)
     assert(rows(Retrieval.bm25BatchFromIndex(
-      spark, sf, store, PointerCommit)) == live)
+      spark, sf, store)) == live)
 
-    // ADOPTION: a store seeded OUTSIDE the sink (pointer mode, no
-    // marker) — the sink's first batch recovers, bootstraps, and
-    // appends nothing new
+    // ADOPTION: a store seeded OUTSIDE the sink (no marker) — the
+    // sink's first batch recovers, bootstraps, and appends nothing new
     val store2 = s"$base/ix2"
-    Retrieval.writeBm25Index(td, store2, PointerCommit)
+    Retrieval.writeBm25Index(td, store2)
     val src2 = s"$base/src2"; Files.createDirectories(Paths.get(src2))
     stage(d.filter(col("doc_id") > c1), src2, "b0.parquet")
     EventStreams.lexicalIndexSink(
       spark.readStream.schema(d.schema).parquet(src2),
-      store2, s"$base/chk2", commit = PointerCommit).stop()
+      store2, s"$base/chk2").stop()
     assert(rows(Retrieval.bm25BatchFromIndex(
-      spark, sf, store2, PointerCommit)) == live,
+      spark, sf, store2)) == live,
       "adopted pointer store must still answer like the live form")
   }
 
@@ -245,8 +243,7 @@ class PointerSinksSpec extends SparkSpec {
     def runOnce(): Unit =
       EventStreams.incrementalVectorIndexSink(
         spark.readStream.schema(e.schema).parquet(srcDir),
-        coarse, rcbs, codesRoot, goldDir, s"$base/chk",
-        commit = PointerCommit).stop()
+        coarse, rcbs, codesRoot, goldDir, s"$base/chk").stop()
 
     stage(e.filter(col("vec_id") <= c0), srcDir, "b0.parquet"); runOnce()
     val orphan = orphanVersion(codesRoot)
@@ -262,19 +259,19 @@ class PointerSinksSpec extends SparkSpec {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
           r.getInt(3), r.getInt(4), r.getInt(5), r.getInt(6))).toSet
-    val gold = spark.read.parquet(goldDir)
+    val gold = StoreCommit.read(spark, goldDir)
     assert(gold.count() == ids.length.toLong)
     val want = codeRows(
       ProductQuant.encodeFrameResidual(cast(gold), coarse, rcbs))
     assert(codeRows(spark.read.parquet(
-      PointerCommit.readDir(codesRoot))) == want,
+      StoreCommit.readDir(codesRoot))) == want,
       "pointer-committed codes must equal the full re-encode")
 
     // compaction (rebuild from gold) flips the version
-    val v0 = PointerCommit.readDir(codesRoot)
+    val v0 = StoreCommit.readDir(codesRoot)
     assert(ProductQuant.maybeCompactCodes(spark, goldDir, codesRoot,
-      coarse, rcbs, threshold = 1, commit = PointerCommit))
-    val v1 = PointerCommit.readDir(codesRoot)
+      coarse, rcbs, threshold = 1))
+    val v1 = StoreCommit.readDir(codesRoot)
     assert(v1 != v0 && codeRows(spark.read.parquet(v1)) == want)
   }
 
@@ -292,13 +289,13 @@ class PointerSinksSpec extends SparkSpec {
     def runOnce(): Unit =
       EventStreams.incrementalDedupSink(
         spark.readStream.schema(d.schema).parquet(srcDir),
-        ixRoot, goldDir, s"$base/chk", commit = PointerCommit).stop()
+        ixRoot, goldDir, s"$base/chk").stop()
 
     stage(d.filter(col("doc_id") <= c0), srcDir, "b0.parquet"); runOnce()
     val orphan = orphanVersion(ixRoot)
     stage(d.filter(col("doc_id") > c0), srcDir, "b1.parquet"); runOnce()
     assert(!Files.exists(orphan))
-    val streamed = spark.read.parquet(goldDir)
+    val streamed = StoreCommit.read(spark, goldDir)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     // the sequential batch-split gold standard: b0 seeds (within-batch
     // dups kept by design), b1 judged against b0's gold only
@@ -313,15 +310,15 @@ class PointerSinksSpec extends SparkSpec {
     val nGold = streamed.size.toLong
     // replay no-op
     stage(d.filter(col("doc_id") > c0), srcDir, "b1r.parquet"); runOnce()
-    assert(spark.read.parquet(goldDir).count() == nGold)
+    assert(StoreCommit.read(spark, goldDir).count() == nGold)
     // index compaction rebuild flips the version, verdicts unchanged
-    val v0 = PointerCommit.readDir(ixRoot)
+    val v0 = StoreCommit.readDir(ixRoot)
     assert(Dedup.maybeCompactIndex(spark, goldDir, ixRoot,
-      threshold = 0, commit = PointerCommit))
-    val v1 = PointerCommit.readDir(ixRoot)
+      threshold = 0))
+    val v1 = StoreCommit.readDir(ixRoot)
     assert(v1 != v0)
     val probe = Dedup.incrementalAgainstIndex(spark,
-      d.filter(col("doc_id") > c0), ixRoot, PointerCommit)
+      d.filter(col("doc_id") > c0), ixRoot)
     assert(probe.filter(col("verdict") =!= "unique").count() > 0,
       "post-flip index must still recognize stored docs as dups")
   }
@@ -330,7 +327,7 @@ class PointerSinksSpec extends SparkSpec {
       "append: the prologue repair commits a NEW index version, and " +
       "the batch probes THAT version — the duplicate is rejected") {
     // the round-16 ADVICE window: the sink used to resolve the live
-    // index dir BEFORE the prologue, so in pointer mode the repair's
+    // index dir BEFORE the prologue, so the repair's
     // version flip (which DELETES the superseded committed dir) left
     // the probe reading a stale path → "empty store" branch → the
     // duplicate admitted to the append-only gold corpus unjudged
@@ -346,7 +343,7 @@ class PointerSinksSpec extends SparkSpec {
     def runOnce(): Unit =
       EventStreams.incrementalDedupSink(
         spark.readStream.schema(d.schema).parquet(srcDir),
-        ixRoot, goldDir, s"$base/chk", commit = PointerCommit).stop()
+        ixRoot, goldDir, s"$base/chk").stop()
     // seed the store through the sink so the index is pointer-committed
     stage(d.filter(col("doc_id") <= c0), srcDir, "b0.parquet"); runOnce()
     // crash window: a unique doc landed in gold, the index append and
@@ -357,18 +354,18 @@ class PointerSinksSpec extends SparkSpec {
       .orderBy(col("doc_id")).limit(1)
       .select(col("doc_id")).collect().head.getLong(0)
     val crashedDoc = d.filter(col("doc_id") === crashed).localCheckpoint()
-    crashedDoc.write.mode("append").parquet(goldDir)
+    StoreCommit.append(goldDir)(crashedDoc.write.mode("append").parquet(_))
     graft.ops.StoreFiles.deleteMarker(goldDir, "_ids_synced")
     graft.ops.StoreFiles.deleteIdWatermark(goldDir)
     // next batch: an exact duplicate of the crashed doc, new id
     val dup = crashedDoc.withColumn("doc_id", lit(ids.max + 1))
       .localCheckpoint()
     stage(dup, srcDir, "dup.parquet")
-    val before = spark.read.parquet(goldDir).count()
+    val before = StoreCommit.read(spark, goldDir).count()
     runOnce()
-    assert(spark.read.parquet(goldDir).count() == before,
+    assert(StoreCommit.read(spark, goldDir).count() == before,
       "the duplicate of the crashed doc must be rejected in pointer mode")
-    assert(spark.read.parquet(goldDir)
+    assert(StoreCommit.read(spark, goldDir)
       .filter(col("doc_id") === ids.max + 1).isEmpty)
   }
 
@@ -394,8 +391,7 @@ class PointerSinksSpec extends SparkSpec {
     def runOnce(): Unit =
       EventStreams.knnGraphSink(
         spark.readStream.schema(e.schema).parquet(srcDir),
-        assign, cellsRoot, edgesDir, Some(labelsDir), s"$base/chk",
-        commit = PointerCommit).stop()
+        assign, cellsRoot, edgesDir, Some(labelsDir), s"$base/chk").stop()
 
     stage(e.filter(col("vec_id") <= c0), srcDir, "b0.parquet"); runOnce()
     stage(e.filter(col("vec_id") > c0), srcDir, "b1.parquet"); runOnce()
@@ -419,7 +415,7 @@ class PointerSinksSpec extends SparkSpec {
       "pointer-cells edges must equal the one-shot build")
     assert(labelRows(labelsDir) == labelRows(oneShotL),
       "pointer-cells labels must equal the one-shot build")
-    assert(PointerCommit.readDir(cellsRoot) != cellsRoot)
+    assert(StoreCommit.readDir(cellsRoot) != cellsRoot)
     assert(PointerSwap.resolve(cellsRoot).isDefined)
   }
 }

@@ -259,7 +259,7 @@ class RetrievalSpec extends SparkSpec {
       "masked serve must equal a fresh build on the retained corpus")
     assert(pre != want, "the takedown must actually change answers")
     // never-indexed ids no-op (the removed list stays id-stable)
-    val remDir = graft.ops.SwapCommit.readDir(s"$store/removed")
+    val remDir = graft.ops.StoreCommit.readDir(s"$store/removed")
     val nRem = spark.read.parquet(remDir).count()
     Retrieval.tombstoneBm25Docs(spark,
       spark.range(10).select((col("id") + 1000000L).as("doc_id")), store)
@@ -269,7 +269,7 @@ class RetrievalSpec extends SparkSpec {
     assert(Retrieval.recoverBm25Takedown(spark, store),
       "pending removals without the consistency marker = torn vacuum")
     assert(serve(store) == want, "recovered store must serve retained")
-    assert(graft.ops.SwapCommit.fileCount(s"$store/removed") == 0,
+    assert(graft.ops.StoreCommit.fileCount(s"$store/removed") == 0,
       "recovery must have reset the removed list")
     assert(!Retrieval.recoverBm25Takedown(spark, store))
     // a second vacuum with nothing pending is a no-op
@@ -277,7 +277,7 @@ class RetrievalSpec extends SparkSpec {
     // re-tombstone of already-vacuumed ids: no postings left → no-op
     Retrieval.tombstoneBm25Docs(spark,
       td.filter(col("doc_id") % 9 === 4).select(col("doc_id")), store)
-    assert(graft.ops.SwapCommit.fileCount(s"$store/removed") == 0)
+    assert(graft.ops.StoreCommit.fileCount(s"$store/removed") == 0)
     assert(serve(store) == want)
   }
 
@@ -299,9 +299,10 @@ class RetrievalSpec extends SparkSpec {
     // fabricate the crash window the review named: meta already
     // adjusted (the vacuum ran), but the removed list is back and the
     // consistency marker is down — every serve would double-subtract
-    td.filter(col("doc_id") % 9 === 4)
+    graft.ops.StoreCommit.append(s"$store/removed")(
+      td.filter(col("doc_id") % 9 === 4)
       .select(col("doc_id"), size(col("t")).cast("int").as("dl"))
-      .coalesce(1).write.mode("append").parquet(s"$store/removed")
+      .coalesce(1).write.mode("append").parquet(_))
     graft.ops.StoreFiles.deleteMarker(store, "_takedown_synced")
     // one streamed batch (a genuinely new doc) heals it in-line
     val srcDir = s"$base/src"; Files.createDirectories(Paths.get(srcDir))
@@ -317,7 +318,7 @@ class RetrievalSpec extends SparkSpec {
       store, s"$base/chk").stop()
     assert(graft.ops.StoreFiles.markerExists(store, "_takedown_synced"),
       "the sink must re-arm the takedown consistency marker")
-    assert(graft.ops.SwapCommit.fileCount(s"$store/removed") == 0,
+    assert(graft.ops.StoreCommit.fileCount(s"$store/removed") == 0,
       "the sink must finish the torn vacuum (removed list reset)")
     // exactness: serve == one-shot build on retained ∪ the new doc
     val ref = s"$base/ref"

@@ -217,16 +217,17 @@ class SelectionSpec extends SparkSpec {
   test("artifact merge folds into a MARKER-LESS seeded count table " +
       "instead of replacing it") {
     import org.apache.spark.sql.functions._
-    // seed via the documented batch path — a plain parquet write, no
-    // _batch_id marker. The merge must treat the existing DIRECTORY as
-    // the artifact (lastApplied = -1) and fold the batch in; keying on
-    // the marker would silently re-initialize from just the batch.
+    // seed via the documented batch path — a committed count table
+    // with no _batch_id marker. The merge must treat the committed
+    // counts as the artifact (lastApplied = -1) and fold the batch in;
+    // keying on the marker would silently re-initialize from just the
+    // batch.
     val docs = Tables.documents(spark, sf)
     val gold = docs.filter(col("doc_id") < 400)
     val batch = docs.filter(col("doc_id") >= 400)
     val countsDir = graft.ops.Scratch.dir("graft_seedcounts")
-    Selection.tokenCountsOn(gold).write.mode("overwrite")
-      .parquet(s"$countsDir/${Selection.TokenCountsTable}.parquet")
+    graft.ops.StoreCommit.replace(Selection.tokenCountsRoot(countsDir))(
+      Selection.tokenCountsOn(gold).write.parquet(_))
     assert(Selection.mergeTokenCountsArtifact(spark, countsDir, batch, 0L))
     val merged = Selection.jsDivergenceFromArtifact(spark, countsDir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq

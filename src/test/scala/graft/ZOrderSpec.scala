@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.ZOrderLayout
+import graft.ops.StoreCommit
 import org.apache.spark.sql.functions._
 
 /** The z-order layout's reason to exist, asserted end-to-end: files
@@ -123,26 +124,29 @@ class ZOrderSpec extends SparkSpec {
       df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
     stageFile(Long.MinValue, cuts(0), "b0.parquet"); runOnce()
     stageFile(cuts(0), cuts(1), "b1.parquet"); runOnce()
-    // crash inside a compaction swap: live store renamed aside with
-    // an incomplete .next staged — the next batch must recover it
-    Files.move(Paths.get(store), Paths.get(s"$store.old"))
-    Files.createDirectories(Paths.get(s"$store.next"))
-    Files.write(Paths.get(s"$store.next/junk"), Array[Byte](1))
+    // crash inside a compaction's replace: the pointer renamed aside
+    // mid-replace with an incomplete version staged — the next batch
+    // must recover it
+    Files.move(Paths.get(s"$store/CURRENT"), Paths.get(s"$store/CURRENT.tmp"))
+    Files.createDirectories(Paths.get(s"$store/v_00000099"))
+    Files.write(Paths.get(s"$store/v_00000099/junk"), Array[Byte](1))
     stageFile(cuts(1), cuts(2), "b2.parquet"); runOnce()
     stageFile(cuts(2), cuts(3), "b3.parquet"); runOnce()
     // 4 deltas by now -> compaction fired at least once
     stageFile(cuts(3), Long.MaxValue, "b4.parquet"); runOnce()
-    assert(content(graft.pipeline.ZOrderLayout.readStore(spark, store)) ==
+    assert(content(graft.pipeline.ZOrderLayout.readStore(spark,
+      StoreCommit.readDir(store))) ==
       content(li), "store must equal the source after crash + OPTIMIZE")
     // replayed batch is a no-op (its delta subdir self-overwrites)
     stageFile(cuts(3), Long.MaxValue, "b4_replay.parquet"); runOnce()
-    assert(content(graft.pipeline.ZOrderLayout.readStore(spark, store)) ==
+    assert(content(graft.pipeline.ZOrderLayout.readStore(spark,
+      StoreCommit.readDir(store))) ==
       content(li), "a replayed batch must be a no-op")
     // the compacted base keeps the skipping property: every base file
     // bounds the second key well below the full domain
     val yb = li.agg(min(col("l_suppkey")), max(col("l_suppkey"))).head()
     val ySpan = yb.getLong(1) - yb.getLong(0) + 1
-    val env = spark.read.parquet(s"$store/base")
+    val env = spark.read.parquet(s"${StoreCommit.readDir(store)}/base")
       .groupBy(input_file_name())
       .agg(min(col("l_suppkey")).as("lo"), max(col("l_suppkey")).as("hi"))
       .collect().map(r => r.getLong(2) - r.getLong(1) + 1)
@@ -155,7 +159,8 @@ class ZOrderSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     val sess = spark
     import sess.implicits._
-    val store = graft.ops.Scratch.dir("graft_ztier") + "/s"
+    val root = graft.ops.Scratch.dir("graft_ztier") + "/s"
+    val store = StoreCommit.writeDir(root)
     val part = (lo: Long, hi: Long) =>
       (lo to hi).map(i => (i, i % 7, i % 5)).toDF("id", "x", "y")
     ZOrderLayout.appendDelta(part(1, 10), store, "id")
@@ -188,10 +193,11 @@ class ZOrderSpec extends SparkSpec {
     assert(!new java.io.File(s"$store/delta/batch=18").exists())
     // major folds base-absent run + a live delta into the base
     ZOrderLayout.appendDelta(part(21, 30), store, "id")
-    ZOrderLayout.compactStore(spark, store, "x", "y", "id")
-    assert(ZOrderLayout.readStore(spark, store).count() == 30)
-    assert(ZOrderLayout.deltaCount(store) == 0 &&
-      new java.io.File(s"$store/base").exists())
+    ZOrderLayout.compactStore(spark, root, "x", "y", "id")
+    val live = StoreCommit.readDir(root)
+    assert(ZOrderLayout.readStore(spark, live).count() == 30)
+    assert(ZOrderLayout.deltaCount(live) == 0 &&
+      new java.io.File(s"$live/base").exists())
   }
 
   test("delete-delta tier: reads mask immediately, minors fold minus " +
@@ -200,10 +206,11 @@ class ZOrderSpec extends SparkSpec {
     import java.nio.file.Files
     val sess = spark
     import sess.implicits._
-    val store = graft.ops.Scratch.dir("graft_zdel") + "/s"
+    val root = graft.ops.Scratch.dir("graft_zdel") + "/s"
+    val store = StoreCommit.writeDir(root)
     val part = (lo: Long, hi: Long) =>
       (lo to hi).map(i => (i, i % 7, i % 5)).toDF("id", "x", "y")
-    def ids() = ZOrderLayout.readStore(spark, store)
+    def ids() = ZOrderLayout.readStore(spark, StoreCommit.readDir(root))
       .select("id").collect().map(_.getLong(0)).toSet
     ZOrderLayout.appendDelta(part(1, 10), store, "id")
     ZOrderLayout.appendDelta(part(11, 20), store, "id")
@@ -234,12 +241,13 @@ class ZOrderSpec extends SparkSpec {
     // the watermark stays at the pre-delete max (replay guard intact)
     assert(ZOrderLayout.storeWatermark(spark, store, "id").contains(30L))
     // the major applies deletes physically and drops the del tier
-    ZOrderLayout.compactStore(spark, store, "x", "y", "id")
+    ZOrderLayout.compactStore(spark, root, "x", "y", "id")
+    val live = StoreCommit.readDir(root)
     assert(ids() == want)
-    assert(ZOrderLayout.pendingDeletes(spark, store).isEmpty,
+    assert(ZOrderLayout.pendingDeletes(spark, live).isEmpty,
       "major compaction must retire the applied delete-deltas")
-    assert(spark.read.parquet(s"$store/base").count() == want.size.toLong)
-    assert(ZOrderLayout.storeWatermark(spark, store, "id").contains(30L))
+    assert(spark.read.parquet(s"$live/base").count() == want.size.toLong)
+    assert(ZOrderLayout.storeWatermark(spark, live, "id").contains(30L))
   }
 
   test("pointer-mode z-store sink: replay + minor/major compaction " +
@@ -265,15 +273,15 @@ class ZOrderSpec extends SparkSpec {
     def runOnce(): Unit =
       EventStreams.zorderStoreSink(
         spark.readStream.schema(li.schema).parquet(srcDir),
-        store, s"$base/chk", "l_partkey", "l_suppkey", "l_orderkey",
-        commit = graft.ops.PointerCommit).stop()
+        store, s"$base/chk", "l_partkey", "l_suppkey", "l_orderkey")
+        .stop()
     def content(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
     stageFile(Long.MinValue, cuts(0), "b0.parquet"); runOnce()
     stageFile(cuts(0), cuts(1), "b1.parquet"); runOnce()
-    // crash mid-major-compaction in pointer mode: an orphan staged
+    // crash mid-major-compaction: an orphan staged
     // version above the committed one — recover must roll it back
-    val live0 = graft.ops.PointerCommit.readDir(store)
+    val live0 = StoreCommit.readDir(store)
     val orphan = Paths.get(store, "v_00000007")
     Files.createDirectories(orphan)
     Files.write(orphan.resolve("junk"), Array[Byte](1))
@@ -281,14 +289,14 @@ class ZOrderSpec extends SparkSpec {
     assert(!Files.exists(orphan), "orphan version must be rolled back")
     stageFile(cuts(2), cuts(3), "b3.parquet"); runOnce()
     stageFile(cuts(3), Long.MaxValue, "b4.parquet"); runOnce()
-    val live = graft.ops.PointerCommit.readDir(store)
+    val live = StoreCommit.readDir(store)
     assert(live != store && Files.exists(Paths.get(store, "CURRENT")))
     assert(content(ZOrderLayout.readStore(spark, live)) == content(li),
       "pointer-committed store must equal the source")
     // replayed batch is a no-op
     stageFile(cuts(3), Long.MaxValue, "b4r.parquet"); runOnce()
     assert(content(ZOrderLayout.readStore(spark,
-      graft.ops.PointerCommit.readDir(store))) == content(li))
+      StoreCommit.readDir(store))) == content(li))
     // the major compaction flipped versions at least once: base
     // exists inside the committed version
     assert(Files.exists(Paths.get(live, "base")), s"no base under $live")

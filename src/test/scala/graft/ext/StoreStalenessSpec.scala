@@ -86,7 +86,7 @@ class StoreStalenessSpec extends graft.SparkSpec {
         frame(ClusterOps.knnRemoveLabels(spark, d)))
       Obs(e.rows ++ l.rows, e.ids ++ l.ids)
     }),
-    Family("opqStore", "embeddings", d => frame(graft.ops.SwapCommit
+    Family("opqStore", "embeddings", d => frame(graft.ops.StoreCommit
       .readSub(spark, ProductQuant.opqStoreFor(spark, d), "codes"))),
     // stores over documents
     Family("ngramPairs", "documents",
@@ -95,9 +95,8 @@ class StoreStalenessSpec extends graft.SparkSpec {
       d => frame(Dedup.nearDupClusters(spark, d))),
     Family("splitLabels", "documents", d => frame(Sampling
       .trainTestSplitFrom(spark, Sampling.splitLabelsFor(spark, d)))),
-    Family("tokenCounts", "documents", d => frame(spark.read.parquet(
-      s"${Curation.tokenCountsFor(spark, d)}/" +
-        s"${Selection.TokenCountsTable}.parquet"))),
+    Family("tokenCounts", "documents", d => frame(graft.ops.StoreCommit
+      .read(spark, Selection.tokenCountsRoot(Curation.tokenCountsFor(spark, d))))),
     Family("bm25Toks", "documents",
       d => frame(Retrieval.bm25TopK(spark, d))),
     Family("bpe", "documents", d => frame(Bpe.bpeMerges(spark, d))),
