@@ -356,12 +356,12 @@ object StreamScaleUp {
         f"${(System.nanoTime() - t0) / 1e9}%.1f s, gold vectors $goldRows%d")
       // fragmentation left by per-batch appends, and the compaction
       // rebuild's cost at this store size
-      val frag = graft.ext.ProductQuant.codesFileCount(s"$base/vec_codes")
+      val frag = StoreCommit.fileCount(s"$base/vec_codes")
       measure("vec_codes_compaction")(
         graft.ext.ProductQuant.maybeCompactCodes(spark, s"$base/vec_gold",
           s"$base/vec_codes", coarse, rcbs, threshold = 1))
       note("vec_codes_compaction", s"$frag part files -> " +
-        s"${graft.ext.ProductQuant.codesFileCount(s"$base/vec_codes")}")
+        s"${StoreCommit.fileCount(s"$base/vec_codes")}")
       // steady-state ADC probe against the streamed store
       val (qid, qCell, dt) = graft.ext.ProductQuant.queryPrepResidual(
         spark, src, coarse, rcbs)
@@ -432,12 +432,12 @@ object StreamScaleUp {
         (if (cellsPar) "EXACT" else "MISMATCH") + ", verdicts " +
         (if (verdictPar) "EXACT" else "MISMATCH"))
       // compaction economics, same policy row as the codes store
-      val frag = graft.ext.Dedup.cellsFileCount(s"$base/sem_cells")
+      val frag = StoreCommit.fileCount(s"$base/sem_cells")
       measure("sem_cells_compaction")(
         graft.ext.Dedup.maybeCompactSemanticCells(spark,
           s"$base/sem_cells", threshold = 1))
       note("sem_cells_compaction", s"$frag part files -> " +
-        s"${graft.ext.Dedup.cellsFileCount(s"$base/sem_cells")}")
+        s"${StoreCommit.fileCount(s"$base/sem_cells")}")
     }
 
     // ---- 6. streaming lexical-index sink (BM25 postings per batch) ----
@@ -471,12 +471,12 @@ object StreamScaleUp {
       println(s"[streamscale] bm25 parity vs rebuild: " +
         (if (streamed == rebuilt) "EXACT" else "MISMATCH"))
       // compaction economics, same policy row as the other stores
-      val frag = graft.ext.Dedup.cellsFileCount(s"$base/bm25_ix/postings")
+      val frag = StoreCommit.fileCount(s"$base/bm25_ix/postings")
       measure("bm25_postings_compaction")(
         graft.ext.Retrieval.maybeCompactPostings(spark, s"$base/bm25_ix",
           threshold = 1))
       note("bm25_postings_compaction", s"$frag part files -> " +
-        s"${graft.ext.Dedup.cellsFileCount(s"$base/bm25_ix/postings")}")
+        s"${StoreCommit.fileCount(s"$base/bm25_ix/postings")}")
     }
 
     if (on("takedown")) locally {
@@ -784,41 +784,36 @@ object StreamScaleUp {
       for ((f, i) <- files.zipWithIndex) {
         val rows = spark.read.parquet(f)
         StoreCommit.recover(store)
-        val live = StoreCommit.writeDir(store)
         val step = f"zstore t${i + 1}%02d"
-        measure(s"$step append")(ZOrderLayout.appendDelta(rows, live, idc))
+        measure(s"$step append")(ZOrderLayout.appendDelta(rows, store, idc))
         val major =
-          ZOrderLayout.deltaCount(live) >= ZOrderLayout.CompactAfter && {
+          ZOrderLayout.deltaCount(store) >= ZOrderLayout.CompactAfter && {
             measure(s"$step minor")(
-              ZOrderLayout.minorCompact(spark, live, x, y))
+              ZOrderLayout.minorCompact(spark, store, x, y))
             measure(s"$step maybe_major")(ZOrderLayout.maybeCompactStore(
               spark, store, x, y, idc))._2
           }
-        val liveNow = StoreCommit.readDir(store)
-        val baseMb =
-          graft.ops.StoreFiles.dirBytes(s"$liveNow/base") / (1 << 20)
-        val l1Mb =
-          graft.ops.StoreFiles.dirBytes(s"$liveNow/l1") / (1 << 20)
+        val baseMb = StoreCommit.dataBytes(store, "base") / (1 << 20)
+        val l1Mb = StoreCommit.dataBytes(store, "l1") / (1 << 20)
         note(step, s"major $major  (base $baseMb MB, l1 $l1Mb MB)")
       }
-      val got = ZOrderLayout
-        .readStore(spark, StoreCommit.readDir(store)).count()
+      val got = ZOrderLayout.readStore(spark, store).count()
       val want = spark.read.parquet(liDir).count()
       println(s"[streamscale] zstore parity vs landing: " +
         (if (got == want) s"EXACT ($got rows)"
          else s"MISMATCH ($got vs $want)"))
       // what the layout buys: per-file second-key envelopes of the
       // compacted base vs the raw landing files
-      def medianSpan(dir: String): Long = {
-        val spans = spark.read.parquet(dir)
+      def medianSpan(files: DataFrame): Long = {
+        val spans = files
           .groupBy(input_file_name())
           .agg((max(col("l_suppkey")) - min(col("l_suppkey")) + 1)
             .as("s")).collect().map(_.getLong(1)).sorted
         spans(spans.length / 2)
       }
       println(s"[streamscale] zstore median y-span per file: base " +
-        s"${medianSpan(s"${StoreCommit.readDir(store)}/base")} vs landing " +
-        s"${medianSpan(liDir)}")
+        s"${medianSpan(StoreCommit.readSub(spark, store, "base"))} vs " +
+        s"landing ${medianSpan(spark.read.parquet(liDir))}")
     }
 
     if (on("zdel")) locally {
@@ -842,27 +837,23 @@ object StreamScaleUp {
       for ((f, i) <- files.zipWithIndex) {
         val rows = spark.read.parquet(f)
         val step = f"zdel t${i + 1}%02d"
-        val live = StoreCommit.writeDir(store)
-        measure(s"$step append")(ZOrderLayout.appendDelta(rows, live, idc))
+        measure(s"$step append")(ZOrderLayout.appendDelta(rows, store, idc))
         measure(s"$step del")(ZOrderLayout.appendDeleteDelta(
-          rows.filter(col(idc) % 10 === 3), live, idc))
+          rows.filter(col(idc) % 10 === 3), store, idc))
         val major =
-          ZOrderLayout.deltaCount(live) >= ZOrderLayout.CompactAfter && {
+          ZOrderLayout.deltaCount(store) >= ZOrderLayout.CompactAfter && {
             measure(s"$step minor")(
-              ZOrderLayout.minorCompact(spark, live, x, y))
+              ZOrderLayout.minorCompact(spark, store, x, y))
             measure(s"$step maybe_major")(ZOrderLayout.maybeCompactStore(
               spark, store, x, y, idc))._2
           }
-        val liveNow = StoreCommit.readDir(store)
-        val baseMb =
-          graft.ops.StoreFiles.dirBytes(s"$liveNow/base") / (1 << 20)
-        val delN = ZOrderLayout.pendingDeletes(spark, liveNow)
+        val baseMb = StoreCommit.dataBytes(store, "base") / (1 << 20)
+        val delN = ZOrderLayout.pendingDeletes(spark, store)
           .map(_.count()).getOrElse(0L)
         note(step,
           s"major $major  (base $baseMb MB, pending deletes $delN)")
       }
-      val got =
-        ZOrderLayout.readStore(spark, StoreCommit.readDir(store)).count()
+      val got = ZOrderLayout.readStore(spark, store).count()
       val landing = spark.read.parquet(liDir)
       val want = landing.filter(col(idc) % 10 =!= 3).count()
       println(s"[streamscale] zdel parity vs landing-minus-removed: " +

@@ -572,12 +572,6 @@ object Dedup {
     assignSemanticCells(batch, coarse, subs, subK)
       .write.mode("append").partitionBy("cell").parquet(cellsDir)
 
-  /** Committed part-file count of a cell-partitioned semantic store —
-    * the fragmentation measure [[maybeCompactSemanticCells]] watches
-    * (each streamed append writes one file per touched cell per
-    * micro-batch). */
-  def cellsFileCount(cellsDir: String): Int = StoreCommit.fileCount(cellsDir)
-
   /** Compaction policy for the append-mode semantic-cells store:
     * rewrite toward one file per cell once fragmentation exceeds
     * BOTH the flat `threshold` and 2× the store's cell count — the
@@ -602,11 +596,11 @@ object Dedup {
     * survives the replace untouched. Returns whether a rewrite ran. */
   def maybeCompactSemanticCells(spark: SparkSession, cellsDir: String,
       threshold: Int = CompactFileThreshold): Boolean = {
-    // cell count from the partition layout — a directory listing,
-    // no data read
-    val cellDirs = graft.ops.StoreFiles
-      .partitionDirCount(StoreCommit.readDir(cellsDir), "cell=")
-    if (cellsFileCount(cellsDir) > math.max(threshold, 2 * cellDirs)) {
+    // the committed part-file count (each streamed append writes one
+    // file per touched cell per micro-batch) against the committed
+    // cell count — both from the manifest, no data read
+    val cellDirs = StoreCommit.subdirs(cellsDir).count(_.startsWith("cell="))
+    if (StoreCommit.fileCount(cellsDir) > math.max(threshold, 2 * cellDirs)) {
       // schema-preserving (keeps cell2 and any future data column):
       // compaction must not silently drop what the build wrote, and it
       // compacts exactly the committed content — never torn junk a
@@ -1817,8 +1811,7 @@ object Dedup {
       .map(_.localCheckpoint())
       .getOrElse(return (0L, 0L))
     if (ts.isEmpty) return (0L, 0L)
-    val bytesBefore =
-      graft.ops.StoreFiles.dataBytes(StoreCommit.readDir(goldDir))
+    val bytesBefore = StoreCommit.dataBytes(goldDir)
     val gold0 = StoreCommit.read(spark, goldDir)
     val before = gold0.count()
     val retained = gold0
@@ -1834,8 +1827,7 @@ object Dedup {
     graft.ops.SinkGuard.appendRemovedIds(ts, goldDir)
     StoreCommit.replace(goldDir)(retained.write.parquet(_))
     writeGoldIndex(retained, indexDir)
-    (before - retained.count(), bytesBefore -
-      graft.ops.StoreFiles.dataBytes(StoreCommit.readDir(goldDir)))
+    (before - retained.count(), bytesBefore - StoreCommit.dataBytes(goldDir))
   }
 
   /** The vacuum, gated end to end: build gold + index on the ≤80%

@@ -358,9 +358,6 @@ object ProductQuant {
           slice(col("rv"), m * SubDim + 1, SubDim), rcbs(m))
           .as(s"code$m")): _*)
 
-  /** Committed part-file count of a cell-partitioned codes store. */
-  def codesFileCount(codesDir: String): Int = StoreCommit.fileCount(codesDir)
-
   /** Codes-store compaction — same policy as
     * [[graft.ext.Dedup.maybeCompactIndex]]: past `threshold` part
     * files (micro-batch appends write one file per cell per batch),
@@ -376,7 +373,7 @@ object ProductQuant {
       codesDir: String, coarse: Seq[(Int, Seq[Double])],
       rcbs: Seq[Seq[(Int, Seq[Double])]],
       threshold: Int = Dedup.CompactFileThreshold): Boolean = {
-    if (codesFileCount(codesDir) > threshold) {
+    if (StoreCommit.fileCount(codesDir) > threshold) {
       rebuildCodes(spark, goldDir, codesDir, coarse, rcbs)
       true
     } else false
@@ -422,8 +419,7 @@ object ProductQuant {
     val rem = removedIds.select(col("vec_id")).distinct()
       .localCheckpoint()
     if (rem.isEmpty) return (0L, 0L)
-    val bytesBefore =
-      graft.ops.StoreFiles.dataBytes(StoreCommit.readDir(goldDir))
+    val bytesBefore = StoreCommit.dataBytes(goldDir)
     val gold0 = StoreCommit.read(spark, goldDir)
     val before = gold0.count()
     val retained = gold0
@@ -438,8 +434,7 @@ object ProductQuant {
     StoreCommit.replace(goldDir)(retained.write.parquet(_))
     rebuildCodes(spark, goldDir, codesDir, coarse, rcbs)
     graft.ops.StoreFiles.createMarker(goldDir, "_ids_synced")
-    (removedN, bytesBefore -
-      graft.ops.StoreFiles.dataBytes(StoreCommit.readDir(goldDir)))
+    (removedN, bytesBefore - StoreCommit.dataBytes(goldDir))
   }
 
   /** Driver-side query prep for the residual layout: query id, coarse

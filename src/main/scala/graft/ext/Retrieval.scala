@@ -311,9 +311,8 @@ object Retrieval {
     * Returns whether a rewrite ran. */
   def maybeCompactPostings(spark: SparkSession, store: String,
       threshold: Int = 256): Boolean = {
-    val dir = StoreCommit.readDir(s"$store/postings")
-    val buckets =
-      graft.ops.StoreFiles.partitionDirCount(dir, "tbucket=")
+    val buckets = StoreCommit.subdirs(s"$store/postings")
+      .count(_.startsWith("tbucket="))
     if (StoreCommit.fileCount(s"$store/postings") >
         math.max(threshold, 2 * buckets)) {
       val compacted = StoreCommit.read(spark, s"$store/postings")
@@ -735,8 +734,7 @@ object Retrieval {
     val remIds = rem.select(col("doc_id"))
     val nRem = rem.count()
     if (nRem == 0) return (0L, 0L)
-    val bytesBefore =
-      graft.ops.StoreFiles.dirBytes(StoreCommit.readDir(s"$store/postings"))
+    val bytesBefore = StoreCommit.dataBytes(s"$store/postings")
     graft.ops.StoreFiles.deleteMarker(store, TakedownMarker)
     val retained = StoreCommit.read(spark, s"$store/postings")
       .join(broadcast(remIds), Seq("doc_id"), "left_anti")
@@ -758,8 +756,7 @@ object Retrieval {
     // The reset commits an EMPTY removed version.
     StoreCommit.replace(removedDir(store))(_ => ())
     graft.ops.StoreFiles.createMarker(store, TakedownMarker)
-    (nRem, bytesBefore - graft.ops.StoreFiles.dirBytes(
-      StoreCommit.readDir(s"$store/postings")))
+    (nRem, bytesBefore - StoreCommit.dataBytes(s"$store/postings"))
   }
 
   /** Close a torn [[vacuumBm25]] (marker down, removals pending):

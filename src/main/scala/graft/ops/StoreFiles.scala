@@ -66,23 +66,6 @@ object StoreFiles {
     false
   }
 
-  /** Recursive byte total of the DATA files under `dir` — the same
-    * visibility rule as [[parquetFileCount]], so reclaimed-bytes
-    * accounting is not skewed by guard logs or torn staging. */
-  def dataBytes(dir: String): Long = {
-    val (fs, p) = fsOf(dir)
-    if (!fs.exists(p)) return 0L
-    var n = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (!f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith(".") &&
-          !hiddenUnder(p, f.getPath)) n += f.getLen
-    }
-    n
-  }
-
   /** Whether `dir` holds any FIRST-LEVEL `.parquet` part file — the
     * seeded-store probe for FLAT (unpartitioned) stores. Deliberately
     * non-recursive: a partitioned store's top level holds only
@@ -136,36 +119,49 @@ object StoreFiles {
 
   /** A one-line integer scalar file `name` under `dir` (underscore
     * names, invisible to parquet readers); None when absent or torn. */
-  def readLong(dir: String, name: String): Option[Long] = {
-    val (fs, p) = fsOf(dir)
-    val f = new Path(p, name)
-    if (!fs.exists(f)) None
-    else
-      scala.util.Try {
-        val in = fs.open(f)
-        try {
-          val s = new String(
-            org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          s.trim.toLong
-        } finally in.close()
-      }.toOption
-  }
+  def readLong(dir: String, name: String): Option[Long] =
+    readSmall(dir, name).flatMap(s => scala.util.Try(s.trim.toLong).toOption)
 
-  /** Write (replace) the id watermark. A crash mid-write leaves a
-    * torn file that [[readIdWatermark]] fails to parse → None → the
-    * anti-join fallback, never a wrong scalar silently trusted. */
+  /** Write (replace) the id watermark. A crash mid-replace leaves it
+    * absent → None → the anti-join fallback, never a wrong scalar
+    * silently trusted. */
   def writeIdWatermark(dir: String, v: Long): Unit =
     writeLong(dir, "_id_watermark", v)
 
   /** Write (replace) the scalar file `name` under `dir`. */
-  def writeLong(dir: String, name: String, v: Long): Unit = {
+  def writeLong(dir: String, name: String, v: Long): Unit =
+    replaceSmall(dir, name, v.toString)
+
+  /** The content of the small file `name` under `dir`, None when it is
+    * absent or unreadable — the one reader of `CURRENT`, `_MANIFEST`
+    * and the scalar files. */
+  def readSmall(dir: String, name: String): Option[String] = {
     val (fs, p) = fsOf(dir)
-    fs.mkdirs(p)
-    val out = fs.create(new Path(p, name), true)
-    try out.write(v.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
+    val f = new Path(p, name)
+    if (!fs.exists(f)) None
+    else scala.util.Try {
+      val in = fs.open(f)
+      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+        java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
+    }.toOption
+  }
+
+  /** Replace the small file `name` under `dir` (created if needed):
+    * temp file `name.tmp`, delete, single-FILE rename — atomic on
+    * posix/HDFS, one object PUT on S3-class stores. A crash leaves the
+    * old file, or no file with the full or partial temp beside it;
+    * never a torn `name`. The one writer of `CURRENT`, `_MANIFEST` and
+    * the scalar files. */
+  def replaceSmall(dir: String, name: String, text: String): Unit = {
+    val (fs, p) = fsOf(dir)
+    val tmp = new Path(p, s"$name.tmp")
+    val dst = new Path(p, name)
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    if (fs.exists(dst)) fs.delete(dst, false)
+    require(fs.rename(tmp, dst), s"small-file rename failed: $tmp -> $dst")
   }
 
   /** Drop the watermark (the guard then falls back to the anti-join). */
@@ -183,34 +179,18 @@ object StoreFiles {
   }
 
   /** Number of first-level `<prefix>N/` partition directories under
-    * `dir` (0 when absent) — the store's natural compaction floor is
-    * one file per partition, so policies threshold at 2× this. */
-  def partitionDirCount(dir: String, prefix: String): Int =
-    partitionDirs(dir, prefix).size
-
-  /** Prefix-matched subdirectory paths (FileSystem API — a store may
+    * `dir` (0 when absent), through the FileSystem API — a store may
     * live on any Hadoop scheme; java.io.File listings would silently
-    * see nothing there). */
-  def partitionDirs(dir: String, prefix: String): Seq[String] = {
+    * see nothing there. */
+  def partitionDirCount(dir: String, prefix: String): Int = {
     val (fs, p) = fsOf(dir)
-    if (!fs.exists(p)) return Seq.empty
-    fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .map(_.getPath.toString)
+    if (!fs.exists(p)) 0
+    else fs.listStatus(p)
+      .count(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
   }
 
-  /** [[partitionDirs]] restricted to COMMITTED subdirs — those whose
-    * parquet job finished (Spark writes `_SUCCESS` at job commit). A
-    * torn write's directory is invisible to readers and healed by the
-    * writer's replay (round-15 ADVICE: the z-store's delta listing
-    * used to admit torn batch dirs, whose partial max-id rows could
-    * poison the re-derived watermark). */
-  def committedPartitionDirs(dir: String, prefix: String): Seq[String] =
-    partitionDirs(dir, prefix).filter(markerExists(_, "_SUCCESS"))
-
-  /** Total byte size under `dir` (0 when absent) — the size-ratio
-    * input of tiered compaction triggers. One metadata call, no data
-    * read. */
+  /** Total byte size under `dir` (0 when absent), guard state and torn
+    * staging included. One metadata call, no data read. */
   def dirBytes(dir: String): Long = {
     val (fs, p) = fsOf(dir)
     if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength

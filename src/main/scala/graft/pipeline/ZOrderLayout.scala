@@ -185,35 +185,31 @@ object ZOrderLayout {
 
   // ---- maintained z-ordered store (the OPTIMIZE analog) ----------
   //
-  // TIERED layout (round-15 verdict #2 — the old single-tier
-  // compaction rewrote the WHOLE base every CompactAfter deltas,
-  // O(store) per trigger and O(N²/batch) amortized over the store's
-  // life; measured growing 18.7 → 37.9 s as a 60M-row base grew):
+  // TIERED layout inside the committed [[StoreCommit]] version (the
+  // single-tier compaction rewrote the WHOLE base every CompactAfter
+  // deltas: O(store) per trigger, O(N²/batch) amortized):
   //
-  //   store/base              major-compacted z-ordered parquet (L2)
-  //   store/l1/run=<maxId>    z-ordered L1 runs (minor compactions)
-  //   store/delta/batch=<maxId>  raw per-trigger appends (L0)
-  //   store/_id_watermark     replay scalar (optimization only)
+  //   base                major-compacted z-ordered parquet (L2)
+  //   l1/run=<maxId>      z-ordered L1 runs (minor compactions)
+  //   delta/batch=<maxId> raw per-trigger appends (L0)
+  //   del/batch=<hash>    pending delete batches
+  //   _id_watermark       replay scalar (optimization only)
   //
   // MINOR compaction (every [[CompactAfter]] deltas) folds the
   // pending deltas into ONE z-sorted L1 run — cost tracks the DELTAS,
   // never the base. MAJOR compaction (base := zorder(base ∪ runs ∪
-  // deltas), one whole-store [[graft.ops.StoreCommit.replace]])
-  // fires only when the runs have grown to [[MajorSizeRatio]] × the
-  // base (or [[MaxL1Runs]] runs bound the read amplification) — the
-  // size-ratio trigger means the base roughly doubles per major
-  // rewrite, so every row is rewritten O(log N) times over the
-  // store's life instead of O(N/batch) times: the LSM growth law.
+  // deltas), one whole-store [[StoreCommit.replace]]) fires only when
+  // the runs have grown to [[MajorSizeRatio]] × the base (or
+  // [[MaxL1Runs]] runs bound the read amplification) — the size-ratio
+  // trigger means the base roughly doubles per major rewrite, so every
+  // row is rewritten O(log N) times over the store's life instead of
+  // O(N/batch) times: the LSM growth law.
   //
-  // Exactly-once without a marker/repair pair: a delta subdir is
-  // NAMED by its row set's max monotone id, so a replayed batch
-  // overwrites its own subdir; an L1 run is named by the max id it
-  // absorbed, so "delta id ≤ max run id" marks a delta as SUPERSEDED
-  // (monotone ids make that exact) — the crash window between a run
-  // landing and its absorbed deltas being deleted resolves by that
-  // rule on every read, and the sweep deletes the debris lazily.
-  // Torn subdirs (crashed mid-parquet-job) carry no `_SUCCESS` and
-  // are invisible to every listing below (round-15 ADVICE).
+  // Every tier dir is committed by the version's manifest: deltas and
+  // delete batches are [[StoreCommit.append]]s, and a minor compaction
+  // lists its run and drops the absorbed deltas in one manifest
+  // replace. A tier dir is NAMED by a pure function of its row set, so
+  // one already listed is a replay no-op.
 
   /** Number of delta subdirs that triggers a MINOR compaction. */
   val CompactAfter = 4
@@ -229,41 +225,39 @@ object ZOrderLayout {
   private def idOf(dir: String): Long =
     dir.substring(dir.lastIndexOf('=') + 1).toLong
 
-  // _SUCCESS-gated listings over the FileSystem API: torn dirs are
-  // invisible, and the store may live on any Hadoop scheme
-  private def runDirs(store: String): Seq[String] =
-    graft.ops.StoreFiles.committedPartitionDirs(s"$store/l1", "run=")
+  /** The committed dirs of one tier (`l1`, `delta`, `del`), as
+    * version-relative paths. */
+  private[graft] def tierDirs(store: String, tier: String): Seq[String] =
+    StoreCommit.subdirs(store, tier).map(d => s"$tier/$d")
 
-  private def maxRunId(store: String): Long =
-    runDirs(store).map(idOf).foldLeft(Long.MinValue)(math.max)
-
-  /** LIVE delta subdirs: committed and not superseded by an L1 run. */
-  private def deltaDirs(store: String): Seq[String] = {
-    val cut = maxRunId(store)
-    graft.ops.StoreFiles.committedPartitionDirs(s"$store/delta", "batch=")
-      .filter(idOf(_) > cut)
+  /** Commit `dir` written by `write` (given its absolute path), unless
+    * it is already listed; `retire`'s entries leave the manifest in
+    * the same replace. */
+  private def commitTier(store: String, dir: String,
+      retire: Seq[String] = Seq.empty)(write: String => Unit): Unit = {
+    val tier = dir.takeWhile(_ != '/')
+    if (!tierDirs(store, tier).contains(dir))
+      StoreCommit.append(store, retire)(live => write(s"$live/$dir"))
   }
 
-  /** Pending live-delta count — the minor-compaction trigger. */
-  def deltaCount(store: String): Int = deltaDirs(store).size
+  /** Pending delta count — the minor-compaction trigger. */
+  def deltaCount(store: String): Int = tierDirs(store, "delta").size
 
-  // ---- DELETE-delta tier (round-16 verdict #6): the re-crawl story.
-  // The tiered store was append-only — a removal (a vacuumed doc, a
-  // takedown, a re-crawled page) could only reach it via a manual
-  // full rewrite. Removal id sets now land as L0 delete-deltas under
-  // store/del/batch=<content-hash>: reads anti-join the pending set
+  // ---- DELETE-delta tier: the re-crawl story. A removal (a vacuumed
+  // doc, a takedown, a re-crawled page) lands as an L0 delete batch
+  // under del/batch=<content-hash>: reads anti-join the pending set
   // (broadcast — removal-sized), MINOR compaction folds its input
-  // minus the deletes (the delete-delta is RETAINED, still masking
+  // minus the deletes (the delete batch is RETAINED, still masking
   // base and older-run rows it cannot touch), and MAJOR compaction
-  // applies every delete physically — the whole-root replace writes
+  // applies every delete physically — the whole-store replace writes
   // only the retained base, and the del tier vanishes with the old
-  // root. Content-hash naming (order-independent 64-bit fold of the
-  // id set) makes a replayed delete batch overwrite its own subdir,
-  // the same idempotence the data deltas get from max-id naming —
-  // deletes target EXISTING ids, so the monotone name algebra does
-  // not apply to them. Under the monotone-id ingest contract a
-  // deleted id can never be re-appended, so dropping the del tier at
-  // major compaction loses nothing. ----
+  // version. Content-hash naming (order-independent 64-bit fold of
+  // the id set) makes a replayed delete batch a no-op, the same
+  // idempotence the data deltas get from max-id naming — deletes
+  // target EXISTING ids, so the monotone name algebra does not apply
+  // to them. Under the monotone-id ingest contract a deleted id can
+  // never be re-appended, so dropping the del tier at major
+  // compaction loses nothing. ----
 
   /** Append a DELETE batch: every current and future read of the
     * store hides these ids until a major compaction removes the rows
@@ -280,23 +274,18 @@ object ZOrderLayout {
       .agg(expr("bit_xor(h)").as("h"), count(lit(1)).as("n")).head()
     val name = java.lang.Long.toUnsignedString(
       r.getLong(0) ^ (r.getLong(1) * 0x9E3779B97F4A7C15L))
-    val dirPath = s"$store/del/batch=$name"
-    d.coalesce(1).write.mode("overwrite").parquet(dirPath)
-    // self-stamped like appendDelta: visibility must not depend on
-    // the job committer's marksuccessfuljobs setting
-    graft.ops.StoreFiles.createMarker(dirPath, "_SUCCESS")
+    commitTier(store, s"del/batch=$name")(
+      d.coalesce(1).write.mode("overwrite").parquet(_))
   }
 
-  private def deleteDirs(store: String): Seq[String] =
-    graft.ops.StoreFiles.committedPartitionDirs(s"$store/del", "batch=")
-
-  /** The pending delete set (distinct ids across live del batches),
-    * None when the tier is empty. The single column keeps the id
-    * column's NAME, so consumers anti-join without threading it. */
+  /** The pending delete set (distinct ids across committed del
+    * batches), None when the tier is empty. The single column keeps
+    * the id column's NAME, so consumers anti-join without threading
+    * it. */
   def pendingDeletes(spark: SparkSession, store: String): Option[DataFrame] = {
-    val dirs = deleteDirs(store)
+    val dirs = tierDirs(store, "del")
     if (dirs.isEmpty) None
-    else Some(dirs.map(spark.read.parquet(_))
+    else Some(dirs.map(StoreCommit.readSub(spark, store, _))
       .reduce(_ unionByName _).distinct())
   }
 
@@ -305,123 +294,89 @@ object ZOrderLayout {
     del.map(d => rows.join(broadcast(d), Seq(d.columns.head), "left_anti"))
       .getOrElse(rows)
 
-  /** All live rows of the store: (base ∪ L1 runs ∪ live deltas) minus
-    * the pending delete set — every read sees removals immediately,
-    * at the cost of one broadcast anti-join while deletes pend (zero
-    * once a major compaction has applied them physically). */
+  /** All live rows of the store: (base ∪ L1 runs ∪ deltas) minus the
+    * pending delete set — every read sees removals immediately, at the
+    * cost of one broadcast anti-join while deletes pend (zero once a
+    * major compaction has applied them physically). */
   def readStore(spark: SparkSession, store: String): DataFrame = {
-    val parts = tierDirs(store)
+    val parts = baseTier(store) ++ tierDirs(store, "l1") ++
+      tierDirs(store, "delta")
     require(parts.nonEmpty, s"empty z-order store at $store")
-    minusDeletes(parts.map(spark.read.parquet(_)).reduce(_ unionByName _),
+    minusDeletes(
+      parts.map(StoreCommit.readSub(spark, store, _)).reduce(_ unionByName _),
       pendingDeletes(spark, store))
   }
 
-  private def tierDirs(store: String): Seq[String] = {
-    val base = s"$store/base"
-    (if (graft.ops.StoreFiles.parquetFileCount(base) > 0) Seq(base)
-     else Seq.empty) ++ runDirs(store) ++ deltaDirs(store)
-  }
+  private def baseTier(store: String): Seq[String] =
+    if (StoreCommit.subFileCount(store, "base") > 0) Seq("base") else Seq.empty
 
   /** The replay watermark, re-derived when the scalar is torn or
-    * missing: run/delta subdir NAMES are their max ids (cheap, no
-    * data read); only a bare base needs the one-column max scan. */
+    * missing: run/delta dir NAMES are their max ids (cheap, no data
+    * read); only a bare base needs the one-column max scan. */
   def storeWatermark(spark: SparkSession, store: String,
       idCol: String): Option[Long] =
-    graft.ops.StoreFiles.readIdWatermark(store).orElse {
-      val named = (runDirs(store) ++ graft.ops.StoreFiles
-        .committedPartitionDirs(s"$store/delta", "batch=")).map(idOf)
-      val base = s"$store/base"
-      val baseMax =
-        if (graft.ops.StoreFiles.parquetFileCount(base) > 0)
-          Some(spark.read.parquet(base)
-            .agg(max(col(idCol))).head().getLong(0))
-        else None
+    graft.ops.StoreFiles.readIdWatermark(StoreCommit.readDir(store)).orElse {
+      val named = (tierDirs(store, "l1") ++ tierDirs(store, "delta")).map(idOf)
+      val baseMax = baseTier(store).map(StoreCommit.readSub(spark, store, _)
+        .agg(max(col(idCol))).head().getLong(0))
       val all = named ++ baseMax
       if (all.isEmpty) None else Some(all.max)
     }
 
-  /** Append a batch as a delta subdir named by the batch's own max
-    * id (computed here — the name is BY CONSTRUCTION a pure function
-    * of the row set, the round-15 ADVICE contract the old pass-it-in
-    * signature only documented), then the watermark scalar. Idempotent
-    * under replay: same fresh set → same name → mode-overwrite of its
-    * own subdir. Returns the max id. `rows` must be non-empty and
-    * pinned by the caller (the sink localCheckpoints the fresh set). */
+  /** Append a batch as a delta dir named by the batch's own max id
+    * (computed here, so the name is by construction a pure function of
+    * the row set), then the watermark scalar. A replay whose delta is
+    * already committed is a no-op. Returns the max id. `rows` must be
+    * non-empty and pinned by the caller (the sink localCheckpoints the
+    * fresh set). */
   def appendDelta(rows: DataFrame, store: String, idCol: String): Long = {
     val batchMax = rows.agg(max(col(idCol))).head().getLong(0)
-    val dir = s"$store/delta/batch=$batchMax"
-    rows.write.mode("overwrite").parquet(dir)
-    // stamp the commit marker OURSELVES: listings are _SUCCESS-gated,
-    // and a deployment that disables the job committer's marker
-    // (mapreduce.fileoutputcommitter.marksuccessfuljobs=false — a
-    // common object-store tuning) would otherwise acknowledge rows
-    // into dirs no reader ever lists. Idempotent when the committer
-    // already wrote it; a crash before this line leaves the dir torn
-    // and invisible, exactly the intended window.
-    graft.ops.StoreFiles.createMarker(dir, "_SUCCESS")
-    graft.ops.StoreFiles.writeIdWatermark(store, batchMax)
+    commitTier(store, s"delta/batch=$batchMax")(
+      rows.write.mode("overwrite").parquet(_))
+    graft.ops.StoreFiles.writeIdWatermark(StoreCommit.readDir(store), batchMax)
     batchMax
   }
 
-  /** MINOR compaction: fold every live delta into one z-sorted L1 run
-    * named by the max id absorbed, then delete the superseded deltas.
-    * Cost tracks Σ|deltas| — the base is never read. Crash windows:
-    * mid-run-write → no `_SUCCESS`, invisible, re-done (and the torn
-    * dir cleaned) next trigger; between run and delta deletion → the
-    * supersession rule hides the leftovers until [[sweepSuperseded]]
-    * removes them. */
+  /** MINOR compaction: fold every committed delta into one z-sorted L1
+    * run named by the max id absorbed; the run's listing and the
+    * deltas' removal are one manifest replace, then the delta dirs are
+    * deleted. Cost tracks Σ|deltas| — the base is never read. A crash
+    * mid-run-write leaves the run unlisted and the redo overwrites it;
+    * a crash before the delta dirs' deletion leaves them unlisted,
+    * hence invisible, until the next major compaction's replace. */
   def minorCompact(spark: SparkSession, store: String,
       x: String, y: String): Unit = {
-    // clean torn runs from crashed minor compactions (invisible to
-    // readers, but they would accumulate as debris)
-    graft.ops.StoreFiles.partitionDirs(s"$store/l1", "run=")
-      .filterNot(graft.ops.StoreFiles.markerExists(_, "_SUCCESS"))
-      .foreach(graft.ops.StoreFiles.deleteDir)
-    val live = deltaDirs(store)
+    val live = tierDirs(store, "delta")
     if (live.isEmpty) return
     val runId = live.map(idOf).max
     // fold minus the pending deletes — applying them EARLY to the
-    // rows this minor touches (the delete-delta itself is retained:
+    // rows this minor touches (the delete batch itself is retained:
     // it still masks base/older-run rows only a major can rewrite).
     // An all-deleted fold still writes the (empty, schema-bearing)
-    // run: the deltas are absorbed either way and the supersession
-    // rule must see the run id.
-    val rows0 = live.map(spark.read.parquet(_)).reduce(_ unionByName _)
+    // run: the deltas are absorbed either way.
+    val rows0 = live.map(StoreCommit.readSub(spark, store, _))
+      .reduce(_ unionByName _)
     val rows = minusDeletes(rows0, pendingDeletes(spark, store))
       .localCheckpoint()
-    val runDir = s"$store/l1/run=$runId"
-    if (rows.isEmpty) rows.coalesce(1).write.mode("overwrite").parquet(runDir)
-    else zorderWrite(rows, x, y, runDir)
-    // explicit marker, same reason as appendDelta: run visibility must
-    // not depend on the job committer's marksuccessfuljobs setting
-    graft.ops.StoreFiles.createMarker(runDir, "_SUCCESS")
-    sweepSuperseded(store)
-  }
-
-  /** Delete committed delta subdirs an L1 run has absorbed. */
-  def sweepSuperseded(store: String): Unit = {
-    val cut = maxRunId(store)
-    graft.ops.StoreFiles.committedPartitionDirs(s"$store/delta", "batch=")
-      .filter(idOf(_) <= cut)
-      .foreach(graft.ops.StoreFiles.deleteDir)
+    commitTier(store, s"l1/run=$runId", retire = live) { runDir =>
+      if (rows.isEmpty) rows.coalesce(1).write.mode("overwrite").parquet(runDir)
+      else zorderWrite(rows, x, y, runDir)
+    }
   }
 
   /** MAJOR compaction: base := zorder((base ∪ runs ∪ deltas) minus
     * pending deletes) through one whole-store replace (watermark
     * inside, so the commit is old-or-new, never a mix). This is where
-    * the delete-delta tier is applied PHYSICALLY: [[readStore]]
-    * anti-joins the pending set, the rewritten root carries only
-    * `base`, and the del tier vanishes with the replaced root —
-    * correct because monotone ingest ids can never re-append a
-    * deleted id. O(store) by design — the size-ratio trigger in
-    * [[maybeCompactStore]] bounds how often it is paid. */
+    * the delete tier is applied PHYSICALLY: [[readStore]] anti-joins
+    * the pending set, the new version lists only `base`, and the del
+    * tier vanishes with the replaced version — correct because
+    * monotone ingest ids can never re-append a deleted id. O(store) by
+    * design — the size-ratio trigger in [[maybeCompactStore]] bounds
+    * how often it is paid. */
   def compactStore(spark: SparkSession, store: String,
       x: String, y: String, idCol: String): Unit = {
-    // tiers are read from the committed version; the replace targets
-    // the ROOT
-    val live = StoreCommit.readDir(store)
-    val wm = storeWatermark(spark, live, idCol)
-    val all = readStore(spark, live).localCheckpoint()
+    val wm = storeWatermark(spark, store, idCol)
+    val all = readStore(spark, store).localCheckpoint()
     StoreCommit.replace(store) { next =>
       zorderWrite(all, x, y, s"$next/base")
       wm.foreach(graft.ops.StoreFiles.writeIdWatermark(next, _))
@@ -430,20 +385,17 @@ object ZOrderLayout {
 
   /** The tiered maintenance policy the streaming sink runs after each
     * append: minor when [[CompactAfter]] deltas pend; major when the
-    * L1 tier reaches [[MajorSizeRatio]] × the base's bytes (one
-    * metadata call per tier) or [[MaxL1Runs]] runs. Returns
-    * (minorRan, majorRan). */
+    * L1 tier reaches [[MajorSizeRatio]] × the base's committed bytes
+    * or [[MaxL1Runs]] runs. Returns (minorRan, majorRan). */
   def maybeCompactStore(spark: SparkSession, store: String,
       x: String, y: String, idCol: String)
       : (Boolean, Boolean) = {
-    val live = StoreCommit.readDir(store)
-    val minor = deltaCount(live) >= CompactAfter
-    if (minor) minorCompact(spark, live, x, y)
-    val runs = runDirs(live)
+    val minor = deltaCount(store) >= CompactAfter
+    if (minor) minorCompact(spark, store, x, y)
+    val runs = tierDirs(store, "l1")
     val major = runs.nonEmpty && (runs.size >= MaxL1Runs ||
-      graft.ops.StoreFiles.dirBytes(s"$live/l1") >=
-        (MajorSizeRatio * graft.ops.StoreFiles
-          .dirBytes(s"$live/base")).toLong)
+      StoreCommit.dataBytes(store, "l1") >=
+        (MajorSizeRatio * StoreCommit.dataBytes(store, "base")).toLong)
     if (major) compactStore(spark, store, x, y, idCol)
     (minor, major)
   }
@@ -466,13 +418,12 @@ object ZOrderLayout {
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
     val store = graft.ops.SessionStore.dir("zstore",
         s"$dir/lineitem.parquet") { s =>
-      landTiers(spark, li, StoreCommit.writeDir(s))
+      landTiers(spark, li, s)
       compactStore(spark, s, "l_partkey", "l_suppkey", "l_orderkey")
     }
     OracleForms.union(
         "source" -> zorderGroupStats(li, "l_partkey", "l_suppkey"),
-        "store" -> zorderGroupStats(
-          readStore(spark, StoreCommit.readDir(store)),
+        "store" -> zorderGroupStats(readStore(spark, store),
           "l_partkey", "l_suppkey"))
       .select(col("form"), col("grp"), col("n"),
         col("x_min"), col("x_max"), col("y_min"), col("y_max"))
@@ -517,19 +468,17 @@ object ZOrderLayout {
     val base = graft.ops.SessionStore.dir("zstoreDel",
         s"$dir/lineitem.parquet") { base =>
       val s = s"$base/store"
-      val live = StoreCommit.writeDir(s)
-      landTiers(spark, li, live)
+      landTiers(spark, li, s)
       appendDeleteDelta(
         li.filter(col("l_orderkey") % 5 === DeleteResidue),
-        live, "l_orderkey")
+        s, "l_orderkey")
       // write the masked read BEFORE the major applies the deletes
-      zorderGroupStats(readStore(spark, live), "l_partkey", "l_suppkey")
+      zorderGroupStats(readStore(spark, s), "l_partkey", "l_suppkey")
         .write.parquet(s"$base/masked")
       compactStore(spark, s, "l_partkey", "l_suppkey", "l_orderkey")
     }
     OracleForms.union(
-        "compacted" -> zorderGroupStats(
-          readStore(spark, StoreCommit.readDir(s"$base/store")),
+        "compacted" -> zorderGroupStats(readStore(spark, s"$base/store"),
           "l_partkey", "l_suppkey"),
         "masked" -> spark.read.parquet(s"$base/masked"))
       .select(col("form"), col("grp"), col("n"),

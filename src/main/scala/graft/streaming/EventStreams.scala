@@ -773,7 +773,7 @@ object EventStreams {
     *     owner-set recomputes, covering torn dynamic-overwrite
     *     commits too);
     *  2. replay guard: vec_ids already in the cells store drop (the
-    *     recursive [[graft.ext.Dedup.cellsFileCount]] probe — the
+    *     committed [[graft.ops.StoreCommit.fileCount]] probe — the
     *     store is cell-partitioned);
     *  3. the batch assigns under the frozen quantizer (map-only,
     *     eagerly pinned — its lineage reads the store the append
@@ -1058,22 +1058,13 @@ object EventStreams {
     * batches MONOTONE in `idCol` and split between id values.
     *
     * Exactly-once without a marker/repair pair, differently from the
-    * sibling sinks: the delta subdir NAME is a pure function of the
-    * fresh row set (its max id), so a replayed batch overwrites its
-    * own subdir instead of duplicating; the watermark scalar is an
-    * optimization whose loss merely re-derives from a max() read
-    * ([[graft.pipeline.ZOrderLayout.storeWatermark]]); compaction is
-    * one whole-store [[graft.ops.StoreCommit.replace]] (watermark
-    * inside), so a crash mid-OPTIMIZE resolves to old-or-new, never
-    * a mix. Stream content == source EXACT through crash + replay,
-    * asserted in ZOrderSpec.
-    *
-    * Inside the committed version, each delta/run subdir is sealed by
-    * a self-stamped `_SUCCESS` (a single-object PUT —
-    * [[graft.pipeline.ZOrderLayout]]'s listings skip unsealed dirs),
-    * and a job that dies mid-commit leaves its dir unsealed →
-    * invisible → the replay overwrites the SAME name: the per-dir
-    * marker plays the manifest's role for the appends. */
+    * sibling sinks: the delta dir NAME is a pure function of the fresh
+    * row set (its max id), so a replayed batch whose delta is already
+    * committed is a no-op; the watermark scalar is an optimization
+    * whose loss merely re-derives from the committed tiers
+    * ([[graft.pipeline.ZOrderLayout.storeWatermark]]). Every tier
+    * commits through [[graft.ops.StoreCommit]]. Stream content ==
+    * source EXACT through crash + replay, asserted in ZOrderSpec. */
   def zorderStoreSink(rows: DataFrame, store: String,
       checkpointDir: String, x: String, y: String, idCol: String)
       : StreamingQuery = {
@@ -1083,14 +1074,11 @@ object EventStreams {
       .foreachBatch { (raw: DataFrame, _: Long) =>
         val spark = raw.sparkSession
         StoreCommit.recover(store)
-        // the committed version: appends and tier listings all run
-        // against it; the major compaction alone replaces the ROOT
-        val live = StoreCommit.writeDir(store)
-        val wm = ZOrderLayout.storeWatermark(spark, live, idCol)
+        val wm = ZOrderLayout.storeWatermark(spark, store, idCol)
         val fresh = wm.map(w => raw.filter(col(idCol) > w))
           .getOrElse(raw).localCheckpoint()
         if (!fresh.isEmpty) {
-          ZOrderLayout.appendDelta(fresh, live, idCol)
+          ZOrderLayout.appendDelta(fresh, store, idCol)
           ZOrderLayout.maybeCompactStore(spark, store, x, y, idCol)
         }
         ()

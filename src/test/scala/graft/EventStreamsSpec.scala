@@ -747,10 +747,10 @@ class EventStreamsSpec extends SparkSpec {
 
     // compaction: a tiny threshold forces the rebuild; the store
     // shrinks toward one file per cell and content is unchanged
-    val before = ProductQuant.codesFileCount(s"$base/codes")
+    val before = StoreCommit.fileCount(s"$base/codes")
     assert(ProductQuant.maybeCompactCodes(spark, s"$base/gold",
       s"$base/codes", coarse, rcbs, threshold = 1))
-    val after = ProductQuant.codesFileCount(s"$base/codes")
+    val after = StoreCommit.fileCount(s"$base/codes")
     assert(after <= before && after <= coarse.size + 2,
       s"compaction should shrink toward one file per cell ($before -> $after)")
     assert(codeRows(StoreCommit.read(spark, s"$base/codes")) == full)
@@ -964,7 +964,7 @@ class EventStreamsSpec extends SparkSpec {
     // StreamScaleUp), so a near-floor store is a no-op even at
     // threshold 1 …
     val nCells = oneShot.select(col("cell")).distinct().count()
-    if (Dedup.cellsFileCount(cellsDir) <= 2 * nCells)
+    if (StoreCommit.fileCount(cellsDir) <= 2 * nCells)
       assert(!Dedup.maybeCompactSemanticCells(spark, cellsDir,
         threshold = 1))
     // … and a genuinely fragmented store (forced: many files per
@@ -973,10 +973,10 @@ class EventStreamsSpec extends SparkSpec {
       .select(col("vec_id"), col("v"), col("cell").cast("int").as("cell"))
       .repartition(8).localCheckpoint()
     StoreCommit.replace(cellsDir)(frag.write.partitionBy("cell").parquet(_))
-    val before = Dedup.cellsFileCount(cellsDir)
+    val before = StoreCommit.fileCount(cellsDir)
     assert(before > 2 * nCells, s"fragmentation setup too weak: $before")
     assert(Dedup.maybeCompactSemanticCells(spark, cellsDir, threshold = 1))
-    val after = Dedup.cellsFileCount(cellsDir)
+    val after = StoreCommit.fileCount(cellsDir)
     assert(after <= before && after <= nCells + 2,
       s"compaction should shrink toward one file per cell ($before -> $after)")
     assert(cellRows(StoreCommit.read(spark, cellsDir)) == cellRows(oneShot))
@@ -1059,7 +1059,7 @@ class EventStreamsSpec extends SparkSpec {
     // store rewrites toward one file per bucket, answers unchanged
     val nBuckets = StoreCommit.read(spark, s"$store/postings")
       .select(col("tbucket")).distinct().count().toInt
-    if (graft.ext.Dedup.cellsFileCount(s"$store/postings")
+    if (StoreCommit.fileCount(s"$store/postings")
         <= 2 * nBuckets)
       assert(!Retrieval.maybeCompactPostings(spark, store,
         threshold = 1))
@@ -1069,10 +1069,10 @@ class EventStreamsSpec extends SparkSpec {
       .repartition(8).localCheckpoint()
     StoreCommit.replace(s"$store/postings")(
       frag.write.partitionBy("tbucket").parquet(_))
-    val before = graft.ext.Dedup.cellsFileCount(s"$store/postings")
+    val before = StoreCommit.fileCount(s"$store/postings")
     assert(before > 2 * nBuckets, s"fragmentation setup too weak: $before")
     assert(Retrieval.maybeCompactPostings(spark, store, threshold = 1))
-    val after = graft.ext.Dedup.cellsFileCount(s"$store/postings")
+    val after = StoreCommit.fileCount(s"$store/postings")
     assert(after <= before && after <= nBuckets + 2,
       s"compaction should shrink toward one file per bucket " +
         s"($before -> $after)")
@@ -1212,7 +1212,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("a committed store with NO committed log bootstraps the log " +
       "from the live postings (pre-protocol store), while a torn " +
-      "seed without _SUCCESS still wipes") {
+      "seed without a manifest still wipes") {
     import java.nio.file.Files
     import graft.ext.Retrieval
     val store = graft.ops.Scratch.dir("graft_bm25_boot") + "/ix"
@@ -1251,13 +1251,15 @@ class EventStreamsSpec extends SparkSpec {
     assert(rows(Retrieval.bm25BatchFromIndex(spark, sf, store)) ==
       rows(Retrieval.bm25Batch(spark, sf)))
 
-    // the torn-seed shape: no committed log AND no _SUCCESS (the
-    // postings version never completed, so it was never committed) —
-    // the commit protocol's recovery removes it rather than
-    // committing torn rows
+    // the torn-seed shape: no committed log, no CURRENT and no
+    // _MANIFEST (the postings version never completed, so it was
+    // never committed) — the commit protocol's recovery removes it
+    // rather than committing torn rows
     rmrf(new java.io.File(Retrieval.committedDir(store)))
     new java.io.File(
-      s"${StoreCommit.readDir(s"$store/postings")}/_SUCCESS").delete()
+      s"${StoreCommit.readDir(s"$store/postings")}/${StoreCommit.ManifestName}")
+      .delete()
+    new java.io.File(s"$store/postings/CURRENT").delete()
     Retrieval.recoverBm25Store(spark, store)
     // the wiped store holds no part files (an empty dir — unreadable
     // as parquet by design; the sink's seeded probe counts files)
@@ -1557,7 +1559,7 @@ class EventStreamsSpec extends SparkSpec {
         spark.readStream.schema(jAll.schema).parquet(srcDir),
         assign, aggDir, s"$base/chk").stop()
     stageFile(Long.MinValue, c0, "b0.parquet"); runOnce()
-    // abandoned-staging debris: a half-written version (no _SUCCESS)
+    // abandoned-staging debris: a half-written version (no _MANIFEST)
     // must be swept by recovery, not block or corrupt the next fold
     Files.createDirectories(Paths.get(s"$aggDir/v_00000050"))
     Files.write(Paths.get(s"$aggDir/v_00000050/junk"),

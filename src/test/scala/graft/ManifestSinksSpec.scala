@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
-import graft.ops.{Manifest, StoreCommit}
+import graft.ops.StoreCommit
 
 /** The file-list half of [[graft.ops.StoreCommit]] under every
   * artifact-sink family: versioned dirs + pointer flip + a committed
@@ -98,9 +98,9 @@ class ManifestSinksSpec extends SparkSpec {
       // the committed postings version carries a manifest covering
       // exactly its data files (seed + append both sealed)
       val pLive = StoreCommit.readDir(s"$store/postings")
-      val man = Manifest.read(pLive)
+      val man = StoreCommit.manifest(pLive)
       assert(man.isDefined && man.get.nonEmpty)
-      assert(man.get.toSet == Manifest.dataFiles(pLive).toSet)
+      assert(man.get.toSet == StoreCommit.dataFiles(pLive).toSet)
 
       def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -111,9 +111,9 @@ class ManifestSinksSpec extends SparkSpec {
         "manifest-committed store must answer like the live batch form")
 
       // replay no-op (watermark guard, no manifest growth)
-      val manBefore = Manifest.read(pLive).get.toSet
+      val manBefore = StoreCommit.manifest(pLive).get.toSet
       stage(d.filter(col("doc_id") > c1), srcDir, "b2r.parquet"); runOnce()
-      assert(Manifest.read(
+      assert(StoreCommit.manifest(
         StoreCommit.readDir(s"$store/postings")).get.toSet == manBefore)
 
       // torn append: a ghost doc's rows land in the live version with
@@ -144,7 +144,7 @@ class ManifestSinksSpec extends SparkSpec {
       assert(Retrieval.maybeCompactPostings(spark, store, threshold = 1))
       val v1 = StoreCommit.readDir(s"$store/postings")
       assert(v1 != pLive)
-      assert(Manifest.read(v1).get.toSet == Manifest.dataFiles(v1).toSet)
+      assert(StoreCommit.manifest(v1).get.toSet == StoreCommit.dataFiles(v1).toSet)
       assert(rows(Retrieval.bm25BatchFromIndex(
         spark, sf, store)) == live)
     }
@@ -200,19 +200,19 @@ class ManifestSinksSpec extends SparkSpec {
       // a listing fallback would adopt the stranded duplicates this
       // very test planted above (double-counted scores)
       val pLive = StoreCommit.readDir(s"$store/postings")
-      val committed = Manifest.read(pLive).get
+      val committed = StoreCommit.manifest(pLive).get
       val conf = spark.sparkContext.hadoopConfiguration
-      val mPath = new org.apache.hadoop.fs.Path(pLive, Manifest.Name)
+      val mPath = new org.apache.hadoop.fs.Path(pLive, StoreCommit.ManifestName)
       val fsH = mPath.getFileSystem(conf)
-      // what Manifest.write leaves in that window: sealed tmp, no dst
+      // what a manifest replace leaves in that window: sealed tmp, no dst
       val tmpPath =
-        new org.apache.hadoop.fs.Path(pLive, s"${Manifest.Name}.tmp")
+        new org.apache.hadoop.fs.Path(pLive, s"${StoreCommit.ManifestName}.tmp")
       val o = fsH.create(tmpPath, true)
       o.write((committed.sorted :+ "#sealed").mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       o.close()
       fsH.delete(mPath, false)
-      assert(Manifest.read(pLive).contains(committed.sorted),
+      assert(StoreCommit.manifest(pLive).contains(committed.sorted),
         "the sealed staging manifest must heal the torn replace")
       // the OTHER half of the window: a PARTIAL tmp (crash mid-write,
       // seal never landed) must be ignored, not half-adopted
@@ -221,7 +221,7 @@ class ManifestSinksSpec extends SparkSpec {
         o2.write(committed.sorted.take(1).mkString("\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         o2.close()
-        assert(Manifest.read(pLive).isEmpty,
+        assert(StoreCommit.manifest(pLive).isEmpty,
           "an unsealed staging manifest must never be trusted")
         // restore the sealed tmp for the append below
         val o3 = fsH.create(tmpPath, true)
@@ -233,7 +233,7 @@ class ManifestSinksSpec extends SparkSpec {
         .withColumn("doc_id", col("doc_id") + 77777L)
         .localCheckpoint()
       Retrieval.appendBm25Index(spark, extra, store)
-      assert(Manifest.read(pLive).isDefined,
+      assert(StoreCommit.manifest(pLive).isDefined,
         "the append must re-seal a manifest")
       // exactness: the store must answer like a one-shot build on
       // td ∪ extra — earlier committed docs still present, the
@@ -282,8 +282,8 @@ class ManifestSinksSpec extends SparkSpec {
       // every committed index version seals a manifest that covers
       // exactly its data files (seed + per-batch appends)
       val ixLive = StoreCommit.readDir(ixRoot)
-      assert(Manifest.read(ixLive).get.toSet ==
-        Manifest.dataFiles(ixLive).toSet)
+      assert(StoreCommit.manifest(ixLive).get.toSet ==
+        StoreCommit.dataFiles(ixLive).toSet)
 
       // the junk probe, end to end THROUGH the sink: strand a
       // fingerprints object for a text the store has never admitted
@@ -318,7 +318,7 @@ class ManifestSinksSpec extends SparkSpec {
         threshold = 0))
       val v1 = StoreCommit.readDir(ixRoot)
       assert(v1 != v0)
-      assert(Manifest.read(v1).get.toSet == Manifest.dataFiles(v1).toSet)
+      assert(StoreCommit.manifest(v1).get.toSet == StoreCommit.dataFiles(v1).toSet)
       val probe2 = Dedup.incrementalAgainstIndex(spark,
         ghost.withColumn("doc_id", lit(ids.max + 700)),
         ixRoot)
@@ -376,7 +376,7 @@ class ManifestSinksSpec extends SparkSpec {
       assert(cellRows(StoreCommit.read(spark, cellsRoot)) == oneShot,
         "the stranded copy must be invisible to manifest reads")
       assert(StoreCommit.fileCount(cellsRoot) ==
-        Manifest.read(live).get.size)
+        StoreCommit.manifest(live).get.size)
     }
   }
 
@@ -432,7 +432,7 @@ class ManifestSinksSpec extends SparkSpec {
         coarse, rcbs, threshold = 1))
       val v1 = StoreCommit.readDir(codesRoot)
       assert(v1 != live)
-      assert(Manifest.read(v1).get.toSet == Manifest.dataFiles(v1).toSet)
+      assert(StoreCommit.manifest(v1).get.toSet == StoreCommit.dataFiles(v1).toSet)
       assert(codeRows(StoreCommit.read(spark, codesRoot)) == want)
     }
   }
@@ -506,8 +506,8 @@ class ManifestSinksSpec extends SparkSpec {
       assert(ClusterOps.removeKnnVectors(spark, removed, cellsRoot,
         edgesDir, Some(labelsDir)) == removed.count())
       val vLive = StoreCommit.readDir(cellsRoot)
-      assert(Manifest.read(vLive).get.toSet ==
-        Manifest.dataFiles(vLive).toSet,
+      assert(StoreCommit.manifest(vLive).get.toSet ==
+        StoreCommit.dataFiles(vLive).toSet,
         "the removal's version must seal a complete manifest")
       val retained = assign(KMeans.vecs(spark, sf))
         .filter(col("vec_id") % 9 =!= 4)

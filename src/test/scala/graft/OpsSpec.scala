@@ -159,7 +159,7 @@ class OpsSpec extends SparkSpec {
   test("StoreCommit refuses a swap-era root and an unstamped version " +
       "loudly, never reading them as empty or by listing") {
     import java.nio.file.{Files => JF, Paths}
-    import graft.ops.{Manifest, StoreCommit, StoreFiles}
+    import graft.ops.{StoreCommit, StoreFiles}
     val s = spark
     import s.implicits._
     val base = graft.ops.Scratch.dir("graft_swap_era")
@@ -196,25 +196,53 @@ class OpsSpec extends SparkSpec {
     assert(StoreCommit.read(spark, fresh).count() == 2)
     // a committed version whose manifest is gone is damaged: loud,
     // never a directory-listing fallback
-    JF.delete(Paths.get(StoreCommit.readDir(fresh), Manifest.Name))
-    assert(refused(StoreCommit.read(spark, fresh)).contains(Manifest.Name))
+    JF.delete(Paths.get(StoreCommit.readDir(fresh), StoreCommit.ManifestName))
+    assert(refused(StoreCommit.read(spark, fresh))
+      .contains(StoreCommit.ManifestName))
     refused(StoreCommit.fileCount(fresh))
   }
 
-  test("PointerSwap: versioned commits resolve through the pointer, " +
+  test("a replace that fails on a fresh root commits nothing: its " +
+      "staged version is an orphan that recover deletes") {
+    import graft.ops.StoreCommit
+    val s = spark
+    import s.implicits._
+    val root = graft.ops.Scratch.dir("graft_first_fail") + "/t"
+    // the body writes parquet at the version root (the job committer
+    // stamps its own completion marker there), then fails
+    intercept[IllegalStateException](StoreCommit.replace(root) { next =>
+      Seq(1L, 2L).toDF("x").write.parquet(next)
+      throw new IllegalStateException("body failed after its write")
+    })
+    assert(StoreCommit.fileCount(root) == 0)
+    StoreCommit.recover(root)
+    val left = Option(new java.io.File(root).list())
+      .getOrElse(Array.empty[String]).toSeq
+    assert(!left.exists(_.startsWith("v_")) && !left.contains("CURRENT"),
+      s"recover must delete the orphan, left $left")
+    StoreCommit.replace(root)(Seq(3L).toDF("x").write.parquet(_))
+    assert(StoreCommit.read(spark, root).as[Long].collect().toSeq == Seq(3L))
+  }
+
+  test("StoreCommit: versioned commits resolve through the pointer, " +
       "and every crash shape (incomplete orphan, complete orphan, " +
       "torn pointer, missing pointer) recovers to the right state") {
-    import graft.ops.{PointerSwap, StoreFiles}
+    import graft.ops.StoreCommit
     import java.nio.file.{Files => JF, Paths}
     val root = graft.ops.Scratch.dir("graft_ptr") + "/t"
     def write(v: Long, to: String): Unit =
       Seq(v).toDF("x").coalesce(1).write.mode("overwrite").parquet(to)
-    def readBack: Long =
-      spark.read.parquet(PointerSwap.resolve(root).get).head.getLong(0)
-    assert(PointerSwap.resolve(root).isEmpty)
-    PointerSwap.writeAndCommit(root)(write(1L, _))
+    // a complete version the protocol never pointed at: data plus a
+    // sealed manifest
+    def forgeComplete(v: Long, to: String): Unit = {
+      write(v, to)
+      StoreCommit.writeManifest(to, StoreCommit.dataFiles(to))
+    }
+    def readBack: Long = StoreCommit.read(spark, root).head.getLong(0)
+    assert(StoreCommit.committed(root).isEmpty)
+    StoreCommit.replace(root)(write(1L, _))
     assert(readBack == 1L)
-    PointerSwap.writeAndCommit(root)(write(2L, _))
+    StoreCommit.replace(root)(write(2L, _))
     assert(readBack == 2L)
     // GC: only the committed version remains
     assert(Option(new java.io.File(root).listFiles()).get
@@ -225,38 +253,35 @@ class OpsSpec extends SparkSpec {
     JF.createDirectories(Paths.get(s"$root/v_00000003"))
     JF.writeString(Paths.get(s"$root/v_00000003/part-junk"), "partial")
     assert(readBack == 2L)
-    PointerSwap.recover(root)
+    StoreCommit.recover(root)
     assert(!new java.io.File(s"$root/v_00000003").exists())
     assert(readBack == 2L)
     // crash AFTER the version completed but BEFORE the pointer
     // replace began: a complete orphan above a VALID pointer is
     // uncommitted work — rolled back, the replay re-runs it
-    write(3L, s"$root/v_00000003")
-    StoreFiles.createMarker(s"$root/v_00000003", "_SUCCESS")
+    forgeComplete(3L, s"$root/v_00000003")
     assert(readBack == 2L,
       "a valid pointer must win over a higher complete version")
-    PointerSwap.recover(root)
+    StoreCommit.recover(root)
     assert(!new java.io.File(s"$root/v_00000003").exists())
     // crash INSIDE the pointer replace: torn content falls back to
     // the highest complete version — exactly the commit in flight
-    write(3L, s"$root/v_00000003")
-    StoreFiles.createMarker(s"$root/v_00000003", "_SUCCESS")
+    forgeComplete(3L, s"$root/v_00000003")
     JF.writeString(Paths.get(s"$root/CURRENT"), "v_000000")
     assert(readBack == 3L, "torn pointer must roll FORWARD")
-    PointerSwap.recover(root)
+    StoreCommit.recover(root)
     assert(JF.readString(Paths.get(s"$root/CURRENT")).trim
       == "v_00000003", "recover must repair the pointer")
     assert(!new java.io.File(s"$root/v_00000002").exists(),
       "the superseded version is GC'd on recovery")
     // crash in the delete-then-rename gap: pointer MISSING entirely
-    write(4L, s"$root/v_00000004")
-    StoreFiles.createMarker(s"$root/v_00000004", "_SUCCESS")
+    forgeComplete(4L, s"$root/v_00000004")
     JF.delete(Paths.get(s"$root/CURRENT"))
     assert(readBack == 4L, "missing pointer must roll FORWARD")
     // the next commit recovers by itself and continues the chain
-    PointerSwap.writeAndCommit(root)(write(5L, _))
+    StoreCommit.replace(root)(write(5L, _))
     assert(readBack == 5L)
-    assert(PointerSwap.resolve(root).get.endsWith("v_00000005"))
+    assert(StoreCommit.committed(root).get.endsWith("v_00000005"))
   }
 
   test("temporal split: boundaries match the recomputed 70/85% range " +
@@ -304,10 +329,22 @@ class OpsSpec extends SparkSpec {
     val n = graft.ops.StoreFiles.parquetFileCount(s"$d/store")
     assert(n == 1,
       s"a removal log must not count as store content (got $n)")
-    val withLog = graft.ops.StoreFiles.dirBytes(s"$d/store")
-    val dataOnly = graft.ops.StoreFiles.dataBytes(s"$d/store")
-    assert(dataOnly < withLog,
+    // a committed store's data bytes come from its manifest: the
+    // guard log at its root and torn junk inside its version (never
+    // read) are not store content
+    val c = s"$d/committed"
+    graft.ops.StoreCommit.replace(c)(
+      Seq(1, 2, 3).toDF("a").coalesce(1).write.parquet(_))
+    Seq(4L, 5L).toDF("id").coalesce(1).write.parquet(s"$c/_removed")
+    val withLog = graft.ops.StoreFiles.dirBytes(c)
+    val dataOnly = graft.ops.StoreCommit.dataBytes(c)
+    assert(dataOnly > 0 && dataOnly < withLog,
       "dataBytes must exclude the hidden log dirBytes includes")
+    val live = new java.io.File(graft.ops.StoreCommit.readDir(c))
+    val part = live.listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, live.toPath.resolve("part-torn.parquet"))
+    assert(graft.ops.StoreCommit.dataBytes(c) == dataOnly,
+      "dataBytes must not count unlisted junk")
     // an empty store that carries ONLY a log reads as unseeded — the
     // seeded probe must not send a sink into the read-the-store path
     Seq(9L).toDF("id").coalesce(1).write

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
-import graft.ops.{PointerSwap, StoreCommit}
+import graft.ops.StoreCommit
 
 /** The version half of [[graft.ops.StoreCommit]] under every artifact
   * sink: each corpus-sized store commits through versioned dirs + the
@@ -416,6 +416,6 @@ class PointerSinksSpec extends SparkSpec {
     assert(labelRows(labelsDir) == labelRows(oneShotL),
       "pointer-cells labels must equal the one-shot build")
     assert(StoreCommit.readDir(cellsRoot) != cellsRoot)
-    assert(PointerSwap.resolve(cellsRoot).isDefined)
+    assert(StoreCommit.committed(cellsRoot).isDefined)
   }
 }

@@ -45,33 +45,37 @@ class SessionStoreSpec extends SparkSpec {
 
   test("no hand-rolled store in ext/, pipeline/ or streaming/: every " +
       "build-once store goes through SessionStore") {
-    val banned = Seq("ConcurrentHashMap", "computeIfAbsent", "TrainMemo")
-    val roots = Seq("ext", "pipeline", "streaming")
-      .map(d => Paths.get("src/main/scala/graft", d))
-    roots.foreach(r =>
-      assert(Files.isDirectory(r), s"run from repo root; missing $r"))
-    val hits = for {
-      root <- roots
-      f <- Files.walk(root).iterator().asScala.toSeq
-      if f.toString.endsWith(".scala")
-      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
-      word <- banned if line.contains(word)
-    } yield s"$f:${n + 1}: $word"
+    val hits = sourceHits(Seq("ext", "pipeline", "streaming"),
+      Seq("ConcurrentHashMap", "computeIfAbsent", "TrainMemo"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
-  test("one commit seam in ext/, pipeline/ and streaming/: durable " +
-      "stores commit only through StoreCommit") {
-    val banned = Seq("ArtifactSwap", "SwapCommit", "PointerCommit",
-      "ManifestCommit", "PointerSwap.", "Manifest.")
-    val hits = for {
-      root <- Seq("ext", "pipeline", "streaming")
-        .map(d => Paths.get("src/main/scala/graft", d))
+  /** `file:line: word` for every line under `roots` (relative to
+    * `src/main/scala/graft`, which must exist — run from the repo
+    * root) that contains a banned word. */
+  private def sourceHits(roots: Seq[String], banned: Seq[String]): Seq[String] =
+    for {
+      root <- roots.map(d => Paths.get("src/main/scala/graft", d))
+      _ = assert(Files.isDirectory(root), s"run from repo root; missing $root")
       f <- Files.walk(root).iterator().asScala.toSeq
       if f.toString.endsWith(".scala")
       (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
       word <- banned if line.contains(word)
     } yield s"$f:${n + 1}: $word"
+
+  test("one commit seam in ext/, pipeline/ and streaming/: durable " +
+      "stores commit only through StoreCommit") {
+    val hits = sourceHits(Seq("ext", "pipeline", "streaming"),
+      Seq("ArtifactSwap", "SwapCommit", "PointerCommit",
+        "ManifestCommit", "PointerSwap.", "Manifest."))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("one completeness stamp under src/main/scala: the sealed " +
+      "manifest, no PointerSwap, Manifest, _SUCCESS marker or " +
+      "committedPartitionDirs") {
+    val hits = sourceHits(Seq(""), Seq("PointerSwap", "Manifest.",
+      "\"_SUCCESS\"", "committedPartitionDirs"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

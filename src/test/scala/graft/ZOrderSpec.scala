@@ -134,19 +134,17 @@ class ZOrderSpec extends SparkSpec {
     stageFile(cuts(2), cuts(3), "b3.parquet"); runOnce()
     // 4 deltas by now -> compaction fired at least once
     stageFile(cuts(3), Long.MaxValue, "b4.parquet"); runOnce()
-    assert(content(graft.pipeline.ZOrderLayout.readStore(spark,
-      StoreCommit.readDir(store))) ==
+    assert(content(graft.pipeline.ZOrderLayout.readStore(spark, store)) ==
       content(li), "store must equal the source after crash + OPTIMIZE")
-    // replayed batch is a no-op (its delta subdir self-overwrites)
+    // replayed batch is a no-op (its committed delta is not re-listed)
     stageFile(cuts(3), Long.MaxValue, "b4_replay.parquet"); runOnce()
-    assert(content(graft.pipeline.ZOrderLayout.readStore(spark,
-      StoreCommit.readDir(store))) ==
+    assert(content(graft.pipeline.ZOrderLayout.readStore(spark, store)) ==
       content(li), "a replayed batch must be a no-op")
     // the compacted base keeps the skipping property: every base file
     // bounds the second key well below the full domain
     val yb = li.agg(min(col("l_suppkey")), max(col("l_suppkey"))).head()
     val ySpan = yb.getLong(1) - yb.getLong(0) + 1
-    val env = spark.read.parquet(s"${StoreCommit.readDir(store)}/base")
+    val env = StoreCommit.readSub(spark, store, "base")
       .groupBy(input_file_name())
       .agg(min(col("l_suppkey")).as("lo"), max(col("l_suppkey")).as("hi"))
       .collect().map(r => r.getLong(2) - r.getLong(1) + 1)
@@ -160,12 +158,13 @@ class ZOrderSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val root = graft.ops.Scratch.dir("graft_ztier") + "/s"
-    val store = StoreCommit.writeDir(root)
     val part = (lo: Long, hi: Long) =>
       (lo to hi).map(i => (i, i % 7, i % 5)).toDF("id", "x", "y")
-    ZOrderLayout.appendDelta(part(1, 10), store, "id")
-    ZOrderLayout.appendDelta(part(11, 20), store, "id")
-    // a torn delta: parquet file present, no _SUCCESS (crashed job)
+    ZOrderLayout.appendDelta(part(1, 10), root, "id")
+    ZOrderLayout.appendDelta(part(11, 20), root, "id")
+    val store = StoreCommit.readDir(root)
+    // a torn delta: parquet file present in the version but never
+    // listed by its manifest (a crashed append)
     val torn = Paths.get(s"$store/delta/batch=99")
     Files.createDirectories(torn)
     part(90, 99).coalesce(1).write.mode("overwrite")
@@ -174,29 +173,33 @@ class ZOrderSpec extends SparkSpec {
       .find(_.getName.endsWith(".parquet")).get
     Files.move(pf.toPath, torn.resolve("part-torn.parquet"))
     graft.ops.StoreFiles.deleteDir(s"$store/delta/_t")
-    assert(ZOrderLayout.deltaCount(store) == 2,
+    assert(ZOrderLayout.deltaCount(root) == 2,
       "torn delta must be invisible to the listing")
     graft.ops.StoreFiles.deleteIdWatermark(store)
-    assert(ZOrderLayout.storeWatermark(spark, store, "id").contains(20L),
+    assert(ZOrderLayout.storeWatermark(spark, root, "id").contains(20L),
       "torn delta must not poison the re-derived watermark")
-    // minor: both deltas fold into one run named by the max id
-    ZOrderLayout.minorCompact(spark, store, "x", "y")
+    // minor: both deltas fold into one run named by the max id, and
+    // the absorbed delta dirs are deleted
+    ZOrderLayout.minorCompact(spark, root, "x", "y")
     assert(new java.io.File(s"$store/l1/run=20").exists())
-    assert(ZOrderLayout.deltaCount(store) == 0)
-    // resurrect a superseded delta (crash between run and sweep):
-    // readers must not double-count it
-    ZOrderLayout.appendDelta(part(15, 18), store, "id")
-    assert(ZOrderLayout.deltaCount(store) == 0,
-      "a delta at or below the max run id is superseded")
-    assert(ZOrderLayout.readStore(spark, store).count() == 20)
-    ZOrderLayout.sweepSuperseded(store)
-    assert(!new java.io.File(s"$store/delta/batch=18").exists())
-    // major folds base-absent run + a live delta into the base
-    ZOrderLayout.appendDelta(part(21, 30), store, "id")
+    assert(ZOrderLayout.deltaCount(root) == 0)
+    assert(!new java.io.File(s"$store/delta/batch=10").exists() &&
+      !new java.io.File(s"$store/delta/batch=20").exists())
+    // resurrect an absorbed delta (crash between the minor's manifest
+    // replace and its delete): on disk but unlisted, readers must not
+    // double-count it
+    part(15, 18).write.parquet(s"$store/delta/batch=18")
+    assert(ZOrderLayout.deltaCount(root) == 0,
+      "an absorbed delta left on disk is not listed")
+    assert(ZOrderLayout.readStore(spark, root).count() == 20)
+    // major folds base-absent run + a live delta into the base; the
+    // replaced version takes the unlisted leftovers with it
+    ZOrderLayout.appendDelta(part(21, 30), root, "id")
     ZOrderLayout.compactStore(spark, root, "x", "y", "id")
+    assert(!new java.io.File(s"$store/delta/batch=18").exists())
     val live = StoreCommit.readDir(root)
-    assert(ZOrderLayout.readStore(spark, live).count() == 30)
-    assert(ZOrderLayout.deltaCount(live) == 0 &&
+    assert(ZOrderLayout.readStore(spark, root).count() == 30)
+    assert(ZOrderLayout.deltaCount(root) == 0 &&
       new java.io.File(s"$live/base").exists())
   }
 
@@ -207,47 +210,46 @@ class ZOrderSpec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val root = graft.ops.Scratch.dir("graft_zdel") + "/s"
-    val store = StoreCommit.writeDir(root)
     val part = (lo: Long, hi: Long) =>
       (lo to hi).map(i => (i, i % 7, i % 5)).toDF("id", "x", "y")
-    def ids() = ZOrderLayout.readStore(spark, StoreCommit.readDir(root))
+    def ids() = ZOrderLayout.readStore(spark, root)
       .select("id").collect().map(_.getLong(0)).toSet
-    ZOrderLayout.appendDelta(part(1, 10), store, "id")
-    ZOrderLayout.appendDelta(part(11, 20), store, "id")
-    ZOrderLayout.minorCompact(spark, store, "x", "y")
-    ZOrderLayout.appendDelta(part(21, 30), store, "id")
+    ZOrderLayout.appendDelta(part(1, 10), root, "id")
+    ZOrderLayout.appendDelta(part(11, 20), root, "id")
+    ZOrderLayout.minorCompact(spark, root, "x", "y")
+    ZOrderLayout.appendDelta(part(21, 30), root, "id")
     // the delete batch spans base-bound rows (run) AND a live delta
     val doomed = Set(3L, 12L, 25L)
     ZOrderLayout.appendDeleteDelta(
-      doomed.toSeq.map(i => Tuple1(i)).toDF("id"), store, "id")
+      doomed.toSeq.map(i => Tuple1(i)).toDF("id"), root, "id")
     val want = (1L to 30L).toSet -- doomed
     assert(ids() == want, "pending deletes must mask every read")
-    // replay of the SAME delete batch lands in the same subdir
-    val delDirs = () => graft.ops.StoreFiles
-      .committedPartitionDirs(s"$store/del", "batch=").size
+    // replay of the SAME delete batch names the same, already listed
+    // del/ batch
+    val delDirs = () => ZOrderLayout.tierDirs(root, "del").size
     val n0 = delDirs()
     ZOrderLayout.appendDeleteDelta(
-      doomed.toSeq.map(i => Tuple1(i)).toDF("id"), store, "id")
+      doomed.toSeq.map(i => Tuple1(i)).toDF("id"), root, "id")
     assert(delDirs() == n0, "replayed delete batch must be idempotent")
     // a minor fold applies deletes to ITS input but keeps the mask
     // (base/run rows it cannot touch are still hidden by it)
-    ZOrderLayout.minorCompact(spark, store, "x", "y")
+    ZOrderLayout.minorCompact(spark, root, "x", "y")
     assert(delDirs() == n0,
       "minor compaction must retain the delete-delta")
     assert(ids() == want)
-    assert(spark.read.parquet(s"$store/l1/run=30")
+    assert(StoreCommit.readSub(spark, root, "l1/run=30")
       .filter(col("id") === 25L).isEmpty,
       "the minor fold must drop deleted rows from the run it writes")
     // the watermark stays at the pre-delete max (replay guard intact)
-    assert(ZOrderLayout.storeWatermark(spark, store, "id").contains(30L))
+    assert(ZOrderLayout.storeWatermark(spark, root, "id").contains(30L))
     // the major applies deletes physically and drops the del tier
     ZOrderLayout.compactStore(spark, root, "x", "y", "id")
-    val live = StoreCommit.readDir(root)
     assert(ids() == want)
-    assert(ZOrderLayout.pendingDeletes(spark, live).isEmpty,
+    assert(ZOrderLayout.pendingDeletes(spark, root).isEmpty,
       "major compaction must retire the applied delete-deltas")
-    assert(spark.read.parquet(s"$live/base").count() == want.size.toLong)
-    assert(ZOrderLayout.storeWatermark(spark, live, "id").contains(30L))
+    assert(StoreCommit.readSub(spark, root, "base").count() ==
+      want.size.toLong)
+    assert(ZOrderLayout.storeWatermark(spark, root, "id").contains(30L))
   }
 
   test("pointer-mode z-store sink: replay + minor/major compaction " +
@@ -291,12 +293,11 @@ class ZOrderSpec extends SparkSpec {
     stageFile(cuts(3), Long.MaxValue, "b4.parquet"); runOnce()
     val live = StoreCommit.readDir(store)
     assert(live != store && Files.exists(Paths.get(store, "CURRENT")))
-    assert(content(ZOrderLayout.readStore(spark, live)) == content(li),
+    assert(content(ZOrderLayout.readStore(spark, store)) == content(li),
       "pointer-committed store must equal the source")
     // replayed batch is a no-op
     stageFile(cuts(3), Long.MaxValue, "b4r.parquet"); runOnce()
-    assert(content(ZOrderLayout.readStore(spark,
-      StoreCommit.readDir(store))) == content(li))
+    assert(content(ZOrderLayout.readStore(spark, store)) == content(li))
     // the major compaction flipped versions at least once: base
     // exists inside the committed version
     assert(Files.exists(Paths.get(live, "base")), s"no base under $live")
